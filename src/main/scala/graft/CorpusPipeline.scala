@@ -498,12 +498,15 @@ object CorpusPipeline {
           .observe(oGated, count(lit(1)).as("n")).persist(Disk)
       case None => safe
     }
-    val mixed = ops.Sampling.stratified(gated, idCol, strataCol,
-      ratesPermille, defaultPermille).persist(Disk)
+    // the corpus' own caches (mixed + packing's boundary cache) live in
+    // one scope, released by the returned handle
+    val scope = new CacheScope
+    val mixed = scope.persist(ops.Sampling.stratified(gated, idCol,
+      strataCol, ratesPermille, defaultPermille), Disk)
     // n_subword_est comes from the feature-annotation stage — the same
     // token estimate the oracle-checked q69 packs on
-    val (packed, releasePack) = ops.Sampling.packSequencesReleasable(
-      mixed, idCol, strataCol, "n_subword_est", tokenBudget)
+    val packed = ops.Sampling.packSequences(mixed, idCol, strataCol,
+      "n_subword_est", tokenBudget, scope = scope)
     // optional leakage-safe split stage: cluster labels over a pair
     // frame at the (lower) split threshold, derived from the clean
     // chain's signature frame — a superset of the final corpus, valid
@@ -525,14 +528,14 @@ object CorpusPipeline {
     // mixed's cache now roots the returned corpus; everything upstream
     // (sig — the largest frame in the job — near, testSig, safe, the
     // bucket frames) is dead weight and released HERE, mirroring
-    // clean()'s discipline. release() drops the one remaining entry.
+    // clean()'s discipline. release() drops the corpus' scope.
     embBuckets.foreach { case (a, b) => a.unpersist(); b.unpersist() }
     if (gated ne safe) gated.unpersist()
     lshSafe.unpersist()
     st.sig.unpersist()
     st.near.unpersist()
     testSig.unpersist()
-    Prepared(corpus, report, () => { releasePack(); mixed.unpersist(); () })
+    Prepared(corpus, report, () => scope.release())
   }
 }
 

@@ -1531,35 +1531,26 @@ object Dedup {
     * empty variant — correctly, since all 1-char pairs ARE ED 1); for
     * web-scale vocabularies apply the df-cap discipline on the variant
     * key first (Skew.hotKeyReport). The typo-normalization /
-    * query-expansion primitive next to the shingle family.
+    * query-expansion primitive next to the shingle family. The one
+    * internal cache (the variant table) is persisted through `scope`.
     */
-  def editOnePairs(words: DataFrame, wordCol: String): DataFrame =
-    editOnePairsReleasable(words, wordCol)._1
-
-  /** [[editOnePairs]] plus the release handle for the one internal
-    * cache (the variant table) — the house *Releasable split; the
-    * plain form leaks it until session clearCache (the bench's
-    * per-query discipline), long-lived sessions call the handle.
-    */
-  def editOnePairsReleasable(words: DataFrame, wordCol: String)
-      : (DataFrame, () => Unit) = {
+  def editOnePairs(words: DataFrame, wordCol: String,
+                   scope: CacheScope = new CacheScope): DataFrame = {
     val w = words.select(col(wordCol).cast("string").as("w")).distinct()
     // round-19 (guide §5 reuse): the variant table feeds BOTH sides of
     // the self-join; Catalyst does not dedup common subtrees, so
     // uncached the tokenize-distinct-explode derivation ran twice.
     // Persist the (vocabulary x word-length)-sized variant frame once.
-    val variants = w.select(col("w"), explode(concat(
+    val variants = scope.persist(w.select(col("w"), explode(concat(
       array(col("w")),
       expr("transform(sequence(1, length(w)), i -> " +
         "concat(substring(w, 1, i-1), substring(w, i+1, length(w)-i)))")))
-      .as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = variants.select(col("w").as("a"), col("v"))
+      .as("v")), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    variants.select(col("w").as("a"), col("v"))
       .join(variants.select(col("w").as("b"), col("v")), "v")
       .filter(col("a") < col("b"))
       .select("a", "b").distinct()
       .withColumn("dist", levenshtein(col("a"), col("b")).cast(LongType))
       .filter(col("dist") <= 1)
-    (out, () => { variants.unpersist(); () })
   }
 }

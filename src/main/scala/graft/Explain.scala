@@ -7,7 +7,7 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.build("8", "graft-explain")
+    val spark = Sessions.fromEnv("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.01"
     for (n <- args) {

@@ -178,22 +178,23 @@ object Similarity {
     * Output per query: n_common (|topk_full ∩ topk_prefix|) and
     * recall_ppm = n_common * 1e6 div k. Ties at the k boundary break
     * by score only (GroupedTopK heap) — same contract as [[knnJoin]].
+    * The shared scored frame is persisted through `scope`.
     */
-  def prefixRecallReleasable(df: DataFrame, idCol: String, vecCol: String,
-                             queryPred: Column, prefixDims: Int,
-                             k: Int = 5): (DataFrame, () => Unit) = {
+  def prefixRecall(df: DataFrame, idCol: String, vecCol: String,
+                   queryPred: Column, prefixDims: Int, k: Int = 5,
+                   scope: CacheScope = new CacheScope): DataFrame = {
     require(prefixDims >= 1, s"prefixDims must be >= 1, got $prefixDims")
     val corpus = df.select(col(idCol).as("corpus_id"),
       asDouble(col(vecCol)).as("_v"))
     val q = df.filter(queryPred)
       .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("_qv"))
-    val scored = corpus.crossJoin(broadcast(q))
+    val scored = scope.persist(corpus.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
         cosineSim(col("_qv"), col("_v")).as("_cos_full"),
         cosineSim(slice(col("_qv"), 1, prefixDims),
-          slice(col("_v"), 1, prefixDims)).as("_cos_pre"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          slice(col("_v"), 1, prefixDims)).as("_cos_pre")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def top(orderCol: String) = graft.plans.GroupedTopK
       .perKey(scored, Seq("query_id"), orderCol, k)
       .select("query_id", "corpus_id")
@@ -202,13 +203,12 @@ object Similarity {
       .agg(count(lit(1)).cast("long").as("n_common"))
     // left join from the query list: a query whose sets are DISJOINT
     // must still report 0, not vanish
-    val out = q.select(col("query_id"))
+    q.select(col("query_id"))
       .join(common, Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("n_common"), lit(0L)).as("n_common"))
       .withColumn("recall_ppm",
         expr(s"n_common * 1000000L div ${k.toLong}L"))
-    (out, () => { scored.unpersist(); () })
   }
 
   /** kNN label vote (the classifier-quality audit of an embedding
@@ -243,12 +243,6 @@ object Similarity {
         (-col("_best._neg")).as("predicted"),
         col("_best._votes").as("votes"))
   }
-
-  /** Handle-less [[prefixRecallReleasable]] for one-shot jobs. */
-  def prefixRecall(df: DataFrame, idCol: String, vecCol: String,
-                   queryPred: Column, prefixDims: Int,
-                   k: Int = 5): DataFrame =
-    prefixRecallReleasable(df, idCol, vecCol, queryPred, prefixDims, k)._1
 
   /** Farthest-point (k-center greedy) diversity sample: starting from
     * `seedId`, repeatedly pick the vector with the SMALLEST maximum

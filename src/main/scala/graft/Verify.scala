@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Exits 1, after writing oracle_sql.json, when any query fails to dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -16,7 +18,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // dump queries 4 at a time: each writes its own directory, and the
     // Spark scheduler interleaves the independent jobs — roughly halves
-    // the gate's wall-clock vs a sequential loop
+    // the gate's wall-clock vs a sequential loop. Each future yields the
+    // query's name when its dump failed.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -41,14 +44,16 @@ object Verify {
             s"non-scalar output column(s) ${nonScalar.mkString(", ")} — " +
               "serialize (concat_ws) or explode to scalar columns")
           df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e: Throwable =>
+          None
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     }
-    scala.concurrent.Await.result(
+    val failed = scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(dumps),
-      scala.concurrent.duration.Duration.Inf)
+      scala.concurrent.duration.Duration.Inf).flatten.sorted
     pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -66,5 +71,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

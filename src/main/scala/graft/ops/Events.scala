@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -193,11 +194,12 @@ object Events {
     * `tieCols` must make (t, delta, tie...) unique — determinism of
     * the point order is the oracle contract. Output: the boundary
     * points with `t`, `delta`, tie columns, and `concurrency` (the
-    * count in effect FROM this point until the next).
+    * count in effect FROM this point until the next). The scaffold's
+    * cache is persisted through `scope`.
     */
-  def concurrencyReleasable(intervals: DataFrame, startCol: String,
-                            endCol: String, tieCols: Seq[String],
-                            chunks: Int = 0): (DataFrame, () => Unit) = {
+  def concurrency(intervals: DataFrame, startCol: String, endCol: String,
+                  tieCols: Seq[String], chunks: Int = 0,
+                  scope: CacheScope = new CacheScope): DataFrame = {
     val ties = tieCols.map(col)
     // explode, not union: a union of two projections plans the
     // interval-producing subtree TWICE (audited on q230 — the whole
@@ -210,16 +212,11 @@ object Events {
           lit(-1L).as("delta") +: ties: _*))).as("_p"))
       .select(col("_p.*"))
     val sort = col("t") +: col("delta") +: ties
-    val (pref, release) = Hierarchical.prefixSum(
-      pts, sort, Nil, col("delta"), "_before", chunks)
-    (pref.withColumn("concurrency", col("_before") + col("delta"))
-      .drop("_before"), release)
+    Hierarchical.prefixSum(pts, sort, Nil, col("delta"), "_before", chunks,
+      scope)
+      .withColumn("concurrency", col("_before") + col("delta"))
+      .drop("_before")
   }
-
-  /** Handle-less [[concurrencyReleasable]] for one-shot jobs. */
-  def concurrency(intervals: DataFrame, startCol: String, endCol: String,
-                  tieCols: Seq[String], chunks: Int = 0): DataFrame =
-    concurrencyReleasable(intervals, startCol, endCol, tieCols, chunks)._1
 
   /** Out-of-order ARRIVAL census — the operational gauge behind
     * [[graft.ops.Temporal.scd2Repair]]'s straggler path and every

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -58,32 +59,19 @@ object Graph {
     * scan of the rank frame, no new shuffle of the edge list); the
     * per-node share rides in on a broadcast one-row frame, keeping the
     * whole loop one lazy plan with no driver-side actions.
+    *
+    * Every cache the loop pins goes through `scope`: the two
+    * loop-invariant frames (prepared edges, node set) and — with
+    * `redistributeDangling` — each iteration's rank frame. Catalyst
+    * does not dedup common subtrees, so uncached these frames —
+    * including whatever join/distinct chain DERIVED the edge list —
+    * would re-execute once per iteration reference (iters x for the
+    * edges, iters+1 x for the nodes): the derivation, not the
+    * iteration math, dominates (PLANS.md round 9, q125's trade graph).
     */
   def pageRank(edges: DataFrame, iters: Int = 5,
-               redistributeDangling: Boolean = false): DataFrame =
-    pageRankReleasable(edges, iters, redistributeDangling)._1
-
-  /** [[pageRank]] plus the release handle for EVERY cache the loop
-    * pins: the two loop-invariant frames (prepared edges, node set)
-    * and — with `redistributeDangling` — each iteration's persisted
-    * rank frame. Catalyst does not dedup common
-    * subtrees, so uncached these frames — including whatever join/
-    * distinct chain DERIVED the edge list — would re-execute once per
-    * iteration reference (iters x for the edges, iters+1 x for the
-    * nodes): the derivation, not the iteration math, dominates.
-    * The handle-less [[pageRank]] LEAKS all of them until session end
-    * or an external clearCache — fine for one-shot jobs (the q148
-    * bench clears per query); long-lived sessions, especially with
-    * redistribution on (iters extra nodes-sized frames per call),
-    * must use this form and call the handle.
-    * Measured A/B at sf0.1 (q125's trade graph, 5 iterations —
-    * PLANS.md round 9 carries the numbers). Long-lived sessions must
-    * call the handle once the ranking is materialized; the
-    * handle-less form suits one-shot jobs.
-    */
-  def pageRankReleasable(edges: DataFrame, iters: Int = 5,
-                         redistributeDangling: Boolean = false)
-      : (DataFrame, () => Unit) = {
+               redistributeDangling: Boolean = false,
+               scope: CacheScope = new CacheScope): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col("src"), col("dst"))
@@ -96,20 +84,20 @@ object Graph {
     // the "pre-partition the edge list once" discipline this docstring
     // promises, made real. Per-iteration exchanges drop 3 -> 2
     // (rank-into-join + contribution agg; both nodes-sized).
-    val prepared = e.join(deg, "src")
-      .repartition(col("src")).persist(disk)
+    val prepared = scope.persist(e.join(deg, "src")
+      .repartition(col("src")), disk)
     // with redistribution on, the cached node frame also carries the
     // loop-invariant sink flag (no out-edges), so the per-iteration
     // sink-mass sum is a filter over the rank frame — no extra join
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val nodes = (if (!redistributeDangling) nodes0
+    val nodes = scope.persist((if (!redistributeDangling) nodes0
       else nodes0
         .join(deg.select(col("src").as("node"), lit(true).as("_has_out")),
           Seq("node"), "left")
         .select(col("node"),
           not(coalesce(col("_has_out"), lit(false))).as("_sink")))
-      .repartition(col("node")).persist(disk)
+      .repartition(col("node")), disk)
     // one-row node count, loop-invariant and LAZY (an agg over the
     // cached node frame — no driver-side count() action at build time)
     val nTot = nodes.agg(count(lit(1)).cast(LongType).as("_n"))
@@ -120,10 +108,9 @@ object Graph {
     // LAZY persist per iteration keeps it linear: within one action
     // both branches hit the same InMemoryRelation (materialized once,
     // on first use — no eager count() that would move the loop's cost
-    // out of the measured plan), and the handle releases them all.
+    // out of the measured plan), and the scope releases them all.
     // The leak-mode loop stays unpersisted: single-reference lineage,
     // and the round-8 A/B measured the uncached chain faster there.
-    val iterCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var pr = nodes.withColumn("pr", lit(1000L))
     for (_ <- 1 to iters) {
       val contribs = prepared
@@ -148,21 +135,13 @@ object Graph {
           .agg(coalesce(sum(col("pr")), lit(0L)).as("_dm"))
           .crossJoin(nTot)
           .select(expr("_dm div _n").as("_share"))
-        val next = nodes.join(contribs, Seq("node"), "left")
+        scope.persist(nodes.join(contribs, Seq("node"), "left")
           .crossJoin(broadcast(share))
           .select(col("node"), col("_sink"),
             (lit(150L) + expr("(850 * (coalesce(_s, 0L) + _share)) div 1000"))
-              .cast(LongType).as("pr"))
-          .persist(disk)
-        iterCaches += next
-        next
+              .cast(LongType).as("pr")), disk)
       }
     }
-    (pr.select(col("node"), col("pr")),
-      () => {
-        prepared.unpersist(); nodes.unpersist()
-        iterCaches.foreach(_.unpersist()); ()
-      })
     // NO per-iteration localCheckpoint, deliberately — measured A/B at
     // sf0.1/sf1 (PLANS.md round 8): the checkpointed loop is ~2.2x
     // slower at sf0.1 (7.8 vs 3.5 s) and still slower at sf1 — with a
@@ -170,6 +149,7 @@ object Graph {
     // materializing per iteration only pays eager-job + storage cost.
     // The convergence-driven clusters() loop checkpoints because its
     // lineage is unbounded; this one's is bounded by `iters`.
+    pr.select(col("node"), col("pr"))
   }
 
   /** Personalized PageRank — teleport mass concentrated on a SEED set
@@ -201,31 +181,25 @@ object Graph {
     * pre-partitioned on `src`, each iteration one src-keyed join +
     * one dst-keyed partial-combinable sum; the seed flag rides on the
     * cached node frame and (N, S) is a loop-invariant one-row
-    * broadcast — no driver action anywhere in the loop.
+    * broadcast — no driver action anywhere in the loop. The two
+    * loop-invariant caches (prepared edges, flagged node set) are
+    * persisted through `scope`.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iters: Int = 5): DataFrame =
-    personalizedPageRankReleasable(edges, seeds, iters)._1
-
-  /** [[personalizedPageRank]] plus the release handle for the two
-    * loop-invariant caches (prepared edges, flagged node set) — same
-    * contract split as [[pageRankReleasable]].
-    */
-  def personalizedPageRankReleasable(edges: DataFrame, seeds: DataFrame,
-                                     iters: Int = 5)
-      : (DataFrame, () => Unit) = {
+                           iters: Int = 5,
+                           scope: CacheScope = new CacheScope): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy("src").agg(count(lit(1)).cast(LongType).as("deg"))
-    val prepared = e.join(deg, "src")
-      .repartition(col("src")).persist(disk)
-    val nodes = e.select(col("src").as("node"))
+    val prepared = scope.persist(e.join(deg, "src")
+      .repartition(col("src")), disk)
+    val nodes = scope.persist(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(seeds.select(col("node")).distinct()
         .withColumn("_s0", lit(true)), Seq("node"), "left")
       .select(col("node"), coalesce(col("_s0"), lit(false)).as("_seed"))
-      .repartition(col("node")).persist(disk)
+      .repartition(col("node")), disk)
     // loop-invariant one-row (N, S): an agg over the cached node frame
     val totals = nodes.agg(count(lit(1)).cast(LongType).as("_n"),
       sum(when(col("_seed"), lit(1L)).otherwise(lit(0L)))
@@ -248,8 +222,7 @@ object Graph {
             + expr("(850 * coalesce(_s, 0L)) div 1000"))
             .cast(LongType).as("pr"))
     }
-    (pr.select(col("node"), col("pr")),
-      () => { prepared.unpersist(); nodes.unpersist(); () })
+    pr.select(col("node"), col("pr"))
   }
 
   /** Undirected degree table for an edge list that already carries
@@ -323,30 +296,24 @@ object Graph {
     * grows linearly and the collect costs one cached-frame scan.
     *
     * Output: `(node, hub, auth)` in micro-units. Nodes with no
-    * out-edges have hub 0; no in-edges, auth 0. Use
-    * [[hitsReleasable]] in long-lived sessions.
+    * out-edges have hub 0; no in-edges, auth 0. Every cache the loop
+    * pins (the edge frames, the node set, and 2×iters raw-sum frames)
+    * is persisted through `scope`.
     */
-  def hits(edges: DataFrame, iters: Int = 3): DataFrame =
-    hitsReleasable(edges, iters)._1
-
-  /** [[hits]] plus the release handle for every cache the loop pins
-    * (two edge frames, the node set, and 2×iters raw-sum frames).
-    */
-  def hitsReleasable(edges: DataFrame, iters: Int = 3)
-      : (DataFrame, () => Unit) = {
+  def hits(edges: DataFrame, iters: Int = 3,
+           scope: CacheScope = new CacheScope): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the edge DERIVATION (often a join/distinct chain) is cached once
     // and the three loop-invariant frames build FROM that cache —
     // otherwise each of their materializations re-runs the derivation
     // (measured 3x the derivation cost in the base, the dominant term)
-    val e = edges.select(col("src"), col("dst")).persist(disk)
-    val eSrc = e.repartition(col("src")).persist(disk)
-    val eDst = e.repartition(col("dst")).persist(disk)
-    val nodes = e.select(col("src").as("node"))
+    val e = scope.persist(edges.select(col("src"), col("dst")), disk)
+    val eSrc = scope.persist(e.repartition(col("src")), disk)
+    val eDst = scope.persist(e.repartition(col("dst")), disk)
+    val nodes = scope.persist(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .repartition(col("node")).persist(disk)
-    val iterCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      .repartition(col("node")), disk)
     // one normalized step: raw-sum frame -> (node, outCol), SPARSE
     // (round-19 structural rework, guide §2.4): nodes absent from the
     // raw frame have raw = 0, hence score 0, hence contribute EXACTLY
@@ -359,8 +326,7 @@ object Graph {
     // materializes the persisted raw frame, so downstream reads hit
     // the cache.
     def step(rawIn: DataFrame, rawCol: String, outCol: String): DataFrame = {
-      val raw = rawIn.persist(disk)
-      iterCaches += raw
+      val raw = scope.persist(rawIn, disk)
       val tot = raw.agg(coalesce(sum(col(rawCol)), lit(0L)))
         .head.getLong(0)
       val norm = math.max(tot / 1000000L, 1L)
@@ -393,39 +359,11 @@ object Graph {
     // without an out-edge (hub) re-enter here with the 0 the sparse
     // loop implied — the contract's "no out-edges -> hub 0; no
     // in-edges -> auth 0" unchanged
-    (nodes.join(h, Seq("node"), "left").join(a, Seq("node"), "left")
+    nodes.join(h, Seq("node"), "left").join(a, Seq("node"), "left")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub"),
-        coalesce(col("a"), lit(0L)).as("auth")),
-      () => {
-        e.unpersist(); eSrc.unpersist(); eDst.unpersist(); nodes.unpersist()
-        iterCaches.foreach(_.unpersist()); ()
-      })
+        coalesce(col("a"), lit(0L)).as("auth"))
   }
 
-  /** Exact per-node triangle counts over an edge list `(src, dst)`
-    * read as an UNDIRECTED simple graph (direction dropped, self-loops
-    * and duplicate edges removed) — the local clustering signal behind
-    * link-farm detection (spam rings are triangle-dense; editorial
-    * link neighborhoods are sparse) and community scaffolding.
-    *
-    * Degree-ordered orientation (Ortmann/Schank — the standard
-    * distributed formulation): orient every undirected edge from its
-    * lower endpoint to its higher under the total order
-    * (degree, node). Each node's ORIENTED out-degree is then bounded
-    * by O(sqrt(E)) regardless of raw hub degree — a celebrity node
-    * with 1e7 followers contributes wedges only through its few
-    * higher-ordered neighbors, so the wedge join cannot quadratically
-    * explode on hubs (the failure mode of a naive neighbor self-join).
-    * Every triangle {u,v,w} is enumerated EXACTLY once, as the wedge
-    * at its lowest-ordered vertex closed by the oriented (v, w) edge.
-    *
-    * Shape at scale: two node-keyed joins to attach degrees, one
-    * wedge self-join keyed on the lowest vertex (bounded per key by
-    * the orientation), one pair-keyed closure join against the
-    * oriented edge list, one final explode + count. All equi-joins,
-    * no windows, no collects. Tie-breaking inside the order is the
-    * node id itself — deterministic across engines.
-    */
   /** Connected components by ALTERNATING STARS (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) — the
     * two-phase min-label contraction whose round count is
@@ -532,17 +470,34 @@ object Graph {
         .as("component"))
   }
 
-  def triangleCounts(edges: DataFrame): DataFrame =
-    triangleCountsReleasable(edges)._1
-
-  /** [[triangleCounts]] plus the release handle for the one internal
-    * cache (the oriented edge frame) — the house *Releasable split
-    * (round-18 advice: the bare persist leaked two MEMORY_AND_DISK
-    * entries per call in long-lived sessions). The plain form keeps
-    * the one-shot leak-mode convention (bench clears per query).
+  /** Exact per-node triangle counts over an edge list `(src, dst)`
+    * read as an UNDIRECTED simple graph (direction dropped, self-loops
+    * and duplicate edges removed) — the local clustering signal behind
+    * link-farm detection (spam rings are triangle-dense; editorial
+    * link neighborhoods are sparse) and community scaffolding.
+    *
+    * Degree-ordered orientation (Ortmann/Schank — the standard
+    * distributed formulation): orient every undirected edge from its
+    * lower endpoint to its higher under the total order
+    * (degree, node). Each node's ORIENTED out-degree is then bounded
+    * by O(sqrt(E)) regardless of raw hub degree — a celebrity node
+    * with 1e7 followers contributes wedges only through its few
+    * higher-ordered neighbors, so the wedge join cannot quadratically
+    * explode on hubs (the failure mode of a naive neighbor self-join).
+    * Every triangle {u,v,w} is enumerated EXACTLY once, as the wedge
+    * at its lowest-ordered vertex closed by the oriented (v, w) edge.
+    *
+    * Shape at scale: two node-keyed joins to attach degrees, one
+    * wedge self-join keyed on the lowest vertex (bounded per key by
+    * the orientation), one pair-keyed closure join against the
+    * oriented edge list, one final explode + count. All equi-joins,
+    * no windows, no collects. Tie-breaking inside the order is the
+    * node id itself — deterministic across engines.
+    * The one internal cache, the oriented edge frame, is persisted
+    * through `scope`.
     */
-  def triangleCountsReleasable(edges: DataFrame)
-      : (DataFrame, () => Unit) = {
+  def triangleCounts(edges: DataFrame,
+                     scope: CacheScope = new CacheScope): DataFrame = {
     val und = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -561,14 +516,12 @@ object Graph {
     // Catalyst does not dedup common subtrees — uncached, the
     // distinct + degree-agg + double-join derivation re-executed per
     // reference (the q284 final plan carried 310 Exchange nodes).
-    // Lazy, so no eager job; one-shot callers (the bench clears per
-    // query) and [[clusteringCoefficient]] rely on session
-    // clearCache, the repo-wide convention for leak-mode graph ops.
-    val o = withDeg.select(
+    // Lazy, so no eager job.
+    val o = scope.persist(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("deg_b")).otherwise(col("deg_a")).as("deg_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      when(aFirst, col("deg_b")).otherwise(col("deg_a")).as("deg_v")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val o1 = o.select(col("u"), col("v").as("v1"), col("deg_v").as("dv1"))
     val o2 = o.select(col("u"), col("v").as("v2"), col("deg_v").as("dv2"))
     val wedges = o1.join(o2, "u")
@@ -579,10 +532,9 @@ object Graph {
     // the wedge filter and the orientation use the same total order
     val tri = wedges.join(
       o.select(col("u").as("v1"), col("v").as("v2")), Seq("v1", "v2"))
-    (tri.select(explode(array(col("u"), col("v1"), col("v2"))).as("node"))
+    tri.select(explode(array(col("u"), col("v1"), col("v2"))).as("node"))
       .groupBy("node")
-      .agg(count(lit(1)).cast(LongType).as("n_tri")),
-      () => { o.unpersist(); () })
+      .agg(count(lit(1)).cast(LongType).as("n_tri"))
   }
 
   /** k-CORE decomposition (membership form): the maximal subgraph in
@@ -919,19 +871,13 @@ object Graph {
     * `communities` (nodeCol, communityCol). Output: one row per
     * community — `community, n_nodes, internal_edges, degree_sum,
     * contribution_ppm` — plus exact global `m` replicated for the
-    * reader's Q = sum(contribution_ppm).
+    * reader's Q = sum(contribution_ppm). The internal labeled-edge
+    * cache (three consumers: the m+guard aggregate, internal-edge
+    * counts, degree sums) is persisted through `scope`.
     */
   def modularity(edges: DataFrame, communities: DataFrame,
-                 nodeCol: String, communityCol: String): DataFrame =
-    modularityReleasable(edges, communities, nodeCol, communityCol)._1
-
-  /** [[modularity]] plus the house *Releasable cache handle for the
-    * internal labeled-edge persist (three consumers: the m+guard
-    * aggregate, internal-edge counts, degree sums).
-    */
-  def modularityReleasable(edges: DataFrame, communities: DataFrame,
-                           nodeCol: String, communityCol: String)
-      : (DataFrame, () => Unit) = {
+                 nodeCol: String, communityCol: String,
+                 scope: CacheScope = new CacheScope): DataFrame = {
     val und = edges
       .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
         greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
@@ -941,12 +887,12 @@ object Graph {
     // Label both endpoints; an unlabeled endpoint surfaces as a NULL
     // community and trips the loud guard below (a silent drop would
     // misreport e_c and d_c). One bounded action covers m + the guard.
-    val labeled = und
+    val labeled = scope.persist(und
       .join(labels.select(col("_node").as("a"),
         col("community").as("_ca")), Seq("a"), "left")
       .join(labels.select(col("_node").as("b"),
-        col("community").as("_cb")), Seq("b"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("community").as("_cb")), Seq("b"), "left"),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val head = labeled.agg(
       count(lit(1)).as("_m"),
       sum(when(col("_ca").isNull || col("_cb").isNull, 1L)
@@ -968,7 +914,7 @@ object Graph {
     val perC = deg.groupBy("community").agg(
       count(lit(1)).cast(LongType).as("n_nodes"),
       sum("_deg").cast(LongType).as("degree_sum"))
-    val out = perC.join(internal, Seq("community"), "left")
+    perC.join(internal, Seq("community"), "left")
       .withColumn("internal_edges",
         coalesce(col("internal_edges"), lit(0L)))
       .withColumn("m_edges", lit(m))
@@ -979,7 +925,6 @@ object Graph {
           " AS BIGINT)"))
       .select("community", "n_nodes", "internal_edges", "degree_sum",
         "m_edges", "contribution_ppm")
-    (out, () => { labeled.unpersist(); () })
   }
 
   /** Deterministic random-walk corpus (DeepWalk/node2vec input): one
@@ -1000,23 +945,19 @@ object Graph {
     * and fixed — the output is a training corpus, not a fixed point.
     *
     * Output: `(walk_id, step, node)` long format, step 0 = the start.
+    * The adjacency cache (`steps` consumers — one join per step) is
+    * persisted through `scope`.
     */
-  def deterministicWalks(edges: DataFrame, steps: Int): DataFrame =
-    deterministicWalksReleasable(edges, steps)._1
-
-  /** [[deterministicWalks]] plus the house *Releasable handle for the
-    * adjacency cache (`steps` consumers — one join per step).
-    */
-  def deterministicWalksReleasable(edges: DataFrame, steps: Int)
-      : (DataFrame, () => Unit) = {
+  def deterministicWalks(edges: DataFrame, steps: Int,
+                         scope: CacheScope = new CacheScope): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     val und = edges
       .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
         greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val adj = und.select(col("a").as("_cur"), col("b").as("_nbr"))
-      .unionAll(und.select(col("b").as("_cur"), col("a").as("_nbr")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val adj = scope.persist(und.select(col("a").as("_cur"), col("b").as("_nbr"))
+      .unionAll(und.select(col("b").as("_cur"), col("a").as("_nbr"))),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val starts = adj.select(col("_cur").as("walk_id")).distinct()
       .withColumn("step", lit(0L))
       .withColumn("node", col("walk_id"))
@@ -1038,7 +979,7 @@ object Graph {
         .localCheckpoint()
       hops += frontier
     }
-    (hops.result().reduce(_ unionAll _), () => { adj.unpersist(); () })
+    hops.result().reduce(_ unionAll _)
   }
 
   /** Luby's maximal independent set with DETERMINISTIC md5 draws —
@@ -1414,38 +1355,31 @@ object Graph {
     * — wedge volume is sum of SQUARED ORIENTED degrees, the bound
     * that keeps hub wedges from exploding) plus one node-keyed degree
     * aggregate and a left join back; all integer, DECIMAL(38,0) on
-    * the ppm product so 100x-degree hubs cannot overflow.
+    * the ppm product so 100x-degree hubs cannot overflow. Both internal
+    * caches (its `und` frame and [[triangleCounts]]' oriented edge
+    * frame) are persisted through `scope`.
     */
-  def clusteringCoefficient(edges: DataFrame): DataFrame =
-    clusteringCoefficientReleasable(edges)._1
-
-  /** [[clusteringCoefficient]] plus the release handle for BOTH
-    * internal caches (its `und` frame and [[triangleCounts]]' oriented
-    * edge frame) — the house *Releasable split (round-18 advice).
-    */
-  def clusteringCoefficientReleasable(edges: DataFrame)
-      : (DataFrame, () => Unit) = {
+  def clusteringCoefficient(edges: DataFrame,
+                            scope: CacheScope = new CacheScope): DataFrame = {
     // lazy persist: `und` feeds both the degree aggregate here and
     // [[triangleCounts]]' whole derivation — uncached it re-executes
     // the distinct per reference (see the triangleCounts note)
-    val und = edges
+    val und = scope.persist(edges
       .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
         greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct(), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).cast(LongType).as("degree"))
-    val (tri, triRelease) = triangleCountsReleasable(
-      und.select(col("a").as("src"), col("b").as("dst")))
-    (deg.join(tri, Seq("node"), "left")
+    val tri = triangleCounts(
+      und.select(col("a").as("src"), col("b").as("dst")), scope)
+    deg.join(tri, Seq("node"), "left")
       .withColumn("n_tri", coalesce(col("n_tri"), lit(0L)))
       .withColumn("coeff_ppm", expr(
         "CASE WHEN degree >= 2 THEN CAST(" +
           "CAST(n_tri AS DECIMAL(38,0)) * 2000000" +
           " div (degree * CAST(degree - 1 AS DECIMAL(38,0))) AS BIGINT)" +
-          " ELSE 0L END")),
-      () => { triRelease(); und.unpersist(); () })
+          " ELSE 0L END"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,28 +22,26 @@ import org.apache.spark.sql.functions._
   * unpersisted, each branch would plan its own range exchange, and each
   * execution SAMPLES ITS OWN boundaries — on a non-order-stable input
   * the branches could disagree on the chunking and silently corrupt the
-  * offsets. One cache entry = one boundary sample. The entry is NOT
-  * auto-dropped (SQL cache entries are held until unpersist or session
-  * end), so the release handle is part of the result — long-lived
-  * sessions over many distinct corpora must call it once the output is
-  * materialized.
+  * offsets. One cache entry = one boundary sample. The entry is owned
+  * by the caller's [[graft.CacheScope]] and held until that scope is
+  * released (or the session's `clearCache`).
   */
 private[graft] object Hierarchical {
 
   /** Append `outCol` = EXCLUSIVE prefix sum of `measure` under the
     * total order `sort` (include a unique tiebreak key!), independently
-    * per `strata` group (empty = one global order). Returns the frame
-    * plus the release handle for the boundary-consistency cache.
+    * per `strata` group (empty = one global order). The
+    * boundary-consistency cache is persisted through `scope`.
     */
   def prefixSum(df: DataFrame, sort: Seq[Column], strata: Seq[String],
-                measure: Column, outCol: String,
-                chunks: Int): (DataFrame, () => Unit) = {
+                measure: Column, outCol: String, chunks: Int,
+                scope: CacheScope = new CacheScope): DataFrame = {
     val n = if (chunks > 0) chunks
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sliced = df
+    val sliced = scope.persist(df
       .repartitionByRange(n, sort: _*)
-      .withColumn("_chunk", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_chunk", spark_partition_id()),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val local = Window
       .partitionBy(("_chunk" +: strata).map(col): _*).orderBy(sort: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -64,10 +63,9 @@ private[graft] object Hierarchical {
     val cond = strata.zipWithIndex.foldLeft(col("_chunk") === col("_off_chunk")) {
       case (acc, (s, i)) => acc && (col(s) <=> col(s"_off_s$i"))
     }
-    val out = withLocal.join(broadcast(offsets), cond)
+    withLocal.join(broadcast(offsets), cond)
       .withColumn(outCol, col("_offset") + col("_local_before"))
       .drop(Seq("_chunk", "_local_before", "_off_chunk", "_offset") ++
         strata.indices.map(i => s"_off_s$i"): _*)
-    (out, () => { sliced.unpersist(); () })
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -80,47 +81,38 @@ object Layout {
     * Rows tying on (z, x, y) are interchangeable for every reported
     * statistic, so the output is deterministic even though their
     * relative order is not. Output: (file_id, n, x_min, x_max, y_min,
-    * y_max), one row per planned file.
+    * y_max), one row per planned file. The scaffold's cache is
+    * persisted through `scope`.
     */
-  def zorderFileStatsReleasable(df: DataFrame, xCol: String, yCol: String,
-                                bits: Int, rowsPerFile: Long,
-                                chunks: Int = 0): (DataFrame, () => Unit) = {
+  def zorderFileStats(df: DataFrame, xCol: String, yCol: String,
+                      bits: Int, rowsPerFile: Long, chunks: Int = 0,
+                      scope: CacheScope = new CacheScope): DataFrame = {
     val named = df.select(col(xCol).cast("long").as("_zx"),
       col(yCol).cast("long").as("_zy"))
-    val (stats, release) = zorderFileStatsNReleasable(named,
-      Seq("_zx", "_zy"), bits, rowsPerFile, chunks)
-    (stats.select(col("file_id"), col("n"),
-      col("_zx_min").as("x_min"), col("_zx_max").as("x_max"),
-      col("_zy_min").as("y_min"), col("_zy_max").as("y_max")), release)
+    zorderFileStatsN(named, Seq("_zx", "_zy"), bits, rowsPerFile, chunks,
+      scope)
+      .select(col("file_id"), col("n"),
+        col("_zx_min").as("x_min"), col("_zx_max").as("x_max"),
+        col("_zy_min").as("y_min"), col("_zy_max").as("y_max"))
   }
 
-  /** Handle-less [[zorderFileStatsReleasable]] for one-shot jobs. */
-  def zorderFileStats(df: DataFrame, xCol: String, yCol: String,
-                      bits: Int, rowsPerFile: Long,
-                      chunks: Int = 0): DataFrame =
-    zorderFileStatsReleasable(df, xCol, yCol, bits, rowsPerFile, chunks)._1
-
-  /** N-dimensional [[zorderFileStatsReleasable]]: lay the frame out
+  /** N-dimensional [[zorderFileStats]]: lay the frame out
     * along the Morton curve of `dimCols` (2-4 dims, [[zorderKeyN]])
     * and report each planned file's row count and per-dimension
     * bounding box as `<col>_min`/`<col>_max`. Total order
     * (z, dims...) — rows tying on it are interchangeable for every
-    * reported statistic.
+    * reported statistic. The scaffold's cache is persisted through
+    * `scope`.
     */
-  def zorderFileStatsNReleasable(df: DataFrame, dimCols: Seq[String],
-                                 bits: Int, rowsPerFile: Long,
-                                 chunks: Int = 0): (DataFrame, () => Unit) = {
+  def zorderFileStatsN(df: DataFrame, dimCols: Seq[String], bits: Int,
+                       rowsPerFile: Long, chunks: Int = 0,
+                       scope: CacheScope = new CacheScope): DataFrame = {
     val base = df
       .select(dimCols.map(c => col(c).cast("long").as(c)): _*)
       .withColumn("_z", zorderKeyN(dimCols, bits))
     fileStatsBy(base, col("_z") +: dimCols.map(col), dimCols,
-      rowsPerFile, chunks)
+      rowsPerFile, chunks, scope)
   }
-
-  /** Handle-less [[zorderFileStatsNReleasable]] for one-shot jobs. */
-  def zorderFileStatsN(df: DataFrame, dimCols: Seq[String], bits: Int,
-                       rowsPerFile: Long, chunks: Int = 0): DataFrame =
-    zorderFileStatsNReleasable(df, dimCols, bits, rowsPerFile, chunks)._1
 
   /** The BASELINE a Z-order diff quantifies against: the same
     * file-layout audit under a plain lexicographic sort on `dimCols`
@@ -130,19 +122,15 @@ object Layout {
     * columns participate in the total order only to make ties —
     * and therefore the reported boxes — deterministic. Diff against
     * [[zorderFileStatsN]] to put a number on the skipping win before
-    * burning a 100 TB rewrite.
+    * burning a 100 TB rewrite. The scaffold's cache is persisted
+    * through `scope`.
     */
-  def sortFileStatsReleasable(df: DataFrame, dimCols: Seq[String],
-                              rowsPerFile: Long,
-                              chunks: Int = 0): (DataFrame, () => Unit) = {
-    val base = df.select(dimCols.map(c => col(c).cast("long").as(c)): _*)
-    fileStatsBy(base, dimCols.map(col), dimCols, rowsPerFile, chunks)
-  }
-
-  /** Handle-less [[sortFileStatsReleasable]] for one-shot jobs. */
   def sortFileStats(df: DataFrame, dimCols: Seq[String],
-                    rowsPerFile: Long, chunks: Int = 0): DataFrame =
-    sortFileStatsReleasable(df, dimCols, rowsPerFile, chunks)._1
+                    rowsPerFile: Long, chunks: Int = 0,
+                    scope: CacheScope = new CacheScope): DataFrame = {
+    val base = df.select(dimCols.map(c => col(c).cast("long").as(c)): _*)
+    fileStatsBy(base, dimCols.map(col), dimCols, rowsPerFile, chunks, scope)
+  }
 
   /** SMALL-FILE compaction plan — the Delta/Iceberg OPTIMIZE
     * bin-packing decision as a deterministic, auditable assignment:
@@ -168,9 +156,8 @@ object Layout {
                      targetBytes: Long, chunks: Int = 0): DataFrame = {
     require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
     val small = files.filter(col(bytesCol) < targetBytes)
-    val (pref, _) = Hierarchical.prefixSum(small,
+    val packed = Hierarchical.prefixSum(small,
       Seq(col(bytesCol), col(pathCol)), Nil, col(bytesCol), "_cb", chunks)
-    val packed = pref
       .withColumn("group_id", expr(s"_cb div ${targetBytes}L")).drop("_cb")
     packed.unionByName(
       files.filter(col(bytesCol) >= targetBytes)
@@ -434,17 +421,14 @@ object Layout {
     */
   private def fileStatsBy(base: DataFrame, order: Seq[Column],
                           dimCols: Seq[String], rowsPerFile: Long,
-                          chunks: Int): (DataFrame, () => Unit) = {
+                          chunks: Int, scope: CacheScope): DataFrame = {
     require(rowsPerFile >= 1, s"rowsPerFile must be >= 1, got $rowsPerFile")
-    val (ranked, release) = Hierarchical.prefixSum(base, order, Nil,
-      lit(1L), "_rank", chunks)
     val aggs = count(lit(1)).cast("long").as("n") +: dimCols.flatMap(c =>
       Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
-    val stats = ranked
+    Hierarchical.prefixSum(base, order, Nil, lit(1L), "_rank", chunks, scope)
       .withColumn("file_id", expr(s"_rank div ${rowsPerFile}L"))
       .groupBy(col("file_id"))
       .agg(aggs.head, aggs.tail: _*)
-    (stats, release)
   }
 
   /** Rendezvous (highest-random-weight) placement rebalance audit:

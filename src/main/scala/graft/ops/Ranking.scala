@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -30,11 +31,15 @@ object Ranking {
     * `sort` must be a TOTAL order (include a unique key as the last
     * tiebreak) — under a partial order, rows equal on every key could
     * land on either side of a chunk boundary and swap positions between
-    * runs.
+    * runs. The boundary-consistency cache ([[Hierarchical.prefixSum]])
+    * is persisted through `scope`.
     */
   def globalRowNumber(df: DataFrame, sort: Seq[Column],
-                      outCol: String = "pos", chunks: Int = 0): DataFrame =
-    globalRowNumberReleasable(df, sort, outCol, chunks)._1
+                      outCol: String = "pos", chunks: Int = 0,
+                      scope: CacheScope = new CacheScope): DataFrame =
+    // position = exclusive prefix COUNT under the total order, + 1
+    Hierarchical.prefixSum(df, sort, Nil, lit(1L), "_before", chunks, scope)
+      .withColumn(outCol, col("_before") + lit(1L)).drop("_before")
 
   /** Coverage-curve thresholds: given per-key mass counts (e.g. token
     * frequencies), the minimal number of top keys — ordered by count
@@ -52,13 +57,13 @@ object Ranking {
     * all-integer (`cum * 100 < pct * total`) — exact on every engine.
     *
     * `counts` is executed twice (the total and the curve) — persist it
-    * if its derivation is expensive. Returns (pct, k_keys) plus the
-    * scaffold's cache-release handle.
+    * if its derivation is expensive. Returns (pct, k_keys); the
+    * scaffold's cache is persisted through `scope`.
     */
-  def coverageThresholdsReleasable(counts: DataFrame, keyCol: String,
-                                   nCol: String, pcts: Seq[Int],
-                                   outCol: String = "k_keys",
-                                   chunks: Int = 0): (DataFrame, () => Unit) = {
+  def coverageThresholds(counts: DataFrame, keyCol: String, nCol: String,
+                         pcts: Seq[Int], outCol: String = "k_keys",
+                         chunks: Int = 0,
+                         scope: CacheScope = new CacheScope): DataFrame = {
     require(pcts.nonEmpty && pcts.forall(p => p > 0 && p <= 100),
       s"pcts must be percentages in (0,100], got $pcts")
     // one-row integer aggregate: eager-resolved to a literal rather than
@@ -69,36 +74,13 @@ object Ranking {
     // yield an empty curve, not an NPE at the literal resolution
     val totalRow = counts.agg(sum(col(nCol)).cast("long")).first()
     val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
-    val (pref, release) = Hierarchical.prefixSum(counts,
-      Seq(col(nCol).desc, col(keyCol)), Nil, col(nCol), "_before", chunks)
-    val curve = pref
+    Hierarchical.prefixSum(counts, Seq(col(nCol).desc, col(keyCol)), Nil,
+      col(nCol), "_before", chunks, scope)
       .select((col("_before") + col(nCol)).as("_cum"))
       .select(explode(array(pcts.map(lit): _*)).as("pct"), col("_cum"))
       .groupBy(col("pct"))
       .agg((count(when(col("_cum") * 100 < col("pct") * lit(total), 1)) + 1)
         .cast("long").as(outCol))
-    (curve, release)
-  }
-
-  def coverageThresholds(counts: DataFrame, keyCol: String, nCol: String,
-                         pcts: Seq[Int], outCol: String = "k_keys",
-                         chunks: Int = 0): DataFrame =
-    coverageThresholdsReleasable(counts, keyCol, nCol, pcts, outCol, chunks)._1
-
-  /** [[globalRowNumber]] plus the release handle for the internal
-    * boundary-consistency cache ([[Hierarchical.prefixSum]]) — call it
-    * once the ranked output is materialized. The handle-less form is
-    * for one-shot jobs; a long-lived session ranking many distinct
-    * corpora must release, or each call pins a full MEMORY_AND_DISK
-    * copy of its input until session end.
-    */
-  def globalRowNumberReleasable(df: DataFrame, sort: Seq[Column],
-                                outCol: String = "pos",
-                                chunks: Int = 0): (DataFrame, () => Unit) = {
-    // position = exclusive prefix COUNT under the total order, + 1
-    val (pref, release) = Hierarchical.prefixSum(df, sort, Nil, lit(1L),
-      "_before", chunks)
-    (pref.withColumn(outCol, col("_before") + lit(1L)).drop("_before"), release)
   }
 
   /** EQUI-WIDTH quantile bucketing: append `bucket` = 1-based k-tile
@@ -148,7 +130,7 @@ object Ranking {
                                 valueCol: String, idCol: String,
                                 k: Int, chunks: Int = 0): DataFrame = {
     require(k >= 1, s"bucket count must be >= 1, got $k")
-    val (pref, _) = Hierarchical.prefixSum(df,
+    val pref = Hierarchical.prefixSum(df,
       Seq(col(valueCol), col(idCol)), strata, lit(1L), "_before", chunks)
     // stratum sizes over the scaffold's cached slices (no second
     // evaluation of the input lineage); strata-bounded frame

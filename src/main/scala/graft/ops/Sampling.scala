@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -120,26 +121,17 @@ object Sampling {
     * The global prefix sum runs on [[Hierarchical.prefixSum]] (range
     * slices + broadcast offsets), so NO single task ever sees the
     * whole corpus — the scale shape a naive global window lacks.
-    * Output adds `cum_before`. Same release contract as
-    * [[packSequencesReleasable]].
+    * Output adds `cum_before`. The scaffold's cache is persisted
+    * through `scope`.
     */
-  def selectWithinBudgetReleasable(df: DataFrame, idCol: String,
-                                   valueCol: String, tokensCol: String,
-                                   budget: Long, chunks: Int = 0)
-      : (DataFrame, () => Unit) = {
-    require(budget > 0, s"budget must be positive, got $budget")
-    val (pref, release) = Hierarchical.prefixSum(df,
-      Seq(col(valueCol).desc, col(idCol)), Nil, col(tokensCol),
-      "cum_before", chunks)
-    (pref.filter(col("cum_before") + col(tokensCol) <= budget), release)
-  }
-
-  /** Handle-less [[selectWithinBudgetReleasable]] for one-shot jobs. */
   def selectWithinBudget(df: DataFrame, idCol: String, valueCol: String,
-                         tokensCol: String, budget: Long,
-                         chunks: Int = 0): DataFrame =
-    selectWithinBudgetReleasable(df, idCol, valueCol, tokensCol, budget,
-      chunks)._1
+                         tokensCol: String, budget: Long, chunks: Int = 0,
+                         scope: CacheScope = new CacheScope): DataFrame = {
+    require(budget > 0, s"budget must be positive, got $budget")
+    Hierarchical.prefixSum(df, Seq(col(valueCol).desc, col(idCol)), Nil,
+      col(tokensCol), "cum_before", chunks, scope)
+      .filter(col("cum_before") + col(tokensCol) <= budget)
+  }
 
   /** TARGET-DISTRIBUTION mix: the LARGEST exact-count selection whose
     * stratum composition matches `targets` (parts-per-million per
@@ -164,13 +156,11 @@ object Sampling {
     * few by construction; same contract as [[temperatureMix]]).
     *
     * Output: the selected rows with `mix_rank` (1-based within
-    * stratum). Same release contract as [[packSequencesReleasable]] —
-    * the handle-less form below releases nothing and suits one-shot
-    * jobs.
+    * stratum). The scaffold's cache is persisted through `scope`.
     */
-  def targetMixReleasable(df: DataFrame, idCol: String, strataCol: String,
-                          targets: Seq[(String, Int)], chunks: Int = 0)
-      : (DataFrame, () => Unit) = {
+  def targetMix(df: DataFrame, idCol: String, strataCol: String,
+                targets: Seq[(String, Int)], chunks: Int = 0,
+                scope: CacheScope = new CacheScope): DataFrame = {
     require(targets.nonEmpty, "targets must be non-empty")
     require(targets.map(_._2).forall(_ > 0),
       s"target ppm weights must be positive: $targets")
@@ -192,21 +182,15 @@ object Sampling {
     val quotaDf = quotas.toDF("_q_stratum", "_quota")
     val slot = pmod(graft.Pipeline.wordHash32(col(idCol).cast("string")),
       lit(1000000L))
-    val (ranked, release) = Hierarchical.prefixSum(
+    Hierarchical.prefixSum(
       df.join(broadcast(quotaDf), col(strataCol) === col("_q_stratum"))
         .withColumn("_slot", slot),
       Seq(col("_slot"), col(idCol)), Seq(strataCol), lit(1L), "_before",
-      chunks)
-    val out = ranked.filter(col("_before") < col("_quota"))
+      chunks, scope)
+      .filter(col("_before") < col("_quota"))
       .withColumn("mix_rank", (col("_before") + 1L).cast(org.apache.spark.sql.types.LongType))
       .drop("_q_stratum", "_quota", "_slot", "_before")
-    (out, release)
   }
-
-  /** Handle-less [[targetMixReleasable]] for one-shot jobs. */
-  def targetMix(df: DataFrame, idCol: String, strataCol: String,
-                targets: Seq[(String, Int)], chunks: Int = 0): DataFrame =
-    targetMixReleasable(df, idCol, strataCol, targets, chunks)._1
 
   /** TOKEN-budget target mix: like [[targetMix]] but the target
     * distribution is over TOKEN MASS, not document counts — which is
@@ -227,17 +211,17 @@ object Sampling {
     * driver-side (strata are few by construction).
     *
     * Output: the selected rows with `tok_before` (tokens taken from
-    * the stratum before this row). Same release contract as
-    * [[targetMixReleasable]].
+    * the stratum before this row). The scaffold's cache is persisted
+    * through `scope`.
     */
-  def targetMixTokensReleasable(df: DataFrame, idCol: String,
-                                strataCol: String, tokensCol: String,
-                                targets: Seq[(String, Int)],
-                                chunks: Int = 0): (DataFrame, () => Unit) =
+  def targetMixTokens(df: DataFrame, idCol: String, strataCol: String,
+                      tokensCol: String, targets: Seq[(String, Int)],
+                      chunks: Int = 0,
+                      scope: CacheScope = new CacheScope): DataFrame =
     targetMixTokensCore(df, idCol, strataCol, tokensCol, targets, Nil,
-      chunks)
+      chunks, scope)
 
-  /** QUALITY-RANKED token-budget mix: [[targetMixTokensReleasable]]
+  /** QUALITY-RANKED token-budget mix: [[targetMixTokens]]
     * with the fill order led by `priorityCol` ASCENDING (best first —
     * pass a surprisal/perplexity-shaped score directly) before the
     * md5-slot + id tiebreak, so each stratum's token quota goes to its
@@ -246,21 +230,22 @@ object Sampling {
     * token mass AND the budget inside each stratum is spent
     * quality-first. Ties within a score still land uniformly (the
     * slot), so banded scores don't order by id. Same quota math,
-    * scaffold, and release contract as the uniform form.
+    * scaffold, and `scope` as the uniform form.
     */
   def targetMixTokensByPriority(df: DataFrame, idCol: String,
                                 strataCol: String, tokensCol: String,
                                 priorityCol: String,
                                 targets: Seq[(String, Int)],
-                                chunks: Int = 0): DataFrame =
+                                chunks: Int = 0,
+                                scope: CacheScope = new CacheScope): DataFrame =
     targetMixTokensCore(df, idCol, strataCol, tokensCol, targets,
-      Seq(col(priorityCol)), chunks)._1
+      Seq(col(priorityCol)), chunks, scope)
 
   private def targetMixTokensCore(df: DataFrame, idCol: String,
                                   strataCol: String, tokensCol: String,
                                   targets: Seq[(String, Int)],
-                                  sortPrefix: Seq[Column],
-                                  chunks: Int): (DataFrame, () => Unit) = {
+                                  sortPrefix: Seq[Column], chunks: Int,
+                                  scope: CacheScope): DataFrame = {
     require(targets.nonEmpty, "targets must be non-empty")
     require(targets.map(_._2).forall(_ > 0),
       s"target ppm weights must be positive: $targets")
@@ -285,23 +270,15 @@ object Sampling {
     val quotaDf = quotas.toDF("_q_stratum", "_quota")
     val slot = pmod(graft.Pipeline.wordHash32(col(idCol).cast("string")),
       lit(1000000L))
-    val (ranked, release) = Hierarchical.prefixSum(
+    Hierarchical.prefixSum(
       df.join(broadcast(quotaDf), col(strataCol) === col("_q_stratum"))
         .withColumn("_slot", slot),
       sortPrefix ++ Seq(col("_slot"), col(idCol)), Seq(strataCol),
-      col(tokensCol), "_tok_before", chunks)
-    val out = ranked.filter(col("_tok_before") < col("_quota"))
+      col(tokensCol), "_tok_before", chunks, scope)
+      .filter(col("_tok_before") < col("_quota"))
       .withColumn("tok_before", col("_tok_before"))
       .drop("_q_stratum", "_quota", "_slot", "_tok_before")
-    (out, release)
   }
-
-  /** Handle-less [[targetMixTokensReleasable]] for one-shot jobs. */
-  def targetMixTokens(df: DataFrame, idCol: String, strataCol: String,
-                      tokensCol: String, targets: Seq[(String, Int)],
-                      chunks: Int = 0): DataFrame =
-    targetMixTokensReleasable(df, idCol, strataCol, tokensCol, targets,
-      chunks)._1
 
   /** Deterministic FIXED-COUNT sample: exactly `min(k, stratum size)`
     * rows per stratum, chosen by md5-hash priority — "give me a uniform
@@ -524,26 +501,19 @@ object Sampling {
           / col("_n").cast("double")).as("_rate"))
   }
 
-  def packSequences(df: DataFrame, idCol: String, strataCol: String,
-                    tokensCol: String, budget: Long, chunks: Int = 0): DataFrame =
-    packSequencesReleasable(df, idCol, strataCol, tokensCol, budget, chunks)._1
-
-  /** [[packSequences]] plus the release handle for the internal
-    * boundary-consistency cache ([[Hierarchical.prefixSum]]) — call it
-    * once the packed output is materialized. The handle-less form is
-    * for one-shot jobs whose session ends with the query; a long-lived
-    * session packing many distinct corpora must release, or each call
-    * pins a full MEMORY_AND_DISK copy of its input until session end.
+  /** Greedy per-stratum sequence packing: `bin` = exclusive token
+    * prefix sum (stratum, id order) `div budget`. The
+    * boundary-consistency cache ([[Hierarchical.prefixSum]]) is
+    * persisted through `scope`; a long-lived session packing many
+    * distinct corpora releases it once the output is materialized.
     */
-  def packSequencesReleasable(df: DataFrame, idCol: String, strataCol: String,
-                              tokensCol: String, budget: Long,
-                              chunks: Int = 0): (DataFrame, () => Unit) = {
-    val (pref, release) = Hierarchical.prefixSum(df,
-      Seq(col(strataCol), col(idCol)), Seq(strataCol), col(tokensCol),
-      "_cum_before", chunks)
-    (pref.withColumn("bin", expr(s"_cum_before div $budget"))
-      .drop("_cum_before"), release)
-  }
+  def packSequences(df: DataFrame, idCol: String, strataCol: String,
+                    tokensCol: String, budget: Long, chunks: Int = 0,
+                    scope: CacheScope = new CacheScope): DataFrame =
+    Hierarchical.prefixSum(df, Seq(col(strataCol), col(idCol)),
+      Seq(strataCol), col(tokensCol), "_cum_before", chunks, scope)
+      .withColumn("bin", expr(s"_cum_before div $budget"))
+      .drop("_cum_before")
 
   /** GPT-style CONTEXT-WINDOW blocking: the corpus is one token stream
     * (docs concatenated in `idCol` order) chopped into fixed
@@ -562,27 +532,21 @@ object Sampling {
     * The offsets come from [[Hierarchical.prefixSum]] (range slices +
     * broadcast offsets — never a single-task global window), and every
     * derived column is exact integer division. Zero-token docs occupy
-    * their start block nominally (n_blocks 1). Same release contract
-    * as [[packSequencesReleasable]].
+    * their start block nominally (n_blocks 1). The scaffold's cache is
+    * persisted through `scope`.
     */
-  def contextBlocksReleasable(df: DataFrame, idCol: String,
-                              tokensCol: String, ctxLen: Long,
-                              chunks: Int = 0): (DataFrame, () => Unit) = {
+  def contextBlocks(df: DataFrame, idCol: String, tokensCol: String,
+                    ctxLen: Long, chunks: Int = 0,
+                    scope: CacheScope = new CacheScope): DataFrame = {
     require(ctxLen >= 1, s"ctxLen must be >= 1, got $ctxLen")
-    val (pref, release) = Hierarchical.prefixSum(df,
-      Seq(col(idCol)), Seq.empty, col(tokensCol), "tok_start", chunks)
-    (pref
+    Hierarchical.prefixSum(df, Seq(col(idCol)), Seq.empty, col(tokensCol),
+      "tok_start", chunks, scope)
       .withColumn("first_block", expr(s"tok_start div $ctxLen"))
       .withColumn("last_block",
         expr(s"(tok_start + greatest($tokensCol, 1L) - 1L) div $ctxLen"))
       .withColumn("n_blocks", col("last_block") - col("first_block") + 1L)
-      .withColumn("boundary_frag", col("n_blocks") > 1L), release)
+      .withColumn("boundary_frag", col("n_blocks") > 1L)
   }
-
-  /** Handle-less [[contextBlocksReleasable]] for one-shot jobs. */
-  def contextBlocks(df: DataFrame, idCol: String, tokensCol: String,
-                    ctxLen: Long, chunks: Int = 0): DataFrame =
-    contextBlocksReleasable(df, idCol, tokensCol, ctxLen, chunks)._1
 
   /** Freshness-DECAY weighting: emit-all audit frame scoring each row
     * by its age under a stepwise half-life rule —
@@ -802,7 +766,7 @@ object Sampling {
     // stratum-local md5 rank via the scaffold; ids break hash ties
     val slot = pmod(graft.Pipeline.wordHash32(
       concat_ws("_", lit("ney"), col("id"))), lit(1000000L))
-    val (pref, _) = Hierarchical.prefixSum(
+    val pref = Hierarchical.prefixSum(
       base.withColumn("_slot", slot),
       Seq(col("_slot"), col("id")), Seq("stratum"), lit(1L), "_before", 0)
     pref.join(broadcast(quotaDf), Seq("stratum"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,35 +48,23 @@ object SetSim {
   /** Candidate+verify join over `(idCol, tokCol)` token rows (distinct
     * applied internally). Output: `(a_id, b_id, n_inter, n_union,
     * jaccard_ppm)` for pairs with Jaccard >= tNum/tDen, `a_id < b_id`.
-    *
-    * Handle-less one-shot form: the two internal persists (the
-    * corpus-sized distinct-token frame and the per-doc sizes) stay
-    * cached until the session's `clearCache()`. Long-lived sessions
-    * should use [[prefixFilterJoinReleasable]].
+    * The two internal caches (the corpus-sized distinct-token frame and
+    * the per-doc sizes) are persisted through `scope`.
     */
   def prefixFilterJoin(tokens: DataFrame, idCol: String, tokCol: String,
-                       tNum: Int, tDen: Int): DataFrame =
-    prefixFilterJoinReleasable(tokens, idCol, tokCol, tNum, tDen)._1
-
-  /** [[prefixFilterJoin]] plus a release handle that unpersists the
-    * two internal caches (the house *Releasable pattern —
-    * `Hierarchical.prefixSum`, `Stats.aucRocReleasable`). Call the
-    * handle after the result is consumed/materialized.
-    */
-  def prefixFilterJoinReleasable(tokens: DataFrame, idCol: String,
-                                 tokCol: String, tNum: Int, tDen: Int)
-      : (DataFrame, () => Unit) = {
+                       tNum: Int, tDen: Int,
+                       scope: CacheScope = new CacheScope): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen,
       s"threshold must be a fraction in (0, 1], got $tNum/$tDen")
     // the distinct-token frame feeds FOUR branches (df, sizes, prefix
     // rank, the verify arrays) — persist it once or the
     // tokenize+distinct shuffle replays per branch (the round-4
-    // signature-reuse discipline; the returned handle unpersists both)
-    val toks = tokens.select(col(idCol).as("_id"), col(tokCol).as("_tok"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = toks.groupBy("_id").agg(count(lit(1)).as("_sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // signature-reuse discipline)
+    val toks = scope.persist(tokens
+      .select(col(idCol).as("_id"), col(tokCol).as("_tok")).distinct(),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = scope.persist(toks.groupBy("_id").agg(count(lit(1)).as("_sz")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dfs = toks.groupBy("_tok").agg(count(lit(1)).as("_df"))
     // prefix = the |d| - ceil(t*|d|) + 1 globally-rarest tokens;
     // ceil(t*n) = (tNum*n + tDen - 1) div tDen, integer-exact
@@ -128,7 +117,7 @@ object SetSim {
     // form shuffles |cand| payload rows and scans each pair once.
     val docArr = toks.groupBy("_id")
       .agg(collect_list(col("_tok")).as("_arr"))
-    val out = cand
+    cand
       .join(docArr.select(col("_id").as("a_id"), col("_arr").as("_aa")),
         "a_id")
       .join(docArr.select(col("_id").as("b_id"), col("_arr").as("_ab")),
@@ -145,7 +134,6 @@ object SetSim {
       .select(least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id"),
         col("n_inter"), col("n_union"), col("jaccard_ppm"))
-    (out, () => { toks.unpersist(); sizes.unpersist(); () })
   }
 
   /** WEIGHTED prefix-filtered set-similarity join — the tf-idf/cosine
@@ -178,27 +166,21 @@ object SetSim {
     * doc's tokens travel as ONE array of (token, weight) structs;
     * the intersection weight folds in-task over the pair
     * (`aggregate(filter(...))`, codegen'd HOFs), so the join shuffles
-    * |candidates| rows, never sum-of-|doc| posting rows.
+    * |candidates| rows, never sum-of-|doc| posting rows. The two
+    * internal caches (distinct weighted tokens, per-doc totals) are
+    * persisted through `scope`.
     */
   def weightedPrefixFilterJoin(tokens: DataFrame, idCol: String,
                                tokCol: String, wCol: String,
-                               tNum: Int, tDen: Int): DataFrame =
-    weightedPrefixFilterJoinReleasable(
-      tokens, idCol, tokCol, wCol, tNum, tDen)._1
-
-  /** [[weightedPrefixFilterJoin]] plus the cache-release handle. */
-  def weightedPrefixFilterJoinReleasable(tokens: DataFrame, idCol: String,
-                                         tokCol: String, wCol: String,
-                                         tNum: Int, tDen: Int)
-      : (DataFrame, () => Unit) = {
+                               tNum: Int, tDen: Int,
+                               scope: CacheScope = new CacheScope): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen,
       s"threshold must be a fraction in (0, 1], got $tNum/$tDen")
-    val toks = tokens.select(col(idCol).as("_id"), col(tokCol).as("_tok"),
-        col(wCol).cast("long").as("_w"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totals = toks.groupBy("_id").agg(sum("_w").as("_tw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = scope.persist(tokens.select(col(idCol).as("_id"),
+        col(tokCol).as("_tok"), col(wCol).cast("long").as("_w")).distinct(),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val totals = scope.persist(toks.groupBy("_id").agg(sum("_w").as("_tw")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // canonical rank: weight desc (idf-rarest first), token tiebreak;
     // suffix weight INCLUDES the current token
     val ranked = toks.join(totals, "_id")
@@ -256,7 +238,7 @@ object SetSim {
         "a_id")
       .join(docArr.select(col("_id").as("b_id"), col("_sarr").as("_sb")),
         "b_id")
-    val out = (if (tokIsLong)
+    (if (tokIsLong)
         joined.withColumn("w_inter",
           graft.plans.SetSimExpressions.weightedIntersect(
             col("_sa"), col("_sb")))
@@ -274,6 +256,5 @@ object SetSim {
       .select(least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id"),
         col("w_inter"), col("w_union"), col("wjaccard_ppm"))
-    (out, () => { toks.unpersist(); totals.unpersist(); () })
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,22 +78,14 @@ object SpanDedup {
         keep.map(col): _*)
   }
 
+  /** Maximal duplicated token spans per document (see the header). The
+    * one internal cache, the position-fanned window-anchor frame, is
+    * persisted through `scope`.
+    */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                       l: Int, minOcc: Long = 2L,
-                      maxOcc: Long = Long.MaxValue): DataFrame =
-    duplicatedSpansReleasable(docs, idCol, textCol, l, minOcc, maxOcc)._1
-
-  /** [[duplicatedSpans]] plus the release handle for the one internal
-    * cache (the position-fanned window-anchor frame) — the house
-    * *Releasable split; the plain form leaks it until session
-    * clearCache (the bench's per-query discipline), long-lived
-    * sessions call the handle.
-    */
-  def duplicatedSpansReleasable(docs: DataFrame, idCol: String,
-                                textCol: String, l: Int,
-                                minOcc: Long = 2L,
-                                maxOcc: Long = Long.MaxValue)
-      : (DataFrame, () => Unit) = {
+                      maxOcc: Long = Long.MaxValue,
+                      scope: CacheScope = new CacheScope): DataFrame = {
     require(l >= 2, s"window length must be >= 2, got $l")
     require(minOcc >= 2, s"minOcc must be >= 2, got $minOcc")
     // round-19 (guide §5 reuse): the anchor frame feeds BOTH the
@@ -102,8 +95,8 @@ object SpanDedup {
     // cost — executed twice. Persist the narrow (_id, pos, _h) frame
     // once; MEMORY_AND_DISK spills at the decades where the fan-out
     // outgrows memory.
-    val anchors = windowAnchors(docs, idCol, textCol, l)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val anchors = scope.persist(windowAnchors(docs, idCol, textCol, l),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // corpus-wide occurrence count per window hash: groupBy (map-side
     // combine) + join back, NOT count-over-window — a window would
     // buffer a hyper-frequent anchor's whole partition in one task
@@ -118,7 +111,7 @@ object SpanDedup {
     val wPrev = Window.partitionBy("_id").orderBy("pos")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wRun = Window.partitionBy("_id").orderBy("pos")
-    val out = dup
+    dup
       .withColumn("_prev_end", max(col("pos") + l).over(wPrev))
       .withColumn("_new",
         when(col("pos") <= col("_prev_end"), 0).otherwise(1))
@@ -128,6 +121,5 @@ object SpanDedup {
         (max("pos") + l).cast("long").as("span_end"))
       .withColumn("span_tokens", col("span_end") - col("span_start"))
       .select(idCol, "span_start", "span_end", "span_tokens")
-    (out, () => { anchors.unpersist(); () })
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -129,39 +130,32 @@ object Stats {
     *
     * carried in HALF-units so ties stay integer. Output one row:
     * `(n_pos, n_neg, auc_ppm)` (floor; 0 when either class is empty).
-    * Returns the result plus the scaffold's cache-release handle.
+    * The scaffold's cache is persisted through `scope`.
     */
-  def aucRocReleasable(scored: DataFrame, labelCol: String,
-                       scoreCol: String,
-                       chunks: Int = 0): (DataFrame, () => Unit) = {
-    val (out, release) =
-      aucRocByGroupReleasable(scored, Nil, labelCol, scoreCol, chunks)
-    (out.select("n_pos", "n_neg", "auc_ppm"), release)
-  }
-
-  /** Handle-less [[aucRocReleasable]] for one-shot jobs. */
   def aucRoc(scored: DataFrame, labelCol: String, scoreCol: String,
-             chunks: Int = 0): DataFrame =
-    aucRocReleasable(scored, labelCol, scoreCol, chunks)._1
+             chunks: Int = 0, scope: CacheScope = new CacheScope): DataFrame =
+    aucRocByGroup(scored, Nil, labelCol, scoreCol, chunks, scope)
+      .select("n_pos", "n_neg", "auc_ppm")
 
-  /** GROUPED [[aucRocReleasable]] — one AUC per `groupCols` tuple
+  /** GROUPED [[aucRoc]] — one AUC per `groupCols` tuple
     * (per-class one-vs-rest, per-segment, per-model-version), all
     * classes in ONE scaffold pass: the distinct-(group, score) counts
     * range-partition by score with the groups as prefix-sum STRATA
     * (each stratum's running negative count composes from per-slice
     * locals + broadcast offsets — no per-group job, no per-group
-    * window task). Output: groupCols..., n_pos, n_neg, auc_ppm.
+    * window task). Output: groupCols..., n_pos, n_neg, auc_ppm. The
+    * scaffold's cache is persisted through `scope`.
     */
-  def aucRocByGroupReleasable(scored: DataFrame, groupCols: Seq[String],
-                              labelCol: String, scoreCol: String,
-                              chunks: Int = 0): (DataFrame, () => Unit) = {
+  def aucRocByGroup(scored: DataFrame, groupCols: Seq[String],
+                    labelCol: String, scoreCol: String, chunks: Int = 0,
+                    scope: CacheScope = new CacheScope): DataFrame = {
     val keys = groupCols.map(col) :+ col(scoreCol).as("_s")
     val byScore = scored.groupBy(keys: _*)
       .agg(sum(when(col(labelCol) === 1, 1L).otherwise(0L)).as("_pos"),
         sum(when(col(labelCol) === 1, 0L).otherwise(1L)).as("_neg"))
-    val (pref, release) = Hierarchical.prefixSum(byScore,
-      Seq(col("_s")), groupCols, col("_neg"), "_neg_below", chunks)
-    val agg = pref.groupBy(groupCols.map(col): _*)
+    Hierarchical.prefixSum(byScore, Seq(col("_s")), groupCols, col("_neg"),
+      "_neg_below", chunks, scope)
+      .groupBy(groupCols.map(col): _*)
       .agg(sum("_pos").cast("long").as("n_pos"),
         sum("_neg").cast("long").as("n_neg"),
         sum(expr("_pos * (2 * _neg_below + _neg)")).cast("long").as("_num2"))
@@ -169,15 +163,7 @@ object Stats {
         "CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0L" +
           " ELSE (_num2 * 1000000L) div (2 * n_pos * n_neg) END"))
       .drop("_num2")
-    (agg, release)
   }
-
-  /** Handle-less [[aucRocByGroupReleasable]] for one-shot jobs. */
-  def aucRocByGroup(scored: DataFrame, groupCols: Seq[String],
-                    labelCol: String, scoreCol: String,
-                    chunks: Int = 0): DataFrame =
-    aucRocByGroupReleasable(scored, groupCols, labelCol, scoreCol,
-      chunks)._1
 
   /** Calibration (reliability) bins for a probabilistic classifier:
     * bucket the predicted probability into `bins` equal slices, report
@@ -290,28 +276,20 @@ object Stats {
     * each docs-decile boundary.
     *
     * ALL-INTEGER (ppm floors over DECIMAL(38,0)); the global rank
-    * rides [[Ranking.globalRowNumberReleasable]]'s hierarchical
+    * rides [[Ranking.globalRowNumber]]'s hierarchical
     * scaffold (range slices + broadcast offsets — never a
     * single-task window), deciles are one bounded groupBy, and the
-    * cumulative window runs on the 10-row panel.
+    * cumulative window runs on the 10-row panel. The scaffold's
+    * boundary cache and the ranked frame (read by both the totals
+    * aggregate and the decile rollup) are persisted through `scope`.
     */
-  def giniConcentration(df: DataFrame, idCol: String,
-                        weightCol: String): DataFrame =
-    giniConcentrationReleasable(df, idCol, weightCol)._1
-
-  /** [[giniConcentration]] plus the house *Releasable handle (the
-    * scaffold's boundary cache + the ranked frame feeding both the
-    * totals aggregate and the decile rollup).
-    */
-  def giniConcentrationReleasable(df: DataFrame, idCol: String,
-                                  weightCol: String)
-      : (DataFrame, () => Unit) = {
+  def giniConcentration(df: DataFrame, idCol: String, weightCol: String,
+                        scope: CacheScope = new CacheScope): DataFrame = {
     val base = df.select(col(idCol).as("_id"),
       col(weightCol).cast("long").as("_w"))
-    val (ranked0, releaseRank) = Ranking.globalRowNumberReleasable(
-      base, Seq(col("_w"), col("_id")), "_r")
-    val ranked = ranked0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranked = scope.persist(Ranking.globalRowNumber(
+      base, Seq(col("_w"), col("_id")), "_r", scope = scope),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val totals = ranked.agg(
       count(lit(1)).as("_n"),
       sum(col("_w").cast("decimal(38,0)")).as("_tw"),
@@ -329,14 +307,13 @@ object Stats {
     val cumW = org.apache.spark.sql.expressions.Window.orderBy("decile")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding, 0)
-    val out = deciles
+    deciles
       .withColumn("_cum", sum(col("decile_weight").cast("decimal(38,0)"))
         .over(cumW))
       .withColumn("cum_weight_ppm", expr(
         "CAST(_cum * 1000000 div greatest(_tw, 1) AS BIGINT)"))
       .select("decile", "n_docs", "decile_weight", "cum_weight_ppm",
         "gini_ppm")
-    (out, () => { ranked.unpersist(); releaseRank() })
   }
 
   /** Poisson bootstrap (the distributed bootstrap — per-resample
@@ -865,7 +842,7 @@ object Stats {
       col(valueCol).cast("long").as("_v"),
       col(idCol).cast("long").as("_id"))
     def medianOf(in: DataFrame, vCol: String, out: String): DataFrame = {
-      val (pref, _) = Hierarchical.prefixSum(in,
+      val pref = Hierarchical.prefixSum(in,
         Seq(col(vCol), col("_id")), Seq("stratum"), lit(1L), "_before", 0)
       val counts = pref.groupBy("stratum")
         .agg(count(lit(1)).cast("long").as("n_rows"))
@@ -910,7 +887,7 @@ object Stats {
     val base = df.select(col(strataCol).cast("string").as("stratum"),
       col(valueCol).cast("long").as("_v"),
       col(idCol).cast("long").as("_id"))
-    val (pref, _) = Hierarchical.prefixSum(base,
+    val pref = Hierarchical.prefixSum(base,
       Seq(col("_v"), col("_id")), Seq("stratum"), lit(1L), "_before", 0)
     val counts = pref.groupBy("stratum")
       .agg(count(lit(1)).cast("long").as("n_rows"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -234,7 +235,7 @@ object TextStats {
     * literal-replace projection building the next vocab (persisted per
     * iteration — eagerly materialized by the next step's fetch, so
     * each iteration's work runs once). The driver fetch is deliberate,
-    * against the [[graft.ops.Graph.pageRankReleasable]] no-action
+    * against the [[graft.ops.Graph.pageRank]] no-action
     * discipline: here the argmax parametrizes the next plan's
     * STRUCTURE (the replace arguments), and carrying it as a broadcast
     * one-row frame instead embeds the full prior plan in BOTH the step
@@ -242,29 +243,22 @@ object TextStats {
     * iteration (measured: a 2 GB plan string at 8 merges; persists
     * bound execution, not the analyzed tree). One single-row fetch per
     * merge is nothing at any corpus scale. If the vocabulary exhausts
-    * its pairs early, the table ends at the last real merge. [[bpeTrain]]
-    * leaks the loop caches until session end / clearCache (fine for
-    * one-shot jobs); long-lived sessions use the Releasable form and
-    * call the handle once consumers are done. Merge counts are
-    * analysis-scale (tens); a production 30k-merge tokenizer train is
-    * a different harness (iterate on a materialized vocab table).
+    * its pairs early, the table ends at the last real merge. The
+    * loop's per-iteration vocab caches are persisted through `scope`.
+    * Merge counts are analysis-scale (tens); a production 30k-merge
+    * tokenizer train is a different harness (iterate on a
+    * materialized vocab table).
     */
-  def bpeTrain(docs: DataFrame, textCol: String, merges: Int): DataFrame =
-    bpeTrainReleasable(docs, textCol, merges)._1
-
-  /** [[bpeTrain]] plus the release handle for the loop's caches. */
-  def bpeTrainReleasable(docs: DataFrame, textCol: String,
-                         merges: Int): (DataFrame, () => Unit) = {
+  def bpeTrain(docs: DataFrame, textCol: String, merges: Int,
+               scope: CacheScope = new CacheScope): DataFrame = {
     require(merges >= 1, s"merges must be >= 1, got $merges")
     val spark = docs.sparkSession
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var vocab = docs
+    var vocab = scope.persist(docs
       .select(explode(words(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("n_w"))
-      .select(regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("n_w"))
-      .persist(disk)
-    caches += vocab
+      .select(regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("n_w")),
+      disk)
     val rows = Seq.newBuilder[(Long, String, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -288,19 +282,15 @@ object TextStats {
         val l = top(0).getString(0)
         val r = top(0).getString(1)
         rows += ((step.toLong, l, r, l + r, top(0).getLong(2)))
-        val next = vocab
+        vocab = scope.persist(vocab
           .select(call_function("replace", col("s"),
             lit("<" + l + "><" + r + ">"), lit("<" + l + r + ">")).as("s"),
-            col("n_w"))
-          .persist(disk)
-        caches += next
-        vocab = next
+            col("n_w")), disk)
         step += 1
       }
     }
     import spark.implicits._
-    (rows.result().toDF("step", "l", "r", "merged", "n"),
-      () => { caches.foreach(_.unpersist()); () })
+    rows.result().toDF("step", "l", "r", "merged", "n")
   }
 
   /** APPLY a trained BPE merge table ([[bpeTrain]] output) to a
@@ -719,24 +709,12 @@ object TextStats {
     * `c_ab * N <= 9.2e12` (e.g. any pair count at N <= 1e9 tokens
     * needs c_ab <= ~9200). Past that, lift the numerator to
     * DECIMAL(38,0) on both engines — same escape hatch as
-    * [[sourceDivergence]].
+    * [[sourceDivergence]]. The one internal cache (the unified
+    * unigram+pair count table) is persisted through `scope`.
     */
   def collocations(docs: DataFrame, textCol: String, totalTokens: Long,
-                   minCount: Int = 5, k: Int = 30,
-                   window: Int = 1): DataFrame =
-    collocationsReleasable(docs, textCol, totalTokens, minCount, k,
-      window)._1
-
-  /** [[collocations]] plus the release handle for the one internal
-    * cache (the unified unigram+pair count table) — the house
-    * *Releasable split ([[graft.ops.SetSim.prefixFilterJoinReleasable]]);
-    * the plain form leaks it until session clearCache (the bench's
-    * per-query discipline), long-lived sessions call the handle.
-    */
-  def collocationsReleasable(docs: DataFrame, textCol: String,
-                             totalTokens: Long, minCount: Int = 5,
-                             k: Int = 30, window: Int = 1)
-      : (DataFrame, () => Unit) = {
+                   minCount: Int = 5, k: Int = 30, window: Int = 1,
+                   scope: CacheScope = new CacheScope): DataFrame = {
     require(totalTokens > 0, s"totalTokens must be positive, got $totalTokens")
     require(minCount >= 1 && k >= 1, s"minCount/k must be >= 1")
     require(window >= 1, s"window must be >= 1, got $window")
@@ -764,16 +742,16 @@ object TextStats {
     }
     val uniArr = transform(col("w"),
       t => struct(t.as("a"), lit(null).cast("string").as("b")))
-    val counts = w
+    val counts = scope.persist(w
       .select(explode(concat(uniArr +: pairArrs: _*)).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("c")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val uni = counts.filter(col("b").isNull)
     val bi = counts.filter(col("b").isNotNull)
       .select(col("a"), col("b"), col("c").as("c_ab"))
       .filter(col("c_ab") >= minCount)
-    val out = bi
+    bi
       .join(uni.select(col("a"), col("c").as("c_a")), "a")
       .join(uni.select(col("a").as("b"), col("c").as("c_b")), "b")
       .select(concat_ws(" ", col("a"), col("b")).as("bigram"),
@@ -782,7 +760,6 @@ object TextStats {
           .as("lift_ppm"))
       .orderBy(col("lift_ppm").desc, col("n").desc, col("bigram"))
       .limit(k)
-    (out, () => { counts.unpersist(); () })
   }
 
   /** Argmax-margin over a set of integer score columns: the top score,

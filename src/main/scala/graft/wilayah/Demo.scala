@@ -8,8 +8,7 @@ package graft.wilayah
 object Demo {
   def main(args: Array[String]): Unit = {
     val geojsonDir = args.headOption.getOrElse("/root/reference/geojson")
-    val spark = graft.Sessions.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-demo")
+    val spark = graft.Sessions.fromEnv("graft-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     val wh = java.nio.file.Files.createTempDirectory("graft-demo").toString + "/warehouse"

@@ -1171,8 +1171,8 @@ class OpsSpec extends AnyFunSuite {
     //   step 3: (a,b) 2 is all that remains -> merge "ab"
     //   step 4: no pairs left -> table ends at 3 rows
     val docs = Seq("aaa aaa ab", "aaa ab").toDF("text")
-    val (table, release) =
-      graft.ops.TextStats.bpeTrainReleasable(docs, "text", merges = 4)
+    val scope = new CacheScope
+    val table = graft.ops.TextStats.bpeTrain(docs, "text", merges = 4, scope)
     val got = table.orderBy("step").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4)))
@@ -1180,21 +1180,21 @@ class OpsSpec extends AnyFunSuite {
       (1L, "a", "a", "aa", 6L),
       (2L, "aa", "a", "aaa", 3L),
       (3L, "a", "b", "ab", 2L)))
-    release()
+    scope.release()
 
     // even-run greedy rule: "aaaa" + (a,a) -> [aa, aa] (so step 2's
     // top pair is (aa,aa) with the full word frequency, which the
     // non-greedy [aa, a, a] segmentation could not produce)
     val runs = Seq("aaaa aaaa").toDF("text")
-    val (t2, release2) =
-      graft.ops.TextStats.bpeTrainReleasable(runs, "text", merges = 3)
+    val scope2 = new CacheScope
+    val t2 = graft.ops.TextStats.bpeTrain(runs, "text", merges = 3, scope2)
     val got2 = t2.orderBy("step").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4)))
     assert(got2.toSeq == Seq(
       (1L, "a", "a", "aa", 2L * 3),
       (2L, "aa", "aa", "aaaa", 2L)))
-    release2()
+    scope2.release()
   }
 
   test("BPE apply counts real subword tokens under the learned merges") {
@@ -2626,10 +2626,10 @@ class OpsSpec extends AnyFunSuite {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val seeds = Seq(1L, 99L).toDF("node")
     def run(iters: Int): Map[Long, Long] = {
-      val (df, release) = graft.ops.Graph
-        .personalizedPageRankReleasable(edges, seeds, iters)
+      val scope = new CacheScope
+      val df = graft.ops.Graph.personalizedPageRank(edges, seeds, iters, scope)
       val out = df.as[(Long, Long)].collect().toMap
-      release(); out
+      scope.release(); out
     }
     assert(run(1) == Map(1L -> 450L, 2L -> 2550L, 3L -> 0L))
     assert(run(2) == Map(1L -> 450L, 2L -> 382L, 3L -> 2167L))
@@ -3228,9 +3228,10 @@ class OpsSpec extends AnyFunSuite {
     } yield (a, b, inter.toLong, union.toLong)).toSet
     for ((n, dn) <- Seq((6, 10), (1, 2), (9, 10), (1, 1)))
       assert(run(n, dn) == brute(n, dn), s"threshold $n/$dn")
-    // releasable form: same rows, and the handle drops BOTH internal
-    // caches (long-lived sessions must not rely on clearCache). Clear
-    // first: the handle-less runs above cached the SAME logical plans
+    // scoped call: same rows, and releasing the scope drops BOTH
+    // internal caches (long-lived sessions must not rely on
+    // clearCache). Clear first: the unscoped runs above cached the SAME
+    // logical plans
     // and CacheManager dedupes, which would skew the count. Track KEY
     // SETS, not counts: earlier tests' localCheckpoint RDDs sit in
     // getPersistentRDDs until the async ContextCleaner collects them,
@@ -3239,13 +3240,13 @@ class OpsSpec extends AnyFunSuite {
     // registered are the assertion's business.
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (rel, release) = graft.ops.SetSim.prefixFilterJoinReleasable(
-      toks, "id", "tok", 1, 2)
+    val scope = new CacheScope
+    val rel = graft.ops.SetSim.prefixFilterJoin(toks, "id", "tok", 1, 2, scope)
     assert(rel.select("a_id", "b_id", "n_inter", "n_union")
       .as[(Long, Long, Long, Long)].collect().toSet == brute(1, 2))
     val mine = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(mine.nonEmpty, "the releasable form must register its caches")
-    release()
+    assert(mine.nonEmpty, "the scoped call must register its caches")
+    scope.release()
     assert((spark.sparkContext.getPersistentRDDs.keySet & mine).isEmpty,
       "release() must unpersist both internal caches")
   }
@@ -3483,13 +3484,14 @@ class OpsSpec extends AnyFunSuite {
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(gotL == brute(n, dn), s"threshold $n/$dn (kernel path)")
     }
-    // releasable handle drops both internal caches
+    // releasing the scope drops both internal caches
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.size
-    val (rel, release) = graft.ops.SetSim.weightedPrefixFilterJoinReleasable(
-      weighted, "id", "tok", "wt", 1, 2)
+    val scope = new CacheScope
+    val rel = graft.ops.SetSim.weightedPrefixFilterJoin(
+      weighted, "id", "tok", "wt", 1, 2, scope)
     rel.collect()
-    release()
+    scope.release()
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
@@ -4709,39 +4711,118 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("round-19 releasable variants: same rows, handle drops the caches") {
+  test("CacheScope: every scoped op's caches drop on release()") {
     import spark.implicits._
-    // each op's OUTPUT is pinned by its own spec; this one pins the
-    // round-19 *Releasable split — the handle must unpersist exactly
-    // the caches the call registered (key-set discipline from the
-    // prefixFilterJoinReleasable spec: only THIS call's RDDs are the
-    // assertion's business)
-    def assertReleases[T](run: () => (org.apache.spark.sql.DataFrame,
-        () => Unit), label: String): Unit = {
-      spark.catalog.clearCache()
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val (df, release) = run()
-      df.collect() // materialize so the lazy persists register
-      val mine = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(mine.nonEmpty, s"$label must register its cache")
-      release()
-      assert((spark.sparkContext.getPersistentRDDs.keySet & mine).isEmpty,
-        s"$label release() must unpersist its caches")
-    }
     val docs = Seq((1L, "a b c a b c a b"), (2L, "a b d e f g h i"))
       .toDF("doc_id", "text")
-    assertReleases(() => graft.ops.TextStats.collocationsReleasable(
-      docs, "text", 16L, minCount = 1, k = 5, window = 2), "collocations")
-    assertReleases(() => graft.Dedup.editOnePairsReleasable(
-      Seq("cat", "cut", "dog").toDF("w"), "w"), "editOnePairs")
-    assertReleases(() => graft.ops.SpanDedup.duplicatedSpansReleasable(
-      docs, "doc_id", "text", l = 3), "duplicatedSpans")
+    val toks = docs.select(col("doc_id").as("id"),
+      explode(split(col("text"), " ")).as("tok")).distinct()
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
       .toDF("src", "dst")
-    assertReleases(() => graft.ops.Graph.triangleCountsReleasable(edges),
-      "triangleCounts")
-    assertReleases(
-      () => graft.ops.Graph.clusteringCoefficientReleasable(edges),
-      "clusteringCoefficient")
+    val comm = Seq((1L, "a"), (2L, "a"), (3L, "a"), (4L, "b"))
+      .toDF("node", "c")
+    val mix = Seq((1L, "a", 10L, 5L), (2L, "a", 10L, 1L),
+      (3L, "a", 10L, 3L), (4L, "b", 10L, 1L), (5L, "b", 10L, 2L))
+      .toDF("id", "s", "tok", "prio")
+    val targets = Seq(("a", 500000), ("b", 500000))
+    val grid = (for (x <- 0L until 8L; y <- 0L until 8L) yield (x, y))
+      .toDF("x", "y")
+    val scored = Seq(("g", 1, 3.0), ("g", 1, 2.0), ("g", 0, 2.0),
+      ("g", 0, 1.0)).toDF("g", "y", "s")
+    val iv = Seq(("a", 0L, 10L), ("b", 5L, 15L)).toDF("id", "lo", "hi")
+    val vecs = Seq((1L, Seq(0.8f, 0.6f)), (2L, Seq(0f, 1f)),
+      (100L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+    import graft.ops.{Events, Graph, Layout, Ranking, Sampling, SetSim,
+      SpanDedup, Stats, TextStats}
+    def op(label: String)(run: CacheScope => org.apache.spark.sql.DataFrame) =
+      label -> run
+    val ops = Seq(
+      op("selectWithinBudget")(s => Sampling.selectWithinBudget(
+        mix, "id", "prio", "tok", 25L, scope = s)),
+      op("targetMix")(s => Sampling.targetMix(
+        mix, "id", "s", targets, scope = s)),
+      op("targetMixTokens")(s => Sampling.targetMixTokens(
+        mix, "id", "s", "tok", targets, scope = s)),
+      op("targetMixTokensByPriority")(s =>
+        Sampling.targetMixTokensByPriority(
+          mix, "id", "s", "tok", "prio", targets, scope = s)),
+      op("packSequences")(s => Sampling.packSequences(
+        mix, "id", "s", "tok", 20L, scope = s)),
+      op("contextBlocks")(s => Sampling.contextBlocks(
+        mix, "id", "tok", 16L, scope = s)),
+      op("coverageThresholds")(s => Ranking.coverageThresholds(
+        mix, "id", "tok", Seq(50, 100), scope = s)),
+      op("globalRowNumber")(s => Ranking.globalRowNumber(
+        mix, Seq(col("prio"), col("id")), scope = s)),
+      op("concurrency")(s => Events.concurrency(iv, "lo", "hi", Seq("id"),
+        scope = s)),
+      op("duplicatedSpans")(s => SpanDedup.duplicatedSpans(
+        docs, "doc_id", "text", l = 3, scope = s)),
+      op("zorderFileStats")(s => Layout.zorderFileStats(
+        grid, "x", "y", 3, 16L, scope = s)),
+      op("zorderFileStatsN")(s => Layout.zorderFileStatsN(
+        grid, Seq("x", "y"), 3, 16L, scope = s)),
+      op("sortFileStats")(s => Layout.sortFileStats(
+        grid, Seq("x", "y"), 16L, scope = s)),
+      op("aucRoc")(s => Stats.aucRoc(scored, "y", "s", scope = s)),
+      op("aucRocByGroup")(s => Stats.aucRocByGroup(
+        scored, Seq("g"), "y", "s", scope = s)),
+      op("giniConcentration")(s =>
+        Stats.giniConcentration(mix, "id", "prio", s)),
+      op("pageRank")(s =>
+        Graph.pageRank(edges, 2, redistributeDangling = true, scope = s)),
+      op("personalizedPageRank")(s => Graph.personalizedPageRank(
+        edges, Seq(1L).toDF("node"), 2, s)),
+      op("hits")(s => Graph.hits(edges, 2, s)),
+      op("triangleCounts")(s => Graph.triangleCounts(edges, s)),
+      op("modularity")(s => Graph.modularity(edges, comm, "node", "c", s)),
+      op("deterministicWalks")(s => Graph.deterministicWalks(edges, 2, s)),
+      op("clusteringCoefficient")(s =>
+        Graph.clusteringCoefficient(edges, s)),
+      op("prefixFilterJoin")(s => SetSim.prefixFilterJoin(
+        toks, "id", "tok", 1, 2, s)),
+      op("weightedPrefixFilterJoin")(s =>
+        SetSim.weightedPrefixFilterJoin(
+          toks.withColumn("wt", lit(1L)), "id", "tok", "wt", 1, 2, s)),
+      op("bpeTrain")(s => TextStats.bpeTrain(docs, "text", 2, s)),
+      op("collocations")(s => TextStats.collocations(
+        docs, "text", 16L, minCount = 1, k = 5, window = 2, scope = s)),
+      op("prefixRecall")(s => Similarity.prefixRecall(vecs, "vec_id",
+        "embedding", col("vec_id") >= 100L, prefixDims = 1, k = 1,
+        scope = s)),
+      op("editOnePairs")(s => Dedup.editOnePairs(
+        Seq("cat", "cut", "dog").toDF("w"), "w", s)))
+    // Key-set discipline: only the RDDs THIS call registered are the
+    // assertion's business (earlier tests' localCheckpoint RDDs vanish
+    // from getPersistentRDDs whenever the async ContextCleaner runs),
+    // and checkpoint RDDs (deterministicWalks' hops) are not caches.
+    def cacheRdds(before: Set[Int]): Set[Int] =
+      spark.sparkContext.getPersistentRDDs
+        .collect { case (id, rdd) if !before(id) && !rdd.isCheckpointed => id }
+        .toSet
+    for ((label, run) <- ops) {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val scope = new CacheScope
+      run(scope).collect() // materialize so the lazy persists register
+      val mine = cacheRdds(before)
+      assert(mine.nonEmpty, s"$label must register its caches")
+      scope.release()
+      assert((spark.sparkContext.getPersistentRDDs.keySet & mine).isEmpty,
+        s"$label: release() must unpersist every cache it registered")
+    }
+    // the default scope is never released: an unscoped call's caches
+    // stay registered until clearCache — the cross-pass reuse a
+    // query's timed passes depend on
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Graph.modularity(edges, comm, "node", "c").collect()
+    val mine = cacheRdds(before)
+    assert(mine.nonEmpty, "unscoped modularity must register its cache")
+    assert(mine.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
+      "an unscoped call keeps its caches until clearCache")
+    spark.catalog.clearCache()
+    assert((spark.sparkContext.getPersistentRDDs.keySet & mine).isEmpty,
+      "clearCache drops an unscoped call's caches")
   }
 }

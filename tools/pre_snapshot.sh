@@ -1,9 +1,11 @@
 #!/usr/bin/env bash
 # Pre-snapshot gate (round-11 verdict item 2): refuse a round-end
-# commit unless BOTH verification surfaces are green —
-#   1. the full ScalaTest suite (`sbt test`, exit 0), and
-#   2. the driver-contract oracle gate (graft.Verify at sf0.01 +
-#      tools/check_oracle.py over DuckDB).
+# commit unless every verification surface is green —
+#   1. the full ScalaTest suite (`sbt test`, exit 0),
+#   2. the oracle gate (graft.Verify at sf0.01, which exits 1 on any
+#      failed dump, + tools/check_oracle.py over DuckDB),
+#   3. the benchmark's own unit tests (perfbench/tests).
+# Step 4 is an informational bench diff.
 # Rationale: q210 landed with its own OpsSpec green while a
 # cross-cutting plan-guard spec silently reddened — the full suite
 # must run before ANY end-of-round snapshot.
@@ -17,14 +19,17 @@ SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/pre_snapshot.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
-echo "[pre-snapshot] 1/2 full test suite..."
+echo "[pre-snapshot] 1/4 full test suite..."
 sbt -batch test
 
-echo "[pre-snapshot] 2/2 oracle gate at $SF_DIR..."
+echo "[pre-snapshot] 2/4 oracle gate at $SF_DIR..."
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify"
 python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR/verify"
 
-echo "[pre-snapshot] 3/3 cross-round bench median diff (informational)..."
+echo "[pre-snapshot] 3/4 benchmark unit tests..."
+python3 -m unittest discover -s perfbench/tests
+
+echo "[pre-snapshot] 4/4 cross-round bench median diff (informational)..."
 # round-13 verdict item 3: the in-run spread gates cannot see a clean
 # cross-round regression (q93 slipped both); diff the new bench record
 # against the last committed one and PRINT any query >1.5x its prior
@@ -38,7 +43,7 @@ if [[ -f bench_history/detail_sf1-bench.json ]]; then
   python3 tools/bench_diff.py bench_history/detail_sf1-bench.json || true
 fi
 
-echo "[pre-snapshot] green: suite + oracle both pass."
+echo "[pre-snapshot] green: suite, oracle and benchmark tests pass."
 if [[ $# -ge 1 ]]; then
   git add -u
   git commit -m "$1"
