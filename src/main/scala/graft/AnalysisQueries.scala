@@ -15,42 +15,12 @@ import org.apache.spark.sql.functions._
   */
 object AnalysisQueries {
   import Tables._
-
-  // Oracle mirror of Pipeline.wordHash32: first 8 hex digits of md5
-  // folded to a 32-bit integer (same recipe as the q93 oracle).
-  private[graft] def hash32Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 9)],
-                    (a, b) -> a*16 + b)"""
-
-  // Oracle mirror of Pipeline.wordHash60: first 15 md5 hex digits
-  // folded to a 60-bit BIGINT (the membership/join/dictionary key
-  // recipe — same fold the q140 decontamination oracle uses).
-  private[graft] def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
-
-  // Oracle mirror of Pipeline.rhpBucket(col, 64, 4): 4-plane random-
-  // hyperplane bucket with md5-parity signs (the q30/q65 recipe).
-  private def bucketOf(v: String): String = s"""
-    list_reduce(list_transform(range(0, 4), p ->
-      CASE WHEN list_reduce(list_transform(range(1, 65), d ->
-             $v[d] * (CASE WHEN (strpos('0123456789abcdef',
-                      substr(md5(CAST(p AS VARCHAR) || '_' || CAST(d AS VARCHAR)), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END)),
-           (x, y) -> x + y) > 0
-      THEN (1 << CAST(p AS INTEGER)) ELSE 0 END),
-    (x, y) -> x + y)"""
-
-  // Index-ordered IEEE folds matching Pipeline.dot / cosine exactly.
-  private def dotOf(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-  private def cosOf(a: String, b: String): String =
-    s"${dotOf(a, b)} / (sqrt(${dotOf(a, a)}) * sqrt(${dotOf(b, b)}))"
+  import OracleSql.{cos, dot, hash32, rhpBucket}
 
   // Oracle mirror of ops.Sampling.splitFor at 800/100/100 permille.
   private def splitCase(e: String): String = s"""
-    CASE WHEN ${hash32Sql(s"CAST($e AS VARCHAR)")} % 1000 < 800 THEN 'train'
-         WHEN ${hash32Sql(s"CAST($e AS VARCHAR)")} % 1000 < 900 THEN 'val'
+    CASE WHEN ${hash32(s"CAST($e AS VARCHAR)")} % 1000 < 800 THEN 'train'
+         WHEN ${hash32(s"CAST($e AS VARCHAR)")} % 1000 < 900 THEN 'val'
          ELSE 'test' END"""
 
   val all: Seq[QueryDef] = Seq(
@@ -142,11 +112,11 @@ object AnalysisQueries {
     // oracle's list_reduce); the cutoff is an exact ORDER BY rank with
     // id tiebreak, so the flagged set is deterministic.
     QueryDef("q99_norm_outliers",
-      Some("""
+      Some(s"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM e),
         s AS (SELECT vec_id,
-                list_reduce(list_transform(range(1, 65), i -> v[i] * v[i]), (x, y) -> x + y) AS norm_sq
+                ${dot("v", "v")} AS norm_sq
               FROM e)
         SELECT vec_id, norm_sq FROM s CROSS JOIN n
         QUALIFY ROW_NUMBER() OVER (ORDER BY norm_sq DESC, vec_id) <= CAST(ceil(0.01 * n) AS BIGINT)
@@ -167,7 +137,7 @@ object AnalysisQueries {
     QueryDef("q100_priority_sample",
       Some(s"""
         WITH s AS (SELECT doc_id, lang, source,
-                     CAST(${hash32Sql("CAST(doc_id AS VARCHAR)")} % 1000000 AS BIGINT)
+                     CAST(${hash32("CAST(doc_id AS VARCHAR)")} % 1000000 AS BIGINT)
                        * 1099511627776 + doc_id % 1099511627776 AS pri
                    FROM documents)
         SELECT lang, doc_id, source, pri FROM s
@@ -190,7 +160,7 @@ object AnalysisQueries {
     // dist<=3 pairs, so the blocking completeness is exercised on
     // real data, not just the plant.
     QueryDef("q101_simhash64_pairs",
-      Some("""
+      Some(s"""
         WITH corpus AS (
           SELECT doc_id, text FROM documents
           UNION ALL
@@ -200,10 +170,8 @@ object AnalysisQueries {
             (CAST(900003 AS BIGINT), 'alpha beta gamma delta epsilon zeta eta theta iota kappa lambda')) v(doc_id, text)),
         toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus),
         h AS (SELECT doc_id,
-                list_reduce([strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1 for i in range(1, 9)],
-                            (a, b) -> a*16 + b) AS hlo,
-                list_reduce([strpos('0123456789abcdef', substr(md5('x1_' || w), i, 1)) - 1 for i in range(1, 9)],
-                            (a, b) -> a*16 + b) AS hhi
+                ${hash32("w")} AS hlo,
+                ${hash32("'x1_' || w")} AS hhi
               FROM toks),
         votes AS (SELECT doc_id, b,
                     SUM(CASE WHEN (hlo >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS vlo,
@@ -257,11 +225,11 @@ object AnalysisQueries {
     QueryDef("q102_semantic_dedup_blocked",
       Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        tb AS (SELECT vec_id, v, ${bucketOf("v")} AS b FROM t),
-        c AS (SELECT vec_id AS cid, v AS cv, ${bucketOf("v")} AS cb FROM t
+        tb AS (SELECT vec_id, v, ${rhpBucket("v")} AS b FROM t),
+        c AS (SELECT vec_id AS cid, v AS cv, ${rhpBucket("v")} AS cb FROM t
               WHERE vec_id % 101 = 0 AND vec_id < 10100),
         cp AS (SELECT cid, cv, unnest([xor(cb, 0), xor(cb, 1), xor(cb, 2), xor(cb, 4), xor(cb, 8)]) AS probe FROM c),
-        cand AS (SELECT tb.vec_id, cid, ${cosOf("v", "cv")} AS cosine
+        cand AS (SELECT tb.vec_id, cid, ${cos("v", "cv")} AS cosine
                  FROM tb JOIN cp ON tb.b = cp.probe),
         best AS (SELECT vec_id, cid FROM
                    (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -271,7 +239,7 @@ object AnalysisQueries {
               FROM tb LEFT JOIN best USING (vec_id)),
         losers AS (SELECT DISTINCT y.vec_id FROM a x JOIN a y
                    ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-                   WHERE ${cosOf("x.v", "y.v")} >= 0.4)
+                   WHERE ${cos("x.v", "y.v")} >= 0.4)
         SELECT vec_id, centroid_id FROM a
         WHERE vec_id NOT IN (SELECT vec_id FROM losers)
         ORDER BY vec_id"""),
@@ -289,7 +257,7 @@ object AnalysisQueries {
     // in the same split every run/engine/retry. Pure scan expression.
     QueryDef("q103_hash_split",
       Some(s"""
-        WITH s AS (SELECT doc_id, ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 1000 AS slot
+        WITH s AS (SELECT doc_id, ${hash32("CAST(doc_id AS VARCHAR)")} % 1000 AS slot
                    FROM documents)
         SELECT doc_id, CASE WHEN slot < 800 THEN 'train'
                             WHEN slot < 900 THEN 'val'
@@ -321,7 +289,7 @@ object AnalysisQueries {
         lab AS (SELECT d.doc_id, COALESCE(comp.cluster, d.doc_id) AS cluster
                 FROM documents d LEFT JOIN comp USING (doc_id)),
         sl AS (SELECT doc_id, cluster,
-                 ${hash32Sql("CAST(cluster AS VARCHAR)")} % 1000 AS slot
+                 ${hash32("CAST(cluster AS VARCHAR)")} % 1000 AS slot
                FROM lab)
         SELECT doc_id, cluster, CASE WHEN slot < 800 THEN 'train'
                                      WHEN slot < 900 THEN 'val'
@@ -497,7 +465,7 @@ object AnalysisQueries {
       Some(s"""
         SELECT doc_id,
                CAST(ROW_NUMBER() OVER (
-                 ORDER BY ${hash32Sql("'ep1_' || CAST(doc_id AS VARCHAR)")}, doc_id)
+                 ORDER BY ${hash32("'ep1_' || CAST(doc_id AS VARCHAR)")}, doc_id)
                  AS BIGINT) AS pos
         FROM documents ORDER BY doc_id"""),
       (s, d) => graft.ops.Sampling.deterministicShuffle(
@@ -667,7 +635,7 @@ object AnalysisQueries {
         vb AS (SELECT list(m ORDER BY d) AS v FROM db)
         SELECT CAST((SELECT COUNT(*) FROM a) AS BIGINT) AS n_a,
                CAST((SELECT COUNT(*) FROM b) AS BIGINT) AS n_b,
-               ${cosOf("va.v", "vb.v")} AS drift_cosine
+               ${cos("va.v", "vb.v")} AS drift_cosine
         FROM va CROSS JOIN vb"""),
       (s, d) => {
         val e = embeddings(s, d)
@@ -793,7 +761,7 @@ object AnalysisQueries {
                       unnest(range(1, len(w) - 2)) AS pos, w
                FROM w),
         g AS (SELECT doc_id, m, pos,
-                     ${hash32Sql("array_to_string(w[pos:pos+3], ' ')")} AS h
+                     ${hash32("array_to_string(w[pos:pos+3], ' ')")} AS h
               FROM g0),
         s AS (SELECT doc_id, pos, m,
                      MIN(h * 1000000 + pos) OVER (
@@ -883,7 +851,7 @@ object AnalysisQueries {
         c AS (SELECT source, t, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY source, t),
         r AS (SELECT source, t, n,
                      ROW_NUMBER() OVER (PARTITION BY source
-                       ORDER BY n DESC, ${hash32Sql("t")} DESC) AS rn
+                       ORDER BY n DESC, ${hash32("t")} DESC) AS rn
               FROM c)
         SELECT source, t AS token, n FROM r WHERE rn <= 3
         ORDER BY source, n DESC, token"""),
@@ -901,7 +869,7 @@ object AnalysisQueries {
     QueryDef("q128_diverse_sample",
       Some {
         def mc(cands: String) = cands.split(",").map(c =>
-          s"(${cosOf("t.v", s"$c.v")})").mkString("greatest(", ", ", ")")
+          s"(${cos("t.v", s"$c.v")})").mkString("greatest(", ", ", ")")
         s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         c1 AS (SELECT vec_id, v FROM t WHERE vec_id = 0),
@@ -986,7 +954,7 @@ object AnalysisQueries {
     QueryDef("q131_shard_balance",
       Some(s"""
         WITH t AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents)
-        SELECT CAST(${hash32Sql("'sh8_' || CAST(doc_id AS VARCHAR)")} % 8 AS BIGINT) AS shard,
+        SELECT CAST(${hash32("'sh8_' || CAST(doc_id AS VARCHAR)")} % 8 AS BIGINT) AS shard,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(n_tok) AS BIGINT) AS n_tokens
         FROM t GROUP BY shard ORDER BY shard"""),

@@ -16,21 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object CrawlQueries {
   import Tables._
-
-  // Oracle mirrors of Pipeline.wordHash32/wordHash60 (the md5-slot /
-  // membership-key recipes). The comprehension variable is `hx`, NOT
-  // `i` — these templates interpolate into outer list comprehensions
-  // whose own loop variable is often `i`, and DuckDB lambda scoping
-  // would silently capture the INNER variable (q182 found this: every
-  // boundary hash keyed on the digit position instead of the token
-  // position).
-  private def hash32Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), hx, 1)) - 1 for hx in range(1, 9)],
-                    (a, b) -> a*16 + b)"""
-
-  private def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), hx, 1)) - 1 for hx in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
+  import OracleSql.{hash32, hash60, host}
 
   // Synthetic per-doc URL (the q152 discipline: the corpus has no URL
   // column, so the derivation is deterministic and shared VERBATIM by
@@ -69,10 +55,6 @@ object CrawlQueries {
         (CASE WHEN doc_id % 4 = 1
               THEN ' <a rel="x" href="https://attr.example.com/y">attr</a>'
               ELSE '' END)"""
-
-  // Oracle mirror of ops.Web.host (the same regex, literally).
-  private val HostSql =
-    s"lower(regexp_extract(url, '${graft.ops.Web.HostRegex}', 1))"
 
   // plant-id collision guards ride Tables.guardPlantIds (plan-folded)
 
@@ -209,7 +191,7 @@ object CrawlQueries {
             (CAST(960008 AS BIGINT), 'src0', '$DupPlantText'),
             (CAST(960003 AS BIGINT), 'src0', '$DupPlantText')) v(doc_id, source, text)),
         u AS (SELECT doc_id, text, $SynthUrlSql AS url FROM corpus),
-        h AS (SELECT $HostSql AS host, md5(text) AS dig FROM u),
+        h AS (SELECT ${host("url")} AS host, md5(text) AS dig FROM u),
         g AS (SELECT host, dig, CAST(COUNT(*) AS BIGINT) AS n
               FROM h GROUP BY host, dig)
         SELECT host, CAST(SUM(n) AS BIGINT) AS n_docs,
@@ -241,7 +223,7 @@ object CrawlQueries {
     QueryDef("q170_host_lang_mix",
       Some(s"""
         WITH u AS (SELECT doc_id, lang, $SynthUrlSql AS url FROM documents),
-        g AS (SELECT $HostSql AS host, lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+        g AS (SELECT ${host("url")} AS host, lang, CAST(COUNT(*) AS BIGINT) AS n_docs
               FROM u GROUP BY 1, 2)
         SELECT host, lang, n_docs,
                CAST((1000000 * n_docs) //
@@ -299,7 +281,7 @@ object CrawlQueries {
         WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
                           $LinkHtmlSql AS html
                    FROM documents),
-        x AS (SELECT $HostSql AS src, unnest(regexp_extract_all(html,
+        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
                 '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
               FROM u),
         r AS (SELECT src,
@@ -379,7 +361,7 @@ object CrawlQueries {
                 CAST(1000000 >> least(age_days // 7, 62) AS BIGINT) AS weight_ppm
               FROM f)
         SELECT event_id, age_days, weight_ppm,
-               ${hash32Sql("CAST(event_id AS VARCHAR)")} % 1000000 < weight_ppm AS kept
+               ${hash32("CAST(event_id AS VARCHAR)")} % 1000000 < weight_ppm AS kept
         FROM w ORDER BY event_id"""),
       (s, d) => graft.ops.Sampling.freshnessWeights(
           events(s, d).select(col("event_id"),
@@ -646,7 +628,7 @@ object CrawlQueries {
         WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
                           $AnchorHtmlSql AS html
                    FROM documents),
-        x AS (SELECT $HostSql AS src,
+        x AS (SELECT ${host("url")} AS src,
                 regexp_extract_all(html, '${graft.ops.Web.sqlPatternLit(graft.ops.Web.AnchorRegex)}', 1) AS hs,
                 regexp_extract_all(html, '${graft.ops.Web.sqlPatternLit(graft.ops.Web.AnchorRegex)}', 2) AS txt
               FROM u),
@@ -663,7 +645,7 @@ object CrawlQueries {
               GROUP BY dst_host, term),
         k AS (SELECT dst_host, term, n,
                      ROW_NUMBER() OVER (PARTITION BY dst_host
-                       ORDER BY n DESC, ${hash32Sql("term")} DESC) AS rn
+                       ORDER BY n DESC, ${hash32("term")} DESC) AS rn
               FROM c)
         SELECT dst_host, term, n FROM k WHERE rn <= 3
         ORDER BY dst_host, n DESC, term"""),
@@ -693,7 +675,7 @@ object CrawlQueries {
         w AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
         b AS (SELECT doc_id, w,
                 list_prepend(1, [i + 1 for i in range(3, len(w))
-                  if ${hash60Sql("array_to_string(w[i-2:i], ' ')")} % 8 = 0]) AS starts
+                  if ${hash60("array_to_string(w[i-2:i], ' ')")} % 8 = 0]) AS starts
               FROM w),
         ch AS (SELECT doc_id, unnest([{'idx': j - 1,
                  'chunk': array_to_string(w[starts[j] :
@@ -736,7 +718,7 @@ object CrawlQueries {
         WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
                           $LinkHtmlSql AS html
                    FROM documents),
-        x AS (SELECT $HostSql AS src, unnest(regexp_extract_all(html,
+        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
                 '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
               FROM u),
         r AS (SELECT src,
@@ -753,10 +735,10 @@ object CrawlQueries {
         mx AS (SELECT MAX(pr) AS mx FROM p3),
         kp AS (SELECT node AS host, CAST((pr * 1000000) // greatest(mx, 1) AS BIGINT) AS keep_ppm
                FROM p3 CROSS JOIN mx),
-        dh AS (SELECT doc_id, $HostSql AS host FROM u)
+        dh AS (SELECT doc_id, ${host("url")} AS host FROM u)
         SELECT dh.doc_id, dh.host, kp.keep_ppm
         FROM dh JOIN kp USING (host)
-        WHERE ${hash32Sql("CAST(dh.doc_id AS VARCHAR)")} % 1000000 < kp.keep_ppm
+        WHERE ${hash32("CAST(dh.doc_id AS VARCHAR)")} % 1000000 < kp.keep_ppm
         ORDER BY dh.doc_id"""),
       (s0, d) => {
         // fixed-iter rank loop: AQE-off child session (Sessions.loopSession)
@@ -822,9 +804,9 @@ object CrawlQueries {
         WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
         dt AS (SELECT DISTINCT source, w FROM tok),
         pos AS (SELECT source, unnest([
-                  ${hash60Sql("'0_' || w")} % 1024,
-                  ${hash60Sql("'1_' || w")} % 1024,
-                  ${hash60Sql("'2_' || w")} % 1024]) AS p
+                  ${hash60("'0_' || w")} % 1024,
+                  ${hash60("'1_' || w")} % 1024,
+                  ${hash60("'2_' || w")} % 1024]) AS p
                 FROM dt),
         bm AS (SELECT source, p // 63 AS wi,
                       bit_or(1::BIGINT << CAST(p % 63 AS INT)) AS bits
@@ -838,9 +820,9 @@ object CrawlQueries {
                UNION ALL
                SELECT DISTINCT source, 'zzabsentbloom2' FROM dt),
         pp AS (SELECT source, probe, unnest([
-                 ${hash60Sql("'0_' || probe")} % 1024,
-                 ${hash60Sql("'1_' || probe")} % 1024,
-                 ${hash60Sql("'2_' || probe")} % 1024]) AS p
+                 ${hash60("'0_' || probe")} % 1024,
+                 ${hash60("'1_' || probe")} % 1024,
+                 ${hash60("'2_' || probe")} % 1024]) AS p
                FROM pr),
         hit AS (SELECT pp.source AS source, pp.probe AS probe,
                   (COALESCE(bm.bits, 0) &
@@ -888,7 +870,7 @@ object CrawlQueries {
     QueryDef("q186_cms_frequency",
       Some(s"""
         WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
-        sk AS (SELECT source, d, ${hash60Sql("CAST(d AS VARCHAR) || '_' || w")} % 256 AS pos,
+        sk AS (SELECT source, d, ${hash60("CAST(d AS VARCHAR) || '_' || w")} % 256 AS pos,
                       CAST(COUNT(*) AS BIGINT) AS n
                FROM tok CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS d)
                GROUP BY 1, 2, 3),
@@ -902,7 +884,7 @@ object CrawlQueries {
                UNION ALL
                SELECT DISTINCT source, 'zzabsentcms', CAST(0 AS BIGINT) FROM tok),
         pp AS (SELECT source, probe, exact_n, d,
-                      ${hash60Sql("CAST(d AS VARCHAR) || '_' || probe")} % 256 AS pos
+                      ${hash60("CAST(d AS VARCHAR) || '_' || probe")} % 256 AS pos
                FROM pr CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS d)),
         est AS (SELECT pp.source AS source, pp.probe AS probe,
                        pp.exact_n AS exact_n,
@@ -955,7 +937,7 @@ object CrawlQueries {
         WITH u AS (SELECT doc_id, $TrackUrlSynthSql AS url FROM documents),
         c AS (SELECT doc_id,
                 lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-                regexp_replace($HostSql, '^www\\.', '') AS h,
+                regexp_replace(${host("url")}, '^www\\.', '') AS h,
                 regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#:]+:([0-9]+)', 1) AS port,
                 regexp_replace(regexp_replace(
                   regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]*(.*)$$', 1),
@@ -1016,7 +998,7 @@ object CrawlQueries {
               FROM tg CROSS JOIN t),
         r AS (SELECT doc_id, lang, n_tok,
                 CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY lang
-                  ORDER BY ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id
+                  ORDER BY ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                   AS BIGINT) AS tb
               FROM tok)
@@ -1057,7 +1039,7 @@ object CrawlQueries {
         WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
                           $LinkHtmlSql AS html
                    FROM documents),
-        x AS (SELECT $HostSql AS src, unnest(regexp_extract_all(html,
+        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
                 '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
               FROM u),
         r AS (SELECT src,
@@ -1107,7 +1089,7 @@ object CrawlQueries {
         WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
                           $LinkHtmlSql AS html
                    FROM documents),
-        x AS (SELECT $HostSql AS src, unnest(regexp_extract_all(html,
+        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
                 '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
               FROM u),
         r AS (SELECT src,

@@ -14,17 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object CurationQueries {
   import Tables._
-
-  // Oracle mirror of Pipeline.wordHash60: first 15 md5 hex digits
-  // folded to a 60-bit BIGINT (the membership/join key recipe).
-  private def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
-
-  // Oracle mirror of Pipeline.wordHash32 (the md5-slot recipe).
-  private def hash32Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 9)],
-                    (a, b) -> a*16 + b)"""
+  import OracleSql.{cos, hash32, hash60, host}
 
   // Oracle mirror of ops.TextStats.bpeTrain's k-iteration loop,
   // mechanically unrolled (the q148 unrolled-PageRank technique):
@@ -121,10 +111,6 @@ object CurationQueries {
         (CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END) ||
         '/docs/' || CAST(doc_id AS STRING)"""
 
-  // Oracle mirror of ops.Web.host (the same regex, literally).
-  private val HostSql =
-    s"lower(regexp_extract(url, '${graft.ops.Web.HostRegex}', 1))"
-
   // q160 synthetic URLs: canonical VARIANTS of a smaller set of
   // resources — scheme case, www., default ports (:80/:443 — dropped)
   // vs a real :8443 (kept), a trailing slash, a fragment. doc_id and
@@ -198,14 +184,6 @@ object CurationQueries {
     s"""trim(regexp_replace(${htmlDecodeSql(
       s"regexp_replace($e, '<[^>]*>', ' ', 'g')")}, '\\s+', ' ', 'g'))"""
 
-  // Oracle dot/cosine over DOUBLE[] (the q29 fold-order contract:
-  // DuckDB's init-less list_reduce == Spark's 0.0-seeded fold,
-  // bit-identical).
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
-
   // q163 planted "videos": 97 bytes -> 7 stub frames of 13 disjoint
   // bytes each, sampled frames 0/2/4/6. B edits ONE byte (offset 26,
   // inside frame 2's slice — chosen so a gradient comparison actually
@@ -243,9 +221,9 @@ object CurationQueries {
         sh AS (SELECT doc_id, source,
                  list_distinct([array_to_string(w[i:i+3], ' ') for i in range(1, len(w)-2)]) AS grams
                FROM w WHERE len(w) >= 4),
-        ev AS (SELECT DISTINCT ${hash60Sql("g")} AS e
+        ev AS (SELECT DISTINCT ${hash60("g")} AS e
                FROM (SELECT unnest(grams) AS g FROM sh WHERE source = 'src0')),
-        tr AS (SELECT doc_id, ${hash60Sql("g")} AS h
+        tr AS (SELECT doc_id, ${hash60("g")} AS h
                FROM (SELECT doc_id, unnest(grams) AS g FROM sh WHERE source <> 'src0'))
         SELECT tr.doc_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_hit
         FROM tr JOIN ev ON tr.h = ev.e
@@ -320,7 +298,7 @@ object CurationQueries {
         q AS (SELECT tg.lang, (t.t * tg.ppm) // 1000000 AS quota FROM tg CROSS JOIN t),
         r AS (SELECT doc_id, lang,
                 ROW_NUMBER() OVER (PARTITION BY lang
-                  ORDER BY ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id) AS rn
+                  ORDER BY ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id) AS rn
               FROM documents)
         SELECT r.doc_id, r.lang, CAST(r.rn AS BIGINT) AS mix_rank
         FROM r JOIN q ON r.lang = q.lang AND r.rn <= q.quota
@@ -605,7 +583,7 @@ object CurationQueries {
     QueryDef("q152_host_stats",
       Some(s"""
         WITH u AS (SELECT doc_id, text, $SynthUrlSql AS url FROM documents),
-        h AS (SELECT $HostSql AS host,
+        h AS (SELECT ${host("url")} AS host,
                      CAST(len(string_split(text, ' ')) AS BIGINT) AS t
               FROM u)
         SELECT host, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -627,12 +605,12 @@ object CurationQueries {
     QueryDef("q153_host_cap_sample",
       Some(s"""
         WITH u AS (SELECT doc_id, $SynthUrlSql AS url FROM documents),
-        h AS (SELECT doc_id, $HostSql AS host FROM u),
+        h AS (SELECT doc_id, ${host("url")} AS host FROM u),
         k AS (SELECT host, least(1000000, (2 * 1000000) // COUNT(*)) AS keep_ppm
               FROM h GROUP BY host)
         SELECT h.doc_id, h.host, CAST(k.keep_ppm AS BIGINT) AS keep_ppm
         FROM h JOIN k USING (host)
-        WHERE ${hash32Sql("CAST(h.doc_id AS VARCHAR)")} % 1000000 < k.keep_ppm
+        WHERE ${hash32("CAST(h.doc_id AS VARCHAR)")} % 1000000 < k.keep_ppm
         ORDER BY h.doc_id"""),
       (s, d) => graft.ops.Web.hostCapSample(
           spread(documents(s, d)).withColumn("url", expr(SynthUrlSql)),
@@ -690,7 +668,7 @@ object CurationQueries {
         c AS (SELECT doc_id, unnest(range(0, greatest((len(w) + 3)//4, 1))) AS i, w FROM w),
         ch AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
                       array_to_string(w[i*4+1 : i*4+4], ' ') AS chunk FROM c),
-        hh AS (SELECT doc_id, i, chunk, ${hash60Sql("chunk")} AS h FROM ch),
+        hh AS (SELECT doc_id, i, chunk, ${hash60("chunk")} AS h FROM ch),
         hot AS (SELECT h FROM hh GROUP BY h HAVING COUNT(*) >= 2),
         m AS (SELECT doc_id, i, chunk,
                      h IN (SELECT h FROM hot) AS is_hot FROM hh)
@@ -848,7 +826,7 @@ object CurationQueries {
         WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
         b AS (SELECT source, unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS bg
               FROM w WHERE len(w) >= 2),
-        d AS (SELECT DISTINCT source, ${hash60Sql("bg")} AS h FROM b),
+        d AS (SELECT DISTINCT source, ${hash60("bg")} AS h FROM b),
         r AS (SELECT source, h,
                      ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rn,
                      COUNT(*) OVER (PARTITION BY source) AS n
@@ -903,7 +881,7 @@ object CurationQueries {
         WITH u AS (SELECT doc_id, $CanonUrlSynthSql AS url FROM documents),
         c AS (SELECT doc_id,
                 lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-                regexp_replace($HostSql, '^www\\.', '') AS h,
+                regexp_replace(${host("url")}, '^www\\.', '') AS h,
                 regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#:]+:([0-9]+)', 1) AS port,
                 regexp_replace(regexp_replace(
                   regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]*(.*)$$', 1),
@@ -933,7 +911,7 @@ object CurationQueries {
     QueryDef("q161_blocklist_filter",
       Some(s"""
         WITH u AS (SELECT doc_id, $BlockUrlSynthSql AS url FROM documents),
-        h AS (SELECT doc_id, $HostSql AS host FROM u),
+        h AS (SELECT doc_id, ${host("url")} AS host FROM u),
         s AS (SELECT doc_id,
                 unnest([array_to_string(l[i:], '.')
                         for i in range(1, greatest(len(l), 2))]) AS suf
@@ -968,7 +946,7 @@ object CurationQueries {
                  for d in range(0, 64)] AS v
               FROM documents),
         tv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS w FROM embeddings),
-        j AS (SELECT iv.doc_id AS doc_id, ${cosSql("v", "w")} AS cosine
+        j AS (SELECT iv.doc_id AS doc_id, ${cos("v", "w")} AS cosine
               FROM iv JOIN tv ON iv.doc_id = tv.vec_id)
         SELECT doc_id, cosine FROM j WHERE cosine >= 0.05 ORDER BY doc_id"""),
       (s, d) => {
@@ -1161,7 +1139,7 @@ object CurationQueries {
     QueryDef("q167_template_clusters",
       Some(s"""
         WITH u AS (SELECT doc_id, $HtmlTemplSql AS h FROM documents),
-        f AS (SELECT doc_id, ${hash60Sql(
+        f AS (SELECT doc_id, ${hash60(
           "array_to_string(regexp_extract_all(h, '<([a-zA-Z][a-zA-Z0-9]*)', 1), ' ')")}
                 AS tpl_hash
               FROM u)

@@ -97,10 +97,6 @@ object Dedup {
         Pipeline.minhashSignature(col("shingles"), minhashK).as("sig", sigMeta))
   }
 
-  private def resolveBanding(threshold: Double, minhashK: Int,
-                             bands: Int): (Int, Int) =
-    Pipeline.resolveBanding(threshold, minhashK, bands)
-
   /** Both corpora's precomputed frames must carry the SAME value for a
     * provenance key (when both have it) — differing derivation
     * parameters make the blocking/verify silently meaningless.
@@ -340,7 +336,7 @@ object Dedup {
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     requireSameMeta(trainSig, testSig, "shingles", ShingleNMetadataKey, "shingleN")
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     val inter = size(array_intersect(col("_sa"), col("_sb")))
     Pipeline
       .lshCrossCandidates(trainSig, testSig, idCol, k, b, maxBucketSize)
@@ -374,7 +370,7 @@ object Dedup {
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     requireSameMeta(trainSig, testSig, "shingles", ShingleNMetadataKey, "shingleN")
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     val inter = size(array_intersect(col("_sa"), col("_sb")))
     val pairs = Pipeline
       .lshCrossCandidates(trainSig, testSig, idCol, k, b, maxBucketSize)
@@ -619,7 +615,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     val inter = size(array_intersect(col("_sa"), col("_sb")))
     candidatesWithShingles(sig, idCol, k, b, maxBucketSize)
       .withColumn("jaccard",
@@ -643,7 +639,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     val sig = shingleSignatures(docs, idCol, textCol, 3, k).persist(Disk)
     val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
     // clusters() materializes eagerly (checkpointed loop), so the
@@ -715,7 +711,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     // FLOOR, not round: the integer gate keeps every pair with
     // jaccard >= tPpm/1e6 <= threshold — for a non-ppm-exact threshold
     // this errs on ADMITTING a hair below it (recall-safe for a dedup
@@ -762,7 +758,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     // FLOOR, not round: the integer gate keeps every pair with
     // jaccard >= tPpm/1e6 <= threshold — for a non-ppm-exact threshold
     // this errs on ADMITTING a hair below it (recall-safe for a dedup
@@ -818,7 +814,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     Pipeline.lshCandidatePairs(sig, idCol, k, b, maxBucketSize)
       .join(sig.select(col(idCol).as("a_id"), col("sig").as("_ga")), "a_id")
       .join(sig.select(col(idCol).as("b_id"), col("sig").as("_gb")), "b_id")
@@ -868,7 +864,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     val packed = sig.select(col(idCol),
       bbitSignature("sig", k).as("_bs"))
     Pipeline.lshCandidatePairs(sig, idCol, k, b, maxBucketSize)
@@ -904,7 +900,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     val sig = shingleSignatures(docs, idCol, textCol, 3, k).persist(Disk)
     val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
     // eager clusters() loop is the last sig consumer — release the
@@ -938,7 +934,7 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = resolveBanding(threshold, minhashK, bands)
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     val inter = size(array_intersect(col("_sa"), col("_sb")))
     candidatesWithShingles(sig, idCol, k, b, maxBucketSize)
       .withColumn("_i", inter.cast(LongType))

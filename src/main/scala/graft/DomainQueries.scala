@@ -16,13 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object DomainQueries {
   import Tables._
-
-  private def hash32Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), hx, 1)) - 1 for hx in range(1, 9)],
-                    (a, b) -> a*16 + b)"""
-
-  private val HostSql =
-    s"lower(regexp_extract(url, '${graft.ops.Web.HostRegex}', 1))"
+  import OracleSql.{hash32, hash60, host}
 
   private def inList(xs: Seq[String]): String =
     xs.map(s => s"'$s'").mkString(", ")
@@ -78,10 +72,6 @@ object DomainQueries {
         (CASE doc_id % 3 WHEN 0 THEN 'www.' WHEN 1 THEN 'blog.' ELSE 'shop.' END) ||
         'site' || CAST(doc_id % 5 AS STRING) || '.co.uk/docs/' ||
         CAST(doc_id AS STRING)"""
-
-  private def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), hx, 1)) - 1 for hx in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
 
   // Oracle mirror of Pipeline.wordsAuto: char bigrams when the
   // majority of non-space chars are no-space-script codepoints, space
@@ -303,7 +293,7 @@ object DomainQueries {
     QueryDef("q189_registrable_domain",
       Some(s"""
         WITH u AS (SELECT doc_id, $RegUrlSynthSql AS url FROM documents),
-        hh AS (SELECT doc_id, $HostSql AS h FROM u),
+        hh AS (SELECT doc_id, ${host("url")} AS h FROM u),
         ${regDomainCtes("doc_id")}
         SELECT doc_id, h AS host, reg AS reg_domain
         FROM rd ORDER BY doc_id"""),
@@ -324,13 +314,13 @@ object DomainQueries {
     QueryDef("q190_registrable_cap",
       Some(s"""
         WITH u AS (SELECT doc_id, $CapUrlSynthSql AS url FROM documents),
-        hh AS (SELECT doc_id, $HostSql AS h FROM u),
+        hh AS (SELECT doc_id, ${host("url")} AS h FROM u),
         ${regDomainCtes("doc_id")},
         k AS (SELECT reg, least(1000000, (20 * 1000000) // COUNT(*)) AS keep_ppm
               FROM rd GROUP BY reg)
         SELECT rd.doc_id, rd.reg AS host, CAST(k.keep_ppm AS BIGINT) AS keep_ppm
         FROM rd JOIN k USING (reg)
-        WHERE ${hash32Sql("CAST(rd.doc_id AS VARCHAR)")} % 1000000 < k.keep_ppm
+        WHERE ${hash32("CAST(rd.doc_id AS VARCHAR)")} % 1000000 < k.keep_ppm
         ORDER BY rd.doc_id"""),
       (s, d) => graft.ops.Web.hostCapSample(
           spread(documents(s, d)).withColumn("url", expr(CapUrlSynthSql)),
@@ -348,7 +338,7 @@ object DomainQueries {
     QueryDef("q191_registrable_blocklist",
       Some(s"""
         WITH u AS (SELECT doc_id, $CapUrlSynthSql AS url FROM documents),
-        hh AS (SELECT doc_id, $HostSql AS h FROM u),
+        hh AS (SELECT doc_id, ${host("url")} AS h FROM u),
         ${regDomainCtes("doc_id")},
         sf AS (SELECT mm.doc_id, mm.h,
                  [array_to_string(mm.ls[sx:mm.n], '.')
@@ -390,7 +380,7 @@ object DomainQueries {
         ${PipelineQueries.minhashSigCte("doc_id", PipelineQueries.lshK05)}
         ${PipelineQueries.bandedCandCte(PipelineQueries.lshBands05,
           PipelineQueries.lshRows05)},
-        h AS (SELECT doc_id, list_transform(shingles, s -> ${hash60Sql("s")}) AS hs FROM sh),
+        h AS (SELECT doc_id, list_transform(shingles, s -> ${hash60("s")}) AS hs FROM sh),
         v AS (SELECT c.a_id, c.b_id,
                 CAST(len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS i,
                 CAST(len(a.hs) + len(b.hs)
@@ -440,7 +430,7 @@ object DomainQueries {
               FROM tg CROSS JOIN t),
         r AS (SELECT doc_id, lang, n_tok,
                 CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY lang
-                  ORDER BY ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id
+                  ORDER BY ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                   AS BIGINT) AS tb
               FROM tok)
@@ -589,7 +579,7 @@ object DomainQueries {
                    + 6 * ((1000000 * len(list_filter(string_split(text, ' '), x -> x IN ('a', 'the')))) // len(string_split(text, ' ')))
                    + 300 * ((1000 * (length(text) - len(string_split(text, ' ')) + 1)) // len(string_split(text, ' '))) END AS score
                FROM u),
-        hh AS (SELECT doc_id, score, $HostSql AS h FROM sc),
+        hh AS (SELECT doc_id, score, ${host("url")} AS h FROM sc),
         ${regDomainCtes("doc_id, score")},
         v AS (SELECT reg, CAST(COUNT(*) AS BIGINT) AS domain_docs,
                 SUM(score) // COUNT(*) AS domain_mean_micro
@@ -639,7 +629,7 @@ object DomainQueries {
                     FROM documents WHERE doc_id < 5),
         $RobotsRulesCtes,
         u AS (SELECT doc_id, $RobotsUrlSynthSql AS url FROM documents),
-        px AS (SELECT doc_id, url, $HostSql AS host, $RobotsPathSql AS path
+        px AS (SELECT doc_id, url, ${host("url")} AS host, $RobotsPathSql AS path
                FROM u)
         SELECT doc_id, url FROM px
         WHERE NOT EXISTS (SELECT 1 FROM rules r
@@ -671,7 +661,7 @@ object DomainQueries {
                      COUNT(*) OVER () AS n
                    FROM documents)
         SELECT doc_id, CAST(((rn - 1) * 4) // n + 1 AS BIGINT) AS phase,
-               CAST(${hash32Sql("'ep1_' || CAST(doc_id AS VARCHAR)")} % 1000000 AS BIGINT) AS slot
+               CAST(${hash32("'ep1_' || CAST(doc_id AS VARCHAR)")} % 1000000 AS BIGINT) AS slot
         FROM r ORDER BY phase, slot, doc_id"""),
       (s, d) => graft.ops.Sampling.curriculumOrder(
           spread(documents(s, d)).select("doc_id", "n_chars"),
@@ -695,13 +685,13 @@ object DomainQueries {
                 array_to_string(string_split(text, ' ')[6:10], ' ') || chr(10) ||
                 'copyright ' || lang || ' site network' AS t2
               FROM u),
-        hh AS (SELECT doc_id, t2, $HostSql AS h FROM c),
+        hh AS (SELECT doc_id, t2, ${host("url")} AS h FROM c),
         ${regDomainCtes("doc_id, t2")},
         ln AS (SELECT doc_id, reg,
                  unnest(string_split(t2, chr(10))) AS l,
                  unnest(range(1, len(string_split(t2, chr(10))) + 1)) AS i
                FROM rd),
-        lh AS (SELECT doc_id, reg, l, i, ${hash60Sql("l")} AS lhash FROM ln),
+        lh AS (SELECT doc_id, reg, l, i, ${hash60("l")} AS lhash FROM ln),
         hot AS (SELECT reg, lhash FROM
                   (SELECT reg, lhash, COUNT(DISTINCT doc_id) AS df
                    FROM lh GROUP BY reg, lhash)
@@ -818,7 +808,7 @@ object DomainQueries {
         WITH t AS (SELECT lang, doc_id % 2 AS side,
                      unnest(string_split(text, ' ')) AS w
                    FROM documents),
-        d AS (SELECT DISTINCT lang, side, ${hash60Sql("w")} AS h FROM t),
+        d AS (SELECT DISTINCT lang, side, ${hash60("w")} AS h FROM t),
         r AS (SELECT lang, side, h,
                 ROW_NUMBER() OVER (PARTITION BY lang, side ORDER BY h) AS rn
               FROM d),
@@ -999,7 +989,7 @@ object DomainQueries {
         c AS (SELECT source, p, v, CAST(COUNT(*) AS BIGINT) AS n
               FROM w GROUP BY source, p, v),
         o AS (SELECT source, p, v, n,
-                CAST(n AS HUGEINT) * 1152921504606846976 + ${hash60Sql("v")} AS ord
+                CAST(n AS HUGEINT) * 1152921504606846976 + ${hash60("v")} AS ord
               FROM c),
         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY source, p
                                            ORDER BY ord DESC) AS rk FROM o),
@@ -1012,7 +1002,7 @@ object DomainQueries {
         m AS (SELECT source, v, CAST(SUM(n) AS BIGINT) AS n
               FROM s GROUP BY source, v),
         o2 AS (SELECT source, v, n,
-                 CAST(n AS HUGEINT) * 1152921504606846976 + ${hash60Sql("v")} AS ord
+                 CAST(n AS HUGEINT) * 1152921504606846976 + ${hash60("v")} AS ord
                FROM m),
         r2 AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY source
                                             ORDER BY ord DESC) AS rk FROM o2),
@@ -1288,8 +1278,8 @@ object DomainQueries {
                      OR (og.odig IS NOT NULL AND og.odig <> nc.dig)),
         f AS (SELECT n.* FROM n JOIN owing USING (doc_id)),
         unb AS (SELECT * FROM f
-                WHERE NOT ($HostSql = 'spamfarm.biz'
-                           OR $HostSql LIKE '%.spamfarm.biz')),
+                WHERE NOT (${host("url")} = 'spamfarm.biz'
+                           OR ${host("url")} LIKE '%.spamfarm.biz')),
         ded AS (SELECT ${canonUrlSql("url")} AS cu, MIN(doc_id) AS keep
                 FROM unb GROUP BY cu),
         uq AS (SELECT unb.* FROM unb
@@ -1587,7 +1577,7 @@ object DomainQueries {
         t AS (SELECT doc_id, source,
                 unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS w
               FROM ws WHERE len(w) >= 2),
-        h AS (SELECT DISTINCT source, ${hash60Sql("w")} AS h FROM t),
+        h AS (SELECT DISTINCT source, ${hash60("w")} AS h FROM t),
         b AS (SELECT source, h % 64 AS bucket,
                      CASE WHEN h // 64 = 0 THEN 55
                           ELSE 55 - length(bin(h // 64)) END AS rho
@@ -1729,7 +1719,7 @@ object DomainQueries {
     QueryDef("q224_hist_drift",
       Some(s"""
         WITH bkt AS (SELECT source,
-                       ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 2 AS half,
+                       ${hash32("CAST(doc_id AS VARCHAR)")} % 2 AS half,
                        CAST(len(list_filter([(1::BIGINT << bb) for bb in range(0, 63)],
                               p -> p <= n_chars)) AS BIGINT) AS bucket
                      FROM documents),
@@ -1790,7 +1780,7 @@ object DomainQueries {
         r AS (SELECT doc_id, lang, n_tok, mean_millibits,
                 CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY lang
                   ORDER BY mean_millibits,
-                           ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 1000000,
+                           ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000,
                            doc_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                   AS BIGINT) AS tb

@@ -18,6 +18,7 @@ import org.apache.spark.sql.types._
 object PipelineQueries {
   import Tables._
   import Pipeline._
+  import OracleSql.{cos, hash32, hash60, md5Digits}
 
   /** doc_id + distinct word-trigram shingles, for docs with >= 3 words.
     * (DuckDB mirror: `[array_to_string(w[i:i+2],' ') for i in range(1,len(w)-1)]`.)
@@ -47,10 +48,8 @@ object PipelineQueries {
   private[graft] def minhashSigCte(keep: String, k: Int): String = s"""
     hw AS (SELECT $keep,
              list_transform(shingles, s ->
-               (65599 * list_reduce([strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 for i in range(1, 9)],
-                                    (a, b) -> a*16 + b)
-                + list_reduce([strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 for i in range(9, 17)],
-                              (a, b) -> a*16 + b)) % 2147483647) AS xs
+               (65599 * ${md5Digits("s", 1, 9)}
+                + ${md5Digits("s", 9, 17)}) % 2147483647) AS xs
            FROM sh),
     sig AS (SELECT $keep,
               [list_min(list_transform(xs, x ->
@@ -70,14 +69,8 @@ object PipelineQueries {
   // Banded-bucket + candidate-pair CTE fragment over a `sig` CTE, at
   // an explicit (bands, rows) banding (bucket hash = 60-bit fold of
   // the md5 of the '|'-joined band slice — mirrors Pipeline.lshBands).
-  // 60-bit integer bucket key — first 15 md5 hex digits folded to a
-  // BIGINT, mirroring Pipeline.lshBands' conv(substring(md5, 1, 15)).
-  private def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
-
   private[graft] def bandedCandCte(bands: Int, rows: Int): String = s""",
-    banded AS (SELECT doc_id, b, ${hash60Sql(s"array_to_string(sig[b*$rows+1 : b*$rows+$rows], '|')")} AS bh
+    banded AS (SELECT doc_id, b, ${hash60(s"array_to_string(sig[b*$rows+1 : b*$rows+$rows], '|')")} AS bh
                FROM sig CROSS JOIN (SELECT unnest(range(0, $bands)) AS b)),
     cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
              FROM banded x JOIN banded y
@@ -89,27 +82,6 @@ object PipelineQueries {
   // identically to the Scala side's lshK05/lshBands05.
   private[graft] val lshCte = shinglesCte + "," +
     minhashSigCte("doc_id", lshK05) + bandedCandCte(lshBands05, lshRows05)
-
-  // Shared oracle CTE: double-cast embeddings + dot-product helper text.
-  // Folds run in index order with the same shape as Pipeline.dot
-  // (DuckDB's init-less list_reduce starts at element 1; Spark's
-  // aggregate starts at 0.0 + element 1 — bit-identical results).
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
-
-  // Oracle expression: 4-plane random-hyperplane bucket of DOUBLE[] `v`
-  // (mirror of Pipeline.rhpBucket(v, 64, 4)).
-  private val bucketSql = """
-    list_reduce(list_transform(range(0, 4), p ->
-      CASE WHEN list_reduce(list_transform(range(1, 65), d ->
-             v[d] * (CASE WHEN (strpos('0123456789abcdef',
-                      substr(md5(CAST(p AS VARCHAR) || '_' || CAST(d AS VARCHAR)), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END)),
-           (x, y) -> x + y) > 0
-      THEN (1 << CAST(p AS INTEGER)) ELSE 0 END),
-    (x, y) -> x + y)"""
 
   // Oracle mirror of Pipeline.rhpProbeBuckets: the bucket itself plus
   // its 4 hamming-1 neighbours (multi-probe LSH).
@@ -187,7 +159,7 @@ object PipelineQueries {
     QueryDef("q138_verified_pairs_hashed",
       Some(s"""
         WITH $lshCte,
-        h AS (SELECT doc_id, list_transform(shingles, s -> ${hash60Sql("s")}) AS hs FROM sh),
+        h AS (SELECT doc_id, list_transform(shingles, s -> ${hash60("s")}) AS hs FROM sh),
         v AS (SELECT c.a_id, c.b_id,
                 CAST(len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS i,
                 CAST(len(a.hs) + len(b.hs)
@@ -248,12 +220,11 @@ object PipelineQueries {
     // hamming distance 3 shares a chunk). Restricted to 4 sources to
     // bound the candidate set; the plan shape is scale-invariant.
     QueryDef("q28_simhash_neardup",
-      Some("""
+      Some(s"""
         WITH docs AS (SELECT * FROM documents WHERE source IN ('src0','src1','src2','src3')),
         toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM docs),
         h AS (SELECT doc_id,
-                list_reduce([strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1 for i in range(1, 9)],
-                            (a, b) -> a*16 + b) AS h
+                ${hash32("w")} AS h
               FROM toks),
         votes AS (SELECT doc_id, b,
                     SUM(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -285,7 +256,7 @@ object PipelineQueries {
         WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 0),
         t AS (SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS w, q.v AS v
               FROM embeddings e, q WHERE e.vec_id <> 0)
-        SELECT vec_id, ${cosSql("v", "w")} AS cosine
+        SELECT vec_id, ${cos("v", "w")} AS cosine
         FROM t ORDER BY cosine DESC, vec_id LIMIT 10"""),
       (s, d) => {
         val e = embeddings(s, d)
@@ -310,10 +281,10 @@ object PipelineQueries {
     QueryDef("q30_ann_bucketed",
       Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        b AS (SELECT vec_id, v, $bucketSql AS bucket FROM t),
+        b AS (SELECT vec_id, v, ${OracleSql.rhpBucket("v")} AS bucket FROM t),
         q AS (SELECT unnest(${probesSql("bucket")}) AS qb, v AS qv
               FROM b WHERE vec_id = 0)
-        SELECT b.vec_id, ${cosSql("qv", "v")} AS cosine
+        SELECT b.vec_id, ${cos("qv", "v")} AS cosine
         FROM b JOIN q ON b.bucket = q.qb WHERE b.vec_id <> 0
         ORDER BY cosine DESC, vec_id LIMIT 5"""),
       (s, d) => {
@@ -340,12 +311,12 @@ object PipelineQueries {
     QueryDef("q31_embedding_neardup",
       Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        b AS (SELECT vec_id, v, $bucketSql AS bucket FROM t),
+        b AS (SELECT vec_id, v, ${OracleSql.rhpBucket("v")} AS bucket FROM t),
         x2 AS (SELECT vec_id, v, unnest(${probesSql("bucket")}) AS probe FROM b),
         p AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id,
                      x.v AS va, y.v AS vb
               FROM x2 x JOIN b y ON x.probe = y.bucket AND x.vec_id < y.vec_id)
-        SELECT a_id, b_id, ${cosSql("va", "vb")} AS cosine
+        SELECT a_id, b_id, ${cos("va", "vb")} AS cosine
         FROM p ORDER BY cosine DESC, a_id, b_id LIMIT 20"""),
       (s, d) => {
         val withB = spread(embeddings(s, d))
@@ -438,7 +409,7 @@ object PipelineQueries {
     // estimate, order-robust set fingerprint, order-sensitive rolling
     // hash — all single-pass scan projections.
     QueryDef("q34_token_stats",
-      Some("""
+      Some(s"""
         WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
         SELECT doc_id,
                CAST(len(w) AS BIGINT) AS n_ws_tokens,
@@ -447,8 +418,7 @@ object PipelineQueries {
                md5(array_to_string(list_sort(list_distinct(w)), ' ')) AS fingerprint,
                list_reduce(
                  list_transform(w, t ->
-                   list_reduce([strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1 for i in range(1, 9)],
-                               (a, b) -> a*16 + b) % 1000000007),
+                   ${hash32("t")} % 1000000007),
                  (acc, h) -> (acc*31 + h) % 1000000007) AS rolling_hash
         FROM w ORDER BY doc_id"""),
       (s, d) => {
@@ -516,10 +486,10 @@ object PipelineQueries {
     QueryDef("q50_knn_join",
       Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        b AS (SELECT vec_id, v, $bucketSql AS bucket FROM t),
+        b AS (SELECT vec_id, v, ${OracleSql.rhpBucket("v")} AS bucket FROM t),
         q AS (SELECT vec_id AS query_id, v AS qv, unnest(${probesSql("bucket")}) AS qb
               FROM b WHERE vec_id < 3),
-        scored AS (SELECT q.query_id, b.vec_id AS corpus_id, ${cosSql("qv", "v")} AS cosine
+        scored AS (SELECT q.query_id, b.vec_id AS corpus_id, ${cos("qv", "v")} AS cosine
                    FROM q JOIN b ON q.qb = b.bucket AND q.query_id <> b.vec_id),
         ranked AS (SELECT query_id, corpus_id, cosine,
                           ROW_NUMBER() OVER (PARTITION BY query_id
@@ -546,13 +516,13 @@ object PipelineQueries {
     QueryDef("q119_hard_negatives",
       Some(s"""
         WITH t AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        b AS (SELECT vec_id, label, v, $bucketSql AS bucket FROM t),
+        b AS (SELECT vec_id, label, v, ${OracleSql.rhpBucket("v")} AS bucket FROM t),
         q AS (SELECT vec_id AS anchor_id, label AS alabel, v AS qv,
                      unnest(${probesSql("bucket")}) AS qb
               FROM b WHERE vec_id < 5),
         scored AS (SELECT q.anchor_id, b.vec_id AS negative_id,
                           CAST(b.label AS BIGINT) AS negative_label,
-                          ${cosSql("qv", "v")} AS cosine
+                          ${cos("qv", "v")} AS cosine
                    FROM q JOIN b ON q.qb = b.bucket AND q.alabel <> b.label),
         ranked AS (SELECT anchor_id, negative_id, negative_label, cosine,
                           ROW_NUMBER() OVER (PARTITION BY anchor_id
@@ -601,8 +571,8 @@ object PipelineQueries {
                  GROUP BY cell),
         q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
         pc AS (SELECT cent.cell FROM cent CROSS JOIN q
-               ORDER BY ${cosSql("qv", "cv")} DESC, cent.cell LIMIT 2)
-        SELECT t.vec_id, ${cosSql("qv", "v")} AS cosine
+               ORDER BY ${cos("qv", "cv")} DESC, cent.cell LIMIT 2)
+        SELECT t.vec_id, ${cos("qv", "v")} AS cosine
         FROM t JOIN pc ON t.cell = pc.cell CROSS JOIN q
         WHERE t.vec_id <> 0
         ORDER BY cosine DESC, t.vec_id LIMIT 10"""),
@@ -647,7 +617,7 @@ object PipelineQueries {
         sh AS (SELECT doc_id, source,
                  list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS shingles
                FROM w WHERE len(w) >= 3),${minhashSigCte("doc_id, source", lshK05)},
-        banded AS (SELECT doc_id, source, b, ${hash60Sql(s"array_to_string(sig[b*$lshRows05+1 : b*$lshRows05+$lshRows05], '|')")} AS bh
+        banded AS (SELECT doc_id, source, b, ${hash60(s"array_to_string(sig[b*$lshRows05+1 : b*$lshRows05+$lshRows05], '|')")} AS bh
                    FROM sig CROSS JOIN (SELECT unnest(range(0, $lshBands05)) AS b)),
         cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
                  FROM banded x JOIN banded y ON x.b = y.b AND x.bh = y.bh
@@ -692,11 +662,11 @@ object PipelineQueries {
     QueryDef("q65_embedding_decontamination",
       Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        b AS (SELECT vec_id, v, $bucketSql AS bucket FROM t),
+        b AS (SELECT vec_id, v, ${OracleSql.rhpBucket("v")} AS bucket FROM t),
         tr AS (SELECT vec_id, v, bucket FROM b WHERE vec_id >= 100),
         te AS (SELECT vec_id, v, unnest(${probesSql("bucket")}) AS probe
                FROM b WHERE vec_id < 100),
-        scored AS (SELECT tr.vec_id AS a_id, ${cosSql("tr.v", "te.v")} AS c
+        scored AS (SELECT tr.vec_id AS a_id, ${cos("tr.v", "te.v")} AS c
                    FROM tr JOIN te ON tr.bucket = te.probe)
         SELECT DISTINCT a_id AS train_vec_id FROM scored WHERE c >= 0.35
         ORDER BY train_vec_id"""),
@@ -809,10 +779,9 @@ object PipelineQueries {
     // run/engine/retry (the property a resumable 100 TB mixing job
     // needs), pure scan-side filter, no shuffle.
     QueryDef("q68_stratified_sample",
-      Some("""
+      Some(s"""
         WITH h AS (SELECT doc_id, source,
-          list_reduce([strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 for i in range(1, 9)],
-                      (a, b) -> a*16 + b) % 1000 AS slot
+          ${hash32("CAST(doc_id AS VARCHAR)")} % 1000 AS slot
         FROM documents)
         SELECT doc_id, source FROM h
         WHERE slot < CASE source WHEN 'src0' THEN 1000 WHEN 'src1' THEN 500
@@ -854,13 +823,11 @@ object PipelineQueries {
     // pairs at the strict 3-of-64 distance — the pair/dedup semantics
     // are spec'd on planted permutation duplicates).
     QueryDef("q71_simhash64_signatures",
-      Some("""
+      Some(s"""
         WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
         h AS (SELECT doc_id,
-                list_reduce([strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1 for i in range(1, 9)],
-                            (a, b) -> a*16 + b) AS hlo,
-                list_reduce([strpos('0123456789abcdef', substr(md5('x1_' || w), i, 1)) - 1 for i in range(1, 9)],
-                            (a, b) -> a*16 + b) AS hhi
+                ${hash32("w")} AS hlo,
+                ${hash32("'x1_' || w")} AS hhi
               FROM toks),
         votes AS (SELECT doc_id, b,
                     SUM(CASE WHEN (hlo >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS vlo,
@@ -899,11 +866,11 @@ object PipelineQueries {
     QueryDef("q70_embedding_neardup_survivors",
       Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        b AS (SELECT vec_id, v, $bucketSql AS bucket FROM t),
+        b AS (SELECT vec_id, v, ${OracleSql.rhpBucket("v")} AS bucket FROM t),
         x2 AS (SELECT vec_id, v, unnest(${probesSql("bucket")}) AS probe FROM b),
         losers AS (SELECT DISTINCT y.vec_id
                    FROM x2 x JOIN b y ON x.probe = y.bucket AND x.vec_id < y.vec_id
-                   WHERE ${cosSql("x.v", "y.v")} >= 0.35)
+                   WHERE ${cos("x.v", "y.v")} >= 0.35)
         SELECT t.vec_id FROM t WHERE t.vec_id NOT IN (SELECT vec_id FROM losers)
         ORDER BY t.vec_id"""),
       (s, d) => Dedup.nearByEmbedding(spread(embeddings(s, d)), "vec_id",
@@ -1061,7 +1028,7 @@ object PipelineQueries {
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         c AS (SELECT vec_id AS centroid_id, v AS cv FROM t
               WHERE vec_id % 101 = 0 AND vec_id < 10100),
-        p AS (SELECT t.vec_id, centroid_id, ${cosSql("v", "cv")} AS cosine
+        p AS (SELECT t.vec_id, centroid_id, ${cos("v", "cv")} AS cosine
               FROM t CROSS JOIN c),
         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                 ORDER BY cosine DESC, centroid_id) AS rn FROM p)
@@ -1132,12 +1099,11 @@ object PipelineQueries {
     // floor() on the boundary, NOT a bare cast: Spark's double->long
     // cast truncates where DuckDB's rounds.
     QueryDef("q83_weighted_sample",
-      Some("""
+      Some(s"""
         WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         q AS (SELECT doc_id,
                 CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS ttr,
-                list_reduce([strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 for i in range(1, 9)],
-                            (a, b) -> a*16 + b) % 1000000 AS slot
+                ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000 AS slot
               FROM t)
         SELECT doc_id, ttr FROM q
         WHERE slot < CAST(floor(greatest(0.0, least(1.0, ttr)) * 1000000) AS BIGINT)
@@ -1163,7 +1129,7 @@ object PipelineQueries {
         sh AS (SELECT doc_id, source,
                  list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS shingles
                FROM w WHERE len(w) >= 3),${minhashSigCte("doc_id, source", lshK05)},
-        banded AS (SELECT doc_id, source, b, ${hash60Sql(s"array_to_string(sig[b*$lshRows05+1 : b*$lshRows05+$lshRows05], '|')")} AS bh
+        banded AS (SELECT doc_id, source, b, ${hash60(s"array_to_string(sig[b*$lshRows05+1 : b*$lshRows05+$lshRows05], '|')")} AS bh
                    FROM sig CROSS JOIN (SELECT unnest(range(0, $lshBands05)) AS b)),
         cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
                  FROM banded x JOIN banded y ON x.b = y.b AND x.bh = y.bh
@@ -1355,7 +1321,7 @@ object PipelineQueries {
     // keep decision is the md5-slot filter with an explicit floor —
     // every choice pinned so the oracle replays bit-for-bit.
     QueryDef("q87_temperature_mix",
-      Some("""
+      Some(s"""
         WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY lang),
         tot AS (SELECT
                   list_reduce(list(CAST(n AS DOUBLE) ORDER BY lang), (a, b) -> a + b) AS tot_n,
@@ -1366,8 +1332,7 @@ object PipelineQueries {
                              / CAST(n AS DOUBLE)) AS rate
               FROM c CROSS JOIN tot)
         SELECT d.doc_id, d.lang FROM documents d JOIN r USING (lang)
-        WHERE list_reduce([strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 for i in range(1, 9)],
-                          (a, b) -> a*16 + b) % 1000000
+        WHERE ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000
               < CAST(floor(greatest(0.0, least(1.0, rate)) * 1000000) AS BIGINT)
         ORDER BY doc_id"""),
       (s, d) => graft.ops.Sampling.temperatureMix(
@@ -1435,7 +1400,7 @@ object PipelineQueries {
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         c AS (SELECT vec_id AS centroid_id, v AS cv FROM t
               WHERE vec_id % 101 = 0 AND vec_id < 10100),
-        p AS (SELECT t.vec_id, centroid_id, ${cosSql("v", "cv")} AS cosine
+        p AS (SELECT t.vec_id, centroid_id, ${cos("v", "cv")} AS cosine
               FROM t CROSS JOIN c),
         r AS (SELECT vec_id, centroid_id FROM
                 (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1444,7 +1409,7 @@ object PipelineQueries {
         a AS (SELECT r.vec_id, r.centroid_id, t.v FROM r JOIN t USING (vec_id)),
         losers AS (SELECT DISTINCT y.vec_id FROM a x JOIN a y
                    ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-                   WHERE ${cosSql("x.v", "y.v")} >= 0.4)
+                   WHERE ${cos("x.v", "y.v")} >= 0.4)
         SELECT vec_id, centroid_id FROM a
         WHERE vec_id NOT IN (SELECT vec_id FROM losers)
         ORDER BY vec_id"""),
@@ -1503,10 +1468,10 @@ object PipelineQueries {
         WITH $shinglesCte,
         pr AS (SELECT doc_id,
                  unnest(list_transform(
-                   list_sort([{'h': ${AnalysisQueries.hash32Sql("s")}, 's': s} for s in shingles])[1:${Pipeline.containmentProbesFor(0.7, minHits = 2)}],
+                   list_sort([{'h': ${hash32("s")}, 's': s} for s in shingles])[1:${Pipeline.containmentProbesFor(0.7, minHits = 2)}],
                    x -> x.h)) AS h
                FROM sh),
-        ixall AS (SELECT doc_id, ${AnalysisQueries.hash32Sql("s")} AS h
+        ixall AS (SELECT doc_id, ${hash32("s")} AS h
                   FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)),
         hot AS (SELECT h FROM ixall GROUP BY h
                 HAVING COUNT(*) > ${Dedup.DefaultMaxShingleDf}),
@@ -1523,7 +1488,7 @@ object PipelineQueries {
                  JOIN np ON np.doc_id = c.pid
                  WHERE c.nh >= least(2, np.np)),
         hs AS (SELECT doc_id,
-                      list_transform(shingles, s -> ${AnalysisQueries.hash60Sql("s")}) AS hset,
+                      list_transform(shingles, s -> ${hash60("s")}) AS hset,
                       len(shingles) AS n
                FROM sh)
         SELECT c.a_id, c.b_id,
@@ -1558,7 +1523,7 @@ object PipelineQueries {
     // floor(rate) + one md5-slot-decided fractional copy; the copy
     // index rides along so downstream packing sees distinct rows.
     QueryDef("q93_epoch_mix",
-      Some("""
+      Some(s"""
         WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY lang),
         tot AS (SELECT
                   list_reduce(list(CAST(n AS DOUBLE) ORDER BY lang), (a, b) -> a + b) AS tot_n,
@@ -1568,8 +1533,7 @@ object PipelineQueries {
                              / CAST(n AS DOUBLE) AS rate
               FROM c CROSS JOIN tot),
         d2 AS (SELECT doc_id, d.lang, rate,
-                 list_reduce([strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 for i in range(1, 9)],
-                             (a, b) -> a*16 + b) % 1000000 AS slot
+                 ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000 AS slot
                FROM documents d JOIN r USING (lang)),
         d3 AS (SELECT doc_id, lang,
                  CAST(floor(rate) AS BIGINT)
@@ -1591,10 +1555,10 @@ object PipelineQueries {
     QueryDef("q94_ngram_novelty",
       Some(s"""
         WITH $shinglesCte,
-        ref AS (SELECT DISTINCT ${hash60Sql("s")} AS h
+        ref AS (SELECT DISTINCT ${hash60("s")} AS h
                 FROM (SELECT unnest(sh.shingles) AS s
                       FROM sh JOIN documents USING (doc_id) WHERE source <> 'src0')),
-        t AS (SELECT doc_id, ${hash60Sql("s")} AS h
+        t AS (SELECT doc_id, ${hash60("s")} AS h
               FROM (SELECT sh.doc_id, unnest(sh.shingles) AS s
                     FROM sh JOIN documents USING (doc_id) WHERE source = 'src0')),
         m AS (SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -31,12 +31,7 @@ case class QueryDef(
   */
 object Queries {
   import Tables._
-
-  /** Order-independent exact sum of a double expression. */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 6))).cast(DoubleType)
-  private def dsumSql(e: String): String =
-    s"CAST(SUM(CAST($e AS DECIMAL(25,6))) AS DOUBLE)"
+  import OracleSql.{dsum, dsumSql}
 
   val all: Seq[QueryDef] = core ++ extra ++ advanced ++ PipelineQueries.all ++
     AnalysisQueries.all ++ CurationQueries.all ++ CrawlQueries.all ++

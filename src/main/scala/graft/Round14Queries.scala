@@ -22,51 +22,19 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object Round14Queries {
   import Tables._
+  import OracleSql.{cos, hash32, hash60, scd2Ctes, sqDist}
 
   // NOTE: `all` is declared at the BOTTOM of this object (the lazy-val
   // initialization-order rule — see WarehouseQueries).
-
-  // Oracle mirror of Pipeline.wordHash32 (first 8 md5 hex digits).
-  private def hash32Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 9)],
-                    (a, b) -> a*16 + b)"""
-
-  // Oracle mirror of Pipeline.wordHash60 (first 15 md5 hex digits) —
-  // the integer join-key narrowing recipe (round 8; q140's key).
-  private def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
-
-  // Index-ordered IEEE folds matching plans.VectorExpressions.cosineSim.
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 
   // The deterministic arrival permutation q256/q258 share: a hashed
   // shuffle of the event log's arrival order, unique at oracle SF
   // (event_id < 2^20 there; at larger sweeps ties are timing-only).
   private val arrSql =
-    s"""${hash32Sql("'arr_' || CAST(event_id AS VARCHAR)")} * 1048576 + event_id % 1048576"""
+    s"""${hash32("'arr_' || CAST(event_id AS VARCHAR)")} * 1048576 + event_id % 1048576"""
   private def arrCol = graft.Pipeline.wordHash32(
     concat(lit("arr_"), col("event_id").cast("string"))) * 1048576L +
     pmod(col("event_id"), lit(1048576L))
-
-  // The q226 SCD2 oracle recipe (change rows via IS DISTINCT FROM,
-  // intervals via LEAD) over an `el` CTE of (user_id, state, ts_us,
-  // event_id) — q258 replays it over the FULL log: the repair facade's
-  // contract is equality with the from-scratch rebuild.
-  private val Scd2Ctes = """
-        ch AS (SELECT user_id, state, ts_us, event_id FROM (
-                 SELECT el.*, LAG(state) OVER (PARTITION BY user_id
-                   ORDER BY ts_us, event_id) AS prev FROM el)
-               WHERE prev IS DISTINCT FROM state),
-        vs AS (SELECT user_id, state, ts_us AS valid_from_us,
-                 LEAD(ts_us) OVER (PARTITION BY user_id
-                   ORDER BY ts_us, event_id) AS valid_to_us,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                   ORDER BY ts_us, event_id) AS BIGINT) AS version
-               FROM ch)"""
 
   /** Exact prefix-filtered set-similarity join ([[ops.SetSim
     * .prefixFilterJoin]] — full PPJoin: prefix + length + positional
@@ -92,7 +60,7 @@ object Round14Queries {
         tk AS (SELECT id,
                  unnest([l[i] || ' ' || l[i+1] for i in range(1, len(l))]) AS sh
                FROM wl WHERE len(l) >= 2),
-        tok AS (SELECT DISTINCT id, ${hash60Sql("sh")} AS tok FROM tk),
+        tok AS (SELECT DISTINCT id, ${hash60("sh")} AS tok FROM tk),
         sz AS (SELECT id, COUNT(*) AS sz FROM tok GROUP BY id),
         dfx AS (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
         rk AS (SELECT t.id, t.tok,
@@ -186,7 +154,7 @@ object Round14Queries {
                           CAST(label AS BIGINT) % 2 AS y
                    FROM embeddings),
         q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        sc AS (SELECT vec_id, y, ${cosSql("v", "qv")} AS s FROM t CROSS JOIN q),
+        sc AS (SELECT vec_id, y, ${cos("v", "qv")} AS s FROM t CROSS JOIN q),
         g AS (SELECT s, SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS pos,
                      SUM(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS neg
               FROM sc GROUP BY s),
@@ -226,7 +194,7 @@ object Round14Queries {
                           CAST(label AS BIGINT) % 2 AS y
                    FROM embeddings),
         q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        sc AS (SELECT y, (${cosSql("v", "qv")} + 1) / 2 AS p
+        sc AS (SELECT y, (${cos("v", "qv")} + 1) / 2 AS p
                FROM t CROSS JOIN q),
         b AS (SELECT LEAST(9, CAST(FLOOR(p * 10) AS INT)) AS bin, y,
                      CAST(CAST(p AS DECIMAL(25,6)) * 1000000 AS BIGINT)
@@ -356,7 +324,7 @@ object Round14Queries {
     */
   private lazy val q257: QueryDef =
     QueryDef("q257_pq_assign",
-      Some("""
+      Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         c AS (SELECT vec_id AS code, v AS cv FROM t
               WHERE vec_id % 101 = 0 AND vec_id < 10100),
@@ -368,9 +336,7 @@ object Round14Queries {
                  list_slice(cv, sub_idx * 16 + 1, sub_idx * 16 + 16) AS cs
                FROM c CROSS JOIN subs),
         dist AS (SELECT sv.vec_id, sv.sub_idx, cb.code,
-                   list_reduce(list_transform(range(1, 17),
-                     i -> (sv.s[i] - cb.cs[i]) * (sv.s[i] - cb.cs[i])),
-                     (x, y) -> x + y) AS d2
+                   ${sqDist("sv.s", "cb.cs", 16)} AS d2
                  FROM sv JOIN cb USING (sub_idx)),
         r AS (SELECT vec_id, sub_idx, code, ROW_NUMBER() OVER (
                 PARTITION BY vec_id, sub_idx ORDER BY d2, code) AS rn
@@ -407,7 +373,7 @@ object Round14Queries {
         WITH el AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us,
                            event_id
                     FROM events),
-        $Scd2Ctes
+        $scd2Ctes
         SELECT user_id, version, state, valid_from_us, valid_to_us,
                valid_to_us IS NULL AS is_current
         FROM vs ORDER BY user_id, version"""),
@@ -568,7 +534,7 @@ object Round14Queries {
                           CAST(label AS BIGINT) AS lab
                    FROM embeddings),
         q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        sc AS (SELECT lab, ${cosSql("v", "qv")} AS s FROM t CROSS JOIN q),
+        sc AS (SELECT lab, ${cos("v", "qv")} AS s FROM t CROSS JOIN q),
         f AS (SELECT cls.cls, CASE WHEN lab = cls.cls THEN 1 ELSE 0 END AS y,
                      s
               FROM sc CROSS JOIN (SELECT unnest(range(0, 10)) AS cls) cls),

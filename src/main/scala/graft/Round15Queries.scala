@@ -17,12 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object Round15Queries {
   import Tables._
-
-  // Oracle mirror of Pipeline.wordHash60 (first 15 md5 hex digits) —
-  // the integer join-key narrowing recipe (q140/q251's key).
-  private[graft] def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
+  import OracleSql.{cos, hash32, hash60, sqDist}
 
   // Shared q264/q266/q267 oracle scaffolding: the planted-copy corpus
   // (source travels for q267's profile; wl/spq ignore it) and the
@@ -36,7 +31,7 @@ object Round15Queries {
         pp AS (SELECT id, l, unnest(range(1, len(l) - 6)) AS pos
                FROM wl WHERE len(l) >= 8),
         an AS (SELECT id, pos,
-                 ${hash60Sql("array_to_string(l[pos:pos+7], ' ')")} AS h
+                 ${hash60("array_to_string(l[pos:pos+7], ' ')")} AS h
                FROM pp),
         oc AS (SELECT h, COUNT(*) AS occ FROM an GROUP BY h),
         du AS (SELECT id, pos FROM an JOIN oc USING (h) WHERE occ >= 2),
@@ -216,7 +211,7 @@ object Round15Queries {
         tk AS (SELECT id,
                  unnest([l[i] || ' ' || l[i+1] for i in range(1, len(l))]) AS sh
                FROM wl WHERE len(l) >= 2),
-        tok AS (SELECT DISTINCT id, ${hash60Sql("sh")} AS tok FROM tk),
+        tok AS (SELECT DISTINCT id, ${hash60("sh")} AS tok FROM tk),
         dfx AS (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
         w AS (SELECT tok, GREATEST(1000000 // df, 1) AS wt FROM dfx),
         tw AS (SELECT id, SUM(wt) AS tw FROM tok JOIN w USING (tok)
@@ -257,13 +252,6 @@ object Round15Queries {
           .orderBy("a_id", "b_id")
       })
 
-  // Index-ordered IEEE folds matching plans.VectorExpressions.cosineSim
-  // (Round14Queries' helpers, repeated privately here).
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
-
   /** IVF+PQ (IVFADC) search ([[Similarity.ivfPqTopK]]): q52's coarse
     * probe COMPOSED with q257's product quantization — candidates in
     * the 2 probed cells are ranked through their 4 PQ codes against a
@@ -287,14 +275,12 @@ object Round15Queries {
                  GROUP BY cell),
         q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
         pc AS (SELECT cent.cell FROM cent CROSS JOIN q
-               ORDER BY ${cosSql("qv", "cv")} DESC, cent.cell LIMIT 2),
+               ORDER BY ${cos("qv", "cv")} DESC, cent.cell LIMIT 2),
         cb AS (SELECT vec_id AS code, v AS cvec FROM t
                WHERE vec_id % 101 = 0 AND vec_id < 10100),
         subs AS (SELECT unnest([0, 1, 2, 3]) AS sub_idx),
         dt AS (SELECT sub_idx, code,
-                 CAST(floor(list_reduce(list_transform(range(1, 17),
-                     i -> (qs[i] - cs[i]) * (qs[i] - cs[i])), (x, y) -> x + y)
-                   * 1000000.0) AS BIGINT) AS d2_micro
+                 CAST(floor(${sqDist("qs", "cs", 16)} * 1000000.0) AS BIGINT) AS d2_micro
                FROM (SELECT sub_idx, code,
                        list_slice(qv, sub_idx * 16 + 1, sub_idx * 16 + 16) AS qs,
                        list_slice(cvec, sub_idx * 16 + 1, sub_idx * 16 + 16) AS cs
@@ -308,9 +294,7 @@ object Round15Queries {
                   list_slice(cvec, sub_idx * 16 + 1, sub_idx * 16 + 16) AS cs
                 FROM cb CROSS JOIN subs),
         dist AS (SELECT sv.vec_id, sv.sub_idx, cbs.code,
-                   list_reduce(list_transform(range(1, 17),
-                     i -> (sv.s[i] - cbs.cs[i]) * (sv.s[i] - cbs.cs[i])),
-                     (x, y) -> x + y) AS d2
+                   ${sqDist("sv.s", "cbs.cs", 16)} AS d2
                  FROM sv JOIN cbs USING (sub_idx)),
         r AS (SELECT vec_id, sub_idx, code, ROW_NUMBER() OVER (
                 PARTITION BY vec_id, sub_idx ORDER BY d2, code) AS rn
@@ -643,11 +627,6 @@ object Round15Queries {
   // modularity scoring, Duffield priority sampling, integer power-
   // iteration PCA, deterministic walk corpora, isotonic calibration.
 
-  // Oracle mirror of Pipeline.wordHash32 (first 8 md5 hex digits).
-  private def hash32Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1 for i in range(1, 9)],
-                    (a, b) -> a*16 + b)"""
-
   // Engine mirror of kcoreEdgeCtes' chain+clique document graph (the
   // shared synthetic graph of q270/q274/q277).
   private[graft] def chainCliqueEdges(s: org.apache.spark.sql.SparkSession,
@@ -727,7 +706,7 @@ object Round15Queries {
         f AS (SELECT * FROM t WHERE n_tokens >= 1),
         p AS (SELECT doc_id, n_tokens,
                 CAST(n_tokens * 4294967296 AS DOUBLE)
-                  / CAST(${hash32Sql("CAST(doc_id AS VARCHAR)")} + 1 AS DOUBLE)
+                  / CAST(${hash32("CAST(doc_id AS VARCHAR)")} + 1 AS DOUBLE)
                   AS pri
               FROM f),
         r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY pri DESC, doc_id) AS rn
@@ -831,7 +810,7 @@ object Round15Queries {
         else s"p${t - 1}"
       s"""
         h$t AS (SELECT pr.walk_id, e0.y AS node,
-                  ${hash32Sql(s"CONCAT(pr.walk_id, '_', $t, '_', e0.y)")} AS h
+                  ${hash32(s"CONCAT(pr.walk_id, '_', $t, '_', e0.y)")} AS h
                 FROM $prev pr JOIN e0 ON e0.x = pr.node),
         p$t AS (SELECT walk_id, node FROM h$t
                 QUALIFY ROW_NUMBER() OVER (PARTITION BY walk_id
@@ -879,7 +858,7 @@ object Round15Queries {
                           CAST(label AS BIGINT) % 2 AS y
                    FROM embeddings),
         q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        sc AS (SELECT y, (${cosSql("v", "qv")} + 1) / 2 AS p
+        sc AS (SELECT y, (${cos("v", "qv")} + 1) / 2 AS p
                FROM t CROSS JOIN q),
         b AS (SELECT LEAST(49, CAST(FLOOR(p * 50) AS BIGINT)) AS bin, y
               FROM sc),
@@ -1024,7 +1003,7 @@ object Round15Queries {
                    FROM documents),
         bs AS (SELECT unnest(range(0, 32)) AS b),
         e AS (SELECT bs.b, t.doc_id, t.v,
-                ${hash32Sql("'bs_' || bs.b || '_' || t.doc_id")}
+                ${hash32("'bs_' || bs.b || '_' || t.doc_id")}
                   % 1000000 AS slot
               FROM t CROSS JOIN bs),
         m AS (SELECT b, v,
@@ -1221,7 +1200,7 @@ object Round15Queries {
                    END, nh) AS BIGINT) AS alloc_n
                FROM rk CROSS JOIN lo),
         sl AS (SELECT stratum, id, value,
-                 ${hash32Sql("'ney_' || id")} % 1000000 AS slot
+                 ${hash32("'ney_' || id")} % 1000000 AS slot
                FROM base),
         rked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY stratum
                    ORDER BY slot, id) AS rn FROM sl)
@@ -1242,7 +1221,7 @@ object Round15Queries {
       val p = t - 1
       s"""
         d$t AS (SELECT node,
-                  ${hash32Sql(s"'mis_' || node || '_' || $t")}::HUGEINT
+                  ${hash32(s"'mis_' || node || '_' || $t")}::HUGEINT
                     * 1099511627776 + node AS k
                 FROM l$p),
         nm$t AS (SELECT le.x AS node, MIN(d.k) AS mn
@@ -1376,7 +1355,7 @@ object Round15Queries {
                 CAST(CASE WHEN h // 64 = 0 THEN 55
                      ELSE 55 - length(bin(h // 64)) END AS BIGINT) AS r
               FROM (SELECT node,
-                      ${hash60Sql("CAST(node AS VARCHAR)")} AS h
+                      ${hash60("CAST(node AS VARCHAR)")} AS h
                     FROM nodes)),
         ${hyperballRoundCtes(radius)},
         ${(0 to radius).map(hyperballEstCte).mkString(",")},
@@ -1454,7 +1433,7 @@ object Round15Queries {
         WITH t AS (SELECT doc_id, source,
                      unnest(string_split(text, ' ')) AS w
                    FROM documents),
-        hh AS (SELECT source, ${hash60Sql("'ams_' || w")} AS h FROM t),
+        hh AS (SELECT source, ${hash60("'ams_' || w")} AS h FROM t),
         e AS (SELECT source, h, unnest(range(0, 60)) AS c FROM hh),
         sg AS (SELECT source, c,
                  SUM(((h // (1::BIGINT << CAST(c AS INT))) % 2)
@@ -1513,7 +1492,7 @@ object Round15Queries {
                 CAST(CASE WHEN h // 64 = 0 THEN 55
                      ELSE 55 - length(bin(h // 64)) END AS BIGINT) AS r
               FROM (SELECT node,
-                      ${hash60Sql("CAST(node AS VARCHAR)")} AS h
+                      ${hash60("CAST(node AS VARCHAR)")} AS h
                     FROM nodes)),
         ${hyperballRoundCtes(radius)},
         ${(0 to radius).map(hyperballEstCte).mkString(",")},
@@ -1892,7 +1871,7 @@ object Round15Queries {
     QueryDef("q299_rendezvous_moves",
       Some(s"""
         WITH ks AS (SELECT CAST(doc_id AS VARCHAR) AS k FROM documents),
-        a AS (SELECT k, [${hash32Sql("'rv_' || s || '_' || k")}
+        a AS (SELECT k, [${hash32("'rv_' || s || '_' || k")}
                 for s in range(0, 17)] AS arr
               FROM ks),
         o AS (SELECT k,
@@ -1951,7 +1930,7 @@ object Round15Queries {
     QueryDef("q300_ring_moves",
       Some(s"""
         WITH ks AS (SELECT CAST(doc_id AS VARCHAR) AS k FROM documents),
-        kp AS (SELECT k, ${hash60Sql("'ringk_' || k")} AS kp FROM ks),
+        kp AS (SELECT k, ${hash60("'ringk_' || k")} AS kp FROM ks),
         o AS (SELECT k, ${ownerSql(posF, ownF)} AS o_from,
                      ${ownerSql(posT, ownT)} AS o_to
               FROM kp),
@@ -1998,7 +1977,7 @@ object Round15Queries {
                 CAST(CASE WHEN h // 64 = 0 THEN 55
                      ELSE 55 - length(bin(h // 64)) END AS BIGINT) AS r
               FROM (SELECT node,
-                      ${hash60Sql("CAST(node AS VARCHAR)")} AS h
+                      ${hash60("CAST(node AS VARCHAR)")} AS h
                     FROM nodes)),
         ${hyperballRoundCtes(radius)},
         ${(0 to radius).map(hyperballEstCte).mkString(",")},

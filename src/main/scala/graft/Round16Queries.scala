@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object Round16Queries {
   import Tables._
+  import OracleSql.hash60
 
   /** HyperBall reachability at p = 8 (m = 256 registers,
     * [[ops.Graph.hyperBall]]) over the q288 chain+clique graph — the
@@ -77,7 +78,7 @@ object Round16Queries {
                 CAST(CASE WHEN h // $m = 0 THEN $rhoBase
                      ELSE $rhoBase - length(bin(h // $m)) END AS BIGINT) AS r
               FROM (SELECT node,
-                      ${Round15Queries.hash60Sql("CAST(node AS VARCHAR)")} AS h
+                      ${hash60("CAST(node AS VARCHAR)")} AS h
                     FROM nodes)),
         $roundCtes,
         $estCtes,

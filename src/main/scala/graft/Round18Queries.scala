@@ -12,12 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object Round18Queries {
   import Tables._
-
-  // DuckDB mirror of Pipeline.wordHash32: first 8 md5 hex digits of
-  // the value's decimal string rendering, folded to a BIGINT.
-  private def hash32Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5(CAST($e AS VARCHAR)), i, 1)) - 1 for i in range(1, 9)],
-        (a, b) -> a * 16 + b)"""
+  import OracleSql.hash32
 
   /** Sampled Adamic–Adar ([[ops.Graph.adamicAdarSampled]], one-in-3)
     * over q271's order–part graph: every wedge `(w, u, v)` keeps iff
@@ -42,8 +37,8 @@ object Round18Queries {
         deg AS (SELECT w, COUNT(*) AS deg FROM sym GROUP BY w),
         mids AS (SELECT sym.w, sym.n,
                    CAST(floor(1000000.0 / ln(deg.deg)) AS BIGINT) AS c,
-                   ${hash32Sql("sym.w")} AS hw,
-                   ${hash32Sql("sym.n")} AS hn
+                   ${hash32("CAST(sym.w AS VARCHAR)")} AS hw,
+                   ${hash32("CAST(sym.n AS VARCHAR)")} AS hn
                  FROM sym JOIN deg ON sym.w = deg.w
                  WHERE deg.deg BETWEEN 2 AND 64),
         wedges AS (SELECT w1.n AS u, w2.n AS v, w1.c

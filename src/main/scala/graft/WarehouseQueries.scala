@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Round-13 batch (q226+): warehouse-temporal surface (SCD2 validity
   * intervals, point-in-time fact joins, incremental rollup
@@ -23,35 +23,13 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object WarehouseQueries {
   import Tables._
-
-  /** Order-independent exact sum of a double expression (house rule —
-    * see Queries.dsum). */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 6))).cast(DoubleType)
-  private def dsumSql(e: String): String =
-    s"CAST(SUM(CAST($e AS DECIMAL(25,6))) AS DOUBLE)"
+  import OracleSql.{cos, dsum, dsumSql, hash60, scd2Ctes}
 
   // NOTE: `all` is declared at the BOTTOM of this object. Every query
   // here is a lazy val interpolating helper vals; a top-of-file
   // `val all = Seq(q226, ...)` would force those lazy vals BEFORE the
   // (textually later) helper vals initialize, interpolating literal
   // "null" into the oracle SQL.
-
-  // The SCD2 compression as DuckDB CTEs over an `el` CTE with
-  // (user_id, state, ts_us, event_id): change rows via IS DISTINCT
-  // FROM (null-safe, same as the engine's <=> negation), intervals via
-  // LEAD under the (ts_us, event_id) order the engine uses.
-  private val Scd2Ctes = """
-        ch AS (SELECT user_id, state, ts_us, event_id FROM (
-                 SELECT el.*, LAG(state) OVER (PARTITION BY user_id
-                   ORDER BY ts_us, event_id) AS prev FROM el)
-               WHERE prev IS DISTINCT FROM state),
-        vs AS (SELECT user_id, state, ts_us AS valid_from_us,
-                 LEAD(ts_us) OVER (PARTITION BY user_id
-                   ORDER BY ts_us, event_id) AS valid_to_us,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                   ORDER BY ts_us, event_id) AS BIGINT) AS version
-               FROM ch)"""
 
   /** SCD2 dimension build ([[ops.Temporal.scd2]]): the events stream
     * as a per-user change log (state = event_type), compressed into
@@ -68,7 +46,7 @@ object WarehouseQueries {
         WITH el AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us,
                            event_id
                     FROM events),
-        $Scd2Ctes
+        $scd2Ctes
         SELECT user_id, version, state, valid_from_us, valid_to_us,
                valid_to_us IS NULL AS is_current
         FROM vs ORDER BY user_id, version"""),
@@ -101,7 +79,7 @@ object WarehouseQueries {
                     FROM events),
         el AS (SELECT user_id, event_type AS state, ts_us, event_id FROM ev
                WHERE event_type IN ('signup', 'purchase')),
-        $Scd2Ctes,
+        $scd2Ctes,
         f AS (SELECT user_id, event_type, value, ts_us FROM ev
               WHERE event_type IN ('click', 'view', 'error'))
         SELECT vs.state AS tier, f.event_type,
@@ -310,14 +288,6 @@ object WarehouseQueries {
           .orderBy("band")
       })
 
-  // DuckDB cosine over DOUBLE[] slices [1, dims]: left-fold dot
-  // products (0.0 seed) — the same fold order as the fused native
-  // kernel, so results are bit-identical (see PipelineQueries.cosSql).
-  private def dotSql(a: String, b: String, dims: Int): String =
-    s"list_reduce(list_transform(range(1, ${dims + 1}), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-  private def cosSql(a: String, b: String, dims: Int): String =
-    s"${dotSql(a, b, dims)} / (sqrt(${dotSql(a, a, dims)}) * sqrt(${dotSql(b, b, dims)}))"
-
   /** Matryoshka prefix-dimension retrieval audit
     * ([[Similarity.prefixRecall]]): for a FIXED query panel
     * (vec_id % 10 = 0 AND vec_id < 500 — at most 50 queries at ANY
@@ -338,8 +308,8 @@ object WarehouseQueries {
         q AS (SELECT vec_id AS query_id, v AS qv FROM t
               WHERE vec_id % 10 = 0 AND vec_id < 500),
         p AS (SELECT query_id, vec_id AS corpus_id,
-                ${cosSql("qv", "v", 64)} AS cf,
-                ${cosSql("qv", "v", 16)} AS cp
+                ${cos("qv", "v", 64)} AS cf,
+                ${cos("qv", "v", 16)} AS cp
               FROM q JOIN t ON t.vec_id <> q.query_id),
         rf AS (SELECT query_id, corpus_id FROM (
                  SELECT query_id, corpus_id, ROW_NUMBER() OVER (
@@ -362,12 +332,6 @@ object WarehouseQueries {
           prefixDims = 16, k = 5)
         .orderBy("query_id"))
 
-  // Oracle mirror of Pipeline.wordHash60 (shared recipe; see
-  // DomainQueries.hash60Sql).
-  private def hash60Sql(e: String): String =
-    s"""list_reduce([strpos('0123456789abcdef', substr(md5($e), hx, 1)) - 1 for hx in range(1, 16)],
-                    (a, b) -> a*16 + b)"""
-
   /** Optimizer-statistics panel ([[ops.Stats.columnStats]]): the
     * ANALYZE TABLE numbers for four orders columns — rows, nulls,
     * average string width (milli-chars), and distinct-count estimate
@@ -385,7 +349,7 @@ object WarehouseQueries {
           UNION ALL SELECT 'o_orderkey', CAST(o_orderkey AS VARCHAR) FROM orders
           UNION ALL SELECT 'o_orderpriority', o_orderpriority FROM orders
           UNION ALL SELECT 'o_orderstatus', o_orderstatus FROM orders),
-        h AS (SELECT DISTINCT col_name, ${hash60Sql("value")} AS h FROM m
+        h AS (SELECT DISTINCT col_name, ${hash60("value")} AS h FROM m
               WHERE value IS NOT NULL),
         b AS (SELECT col_name, h % 64 AS bucket,
                      CASE WHEN h // 64 = 0 THEN 55
@@ -694,7 +658,7 @@ object WarehouseQueries {
         WITH el AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us,
                            event_id
                     FROM events),
-        $Scd2Ctes
+        $scd2Ctes
         SELECT user_id, version, state, valid_from_us, valid_to_us,
                valid_to_us IS NULL AS is_current
         FROM vs ORDER BY user_id, version"""),
@@ -727,8 +691,8 @@ object WarehouseQueries {
       Some(s"""
         WITH lm AS (SELECT CAST(o_custkey AS VARCHAR) AS value FROM orders),
         rm AS (SELECT CAST(c_custkey AS VARCHAR) AS value FROM customer),
-        lh AS (SELECT DISTINCT ${hash60Sql("value")} AS h FROM lm),
-        rh AS (SELECT DISTINCT ${hash60Sql("value")} AS h FROM rm),
+        lh AS (SELECT DISTINCT ${hash60("value")} AS h FROM lm),
+        rh AS (SELECT DISTINCT ${hash60("value")} AS h FROM rm),
         lreg AS (SELECT h % 64 AS bucket,
                    MAX(CASE WHEN h // 64 = 0 THEN 55
                         ELSE 55 - length(bin(h // 64)) END) AS r
@@ -962,7 +926,7 @@ object WarehouseQueries {
         q AS (SELECT vec_id AS qid, v AS qv, lab AS tlab FROM t
               WHERE vec_id % 10 = 0 AND vec_id < 500),
         p AS (SELECT qid, tlab, t.vec_id AS cid, t.lab AS nl,
-                ${cosSql("qv", "v", 64)} AS c
+                ${cos("qv", "v", 64)} AS c
               FROM q JOIN t ON t.vec_id <> q.qid),
         r AS (SELECT qid, tlab, nl, ROW_NUMBER() OVER (
                 PARTITION BY qid ORDER BY c DESC, cid) AS rn
@@ -1005,7 +969,7 @@ object WarehouseQueries {
         c AS (SELECT vec_id AS centroid_id, v AS cv FROM t
               WHERE vec_id % 101 = 0 AND vec_id < 10100),
         p AS (SELECT t.vec_id, t.lab, centroid_id,
-                ${cosSql("v", "cv", 64)} AS cos
+                ${cos("v", "cv", 64)} AS cos
               FROM t CROSS JOIN c),
         r AS (SELECT vec_id, lab, centroid_id, ROW_NUMBER() OVER (
                 PARTITION BY vec_id ORDER BY cos DESC, centroid_id) AS rn

@@ -76,16 +76,8 @@ object Store {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("level")
       .parquet(tmp)
-    val dst = new java.io.File(warehousePath)
-    if (dst.exists()) {
-      val old = new java.io.File(warehousePath + ".old")
-      deleteRec(old)
-      rename(dst, old)
-      rename(new java.io.File(tmp), dst)
-      deleteRec(old)
-    } else {
-      rename(new java.io.File(tmp), dst)
-    }
+    swap(new java.io.File(tmp), new java.io.File(warehousePath),
+      new java.io.File(warehousePath + ".old"))
     // new files on disk — invalidate cached plans/file listings over
     // THIS path only. clearCache() (rounds <= 8) nuked every cache in
     // the session: in a long-lived cluster session that silently
@@ -102,6 +94,27 @@ object Store {
   private def rename(from: java.io.File, to: java.io.File): Unit =
     if (!from.renameTo(to))
       throw new java.io.IOException(s"warehouse swap failed: $from -> $to")
+
+  /** Put `fresh` in place of `dst`. The live `dst` moves to `aside`
+    * first and is renamed back if `fresh` cannot be renamed in, so a
+    * failed swap throws with the old data still at `dst`. `aside` must
+    * not sit inside the warehouse root, where it would be read as a
+    * partition.
+    */
+  private[graft] def swap(fresh: java.io.File, dst: java.io.File,
+                          aside: java.io.File): Unit = {
+    deleteRec(aside)
+    if (dst.exists()) rename(dst, aside)
+    try rename(fresh, dst)
+    catch {
+      case e: java.io.IOException =>
+        if (aside.exists() && !aside.renameTo(dst))
+          e.addSuppressed(new java.io.IOException(
+            s"restore failed, old data left at $aside"))
+        throw e
+    }
+    deleteRec(aside)
+  }
 
   /** Partition-scoped merge + write: only the level partitions present
     * in the incoming batch are merged and rewritten; untouched level
@@ -134,10 +147,7 @@ object Store {
     affected.foreach { l =>
       val fresh = new java.io.File(tmp, s"level=$l")
       val dst = new java.io.File(whDir, s"level=$l")
-      if (fresh.exists()) {
-        deleteRec(dst)
-        rename(fresh, dst)
-      }
+      if (fresh.exists()) swap(fresh, dst, new java.io.File(tmp, s"level=$l.old"))
     }
     deleteRec(tmp)
     // path-scoped invalidation, same rationale as [[write]]

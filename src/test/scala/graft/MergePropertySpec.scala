@@ -90,4 +90,33 @@ class MergePropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a failed warehouse swap keeps the live data and throws") {
+    import java.nio.file.{Files, Path}
+    def put(dir: Path, name: String, body: String): Unit = {
+      Files.createDirectories(dir)
+      Files.write(dir.resolve(name), body.getBytes("UTF-8"))
+    }
+    def contents(dir: Path): Map[String, String] =
+      dir.toFile.listFiles().map(f =>
+        f.getName -> new String(Files.readAllBytes(f.toPath), "UTF-8")).toMap
+    val root = Files.createTempDirectory("swap")
+    val dst = root.resolve("wh").resolve("level=2")
+    val staging = root.resolve("wh.ptmp")
+    val aside = staging.resolve("level=2.old")
+    put(dst, "part-0.parquet", "old")
+    Files.createDirectories(staging)
+
+    // `fresh` is missing, so renaming it in fails after dst moved aside
+    val e = intercept[java.io.IOException](
+      Store.swap(staging.resolve("level=2").toFile, dst.toFile, aside.toFile))
+    assert(e.getMessage.contains("warehouse swap failed"))
+    assert(contents(dst) == Map("part-0.parquet" -> "old"))
+    assert(!Files.exists(aside))
+
+    put(staging.resolve("level=2"), "part-1.parquet", "new")
+    Store.swap(staging.resolve("level=2").toFile, dst.toFile, aside.toFile)
+    assert(contents(dst) == Map("part-1.parquet" -> "new"))
+    assert(!Files.exists(aside) && !Files.exists(staging.resolve("level=2")))
+  }
 }

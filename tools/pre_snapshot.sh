@@ -16,6 +16,12 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
+# Size the forked test and Verify JVMs to this machine unless the
+# caller did: every core, half the RAM clamped to 2..8 GB (build.sbt
+# otherwise forks with -Xmx32g), and a local scratch dir for Spark.
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 OUT_DIR="$(mktemp -d /tmp/pre_snapshot.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
