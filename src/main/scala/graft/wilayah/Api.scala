@@ -1,19 +1,42 @@
 package graft.wilayah
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The five query entry points of the reference service, over the
   * Parquet warehouse (reference paths cited per method). Each returns
   * a DataFrame; JSON shaping happens at the edge (`featureCollection`).
+  *
+  * Every read goes through one warehouse snapshot: the loaded frame
+  * ([[Store.load]]) and the [[Store.stamp]] taken just before it. A
+  * read first takes the stamp again (one readdir, no Spark job) and
+  * loads a new snapshot only when it differs, so file listing and
+  * schema resolution are paid once per write, not once per request.
+  * Every writer changes the stamp: this Api's own `sync`/`seed`, another
+  * Api on the same path, the ingest stream's merge and a direct
+  * [[Store.write]], so each read sees every write that finished
+  * before it. The snapshot is a plan over the files, not a cache: it
+  * holds no rows and persists nothing.
   */
 class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
 
-  def warehouse: DataFrame =
-    Store.load(spark, warehousePath)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.Encoders.product[Wilayah].schema))
+  /** (stamp, frame) of the last load; guarded by `this`, since the
+    * geojson slots read concurrently. */
+  private var snapshot: Option[(Seq[Store.StampEntry], DataFrame)] = None
+
+  /** The warehouse as of this call: the snapshot, reloaded first if
+    * the warehouse changed on disk since it was taken. */
+  def warehouse: DataFrame = synchronized {
+    // stamp before loading: a write between the two then leaves an old
+    // stamp on newer files (one extra reload), never the reverse
+    val now = Store.stamp(warehousePath)
+    snapshot.filter(_._1 == now).map(_._2).getOrElse {
+      val df = Store.load(spark, warehousePath).getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Store.schema))
+      snapshot = Some((now, df))
+      df
+    }
+  }
 
   /** Warehouse health summary: per-level counts, duplicate-key count
     * (must be 0 — the PK invariant the merge maintains), and row total.
@@ -67,9 +90,7 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
     * Idempotent. Returns features processed (0 if already seeded).
     */
   def seed(): Long = {
-    val seeded = Store.load(spark, warehousePath)
-      .exists(df => !df.filter(col("level") === 1).limit(1).isEmpty)
-    if (seeded) 0L
+    if (!warehouse.filter(col("level") === 1).isEmpty) 0L
     else {
       // ONLY the province boundary file(s) — the reference seeds from
       // the single level-1 file, not the whole code prefix
@@ -144,8 +165,10 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
     * `level` equality prunes warehouse partitions.
     */
   def byLevel(level: Int, parentPrefix: Option[String] = None): DataFrame =
-    warehouse
-      .filter(col("level") === level)
+    byLevelOf(warehouse, level, parentPrefix)
+
+  private def byLevelOf(wh: DataFrame, level: Int, parentPrefix: Option[String]): DataFrame =
+    wh.filter(col("level") === level)
       .filter(lit(parentPrefix.orNull).isNull ||
         col(Store.Key).startsWith(parentPrefix.getOrElse("")))
       .select(
@@ -172,13 +195,16 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
   /** The 2-4 per-level fetches are independent — run them as
     * concurrent Spark jobs (the reference awaits them sequentially,
     * /root/reference/server.js:429-476).
+    * All slots read one snapshot, so a write landing mid-request cannot
+    * mix versions in a response.
     */
   def geojson(code: String): Map[String, String] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    val wh = warehouse
     val futures = geojsonPlan(code).map { case (slot, level, prefix) =>
-      Future(slot -> featureCollection(byLevel(level, Some(prefix))))
+      Future(slot -> featureCollection(byLevelOf(wh, level, Some(prefix))))
     }
     Await.result(Future.sequence(futures), Duration.Inf).toMap
   }

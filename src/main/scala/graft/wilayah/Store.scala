@@ -1,8 +1,13 @@
 package graft.wilayah
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Warehouse + keyed upsert (MERGE) over Parquet — the Spark
   * re-expression of the reference's row-at-a-time
@@ -19,14 +24,47 @@ object Store {
 
   val Key = "kode_wilayah_kemendagri"
 
-  private val columns = Seq(
-    "kode_wilayah_kemendagri", "nama_wilayah_kemendagri",
-    "level", "geometry", "created_at", "updated_at")
+  /** The warehouse's declared schema: the columns of [[Wilayah]],
+    * typed as there. */
+  val schema: StructType = Encoders.product[Wilayah].schema
 
+  private val columns = schema.fieldNames.toSeq
+
+  /** The warehouse as written, or None if it does not exist. Read with
+    * the declared [[schema]], so no Parquet footer is read to infer it
+    * and an empty warehouse loads as an empty frame. */
   def load(spark: SparkSession, warehousePath: String): Option[DataFrame] =
     if (new java.io.File(warehousePath).exists())
-      Some(spark.read.parquet(warehousePath))
+      Some(spark.read.schema(schema).parquet(warehousePath))
     else None
+
+  /** One directory entry of a [[stamp]]: name, file key (the inode
+    * where the file system has one) and modification time in ns. */
+  type StampEntry = (String, AnyRef, Long)
+
+  /** What the warehouse looks like on disk, cheaply enough to check
+    * before every read: the root and each of its `level=*` directories
+    * by name, file key and modification time. One readdir, no Spark
+    * job. Every writer changes it: [[swap]] puts a new directory (a new
+    * inode) in place of a level, [[write]] a new root, and a level seen
+    * for the first time adds an entry. Empty when the warehouse does
+    * not exist. An entry renamed away while the stamp is taken is left
+    * out, so a stamp taken during a swap differs from the one after it.
+    */
+  def stamp(warehousePath: String): Seq[StampEntry] = {
+    val root = Paths.get(warehousePath)
+    def entry(p: Path): Option[StampEntry] =
+      try {
+        val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+        Some((p.getFileName.toString, a.fileKey(), a.lastModifiedTime().to(TimeUnit.NANOSECONDS)))
+      } catch { case _: NoSuchFileException => None }
+    if (!Files.isDirectory(root)) Seq.empty
+    else {
+      val levels = Files.newDirectoryStream(root, "level=*")
+      try (root +: levels.asScala.toSeq.sortBy(_.getFileName.toString)).flatMap(entry)
+      finally levels.close()
+    }
+  }
 
   /** Last-writer-wins merge: for each key keep the newest row by
     * `updated_at` (ties: incoming wins), preserving the oldest
@@ -129,6 +167,9 @@ object Store {
     import org.apache.spark.sql.functions.col
     val affected = incoming.select("level").distinct()
       .collect().map(_.getInt(0)).sorted
+    // an empty batch leaves the warehouse as it was; creating the root
+    // here would leave a warehouse with no level to read
+    if (affected.isEmpty) return
     val existingAffected = load(spark, warehousePath)
       .map(_.filter(col("level").isin(affected.map(Integer.valueOf): _*)))
     val merged = merge(existingAffected, incoming)
