@@ -1,7 +1,9 @@
 package graft.wilayah
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The five query entry points of the reference service, over the
   * Parquet warehouse (reference paths cited per method). Each returns
@@ -15,39 +17,62 @@ import org.apache.spark.sql.functions._
   * Every writer changes the stamp: this Api's own `sync`/`seed`, another
   * Api on the same path, the ingest stream's merge and a direct
   * [[Store.write]], so each read sees every write that finished
-  * before it. The snapshot is a plan over the files, not a cache: it
-  * holds no rows and persists nothing.
+  * before it.
+  *
+  * The snapshot holds one piece of data: its [[KeyIndex]], the
+  * (kode, name, level) of every row, built by one projection job the
+  * first time a key-only read (`search`, `status`, `stats`, `seed`)
+  * meets the snapshot. It lives and dies with the snapshot, so the
+  * stamp rule above invalidates it too; nothing is persisted in Spark.
+  * Its size is bounded by the region directory, at about 320 bytes a
+  * row with 30-character names: about 120 KB at Aceh's 388 rows and
+  * about 27 MB for the ~84k desa of the whole country. Geometry is
+  * never in it: `byLevel` and `geojson` stay Spark plans over the
+  * snapshot's frame.
   */
 class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
 
-  /** (stamp, frame) of the last load; guarded by `this`, since the
-    * geojson slots read concurrently. */
-  private var snapshot: Option[(Seq[Store.StampEntry], DataFrame)] = None
+  /** One load of the warehouse and the stamp taken just before it. */
+  private final class Snapshot(val stamp: Seq[Store.StampEntry], val frame: DataFrame) {
+    /** The search answer's columns over the whole warehouse. */
+    lazy val keyColumns: DataFrame = frame.select(
+      col(Store.Key).as("id"),
+      col("nama_wilayah_kemendagri").as("name"),
+      col("level"))
+    lazy val keys: KeyIndex = KeyIndex(keyColumns)
+  }
 
-  /** The warehouse as of this call: the snapshot, reloaded first if
-    * the warehouse changed on disk since it was taken. */
-  def warehouse: DataFrame = synchronized {
+  /** The last snapshot; guarded by `this`, since the geojson slots
+    * read concurrently. */
+  private var snapshot: Option[Snapshot] = None
+
+  /** The snapshot as of this call, reloaded first if the warehouse
+    * changed on disk since it was taken. */
+  private def current: Snapshot = synchronized {
     // stamp before loading: a write between the two then leaves an old
     // stamp on newer files (one extra reload), never the reverse
     val now = Store.stamp(warehousePath)
-    snapshot.filter(_._1 == now).map(_._2).getOrElse {
+    snapshot.filter(_.stamp == now).getOrElse {
       val df = Store.load(spark, warehousePath).getOrElse(
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Store.schema))
-      snapshot = Some((now, df))
-      df
+      val s = new Snapshot(now, df)
+      snapshot = Some(s)
+      s
     }
   }
 
+  /** The warehouse as of this call (see [[current]]). */
+  def warehouse: DataFrame = current.frame
+
   /** Warehouse health summary: per-level counts, duplicate-key count
-    * (must be 0 — the PK invariant the merge maintains), and row total.
+    * (must be 0 — the PK invariant the merge maintains, counted as
+    * [[Store.duplicateKeys]] does), and row total.
     */
   def stats(): Map[String, Long] = {
-    val wh = warehouse
-    val byLevel = wh.groupBy("level").count().collect()
-      .map(r => s"level_${r.getInt(0)}" -> r.getLong(1)).toMap
-    byLevel ++ Map(
-      "total" -> wh.count(),
-      "duplicate_keys" -> Store.duplicateKeys(wh))
+    val keys = current.keys
+    keys.perLevel.map { case (l, n) => s"level_$l" -> n } ++ Map(
+      "total" -> keys.size.toLong,
+      "duplicate_keys" -> keys.duplicateKeys)
   }
 
   /** Expose the warehouse to Spark SQL (`SELECT ... FROM <name>`), so
@@ -90,7 +115,7 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
     * Idempotent. Returns features processed (0 if already seeded).
     */
   def seed(): Long = {
-    if (!warehouse.filter(col("level") === 1).isEmpty) 0L
+    if (current.keys.perLevel.contains(1)) 0L
     else {
       // ONLY the province boundary file(s) — the reference seeds from
       // the single level-1 file, not the whole code prefix
@@ -105,16 +130,11 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
 
   /** `GET /api/db/status` (/root/reference/server.js:256-268): per-level
     * counts under a code prefix, fanned into the 4-slot struct
-    * {provinsi, kabupaten, kecamatan, kelurahan} + availability.
+    * {provinsi, kabupaten, kecamatan, kelurahan}. Counted from the key
+    * index, no Spark job; the SQL form runs through [[registerView]].
     */
-  def statusCounts(code: String): DataFrame =
-    warehouse
-      .filter(col(Store.Key).startsWith(code))
-      .groupBy("level").agg(count(lit(1)).as("n"))
-
   def status(code: String): Map[String, Long] = {
-    val byLevel = statusCounts(code).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val byLevel = current.keys.perLevelUnder(code)
     Map(
       "provinsi" -> byLevel.getOrElse(1, 0L),
       "kabupaten" -> byLevel.getOrElse(2, 0L),
@@ -138,25 +158,18 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
   }
 
   /** `GET /api/search?q=` (/root/reference/server.js:292-330): min
-    * 3-char query, case-insensitive substring on the name, ordered by
-    * (level, name), top 10. Spark plans TakeOrderedAndProject — a true
-    * per-partition top-k, no global sort.
+    * 3-char trimmed query, case-insensitive substring on the name,
+    * ordered by (level, name), top 10; ties break by code. Answered
+    * from the key index on the driver with Spark's own string
+    * semantics (see [[KeyIndex.search]]), so the returned frame is a
+    * local relation of the hits and collecting it runs no job.
     */
   def search(q: String): DataFrame = {
-    if (q == null || q.trim.length < 3)
-      warehouse.select(
-        col(Store.Key).as("id"),
-        col("nama_wilayah_kemendagri").as("name"),
-        col("level")).limit(0)
-    else
-      warehouse
-        .filter(lower(col("nama_wilayah_kemendagri")).contains(q.trim.toLowerCase))
-        .select(
-          col(Store.Key).as("id"),
-          col("nama_wilayah_kemendagri").as("name"),
-          col("level"))
-        .orderBy(col("level").asc, col("name").asc)
-        .limit(10)
+    val snap = current
+    val hits =
+      if (q == null || q.trim.length < 3) Seq.empty
+      else snap.keys.search(q.trim.toLowerCase, 10)
+    spark.createDataFrame(hits.asJava, snap.keyColumns.schema)
   }
 
   /** `get_wilayah_by_level(level, parent)` (/root/reference/init_db.sql:
@@ -210,16 +223,20 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
   }
 
   /** Per-row Feature JSON — the distributed part of the
-    * FeatureCollection assembly. Geometry re-parses from its stored
-    * text via from_json — the mirror of the reference's string re-parse
-    * at server.js:491-497.
+    * FeatureCollection assembly. The stored geometry text is spliced
+    * in as it is: [[Geo.asGeoJson]] wrote it with the serializer a
+    * parse-and-print would use, so re-parsing it would give the same
+    * bytes (the mirror of the reference's string re-parse at
+    * server.js:491-497). A null geometry leaves the key out, as
+    * `to_json` does for a null field.
     */
   private def featureJson(rows: DataFrame): DataFrame =
     rows.select(
-      to_json(struct(
-        lit("Feature").as("type"),
-        struct(col("name"), col("id")).as("properties"),
-        from_json(col("geometry"), Model.geometryType).as("geometry")))
+      concat(
+        lit("""{"type":"Feature","properties":"""),
+        to_json(struct(col("name"), col("id"))),
+        coalesce(concat(lit(""","geometry":"""), col("geometry")), lit("")),
+        lit("}"))
         .as("feature"))
 
   /** FeatureCollection assembly (/root/reference/server.js:486-506):
@@ -269,4 +286,84 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
         col("slot")))
       .withColumn("size_bytes", length(col("content")).cast("long"))
   }
+}
+
+/** The key columns of one warehouse snapshot, on the driver: every
+  * row's code, name and level, plus the name as Spark's `lower` gives
+  * it, computed in the same projection job. Held in two orders, by code
+  * for prefix counts and by (level, name, code) for search. Strings
+  * stay Spark's `UTF8String`, so matching and ordering are the
+  * byte-wise `contains` and `compareTo` that Spark's `contains` and
+  * `ORDER BY` run.
+  */
+private[wilayah] final class KeyIndex private (entries: Array[KeyIndex.Entry]) {
+  import KeyIndex._
+
+  private val byKode = entries.sortBy(_.kode)(nullsFirst)
+  private val byRank = entries.sorted(
+    Ordering.by[Entry, Int](_.level).orElseBy(_.name)(nullsFirst).orElseBy(_.kode)(nullsFirst))
+
+  def size: Int = entries.length
+
+  /** Rows per level over the whole warehouse. */
+  lazy val perLevel: Map[Int, Long] = countByLevel(entries.iterator)
+
+  /** Rows per level whose code starts with `prefix`: in code order they
+    * are one run, starting at the first code not below the prefix. */
+  def perLevelUnder(prefix: String): Map[Int, Long] =
+    if (prefix == null) Map.empty
+    else {
+      val p = UTF8String.fromString(prefix)
+      var lo = 0
+      var hi = byKode.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (nullsFirst.lt(byKode(mid).kode, p)) lo = mid + 1 else hi = mid
+      }
+      countByLevel(Iterator.range(lo, byKode.length).map(byKode).takeWhile(_.kode.startsWith(p)))
+    }
+
+  /** Keys seen more than once (a null key counts as one key, as in a
+    * `GROUP BY`): the definition of [[Store.duplicateKeys]]. */
+  def duplicateKeys: Long = {
+    var dups = 0L
+    var i = 0
+    while (i < byKode.length) {
+      var j = i + 1
+      while (j < byKode.length && byKode(j).kode == byKode(i).kode) j += 1
+      if (j - i > 1) dups += 1
+      i = j
+    }
+    dups
+  }
+
+  /** The first `k` rows in (level, name, code) order whose lowered name
+    * contains `needle`, as (id, name, level) rows. */
+  def search(needle: String, k: Int): Seq[Row] = {
+    val n = UTF8String.fromString(needle)
+    byRank.iterator.filter(e => e.lower != null && e.lower.contains(n)).take(k)
+      .map(e => Row(str(e.kode), str(e.name), e.level)).toSeq
+  }
+}
+
+private[wilayah] object KeyIndex {
+  final case class Entry(kode: UTF8String, name: UTF8String, lower: UTF8String, level: Int)
+
+  /** `ORDER BY … ASC` on strings: byte order, nulls first. */
+  val nullsFirst: Ordering[UTF8String] = (a, b) =>
+    if (a eq b) 0 else if (a == null) -1 else if (b == null) 1 else a.compareTo(b)
+
+  /** One job: the (id, name, level) rows of `keyColumns` with the
+    * lowered name beside them. */
+  def apply(keyColumns: DataFrame): KeyIndex =
+    new KeyIndex(keyColumns.select(col("id"), col("name"), col("level"), lower(col("name")))
+      .collect().map { r =>
+        def utf8(i: Int) = if (r.isNullAt(i)) null else UTF8String.fromString(r.getString(i))
+        Entry(utf8(0), utf8(1), utf8(3), r.getInt(2))
+      })
+
+  private def countByLevel(es: Iterator[Entry]): Map[Int, Long] =
+    es.toSeq.groupMapReduce(_.level)(_ => 1L)(_ + _)
+
+  private def str(u: UTF8String): String = if (u == null) null else u.toString
 }
