@@ -1,4 +1,7 @@
 package graft
+
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -21,10 +24,17 @@ object Bench {
     // scan), so count-based timings flatter projection-heavy queries.
     // NonFatal only: a fatal error (OOM, codegen StackOverflow) means
     // the JVM is dying — letting it propagate kills the run instead of
-    // limping through remaining passes with near-zero garbage timings
-    def run(q: QueryDef): Boolean =
-      try { q.build(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-      catch { case scala.util.control.NonFatal(_) => false }
+    // limping through remaining passes with near-zero garbage timings.
+    // The build and the write each run under a Profile label
+    // ("<label>/build", "<label>/exec"); the timed passes read their
+    // layer split from them (`layersJson`).
+    val profile = graft.obs.Profile.attach(spark)
+    def run(q: QueryDef, label: String): Boolean =
+      try {
+        val df = profile(s"$label/build")(q.build(spark, sfDir))
+        profile(s"$label/exec")(df.write.format("noop").mode("overwrite").save())
+        true
+      } catch { case scala.util.control.NonFatal(_) => false }
 
     // Plan-shape classification (round-16 verdict item 1): a query is
     // SHUFFLE-shaped iff its work crosses a shuffle exchange. The
@@ -42,45 +52,17 @@ object Bench {
     //    (spearmanCorr's six sums, compaction planners) return a
     //    final plan with no Exchange at all — their genuinely
     //    shuffle-shaped work happens in build-time jobs, which the
-    //    listener below sees as submitted DAGs with > 1 stage.
+    //    build's Profile label counts as multi-stage jobs.
     // Classification reads the warmup run's DataFrame (rebuilding
     // just to classify would pay the eager jobs twice); build
     // failures classify as shuffle-shaped, the conservative default.
     val shuffleExchangeRe = java.util.regex.Pattern.compile(
       "Exchange (hashpartitioning|rangepartitioning|SinglePartition|" +
         "RoundRobinPartitioning)")
-    val jobsSeen = new java.util.concurrent.atomic.AtomicLong
-    val shuffleJobsSeen = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobsSeen.incrementAndGet()
-          if (js.stageInfos.size > 1) shuffleJobsSeen.incrementAndGet()
-        }
-      })
-    // Listener delivery is async; every build-time job COMPLETED
-    // before build returned, so its events are already queued — wait
-    // for the counters to hold still for one tick (nothing else
-    // submits jobs between builds), capped so a wedged bus cannot
-    // stall the run. Cost: ~10 ms per scan-shaped query.
-    def shuffleJobsSettled(): Long = {
-      val deadline = System.nanoTime() + 200000000L
-      var prev = (jobsSeen.get(), shuffleJobsSeen.get())
-      var stable = false
-      while (!stable && System.nanoTime() < deadline) {
-        Thread.sleep(10)
-        val cur = (jobsSeen.get(), shuffleJobsSeen.get())
-        stable = cur == prev
-        prev = cur
-      }
-      prev._2
-    }
     def warmupAndClassify(q: QueryDef): Boolean =
       try {
-        val before = shuffleJobsSettled()
-        val df = q.build(spark, sfDir)
-        val builtShuffled = shuffleJobsSettled() > before
+        val df = profile("warmup")(q.build(spark, sfDir))
+        val builtShuffled = profile.take("warmup").multiStageJobs > 0
         val planShuffled =
           try shuffleExchangeRe
             .matcher(df.queryExecution.executedPlan.toString).find()
@@ -129,6 +111,8 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val byName = scala.collection.mutable.LinkedHashMap(
       names.map(q => q.name -> scala.collection.mutable.ArrayBuffer.empty[Double]): _*)
+    def fmt(v: Double): String = BigDecimal(v)
+      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // true median: even-length samples average the two middle elements
     // (upper-middle alone biased even-count medians slightly high)
     def median(xs: Seq[Double]): Double = {
@@ -207,6 +191,36 @@ object Bench {
     probe(timed = false) // codegen/JIT warmup for the probe plans
     probe(timed = true)  // baseline point before the first query
     val shuffleShaped = scala.collection.mutable.Map.empty[String, Boolean]
+    // Per query, the record's `layers` entry: one pass's wall split
+    // into build (q.build, eager jobs included), plan (Catalyst phases
+    // of the write), exec (time with a job of the write running) and
+    // gap (the rest of the write: AQE re-planning, scheduling, result
+    // handling), then that pass's counters over build and write.
+    val layers = scala.collection.mutable.Map.empty[String, String]
+    def layersJson(build: graft.obs.Profile.Stats,
+                   exec: graft.obs.Profile.Stats): String = {
+      val all = build + exec
+      def sec(ms: Double) = fmt(ms / 1e3)
+      def obj(kvs: Seq[(String, Any)]) =
+        kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      obj(Seq(
+        "build_s" -> sec(build.wallMs), "plan_s" -> sec(exec.planMs),
+        "exec_s" -> sec(exec.jobCoveredMs),
+        "gap_s" -> sec(math.max(0.0, exec.driverGapMs - exec.planMs)),
+        "build_jobs" -> build.jobs,
+        "build_multi_stage_jobs" -> build.multiStageJobs,
+        "jobs" -> all.jobs, "multi_stage_jobs" -> all.multiStageJobs,
+        "stages" -> all.stages, "tasks" -> all.tasks,
+        "task_run_s" -> sec(all.runMs.toDouble), "task_cpu_s" -> sec(all.cpuMs),
+        "shuffle_read_bytes" -> all.shuffleReadBytes,
+        "shuffle_write_bytes" -> all.shuffleWriteBytes,
+        "spill_memory_bytes" -> all.memorySpillBytes,
+        "spill_disk_bytes" -> all.diskSpillBytes,
+        "peak_task_memory_bytes" -> all.peakTaskMemoryBytes,
+        "plan_phases_ms" -> obj(exec.phasesMs.toSeq.sorted
+          .map { case (k, v) => k -> math.round(v) }),
+        "actions" -> all.actions.map("\"" + _ + "\"").mkString("[", ",", "]")))
+    }
     names.foreach { q =>
       // untimed warmup (codegen/JIT + this query's caches) doubling as
       // the plan-shape classification pass
@@ -215,7 +229,7 @@ object Bench {
         val t0 = System.nanoTime()
         // a throwing query records near-zero seconds — report it, or a
         // regression-to-error would read as a speedup
-        if (!run(q)) failed += q.name
+        if (!run(q, s"p${byName(q.name).length}")) failed += q.name
         byName(q.name) += (System.nanoTime() - t0) / 1e9
       }
       (1 to passes).foreach(_ => pass())
@@ -229,7 +243,13 @@ object Bench {
         // distort multi-second medians.
         (xs.length until samplesFloor).foreach(_ => pass())
         while (xs.length < 9 && spreadOf(xs) >= 0.5) pass()
+        // the split of the pass nearest the median: one real pass, so
+        // its layers add up to its wall
+        val med = median(xs)
+        val i = xs.indices.minBy(i => math.abs(xs(i) - med))
+        layers(q.name) = layersJson(profile.take(s"p$i/build"), profile.take(s"p$i/exec"))
       }
+      profile.clear()
       spark.catalog.clearCache()
       probe(timed = true) // weather sample between queries
     }
@@ -285,23 +305,17 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "/root/repo/bench_history"))
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
     val detailPath = historyDir.resolve(s"detail_$sfName.json")
-    val prevDetailTxt: Option[String] =
-      try Some(java.nio.file.Files.readString(detailPath))
+    val prevRecord: Option[com.fasterxml.jackson.databind.JsonNode] =
+      try Some(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(detailPath.toFile))
       catch { case scala.util.control.NonFatal(_) => None }
-    // scan is scoped to the text AFTER the "queries": key (the last
-    // object in the detail file) — the round-16 form scraped the whole
-    // file, which also matched the short-key "remeasured" entries
-    // ("q01":[first,retry]); a query named exactly qNN would have
-    // resolved to a remeasured first-median instead of the committed
-    // record (round-16 advice item 2)
-    val prevMedians: Map[String, Double] = prevDetailTxt.map { txt =>
-      val tail = txt.indexOf("\"queries\":") match {
-        case -1 => txt
-        case i  => txt.substring(i)
-      }
-      """"(q[0-9]+[a-z0-9_]*)":\[([0-9.]+),""".r.findAllMatchIn(tail)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }.getOrElse(Map.empty)
+    // the "queries" object only: "remeasured" also maps short keys
+    // ("q01":[first,retry]) to arrays
+    val prevMedians: Map[String, Double] = prevRecord.toSeq
+      .flatMap(_.path("queries").properties().asScala)
+      .map(e => e.getKey -> e.getValue.path(0).asDouble).toMap
+    def prevProbeOf(key: String): Option[Double] =
+      prevRecord.map(_.path(key).asDouble).filter(_ > 0)
     // >= 2x the committed record's median fires a solo retry (one-sided:
     // a faster-than-record median is already the query's best face and
     // needs no defense). The 0.2 s floor keeps scheduling noise out.
@@ -315,10 +329,11 @@ object Bench {
       if (median(first) > 0.2 && (spreadOf(first) >= 0.4 ||
           localPressure(i, q.name) ||
           crossRunDiverged(q.name, median(first)))) {
-        run(q) // fresh warmup (codegen long evicted, caches cleared)
+        run(q, "retry") // fresh warmup (codegen long evicted, caches cleared)
         val retry = (1 to samplesFloor).map { _ =>
-          val t0 = System.nanoTime(); run(q); (System.nanoTime() - t0) / 1e9
+          val t0 = System.nanoTime(); run(q, "retry"); (System.nanoTime() - t0) / 1e9
         }
+        profile.clear()
         spark.catalog.clearCache()
         remeasured(q.name) = (median(first), median(retry))
       }
@@ -358,8 +373,6 @@ object Bench {
     // timings; the full names and per-query spreads stay available on
     // a human-readable detail line printed BEFORE it (earlier stdout
     // only has to exist, not fit in the tail window).
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def short(name: String): String = name.takeWhile(_ != '_')
     val qs = results.map { case (k, v, _, _, _) => "\"" + short(k) + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -417,10 +430,7 @@ object Bench {
     // detail file is that anchor: probe_vs_prev_pct > ~25 means
     // "slower weather than the committed baseline", and per-query
     // comparisons against history should be scaled accordingly.
-    val prevProbe: Option[Double] = prevDetailTxt.flatMap { txt =>
-      """"probe_median_sec":([0-9.]+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).filter(_ > 0)
-    }
+    val prevProbe = prevProbeOf("probe_median_sec")
     val probeVsPrevPct: Option[Long] = prevProbe
       .filter(_ => probeMed > 0)
       .map(p => math.round((probeMed / p - 1) * 100))
@@ -430,10 +440,7 @@ object Bench {
     // committed record while the scan probe moved 3% — with this
     // anchor that run self-annotates as contended instead of reading
     // as 8 simultaneous engine regressions
-    val prevShufProbe: Option[Double] = prevDetailTxt.flatMap { txt =>
-      """"shuffle_probe_median_sec":([0-9.]+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).filter(_ > 0)
-    }
+    val prevShufProbe = prevProbeOf("shuffle_probe_median_sec")
     val shufVsPrevPct: Option[Long] = prevShufProbe
       .filter(_ => shufMed > 0)
       .map(p => math.round((shufMed / p - 1) * 100))
@@ -498,7 +505,9 @@ object Bench {
           s""""contended":$contended,"probe_times":$probeJson,""" +
           s""""shuffle_probe_times":$shufJson,""" +
           s""""remeasured":$remeasuredJson,""" +
-          s""""failed":$failedJson,"queries":$detailJson}""" + "\n"
+          s""""failed":$failedJson,"queries":$detailJson,""" +
+          s""""layers":${layers.toSeq.sorted.map { case (k, v) =>
+            "\"" + k + "\":" + v }.mkString("{", ",", "}")}}""" + "\n"
       recordPaths.foreach { p =>
         java.nio.file.Files.writeString(p, recordJson)
         System.err.println(s"[bench] record written: $p" +

@@ -122,16 +122,6 @@ object Dedup {
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** Order/multiplicity-robust dedup: canonical token-set fingerprint
-    * as the group key.
-    */
-  def byFingerprint(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val fp = Pipeline.canonicalFingerprint(Pipeline.words(col(textCol)))
-    val w = Window.partitionBy(fp).orderBy(col(idCol))
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-  }
-
   /** SimHash-backed near-dup removal: 32-bit signatures, pigeonhole-
     * blocked pair join at hamming distance <= maxDist, higher id of
     * each pair drops. Cheaper than MinHash when token multisets (not

@@ -37,7 +37,6 @@ object Pipeline {
   val NoSpaceScriptRanges: String =
     "぀-ヿ㐀-䶿一-鿿豈-﫿" +
       "฀-๿຀-໿က-႟ក-៿"
-  val NoSpaceScriptClass: String = s"[$NoSpaceScriptRanges]"
   val NotNoSpaceScriptClass: String = s"[^$NoSpaceScriptRanges]"
 
   /** Character-bigram word surrogate for no-space scripts: spaces

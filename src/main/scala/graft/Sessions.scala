@@ -58,8 +58,9 @@ object Sessions {
     * skew-split / strategy rewrites act on ShuffleQueryStage inputs),
     * and the loop's remaining exchanges are fixed-shape nodes-sized
     * aggregates. AQE still cuts the loop's one lazy plan into 15–30+
-    * query stages (q125 executes as 32 jobs under AQE — JobProfile,
-    * OPTIMIZATION_r19.md) and re-optimizes the deep nested plan at
+    * query stages (q125 executes as 32 jobs under AQE —
+    * OPTIMIZATION_r19.md; the `jobs` of a solo `graft.Bench` record's
+    * `layers` entry, run with `SPARK_GRAFT_LOOP_AQE=on`) and re-optimizes the deep nested plan at
     * every stage boundary: driver time proportional to PLAN size ×
     * stage count, independent of data size, so the replan tax does not
     * amortize at larger SFs. Sandwich A/B at sf0.1 (5-pass solo,

@@ -32,4 +32,13 @@ object GraftShims {
     */
   def waitListenerBusEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The action name and QueryExecution of a finished action, as a
+    * `QueryExecutionListener` receives them (both fields are
+    * private[sql]), but for an action of any session on the context.
+    * Executions without a name (nested ones) are not actions.
+    */
+  def finishedAction(e: execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[(String, execution.QueryExecution)] =
+    e.executionName.filter(_ => e.qe != null).map(_ -> e.qe)
 }

@@ -129,35 +129,25 @@ class ApiKeyIndexSpec extends AnyFunSuite {
     val (dir, wh) = corpus()
     val api = new Api(spark, wh, dir.toString)
     api.sync("11")
-    val sc = spark.sparkContext
-    def inGroup[A](group: String)(body: => A): A = {
-      sc.setJobGroup(group, "api key index")
-      try body finally sc.clearJobGroup()
-    }
-    /** Jobs `body` starts. Job-start events reach the status tracker
-      * asynchronously but in order, so once a later sentinel job shows
-      * there, every job of `body` does too. */
-    def jobsOf(body: => Unit): Int = {
-      val group = s"api-keys-${System.nanoTime()}"
-      inGroup(group)(body)
-      inGroup(s"$group-sentinel")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (sc.statusTracker.getJobIdsForGroup(s"$group-sentinel").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sc.statusTracker.getJobIdsForGroup(s"$group-sentinel").nonEmpty)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
-    // the first key read of a snapshot builds the index in one job
-    assert(jobsOf(api.status("11")) == 1)
-    assert(jobsOf {
-      api.search("desa").collect()
-      api.search("de").collect()
-      api.search("qxzzz").collect()
-      api.status("11.73")
-      api.status("99")
-      api.stats()
-    } == 0)
-    assert(jobsOf(api.search("kembar").collect()) == 0)
+    val profile = graft.obs.Profile.attach(spark)
+    try {
+      /** Jobs `body` starts. */
+      def jobsOf(body: => Unit): Int = {
+        profile("keys")(body)
+        profile.take("keys").jobs
+      }
+      // the first key read of a snapshot builds the index in one job
+      assert(jobsOf(api.status("11")) == 1)
+      assert(jobsOf {
+        api.search("desa").collect()
+        api.search("de").collect()
+        api.search("qxzzz").collect()
+        api.status("11.73")
+        api.status("99")
+        api.stats()
+      } == 0)
+      assert(jobsOf(api.search("kembar").collect()) == 0)
+    } finally profile.close()
   }
 
   test("geojson slots are byte-identical to re-parsing the stored geometry") {

@@ -417,28 +417,18 @@ class PipelineSpec extends AnyFunSuite {
 
   test("clean() computes its whole report in ONE action (observe metrics)") {
     val docs = Tables.documents(spark, sf)
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { actions.incrementAndGet(); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    val profile = graft.obs.Profile.attach(spark)
     try {
-      val result = CorpusPipeline.clean(docs)
-      assert(result.report.input == docs.count()) // sanity (extra action, after clean)
-      result.release()
-      // the listener bus is async: drain it deterministically before
-      // asserting equality (polling + fixed sleeps was flaky on slow
-      // machines — ADVICE r6)
-      org.apache.spark.sql.GraftShims.waitListenerBusEmpty(spark)
-      assert(actions.get == 2,
+      profile("clean") {
+        val result = CorpusPipeline.clean(docs)
+        assert(result.report.input == docs.count()) // sanity (extra action, after clean)
+        result.release()
+      }
+      val actions = profile.take("clean").actions
+      assert(actions.size == 2,
         s"clean() + one sanity count should be TWO actions total " +
-          s"(stage counts ride observe metrics), saw ${actions.get}")
-    } finally spark.listenerManager.unregister(listener)
+          s"(stage counts ride observe metrics), saw $actions")
+    } finally profile.close()
   }
 
   // ===== measured recall (the one property of the LSH/ANN blocking
@@ -1090,37 +1080,23 @@ class PipelineSpec extends AnyFunSuite {
 
   test("components loop: convergence rides the checkpoint action, no per-iteration count()") {
     import spark.implicits._
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val countActions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = {
-        actions.incrementAndGet()
-        if (funcName == "count") countActions.incrementAndGet()
-        ()
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    val profile = graft.obs.Profile.attach(spark)
     try {
       // chain 1-2-3-4-5 (diameter 4): min-label propagation moves one
       // hop per iteration -> exactly 5 iterations (4 propagating + the
       // zero-change fixpoint check)
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a_id", "b_id")
       val ids = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
-      val labels = Dedup.clusters(pairs, ids, "doc_id")
-      org.apache.spark.sql.GraftShims.waitListenerBusEmpty(spark)
-      assert(countActions.get == 0,
+      val labels = profile("components")(Dedup.clusters(pairs, ids, "doc_id"))
+      val actions = profile.take("components").actions
+      assert(actions.count(_ == "count") == 0,
         "the convergence count must ride the checkpoint's observe metric, " +
-          s"not a separate count() action (saw ${countActions.get})")
-      assert(actions.get == 7,
-        s"2 setup checkpoints + 5 iteration checkpoints = 7 actions, saw ${actions.get}")
+          s"not a separate count() action (saw $actions)")
+      assert(actions.size == 7,
+        s"2 setup checkpoints + 5 iteration checkpoints = 7 actions, saw $actions")
       val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == (1L to 5L).map(_ -> 1L).toMap)
-    } finally spark.listenerManager.unregister(listener)
+    } finally profile.close()
   }
 
   test("ngramNovelty scores covered, novel, and half-covered docs exactly") {

@@ -14,6 +14,12 @@ scan+agg plan, so uniform machine-weather differences between the two
 runs are divided out before the per-query ratio is judged (the raw
 ratio is still printed).
 
+Layer attribution: when both records carry a per-query `layers` block
+(build / plan / exec / gap seconds of one pass, written by graft.Bench),
+each flagged query also gets the layer whose seconds moved most, so a
+speed claim names the layer that moved. Records without `layers` diff
+exactly as before.
+
 Usage:
   tools/bench_diff.py [detail_file] [--ref HEAD] [--thresh 1.5]
                       [--spread-max 50] [--min-sec 0.2] [--strict]
@@ -25,6 +31,9 @@ import argparse
 import json
 import subprocess
 import sys
+
+LAYERS = (("build", "build_s"), ("plan", "plan_s"),
+          ("execute", "exec_s"), ("gap", "gap_s"))
 
 
 def load_prev(ref: str, path: str):
@@ -131,6 +140,19 @@ def main() -> int:
               + ", ".join(f"{n} ({raw:.2f}x)"
                           for n, _, _, raw, _, _ in
                           sorted(improve, key=lambda r: r[4])[:10]))
+    cur_l, prev_l = cur.get("layers"), prev.get("layers")
+    flagged = [r[0] for r in sorted(regress, key=lambda r: -r[4])] + \
+        [r[0] for r in sorted(improve, key=lambda r: r[4])]
+    moved = [n for n in flagged if n in (cur_l or {}) and n in (prev_l or {})]
+    if moved:
+        print("[bench-diff] layer that moved most per flagged query "
+              "(cur - prev, s):")
+        for name in moved:
+            deltas = [(label, float(cur_l[name].get(k, 0)) -
+                       float(prev_l[name].get(k, 0))) for label, k in LAYERS]
+            label, d = max(deltas, key=lambda x: abs(x[1]))
+            print(f"  {name:36} {label:7} {d:+8.3f}  (" + " ".join(
+                f"{lb} {dv:+.3f}" for lb, dv in deltas) + ")")
     return 1 if (args.strict and regress) else 0
 
 
