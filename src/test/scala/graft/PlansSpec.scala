@@ -93,7 +93,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("prefix filter on the warehouse triggers level partition pruning") {
     val wh = java.nio.file.Files.createTempDirectory("graft-prune").toString + "/warehouse"
-    val api = new wilayah.Api(spark, wh, "/root/reference/geojson")
+    val api = new wilayah.Api(spark, wh, GeoJsonFixture.dir)
     api.sync("11.73")
 
     val q = api.warehouse.filter(col("kode_wilayah_kemendagri").startsWith("11.73.01"))
@@ -487,7 +487,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("pruning rule is OR-safe: optional-prefix pattern is untouched") {
     val wh = java.nio.file.Files.createTempDirectory("graft-prune2").toString + "/warehouse"
-    val api = new wilayah.Api(spark, wh, "/root/reference/geojson")
+    val api = new wilayah.Api(spark, wh, GeoJsonFixture.dir)
     api.sync("11.73")
     val none: Option[String] = None
     // null-tolerant optional prefix (P6): must match ALL rows

@@ -498,7 +498,7 @@ class StreamsSpec extends AnyFunSuite {
     val watch = Files.createTempDirectory("graft-ckpt-in")
     val wh = Files.createTempDirectory("graft-ckpt-wh").toString + "/warehouse"
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val src = "/root/reference/geojson"
+    val src = GeoJsonFixture.dir
 
     val q1 = Streams.ingestStream(spark, watch.toString, wh, checkpointDir = Some(ckpt))
     try {
@@ -593,7 +593,7 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming GeoJSON ingest merges files into the warehouse incrementally") {
     val watch = Files.createTempDirectory("graft-stream-in")
     val wh = Files.createTempDirectory("graft-stream-wh").toString + "/warehouse"
-    val src = "/root/reference/geojson"
+    val src = GeoJsonFixture.dir
 
     val q = Streams.ingestStream(spark, watch.toString, wh)
     try {

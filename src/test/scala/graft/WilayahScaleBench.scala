@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.wilayah.{Ingest, Store}
 
 /** Wilayah merge at geometry volume (VERDICT r8 item 8): the geo
-  * kernel + partition-scoped merge are spec'd on the 37-file reference
-  * corpus (~7k features); this harness replicates the NORMALIZED rows
+  * kernel + partition-scoped merge are spec'd on the GeoJSON corpus of
+  * [[GeoJsonFixture]] (PLANS.md round 9 used the 37-file reference
+  * corpus, ~7k features; the generated fallback has 6 files and 93
+  * features, so set `GRAFT_GEOJSON_DIR` to reproduce those figures);
+  * this harness replicates the NORMALIZED rows
   * N x (default 50 — the JTS simplify kernel runs once, replication
   * decorrelates keys with an `rNN|` prefix), builds a 1x and an Nx
   * warehouse, and times the same single-level incoming batch against
@@ -22,17 +25,18 @@ object WilayahScaleBench {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.build("32", "wilayah-scale")
     val reps = args.headOption.map(_.toInt).getOrElse(50)
-    val root = "/root/repo/target/wilayah-scale"
+    val root = "target/wilayah-scale"
     deleteRec(new java.io.File(root))
 
-    // normalize the full reference corpus ONCE (discover("") matches
+    // normalize the whole corpus ONCE (discover("") matches
     // every file), then replicate rows — key-prefixed per replica
-    val base = Ingest.warehouseRows(Ingest.readFeatures(spark,
-        Ingest.discover("/root/reference/geojson", "")))
+    val files = Ingest.discover(GeoJsonFixture.dir, "")
+    println(s"corpus: ${GeoJsonFixture.dir} (${files.size} files)")
+    val base = Ingest.warehouseRows(Ingest.readFeatures(spark, files))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val t0 = System.nanoTime()
     val baseRows = base.count()
-    println(f"normalize (JTS kernel, full corpus): $baseRows rows, " +
+    println(f"normalize (JTS kernel, ${files.size} files): $baseRows rows, " +
       f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     base.groupBy("level").count().orderBy("level").collect()
       .foreach(r => println(s"  level ${r.get(0)}: ${r.getLong(1)} rows"))

@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.wilayah.{Api, Geo, Ingest, Store}
 
-/** End-to-end spec for the wilayah engine against the reference's own
-  * GeoJSON corpus (read-only at /root/reference/geojson). The 11.73
-  * slice (Kota Lhokseumawe: 1 kabupaten + 4 kecamatan + 68 kelurahan
-  * features) exercises the full SURVEY §2 inventory.
+/** End-to-end spec for the wilayah engine on the GeoJSON corpus of
+  * [[GeoJsonFixture]]: the directory `GRAFT_GEOJSON_DIR` names, else
+  * the reference's own corpus where it exists, else one generated from
+  * the FIXTURES.md §1/§3 structure. The 11.73 slice (Kota Lhokseumawe:
+  * 1 kabupaten + 4 kecamatan + 68 kelurahan features) exercises the
+  * full SURVEY §2 inventory.
   */
 class WilayahSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val geojsonDir = "/root/reference/geojson"
+  private lazy val geojsonDir = GeoJsonFixture.dir
 
   private def freshApi(): Api = {
     val wh = Files.createTempDirectory("graft-wh").toString + "/warehouse"
