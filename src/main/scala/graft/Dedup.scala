@@ -156,23 +156,15 @@ object Dedup {
     * identifying its duplicate group (its own id when unpaired).
     *
     * The iterative shape is the scale-standard one: per iteration, one
-    * join + one min-aggregate, with `localCheckpoint` truncating plan
-    * lineage so the loop doesn't build an ever-deeper DAG. Iterations
-    * are bounded by the cluster diameter (near-dup clusters are
-    * shallow; runaway growth would indicate a degenerate threshold).
+    * join + one min-aggregate, run as [[Iterate.untilStable]] rounds
+    * until no label changes (the changed-label count is observed on
+    * the round's checkpoint). Iterations are bounded by the cluster
+    * diameter (near-dup clusters are shallow; runaway growth would
+    * indicate a degenerate threshold).
     *
-    * ONE Spark job per iteration: the convergence count rides an
-    * `observe` metric collected during the SAME action that
-    * materializes the checkpoint — a separate `count()` per iteration
-    * would double the job count of the loop (the visible cost of the
-    * two slowest bench queries, q84/q104).
-    *
-    * FAULT TOLERANCE at cluster scale: the default `localCheckpoint`
-    * stores blocks on executors only — fast (no DFS round-trip) but a
-    * single lost executor aborts a long components run because the
-    * truncated lineage cannot be recomputed. Pass
+    * FAULT TOLERANCE at cluster scale: pass
     * `reliableCheckpointDir = Some(path)` (an HDFS/S3/DFS path on a
-    * real cluster) to switch every per-iteration materialization to a
+    * real cluster) to make every materialization of the loop a
     * RELIABLE `checkpoint()`: blocks live in the DFS, executor loss is
     * survivable, at the cost of one DFS write per iteration. Default
     * stays local for single-node/bench parity. Checkpoint files
@@ -187,38 +179,23 @@ object Dedup {
                // iterations x per-iteration shuffle through it)
                onConverged: Int => Unit = _ => (),
                reliableCheckpointDir: Option[String] = None): DataFrame = {
-    reliableCheckpointDir.foreach(dir =>
-      pairs.sparkSession.sparkContext.setCheckpointDir(dir))
-    // both variants are EAGER: the observe metric below is collected
-    // by the same job that materializes the checkpoint
-    val ckpt: DataFrame => DataFrame =
-      if (reliableCheckpointDir.isDefined) _.checkpoint() else _.localCheckpoint()
-    val edges = ckpt(pairs.select(col("a_id"), col("b_id"))
-      .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id"))))
-    var labels = ckpt(allIds.select(col(idCol).as("id"), col(idCol).as("cluster")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val neighborMin = edges.join(labels, col("b_id") === col("id"))
+    // a round's frame keeps the label it replaced (_was), so the
+    // changed count is observed on its checkpoint
+    Iterate.untilStable("clusters (label propagation)",
+        allIds.select(col(idCol).as("id"), col(idCol).as("cluster"), col(idCol).as("_was")),
+        maxIters, (n, converged) => if (converged) onConverged(n),
+        Seq(count(when(col("cluster") < col("_was"), true)).as("changed")),
+        inputs = Seq(pairs.select(col("a_id"), col("b_id"))
+          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))),
+        reliableCheckpointDir = reliableCheckpointDir) { (labels, _, inputs) =>
+      val neighborMin = inputs.head.join(labels, col("b_id") === col("id"))
         .groupBy(col("a_id")).agg(min("cluster").as("ncluster"))
-      val obs = org.apache.spark.sql.Observation()
-      val updated = ckpt(labels.join(neighborMin, col("id") === col("a_id"), "left")
-        .select(col("id"), col("cluster"),
-          least(col("cluster"), coalesce(col("ncluster"), col("cluster"))).as("next"))
-        .observe(obs, count(when(col("next") < col("cluster"), true)).as("changed")))
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = updated.select(col("id"), col("next").as("cluster"))
-      iter += 1
-    }
-    // unconverged labels look exactly like converged ones — failing
-    // loudly beats silently splitting a duplicate group (a diameter
-    // beyond the default indicates a degenerate threshold; raise
-    // maxIters deliberately if the chain is genuinely that deep)
-    if (changed > 0) throw new IllegalStateException(
-      s"label propagation did not converge in $maxIters iterations " +
-        s"($changed labels still changing) — raise maxIters or tighten the pair threshold")
-    onConverged(iter)
-    labels.withColumnRenamed("id", idCol)
+      labels.join(neighborMin, col("id") === col("a_id"), "left")
+        .select(col("id"),
+          least(col("cluster"), coalesce(col("ncluster"), col("cluster"))).as("cluster"),
+          col("cluster").as("_was"))
+    }((_, now) => now("changed") == 0L)
+      .select(col("id").as(idCol), col("cluster"))
   }
 
   /** LEAKAGE-SAFE train/val/test split: hash-split on the near-dup

@@ -411,54 +411,16 @@ object Graph {
         .unionAll(joined.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v")).distinct()
     }
-    // Fixpoint signature via observe() metrics RIDING THE CHECKPOINT
-    // JOB (round-19, guide §2.6 job-count discipline): the per-round
-    // sig() used to be a SECOND job scanning the just-checkpointed
-    // blocks; CollectMetrics accumulators now compute the same
-    // (count, xxhash64 sum) during the eager localCheckpoint
-    // materialization itself — one job per round instead of two
-    // (~13 rounds on the q252 graph). localCheckpoint goes through
-    // Dataset.withAction, so the Observation's listener fires when
-    // the checkpoint job completes and `get` never blocks.
-    def observedCheckpoint(df: DataFrame)
-        : (DataFrame, (Long, java.math.BigDecimal)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = df.observe(obs,
-          count(lit(1)).cast(LongType).as("_n"),
-          coalesce(sum(xxhash64(col("u"), col("v"))
-            .cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-            lit(java.math.BigDecimal.ZERO)).as("_h"))
-        .localCheckpoint()
-      val m = obs.get
-      (cp, (m("_n").asInstanceOf[Long],
-        m("_h").asInstanceOf[java.math.BigDecimal]))
-    }
-    // localCheckpoint per round (the Dedup.clusters discipline): the
-    // loop's lineage otherwise DEEPENS by two grouped joins per round
-    // and Catalyst re-analyzes the whole tree every iteration — the
-    // q171 plan-explosion failure mode. The checkpoint is eager, so
-    // downstream rounds read materialized blocks, not a replay.
-    var (cur, curSig) = observedCheckpoint(canonical(
-      edges.select(col(edges.columns(0)).as("u"),
-        col(edges.columns(1)).as("v"))))
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
-      val (next, nextSig) = observedCheckpoint(smallStar(largeStar(cur)))
-      converged = nextSig == curSig
-      cur = next
-      curSig = nextSig
-      it += 1
-    }
-    onConverged(it, converged)
-    // a non-star-forest edge list would make the parent join below
-    // emit MULTIPLE (node, component) rows with non-minimal labels —
-    // silently wrong output. Fail loudly instead: convergence is a
-    // fixed point, so one more identical round is free when it was
-    // reached, and maxIters=20 covers graphs of diameter 2^20.
-    require(converged,
-      s"starComponents did not converge within $maxIters rounds " +
-        "(edge-list fixed point not reached); raise maxIters")
+    // a truncated run's non-star-forest edge list would make the parent
+    // join below emit several non-minimal labels per node: fail loudly
+    val cur = graft.Iterate.untilStable("starComponents",
+      canonical(edges.select(col(edges.columns(0)).as("u"),
+        col(edges.columns(1)).as("v"))),
+      maxIters, onConverged,
+      Seq(count(lit(1)).cast(LongType).as("_n"),
+        coalesce(sum(xxhash64(col("u"), col("v")).cast(DecimalType(38, 0))),
+          lit(java.math.BigDecimal.ZERO)).as("_h")))(
+      (cur, _, _) => smallStar(largeStar(cur)))(_ == _)
     // the converged edge list is a materialized checkpoint: the result
     // reads it twice (node set + parent join) without replay
     val nodes = cur.select(col("u").as("node"))
@@ -546,12 +508,11 @@ object Graph {
     *
     * Scale shape per round: one node-keyed count over the live edge
     * list + two semi-joins back onto it (both on node keys — the
-    * co-partitioned loop discipline of [[pageRank]]), with a
-    * `localCheckpoint` per round so lineage stays flat (the q171
-    * lesson; the peeling loop is convergence-driven like
-    * [[starComponents]], not fixed-count). Convergence = the live
-    * edge count stops shrinking — peeling is monotone, so an equal
-    * count IS the fixed point. Like starComponents, a truncated peel
+    * co-partitioned loop discipline of [[pageRank]]), one
+    * [[graft.Iterate.untilStable]] round per peel (convergence-driven
+    * like [[starComponents]], not fixed-count). Convergence = the live
+    * edge count stops shrinking or reaches 0 — peeling is monotone, so
+    * an equal count IS the fixed point. Like starComponents, a truncated peel
     * would be silently wrong (nodes kept whose support already
     * left), so non-convergence within `maxIters` fails loudly.
     *
@@ -568,30 +529,17 @@ object Graph {
       .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
         greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    var cur = und.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(und.select(col("b").as("x"), col("a").as("y")))
-      .localCheckpoint()
-    var curCnt = cur.count()
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
+    val cur = graft.Iterate.untilStable(s"kCore(k=$k)",
+      und.select(col("a").as("x"), col("b").as("y"))
+        .unionAll(und.select(col("b").as("x"), col("a").as("y"))),
+      maxIters, onConverged, Seq(count(lit(1)).as("_n"))) { (cur, _, _) =>
       val alive = cur.groupBy("x").agg(count(lit(1)).as("_d"))
         .filter(col("_d") >= k).select(col("x").as("node"))
-      val next = cur
+      cur
         .join(alive.select(col("node").as("x")), Seq("x"), "left_semi")
         .join(alive.select(col("node").as("y")), Seq("y"), "left_semi")
-        .select("x", "y").localCheckpoint()
-      val nextCnt = next.count()
-      converged = nextCnt == curCnt
-      cur = next
-      curCnt = nextCnt
-      it += 1
-      if (curCnt == 0L) converged = true // empty core: fixed point
-    }
-    onConverged(it, converged)
-    require(converged,
-      s"kCore(k=$k) did not converge within $maxIters peeling rounds; " +
-        "raise maxIters (cascade-shaped graphs peel O(n) rounds)")
+        .select("x", "y")
+    }((prev, now) => prev == now || now("_n") == 0L)
     cur.groupBy(col("x").as("node"))
       .agg(count(lit(1)).cast(LongType).as("core_degree"))
   }
@@ -961,25 +909,17 @@ object Graph {
     val starts = adj.select(col("_cur").as("walk_id")).distinct()
       .withColumn("step", lit(0L))
       .withColumn("node", col("walk_id"))
-    var frontier = starts
-    val hops = Seq.newBuilder[DataFrame]
-    hops += starts
-    for (t <- 1 to steps) {
-      val cand = frontier.select(col("walk_id"), col("node").as("_cur"))
+    // checkpointed hops: each feeds the next join AND the final union
+    graft.Iterate.times(steps, starts) { (frontier, t) =>
+      frontier.select(col("walk_id"), col("node").as("_cur"))
         .join(adj, Seq("_cur"))
         .withColumn("_h", graft.Pipeline.wordHash32(
           concat_ws("_", col("walk_id"), lit(t), col("_nbr"))))
-      // localCheckpoint: each hop feeds BOTH the next join and the
-      // final union — without it the union re-derives hop t (steps-t)
-      // times (the q171 doubled-lineage lesson)
-      frontier = cand.groupBy("walk_id")
+        .groupBy("walk_id")
         .agg(min(struct(col("_h"), col("_nbr"))).as("_pick"))
         .select(col("walk_id"), lit(t.toLong).as("step"),
           col("_pick._nbr").as("node"))
-        .localCheckpoint()
-      hops += frontier
-    }
-    hops.result().reduce(_ unionAll _)
+    }.reduce(_ unionAll _)
   }
 
   /** Luby's maximal independent set with DETERMINISTIC md5 draws —
@@ -993,11 +933,13 @@ object Graph {
     * the md5 draws make the run bit-replayable across engines, runs,
     * and retries.
     *
-    * Shape at scale per round: one node-keyed equi-join (draws onto
-    * the live symmetric edge list) + a partial-combinable min
-    * aggregate + two semi/anti-joins — the co-partitioned loop
-    * discipline of [[pageRank]], with a `localCheckpoint` per round
-    * (the q171 lineage lesson). A truncated run would emit an
+    * Shape at scale per round: the live symmetric edge list (the
+    * checkpointed full list semi-joined twice onto the live nodes),
+    * one node-keyed equi-join of the draws onto it + a
+    * partial-combinable min aggregate, and one node-keyed join that
+    * settles every node's fate — the co-partitioned loop discipline of
+    * [[pageRank]], one [[graft.Iterate.untilStable]] round per Luby
+    * round, whose state is the node table. A truncated run would emit an
     * INDEPENDENT set that is not MAXIMAL (silently wrong for the
     * diversity use), so non-convergence within `maxIters` fails
     * loudly — the [[starComponents]] discipline.
@@ -1024,49 +966,34 @@ object Graph {
       graft.Pipeline.wordHash32(concat_ws("_", lit("mis"), node,
         lit(round))).cast("decimal(38,0)") * lit(1099511627776L) + ok
     }
-    var live = und.select(col("a").as("node"))
-      .unionAll(und.select(col("b").as("node"))).distinct()
-      .localCheckpoint()
-    var liveEdges = und.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(und.select(col("b").as("x"), col("a").as("y")))
-      .localCheckpoint()
-    val mis = Seq.newBuilder[DataFrame]
-    var it = 0
-    var done = live.isEmpty
-    while (it < maxIters && !done) {
-      it += 1
-      val draws = live.withColumn("_k", keyOf(col("node"), it))
-      val nbrMin = liveEdges
-        .join(draws.select(col("node").as("y"), col("_k").as("_nk")), "y")
-        .groupBy(col("x").as("node")).agg(min("_nk").as("_mn"))
-      val winners = draws.join(nbrMin, Seq("node"), "left")
-        .filter(col("_mn").isNull || col("_k") < col("_mn"))
-        .select(col("node"), lit(it.toLong).as("round"))
-        .localCheckpoint()
-      mis += winners
-      val removed = winners.select("node")
-        .unionAll(liveEdges
-          .join(winners.select(col("node").as("x")), Seq("x"), "left_semi")
-          .select(col("y").as("node")))
-        .distinct()
-      live = live.join(removed, Seq("node"), "left_anti").localCheckpoint()
-      liveEdges = liveEdges
-        .join(live.select(col("node").as("x")), Seq("x"), "left_semi")
-        .join(live.select(col("node").as("y")), Seq("y"), "left_semi")
-        .localCheckpoint()
-      done = live.isEmpty
-    }
-    onConverged(it, done)
-    require(done,
-      s"maximalIndependentSet did not drain within $maxIters rounds " +
-        "(the set would be independent but not maximal); raise maxIters")
-    val rounds = mis.result()
-    // an edgeless input (empty edge list or all self-loops) has no
-    // live nodes, so the loop never ran: the MIS of the empty graph is
-    // empty, not an empty.reduce crash
-    if (rounds.isEmpty)
-      live.select(col("node"), lit(0L).as("round"))
-    else rounds.reduce(_ unionAll _)
+    // state: one row per node still in play, `round` null while live
+    // and the admitting round once a member; removed nodes drop out
+    val init = und.select(col("a").as("x")).unionAll(und.select(col("b").as("x")))
+      .distinct().select(col("x"), lit(null).cast(LongType).as("round"))
+    graft.Iterate.untilStable("maximalIndependentSet", init, maxIters, onConverged,
+        Seq(count(when(col("round").isNull, 1)).as("_live")),
+        inputs = Seq(und.select(col("a").as("x"), col("b").as("y"))
+          .unionAll(und.select(col("b").as("x"), col("a").as("y"))))) { (state, r, inputs) =>
+      val live = state.filter(col("round").isNull).select("x")
+      val edges = inputs.head
+        .join(live, Seq("x"), "left_semi")
+        .join(live.select(col("x").as("y")), Seq("y"), "left_semi")
+      val draws = live.select(col("x"), keyOf(col("x"), r).as("_k"))
+      val nbrMin = edges
+        .join(draws.select(col("x").as("y"), col("_k").as("_nk")), "y")
+        .groupBy("x").agg(min("_nk").as("_mn"))
+      val winners = draws.join(nbrMin, Seq("x"), "left")
+        .filter(col("_mn").isNull || col("_k") < col("_mn")).select("x")
+      // winners join the set; their neighbours (never winners: the keys
+      // are a total order) leave the graph
+      val fate = winners.select(col("x"), lit(true).as("_won"))
+        .unionAll(edges.join(winners.select(col("x").as("y")), "y")
+          .select(col("x"), lit(false).as("_won")).distinct())
+      state.join(fate, Seq("x"), "left")
+        .filter(col("_won").isNull || col("_won"))
+        .select(col("x"), when(col("_won"), lit(r.toLong)).otherwise(col("round")).as("round"))
+    }((_, now) => now("_live") == 0L)
+      .filter(col("round").isNotNull).select(col("x").as("node"), col("round"))
   }
 
   /** Small-range (linear-counting) correction table for [[hyperBall]]
@@ -1137,29 +1064,23 @@ object Graph {
     val lc = lcTable(p)
     // pack the single initial register (bucket, rho) into its slot;
     // rho >= 1 by hllCells' construction, so 0 marks an absent bucket
-    var regs = Sketches.hllCells(nodes, Seq(col("node")), "node", p)
+    val regs0 = Sketches.hllCells(nodes, Seq(col("node")), "node", p)
       .select(col("node"), expr(
         s"transform(sequence(0, ${m - 1}), i -> " +
           "IF(i = CAST(bucket AS INT), CAST(_rho AS INT), 0))").as("_rs"))
       .localCheckpoint()
-    def nf(t: Int, rg: DataFrame): DataFrame =
-      rg.select(col("node"), lit(t.toLong).as("radius"),
-        graft.plans.HllRegisterExpressions.hllRegisterEst(col("_rs"), p, lc)
-          .as("est"))
-    val profile = Seq.newBuilder[DataFrame]
-    profile += nf(0, regs)
-    for (t <- 1 to radius) {
-      val nbr = sym
-        .join(regs.select(col("node").as("y"), col("_rs")), "y")
-        .select(col("x").as("node"), col("_rs"))
-      regs = regs.unionAll(nbr)
+    graft.Iterate.times(radius, regs0) { (regs, _) =>
+      regs.unionAll(sym
+          .join(regs.select(col("node").as("y"), col("_rs")), "y")
+          .select(col("x").as("node"), col("_rs")))
         .groupBy("node")
         .agg(graft.plans.HllRegisterExpressions.registerMax(col("_rs"), m)
           .as("_rs"))
-        .localCheckpoint()
-      profile += nf(t, regs)
-    }
-    profile.result().reduce(_ unionAll _)
+    }.zipWithIndex.map { case (regs, t) =>
+      regs.select(col("node"), lit(t.toLong).as("radius"),
+        graft.plans.HllRegisterExpressions.hllRegisterEst(col("_rs"), p, lc)
+          .as("est"))
+    }.reduce(_ unionAll _)
   }
 
   /** HyperBall (Boldi–Vigna 2013): the neighborhood function

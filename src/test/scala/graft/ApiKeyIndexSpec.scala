@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GeoJsonFixture.{feature, square, writeCollection}
 import graft.wilayah.{Api, Model, Store}
 
 /** The Api's key index: `search`, `status` and `stats` answer from the
@@ -15,17 +16,6 @@ import graft.wilayah.{Api, Model, Store}
   */
 class ApiKeyIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-
-  private val square =
-    """{"type":"MultiPolygon","coordinates":[[[[97.0,5.0],[97.1,5.0],[97.1,5.1],[97.0,5.1],[97.0,5.0]]]]}"""
-
-  private def feature(props: Seq[(String, String)], geometry: String = square): String =
-    props.map { case (k, v) => s""""$k":"$v"""" }
-      .mkString("""{"type":"Feature","properties":{""", ",", s"""},"geometry":$geometry}""")
-
-  private def writeFile(dir: Path, name: String, features: Seq[String]): Unit =
-    Files.writeString(dir.resolve(name),
-      features.mkString("""{"type":"FeatureCollection","features":[""", ",\n", "]}"))
 
   private val p73 = Seq("kd_propinsi" -> "11", "kd_dati2" -> "73")
 
@@ -42,13 +32,13 @@ class ApiKeyIndexSpec extends AnyFunSuite {
     * search matches, so its top 10 cuts through the tie. */
   private def corpus(): (Path, String) = {
     val dir = Files.createTempDirectory("graft-keys-geojson")
-    writeFile(dir, "11_Aceh.geojson", Seq(feature(Seq("kd_propinsi" -> "11", "nm_propinsi" -> "Aceh"))))
-    writeFile(dir, "11.73_Kota_Lhokseumawe.geojson", Seq(feature(p73 :+ ("nm_dati2" -> "Kota LHOKSEUMAWE"))))
-    writeFile(dir, "11.74_Pidie.geojson",
+    writeCollection(dir, "11_Aceh.geojson", Seq(feature(Seq("kd_propinsi" -> "11", "nm_propinsi" -> "Aceh"))))
+    writeCollection(dir, "11.73_Kota_Lhokseumawe.geojson", Seq(feature(p73 :+ ("nm_dati2" -> "Kota LHOKSEUMAWE"))))
+    writeCollection(dir, "11.74_Pidie.geojson",
       Seq(feature(Seq("kd_propinsi" -> "11", "kd_dati2" -> "74", "nm_dati2" -> "Blang Pidië"))))
-    writeFile(dir, "11.73_kecamatan.geojson", Seq(kec(1, "Banda Sakti"), kec(2, "Muara Dua"),
+    writeCollection(dir, "11.73_kecamatan.geojson", Seq(kec(1, "Banda Sakti"), kec(2, "Muara Dua"),
       kec(3, "Muara Dua"), kec(4, "İskandar Muda"), kec(5, "ÑAGAN Raya")))
-    writeFile(dir, "11.73_kelurahan.geojson",
+    writeCollection(dir, "11.73_kelurahan.geojson",
       (1 to 9).map(d => desa(1, d, Some(s"Desa 0$d"))) ++ Seq(
         desa(2, 11, Some("Desa Kembar")), desa(3, 12, Some("Desa Kembar")),
         desa(3, 13, None), desa(4, 14, Some("GAMPONG PIDIË Baru")), desa(5, 15, Some("gampong ñagan"))))
@@ -163,11 +153,11 @@ class ApiKeyIndexSpec extends AnyFunSuite {
       val a = 2 * math.Pi * (i % 60) / 60
       s"[${97.5 + 0.0123 * math.cos(a)},${5.5 + 0.0123 * math.sin(a)}]"
     }.mkString("""{"type":"MultiPolygon","coordinates":[[[""", ",", "]]]}")
-    writeFile(dir, "11.73_Kota_Lhokseumawe.geojson", Seq(feature(p73 :+ ("nm_dati2" -> "Lhokseumawe"), poly)))
-    writeFile(dir, "11.73_kecamatan.geojson", Seq(
+    writeCollection(dir, "11.73_Kota_Lhokseumawe.geojson", Seq(feature(p73 :+ ("nm_dati2" -> "Lhokseumawe"), poly)))
+    writeCollection(dir, "11.73_kecamatan.geojson", Seq(
       feature(p73 ++ Seq("kd_kecamatan" -> "001", "nm_kecamatan" -> "Banda Sakti"), threeD),
       feature(p73 ++ Seq("kd_kecamatan" -> "002", "nm_kecamatan" -> """Blang \"Mangat\""""), circle)))
-    writeFile(dir, "11.73_kelurahan.geojson", Seq(
+    writeCollection(dir, "11.73_kelurahan.geojson", Seq(
       desa(1, 1, Some("Hagu Barat Laut"), open), desa(1, 2, None, poly), desa(2, 3, Some("Ujong Blang"), circle)))
     val wh = Files.createTempDirectory("graft-keys-geo-wh").toString + "/warehouse"
     val api = new Api(spark, wh, dir.toString)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GeoJsonFixture.{feature, writeCollection}
 import graft.wilayah.{Api, Ingest, Store}
 
 /** The Api's warehouse snapshot: reads reuse one loaded frame until the
@@ -16,29 +17,18 @@ import graft.wilayah.{Api, Ingest, Store}
 class ApiSnapshotSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private val square =
-    """{"type":"MultiPolygon","coordinates":[[[[97.0,5.0],[97.1,5.0],[97.1,5.1],[97.0,5.1],[97.0,5.0]]]]}"""
-
-  private def feature(props: (String, String)*): String =
-    props.map { case (k, v) => s""""$k":"$v"""" }
-      .mkString("""{"type":"Feature","properties":{""", ",", s"""},"geometry":$square}""")
-
-  private def writeFile(dir: Path, name: String, features: Seq[String]): Unit =
-    Files.writeString(dir.resolve(name),
-      features.mkString("""{"type":"FeatureCollection","features":[""", ",\n", "]}"))
-
   /** Kota Lhokseumawe (11.73) in version `v`: the kabupaten, `kecs`
     * kecamatan and two kelurahan under each, every name tagged `v`. */
   private def writeCorpus(dir: Path, v: String, kecs: Int): Unit = {
     val p = Seq("kd_propinsi" -> "11", "kd_dati2" -> "73")
-    writeFile(dir, "11_Aceh.geojson", Seq(feature("kd_propinsi" -> "11", "nm_propinsi" -> "Aceh")))
-    writeFile(dir, "11.73_Kota_Lhokseumawe.geojson",
-      Seq(feature(p :+ ("nm_dati2" -> s"Lhokseumawe $v"): _*)))
-    writeFile(dir, "11.73_kecamatan.geojson", (1 to kecs).map(k =>
-      feature(p ++ Seq("kd_kecamatan" -> f"$k%03d", "nm_kecamatan" -> s"Kec $k $v"): _*)))
-    writeFile(dir, "11.73_kelurahan.geojson", for (k <- 1 to kecs; d <- 1 to 2) yield
+    writeCollection(dir, "11_Aceh.geojson", Seq(feature(Seq("kd_propinsi" -> "11", "nm_propinsi" -> "Aceh"))))
+    writeCollection(dir, "11.73_Kota_Lhokseumawe.geojson",
+      Seq(feature(p :+ ("nm_dati2" -> s"Lhokseumawe $v"))))
+    writeCollection(dir, "11.73_kecamatan.geojson", (1 to kecs).map(k =>
+      feature(p ++ Seq("kd_kecamatan" -> f"$k%03d", "nm_kecamatan" -> s"Kec $k $v"))))
+    writeCollection(dir, "11.73_kelurahan.geojson", for (k <- 1 to kecs; d <- 1 to 2) yield
       feature(p ++ Seq("kd_kecamatan" -> f"$k%03d", "kd_kelurahan" -> f"${k * 10 + d}%03d",
-        "nm_kelurahan" -> s"Desa $k.$d $v"): _*))
+        "nm_kelurahan" -> s"Desa $k.$d $v")))
   }
 
   private def fixture(): (Path, String) = {
@@ -129,9 +119,9 @@ class ApiSnapshotSpec extends AnyFunSuite {
   test("a first sync whose features are all quarantined leaves reads working") {
     val dir = Files.createTempDirectory("graft-snap-dirty")
     // no kd_kelurahan: no key can be derived, so every feature is dropped
-    writeFile(dir, "11.73_kelurahan.geojson", (1 to 3).map(d =>
-      feature("kd_propinsi" -> "11", "kd_dati2" -> "73", "kd_kecamatan" -> "001",
-        "nm_kelurahan" -> s"Desa $d")))
+    writeCollection(dir, "11.73_kelurahan.geojson", (1 to 3).map(d =>
+      feature(Seq("kd_propinsi" -> "11", "kd_dati2" -> "73", "kd_kecamatan" -> "001",
+        "nm_kelurahan" -> s"Desa $d"))))
     val wh = Files.createTempDirectory("graft-snap-wh").toString + "/warehouse"
     val api = new Api(spark, wh, dir.toString)
     assert(api.sync("11.73") == 0)

@@ -42,12 +42,8 @@ object GeoJsonFixture {
   private def generate(): Path = {
     val out = Files.createTempDirectory("graft-geojson")
     out.toFile.deleteOnExit()
-    def write(name: String, features: Seq[String]): Unit = {
-      val f = out.resolve(name)
-      Files.writeString(f,
-        features.mkString("""{"type":"FeatureCollection","features":[""", ",\n", "]}"))
-      f.toFile.deleteOnExit()
-    }
+    def write(name: String, features: Seq[String]): Unit =
+      writeCollection(out, name, features).toFile.deleteOnExit()
     val aceh = Seq("kd_propinsi" -> "11")
     val selatan = aceh :+ ("kd_dati2" -> "01")
     val lhok = aceh :+ ("kd_dati2" -> "73")
@@ -79,9 +75,20 @@ object GeoJsonFixture {
     out
   }
 
-  private def feature(props: Seq[(String, String)], geometry: String): String =
+  /** A 0.1-degree square MultiPolygon, the default geometry of [[feature]]. */
+  val square: String =
+    """{"type":"MultiPolygon","coordinates":[[[[97.0,5.0],[97.1,5.0],[97.1,5.1],[97.0,5.1],[97.0,5.0]]]]}"""
+
+  /** One GeoJSON Feature with string `props`, in order, and `geometry` text. */
+  def feature(props: Seq[(String, String)], geometry: String = square): String =
     props.map { case (k, v) => s""""$k":"$v"""" }
       .mkString("""{"type":"Feature","properties":{""", ",", s"""},"geometry":$geometry}""")
+
+  /** Writes `features` as one FeatureCollection file `dir/name`, one
+    * feature per line, and returns its path. */
+  def writeCollection(dir: Path, name: String, features: Seq[String]): Path =
+    Files.writeString(dir.resolve(name),
+      features.mkString("""{"type":"FeatureCollection","features":[""", ",\n", "]}"))
 
   /** A one-polygon MultiPolygon: a closed 13-point ring (12 distinct
     * vertices) of radius about `r` degrees around (`x`, `y`), lobed so
