@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Corpus-analysis and retrieval queries (q95+): unigram
+/** Corpus-analysis, statistics and sampling queries: unigram
   * self-information scoring, duplicated-n-gram measurement,
   * conjunctive keyword search, boilerplate-prefix detection,
-  * embedding-norm QA, and fixed-count priority sampling.
+  * embedding-norm QA; the audit statistics (Benford, chi-square,
+  * agreement, Gini, bootstrap, KS, Spearman, robust and trimmed
+  * location, CUPED, SMD, leave-one-out influence); and the samplers
+  * (priority, weighted priority, Neyman allocation, greedy coverage).
   *
   * Same oracle discipline as PipelineQueries: exact-integer pipelines
   * wherever possible (bit-lengths instead of libm log2, ppm integer
@@ -23,7 +26,760 @@ object AnalysisQueries {
          WHEN ${hash32(s"CAST($e AS VARCHAR)")} % 1000 < 900 THEN 'val'
          ELSE 'test' END"""
 
-  val all: Seq[QueryDef] = Seq(
+  /** Benford first-digit screen ([[ops.Stats.benfordScreen]]) over
+    * lineitem prices — the synthetic-data / fraud smell test: observed
+    * first-significant-digit shares vs Benford's law, all integer (the
+    * digit reads off the micro-value's string; the expected shares are
+    * frozen ppm literals, no engine log10 anywhere). One bounded
+    * aggregation.
+    */
+  private lazy val q260: QueryDef =
+    QueryDef("q260_benford_screen",
+      Some("""
+        WITH v AS (SELECT CAST(CAST(l_extendedprice AS DECIMAL(25,6))
+                     * 1000000 AS BIGINT) AS m
+                   FROM lineitem WHERE l_extendedprice > 0),
+        dg AS (SELECT CAST(substr(CAST(m AS VARCHAR), 1, 1) AS BIGINT)
+                 AS digit FROM v),
+        g AS (SELECT digit, CAST(COUNT(*) AS BIGINT) AS n FROM dg
+              GROUP BY digit),
+        r AS (SELECT digit, n,
+                CAST(n * 1000000 // SUM(n) OVER () AS BIGINT)
+                  AS observed_ppm,
+                CASE digit WHEN 1 THEN 301029 WHEN 2 THEN 176091
+                  WHEN 3 THEN 124938 WHEN 4 THEN 96910 WHEN 5 THEN 79181
+                  WHEN 6 THEN 66946 WHEN 7 THEN 57991 WHEN 8 THEN 51152
+                  WHEN 9 THEN 45757 END AS expected_ppm
+              FROM g)
+        SELECT digit, n, observed_ppm,
+               CAST(expected_ppm AS BIGINT) AS expected_ppm,
+               CAST(abs(observed_ppm - expected_ppm) AS BIGINT) AS dev_ppm
+        FROM r ORDER BY digit"""),
+      (s, d) => graft.ops.Stats.benfordScreen(
+          spread(lineitem(s, d)), "l_extendedprice")
+        .orderBy("digit"))
+
+  /** Chi-square mix-independence audit ([[ops.Stats.chiSquareCells]]):
+    * is the corpus' language mix independent of its source? Per
+    * (lang, source) cell the observed count, the expected count under
+    * independence, and the exact-integer chi-square contribution —
+    * plus the total over the bounded cell frame. The drift screen a
+    * curation pipeline runs before trusting per-source sampling rates.
+    */
+  private lazy val q261: QueryDef =
+    QueryDef("q261_chi2_mix",
+      Some("""
+        WITH g AS (SELECT lang AS a, source AS b,
+                     CAST(COUNT(*) AS BIGINT) AS n
+                   FROM documents GROUP BY 1, 2),
+        m AS (SELECT *, SUM(n) OVER (PARTITION BY a) AS ra,
+                SUM(n) OVER (PARTITION BY b) AS cb,
+                SUM(n) OVER () AS tot
+              FROM g),
+        x AS (SELECT a, b, n,
+                CAST((ra * cb * 1000) // tot AS BIGINT) AS expected_milli
+              FROM m),
+        y AS (SELECT *, CAST(((1000 * n - expected_milli)::HUGEINT
+                * (1000 * n - expected_milli) * 1000)
+                // GREATEST(expected_milli, 1) AS BIGINT) AS chi2_micro
+              FROM x)
+        SELECT a, b, n, expected_milli, chi2_micro,
+               CAST(SUM(chi2_micro) OVER () AS BIGINT) AS chi2_total_micro
+        FROM y ORDER BY a, b"""),
+      (s, d) => graft.ops.Stats.chiSquareCells(
+          spread(documents(s, d)), "lang", "source")
+        .withColumn("chi2_total_micro",
+          expr("sum(chi2_micro) OVER ()").cast("long"))
+        .orderBy("a", "b"))
+
+  /** Inter-annotator agreement ([[ops.Stats.cohenKappa]]): Cohen's
+    * kappa between the stored gold `lang` and the q32 n-gram
+    * language-ID heuristic — the chance-corrected score a labeling
+    * pipeline reports instead of raw accuracy (a rater that always
+    * answers the majority class gets high po but kappa ~ 0). All
+    * counts exact; ppm floors over DECIMAL(38,0)/HUGEINT so the 6M-row
+    * sweep can't overflow. One row out.
+    */
+  private lazy val q269: QueryDef =
+    QueryDef("q269_annotator_agreement",
+      Some {
+        import PipelineQueries.{langArgmaxSql, langScoresSql}
+        s"""
+        WITH scored AS (SELECT lang, $langScoresSql FROM documents),
+        p AS (SELECT lang AS a, $langArgmaxSql AS b
+              FROM scored),
+        base AS (SELECT COUNT(*) AS n_items,
+                        SUM(CASE WHEN a = b THEN 1 ELSE 0 END) AS n_agree
+                 FROM p),
+        ra AS (SELECT a AS l, COUNT(*) AS na FROM p GROUP BY a),
+        rb AS (SELECT b AS l, COUNT(*) AS nb FROM p GROUP BY b),
+        pe AS (SELECT COALESCE(SUM(na::HUGEINT * nb), 0) AS pe_num
+               FROM ra JOIN rb USING (l))
+        SELECT CAST(n_items AS BIGINT) AS n_items,
+               CAST(n_agree AS BIGINT) AS n_agree,
+               CAST(n_agree::HUGEINT * 1000000
+                 // GREATEST(n_items, 1) AS BIGINT) AS po_ppm,
+               CAST(pe_num * 1000000
+                 // GREATEST(n_items::HUGEINT * n_items, 1) AS BIGINT) AS pe_ppm,
+               CAST((n_items::HUGEINT * n_agree - pe_num) * 1000000
+                 // GREATEST(n_items::HUGEINT * n_items - pe_num, 1) AS BIGINT)
+                 AS kappa_ppm
+        FROM base CROSS JOIN pe"""
+      },
+      (s, d) => graft.ops.Stats.cohenKappa(
+          documents(s, d).select(col("lang") +: PipelineQueries.langScoreCols: _*)
+            .withColumn("predicted", PipelineQueries.langArgmax),
+          "lang", "predicted"))
+
+  /** Krippendorff's alpha ([[ops.Stats.krippendorffAlpha]]) over a
+    * 3-rater panel WITH missing ratings — the agreement shape real
+    * annotation projects have (q269's Cohen kappa requires exactly 2
+    * complete raters): gold `lang` rates everything, the q32 bigram
+    * heuristic skips doc_id % 3 = 0, and a first-half-of-text variant
+    * of the same heuristic skips doc_id % 5 = 0 — so items carry 1-3
+    * ratings and the single-rated (doc_id % 15 = 0) are unpairable
+    * and excluded per the definition. All-integer coincidence math
+    * (K = 2520 item-weight scaling), ppm floors, one row out.
+    */
+  private lazy val q273: QueryDef =
+    QueryDef("q273_krippendorff_alpha",
+      Some {
+        val profiles = PipelineQueries.LangProfiles
+        def scoresOver(e: String): String = profiles.map { case (l, bgs) =>
+          val sum = bgs.map(bg =>
+            s"(length($e) - length(replace($e, '$bg', '')))").mkString(" + ")
+          s"($sum) AS s_$l"
+        }.mkString(", ")
+        val langs = profiles.map(_._1)
+        val cases = langs.init.map { l =>
+          val geAll = langs.filter(_ != l).map(o => s"s_$l >= s_$o").mkString(" AND ")
+          s"WHEN $geAll THEN '$l'"
+        }.mkString(" ")
+        s"""
+        WITH r1 AS (SELECT doc_id, lang AS label FROM documents),
+        s2 AS (SELECT doc_id, ${scoresOver("text")} FROM documents
+               WHERE doc_id % 3 <> 0),
+        r2 AS (SELECT doc_id, CASE $cases ELSE '${langs.last}' END AS label
+               FROM s2),
+        s3 AS (SELECT doc_id,
+                 ${scoresOver("substr(text, 1, length(text) // 2)")}
+               FROM documents WHERE doc_id % 5 <> 0),
+        r3 AS (SELECT doc_id, CASE $cases ELSE '${langs.last}' END AS label
+               FROM s3),
+        ratings AS (SELECT * FROM r1 UNION ALL SELECT * FROM r2
+                    UNION ALL SELECT * FROM r3),
+        pil AS (SELECT doc_id AS u, label AS c, COUNT(*) AS nuc
+                FROM ratings GROUP BY 1, 2),
+        pi AS (SELECT u, SUM(nuc) AS m, SUM(nuc * nuc) AS sq
+               FROM pil GROUP BY u HAVING SUM(nuc) >= 2),
+        doa AS (SELECT COALESCE(SUM((m * m - sq) * (2520 // (m - 1))), 0)::HUGEINT
+                    AS do_scaled,
+                  COALESCE(SUM(m), 0) AS n, COUNT(*) AS n_items FROM pi),
+        lt AS (SELECT COALESCE(SUM(nc::HUGEINT * nc), 0) AS sq_tot FROM (
+                 SELECT c, SUM(nuc) AS nc FROM pil JOIN pi USING (u)
+                 GROUP BY c))
+        SELECT CAST(n AS BIGINT) AS n_ratings,
+               CAST(n_items AS BIGINT) AS n_items,
+               CAST(do_scaled * 1000000
+                 // GREATEST(2520 * n::HUGEINT, 1) AS BIGINT) AS do_ppm,
+               CAST((n::HUGEINT * n - sq_tot) * 1000000
+                 // GREATEST(n::HUGEINT * (n - 1), 1) AS BIGINT) AS de_ppm,
+               CAST((2520 * (n::HUGEINT * n - sq_tot) - (n - 1) * do_scaled)
+                 * 1000000
+                 // GREATEST(2520 * (n::HUGEINT * n - sq_tot), 1) AS BIGINT)
+                 AS alpha_ppm
+        FROM doa CROSS JOIN lt"""
+      },
+      (s, d) => {
+        val profiles = PipelineQueries.LangProfiles
+        val langs = profiles.map(_._1)
+        // argmax-struct form of the scorer CASE chain (round-18):
+        // provably the same label ([[graft.Pipeline.argmaxLabel]]),
+        // each bigram scorer evaluated ONCE per row instead of
+        // O(langs^2) CASE references (480 replace() trees per rater
+        // in the old physical plan)
+        def predictedOver(textCol: org.apache.spark.sql.Column)
+            : org.apache.spark.sql.Column =
+          graft.Pipeline.argmaxLabel(profiles.map { case (l, bgs) =>
+            l -> bgs.map(graft.Pipeline.occurrences2x(textCol, _))
+              .reduce(_ + _)
+          })
+        val docs = documents(s, d)
+        val r1 = docs.select(col("doc_id"), lit("gold").as("rater"),
+          col("lang").as("label"))
+        val r2 = docs.filter(col("doc_id") % 3 =!= 0)
+          .select(col("doc_id"), lit("bigram").as("rater"),
+            predictedOver(col("text")).as("label"))
+        val r3 = docs.filter(col("doc_id") % 5 =!= 0)
+          .select(col("doc_id"), lit("half").as("rater"),
+            predictedOver(expr("substring(text, 1, length(text) div 2)"))
+              .as("label"))
+        graft.ops.Stats.krippendorffAlpha(
+          r1.unionAll(r2).unionAll(r3), "doc_id", "rater", "label")
+      })
+
+  /** Duffield–Lund–Thorup priority sampling
+    * ([[ops.Sampling.priorityWeighted]]): fixed-size (k=100)
+    * token-count-weighted sample without replacement with the
+    * tau-clamped unbiased subset-sum estimator — the principled
+    * "sample k docs proportional to length, then estimate any
+    * subset's token mass from the sample alone". Cross-engine exact:
+    * priority `w * 2^32 / (hash32(id) + 1)` is ONE IEEE division of
+    * exactly-representable integers; tau is the (k+1)-th priority off
+    * the bounded TakeOrderedAndProject frame.
+    */
+  private lazy val q275: QueryDef =
+    QueryDef("q275_weighted_priority_sample",
+      Some(s"""
+        WITH t AS (SELECT doc_id,
+                     CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+                   FROM documents),
+        f AS (SELECT * FROM t WHERE n_tokens >= 1),
+        p AS (SELECT doc_id, n_tokens,
+                CAST(n_tokens * 4294967296 AS DOUBLE)
+                  / CAST(${hash32("CAST(doc_id AS VARCHAR)")} + 1 AS DOUBLE)
+                  AS pri
+              FROM f),
+        r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY pri DESC, doc_id) AS rn
+              FROM p),
+        tau AS (SELECT MAX(CASE WHEN rn = 101 THEN pri END) AS tau
+                FROM r WHERE rn <= 101)
+        SELECT doc_id, n_tokens, pri,
+               GREATEST(CAST(n_tokens AS DOUBLE),
+                 COALESCE(tau, CAST(n_tokens AS DOUBLE))) AS w_est
+        FROM r CROSS JOIN tau WHERE rn <= 100
+        ORDER BY pri DESC, doc_id"""),
+      (s, d) => {
+        val t = spread(documents(s, d)).select(col("doc_id"),
+            size(graft.Pipeline.words(col("text"))).cast("long")
+              .as("n_tokens"))
+          .filter(col("n_tokens") >= 1)
+        graft.ops.Sampling.priorityWeighted(t, "doc_id", "n_tokens",
+            k = 100)
+          .orderBy(col("pri").desc, col("doc_id"))
+      })
+
+  /** Gini concentration + Lorenz deciles
+    * ([[ops.Stats.giniConcentration]]) of token mass over documents —
+    * the corpus-inequality audit behind mix design and shard balance.
+    * Rank rides the hierarchical prefix-sum scaffold; the oracle
+    * replays the exact rank form with a plain window.
+    */
+  private lazy val q280: QueryDef =
+    QueryDef("q280_gini_token_concentration",
+      Some("""
+        WITH t AS (SELECT doc_id,
+                     CAST(len(string_split(text, ' ')) AS BIGINT) AS w
+                   FROM documents),
+        r AS (SELECT doc_id, w,
+                ROW_NUMBER() OVER (ORDER BY w, doc_id) AS rk FROM t),
+        tot AS (SELECT COUNT(*) AS n, SUM(w)::HUGEINT AS tw,
+                       SUM(rk::HUGEINT * w) AS srw FROM r),
+        g AS (SELECT CAST((2 * srw - (n + 1) * tw) * 1000000
+                // GREATEST(n::HUGEINT * tw, 1) AS BIGINT) AS gini_ppm,
+                n, tw FROM tot),
+        dc AS (SELECT ((rk - 1) * 10) // g.n AS decile,
+                      CAST(COUNT(*) AS BIGINT) AS n_docs,
+                      CAST(SUM(w) AS BIGINT) AS decile_weight
+               FROM r CROSS JOIN g GROUP BY 1)
+        SELECT dc.decile, dc.n_docs, dc.decile_weight,
+               CAST(SUM(dc.decile_weight::HUGEINT) OVER (ORDER BY dc.decile
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                 * 1000000 // GREATEST(g.tw, 1) AS BIGINT)
+                 AS cum_weight_ppm,
+               g.gini_ppm
+        FROM dc CROSS JOIN g ORDER BY decile"""),
+      (s, d) => {
+        val t = spread(documents(s, d)).select(col("doc_id"),
+          size(graft.Pipeline.words(col("text"))).cast("long").as("w"))
+        graft.ops.Stats.giniConcentration(t, "doc_id", "w")
+          .orderBy("decile")
+      })
+
+  /** Poisson bootstrap ([[ops.Stats.poissonBootstrap]], B = 32) of
+    * mean tokens/doc — deterministic md5 multiplicities against the
+    * exact Poisson(1) CDF ppm thresholds, one exploded scan, variance
+    * of the mean off the bounded 32-row panel: the error bar a
+    * 100 TB metrics job attaches without a second pass.
+    */
+  private lazy val q281: QueryDef = {
+    val th = Seq(367879L, 735758L, 919698L, 981011L, 996340L,
+      999405L, 999916L, 999989L, 999998L, 999999L)
+    QueryDef("q281_poisson_bootstrap",
+      Some(s"""
+        WITH t AS (SELECT doc_id,
+                     CAST(len(string_split(text, ' ')) AS BIGINT) AS v
+                   FROM documents),
+        bs AS (SELECT unnest(range(0, 32)) AS b),
+        e AS (SELECT bs.b, t.doc_id, t.v,
+                ${hash32("'bs_' || bs.b || '_' || t.doc_id")}
+                  % 1000000 AS slot
+              FROM t CROSS JOIN bs),
+        m AS (SELECT b, v,
+                len(list_filter([${th.mkString(", ")}],
+                  x -> slot >= x)) AS mult
+              FROM e),
+        per AS (SELECT b AS resample, CAST(SUM(mult) AS BIGINT) AS n_eff,
+                  SUM(mult::HUGEINT * v) AS sv
+                FROM m GROUP BY b),
+        pm AS (SELECT resample, n_eff,
+                 CAST(sv * 1000000 // GREATEST(n_eff, 1) AS BIGINT)
+                   AS mean_ppm
+               FROM per),
+        vr AS (SELECT CAST((32 * SUM(mean_ppm::HUGEINT * mean_ppm)
+                 - SUM(mean_ppm::HUGEINT) * SUM(mean_ppm))
+                 // ${32L * 31L} AS BIGINT) AS var_ppm2 FROM pm)
+        SELECT CAST(resample AS BIGINT) AS resample, n_eff, mean_ppm,
+               var_ppm2
+        FROM pm CROSS JOIN vr ORDER BY resample"""),
+      (s, d) => {
+        val t = spread(documents(s, d)).select(col("doc_id"),
+          size(graft.Pipeline.words(col("text"))).cast("long").as("v"))
+        graft.ops.Stats.poissonBootstrap(t, "doc_id", "v",
+            resamples = 32)
+          .orderBy("resample")
+      })
+  }
+
+  /** Two-sample KS drift gate ([[ops.Stats.ksTwoSample]]): the exact
+    * integer KS distance between the `n_chars` distributions of two
+    * languages — "did this slice's length distribution move?". The
+    * cumulative windows ride the distinct-VALUE frame (bounded by the
+    * length domain, not the corpus); the max row is picked by the
+    * deterministic (D desc, value asc) order on that bounded frame.
+    */
+  private lazy val q282: QueryDef =
+    QueryDef("q282_ks_two_sample",
+      Some("""
+        WITH sel AS (SELECT n_chars AS v, lang = 'en' AS isa
+                     FROM documents WHERE lang IN ('en', 'zh')),
+        pv AS (SELECT v, COUNT(*) FILTER (isa) AS ca,
+                      COUNT(*) FILTER (NOT isa) AS cb
+               FROM sel GROUP BY v),
+        ec AS (SELECT v,
+                 SUM(ca) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS cuma,
+                 SUM(cb) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS cumb,
+                 SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
+               FROM pv),
+        dd AS (SELECT v, na, nb,
+                 abs(cuma * nb - cumb * na) AS dnum FROM ec)
+        SELECT v AS at_value, CAST(na AS BIGINT) AS n_a,
+               CAST(nb AS BIGINT) AS n_b,
+               CAST(dnum::HUGEINT * 1000000
+                 // GREATEST(na::HUGEINT * nb, 1) AS BIGINT) AS d_ppm
+        FROM dd ORDER BY dnum DESC, v LIMIT 1"""),
+      (s, d) => graft.ops.Stats.ksTwoSample(
+        spread(documents(s, d)), "n_chars", "lang", "en", "zh"))
+
+  /** Spearman rank correlation ([[ops.Stats.spearmanCorr]]) between
+    * quantity and extended price over lineitem — heavy ties on the
+    * 50-value quantity side exercise the doubled-average-rank tie
+    * correction; price hops through DECIMAL(25,6) cents so both
+    * engines bucket identically. The oracle replays the doubled
+    * ranks, the six HUGEINT moment sums, and the per-factor corrected
+    * floor-sqrt verbatim.
+    */
+  private lazy val q283: QueryDef =
+    QueryDef("q283_spearman_corr",
+      Some("""
+        WITH base AS (SELECT CAST(l_quantity AS HUGEINT) AS x,
+                        CAST(CAST(l_extendedprice AS DECIMAL(25,6)) * 100
+                          AS HUGEINT) AS y,
+                        l_orderkey AS ok, l_linenumber AS ln
+                      FROM lineitem),
+        px AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x, ok, ln) AS pos
+               FROM base),
+        rx AS (SELECT x AS val, MIN(pos)::HUGEINT + MAX(pos) AS r2
+               FROM px GROUP BY x),
+        py AS (SELECT y, ROW_NUMBER() OVER (ORDER BY y, ok, ln) AS pos
+               FROM base),
+        ry AS (SELECT y AS val, MIN(pos)::HUGEINT + MAX(pos) AS r2
+               FROM py GROUP BY y),
+        j AS (SELECT rx.r2 AS rxv, ry.r2 AS ryv
+              FROM base JOIN rx ON base.x = rx.val
+                        JOIN ry ON base.y = ry.val),
+        ag AS (SELECT COUNT(*)::HUGEINT AS n, SUM(rxv) AS sx,
+                      SUM(ryv) AS sy, SUM(rxv * ryv) AS sxy,
+                      SUM(rxv * rxv) AS sxx, SUM(ryv * ryv) AS syy
+               FROM j),
+        nm AS (SELECT n, n * sxy - sx * sy AS num,
+                      n * sxx - sx * sx AS a, n * syy - sy * sy AS b
+               FROM ag),
+        s0 AS (SELECT *,
+                 CAST(floor(sqrt(CAST(a AS DOUBLE))) AS HUGEINT) AS sa0,
+                 CAST(floor(sqrt(CAST(b AS DOUBLE))) AS HUGEINT) AS sb0
+               FROM nm),
+        sq AS (SELECT n, num,
+                 GREATEST(list_max(list_filter(
+                     [sa0 - 2, sa0 - 1, sa0, sa0 + 1, sa0 + 2],
+                     t -> t * t <= a)) *
+                   list_max(list_filter(
+                     [sb0 - 2, sb0 - 1, sb0, sb0 + 1, sb0 + 2],
+                     t -> t * t <= b)), 1) AS den
+               FROM s0)
+        SELECT CAST(n AS BIGINT) AS n_items,
+               CAST(num * 1000000 // den AS BIGINT) AS rho_ppm
+        FROM sq"""),
+      (s, d) => graft.ops.Stats.spearmanCorr(
+        lineitem(s, d).select(col("l_quantity"),
+          (col("l_extendedprice").cast("decimal(25,6)") * 100)
+            .cast("long").as("price_cents"),
+          col("l_orderkey"), col("l_linenumber")),
+        "l_quantity", "price_cents",
+        Seq("l_orderkey", "l_linenumber")))
+
+  /** Neyman variance-optimal stratified allocation + deterministic
+    * draw ([[ops.Sampling.neymanAllocation]], budget 200 over `lang`
+    * strata by `n_chars` variance): the eval-set sizing form — budget
+    * goes where the metric is noisy, not uniformly. Integer sd via the
+    * corrected floor-sqrt, largest-remainder quota assignment, md5
+    * rank draw through the per-stratum scaffold; the oracle replays
+    * every step including the remainder tiebreaks.
+    */
+  private lazy val q285: QueryDef =
+    QueryDef("q285_neyman_allocation",
+      Some(s"""
+        WITH base AS (SELECT lang AS stratum, doc_id AS id,
+                        n_chars AS value FROM documents),
+        pn AS (SELECT stratum, COUNT(*)::HUGEINT AS nh,
+                      SUM(value::HUGEINT) AS sv,
+                      SUM(value::HUGEINT * value) AS svv
+               FROM base GROUP BY stratum),
+        va AS (SELECT stratum, nh,
+                 (nh * svv - sv * sv) * 1000000 // (nh * nh) AS ah
+               FROM pn),
+        sd0 AS (SELECT *, CAST(floor(sqrt(CAST(ah AS DOUBLE)))
+                  AS HUGEINT) AS s0 FROM va),
+        sd AS (SELECT stratum, nh,
+                 list_max(list_filter([s0-2, s0-1, s0, s0+1, s0+2],
+                   t -> t * t <= ah)) AS sdm
+               FROM sd0),
+        wv AS (SELECT stratum, nh, sdm,
+                 CASE WHEN (SELECT SUM(nh * sdm) FROM sd) > 0
+                   THEN nh * sdm ELSE nh END AS w
+               FROM sd),
+        tw AS (SELECT GREATEST(SUM(w), 1) AS totw FROM wv),
+        fl AS (SELECT stratum, nh, sdm, (200 * w) // totw AS f,
+                      (200 * w) % totw AS rem
+               FROM wv CROSS JOIN tw),
+        lo AS (SELECT 200 - SUM(f) AS leftover FROM fl),
+        rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY rem DESC, stratum)
+                 AS rr FROM fl),
+        qt AS (SELECT stratum, CAST(nh AS BIGINT) AS n_stratum,
+                 CAST(sdm AS BIGINT) AS sd_milli,
+                 CAST(LEAST(f + CASE WHEN rr <= leftover THEN 1 ELSE 0
+                   END, nh) AS BIGINT) AS alloc_n
+               FROM rk CROSS JOIN lo),
+        sl AS (SELECT stratum, id, value,
+                 ${hash32("'ney_' || id")} % 1000000 AS slot
+               FROM base),
+        rked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY stratum
+                   ORDER BY slot, id) AS rn FROM sl)
+        SELECT r.stratum, r.id, r.value, q.n_stratum, q.sd_milli,
+               q.alloc_n
+        FROM rked r JOIN qt q USING (stratum)
+        WHERE r.rn <= q.alloc_n ORDER BY stratum, id"""),
+      (s, d) => graft.ops.Sampling.neymanAllocation(
+          spread(documents(s, d)), "doc_id", "lang", "n_chars", n = 200)
+        .orderBy("stratum", "id"))
+
+  /** Robust per-language location/scale ([[ops.Stats.robustStats]]):
+    * exact lower median and MAD of `n_chars` per lang — the
+    * outlier-proof quality panel. Two per-stratum scaffold passes;
+    * the oracle runs the naive per-stratum windows (fine at oracle
+    * SF).
+    */
+  private lazy val q287: QueryDef =
+    QueryDef("q287_robust_stats",
+      Some("""
+        WITH base AS (SELECT lang AS stratum, n_chars AS v, doc_id AS id
+                      FROM documents),
+        r1 AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY stratum
+                 ORDER BY v, id) AS rn,
+                 COUNT(*) OVER (PARTITION BY stratum) AS n FROM base),
+        med AS (SELECT stratum, CAST(n AS BIGINT) AS n_rows,
+                       CAST(v AS BIGINT) AS median
+                FROM r1 WHERE rn = (n + 1) // 2),
+        dv AS (SELECT b.stratum, abs(b.v - m.median) AS d, b.id
+               FROM base b JOIN med m USING (stratum)),
+        r2 AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY stratum
+                 ORDER BY d, id) AS rn,
+                 COUNT(*) OVER (PARTITION BY stratum) AS n FROM dv),
+        mad AS (SELECT stratum, CAST(d AS BIGINT) AS mad
+                FROM r2 WHERE rn = (n + 1) // 2)
+        SELECT med.stratum, n_rows, median, mad
+        FROM med JOIN mad USING (stratum) ORDER BY stratum"""),
+      (s, d) => graft.ops.Stats.robustStats(
+          spread(documents(s, d)), "lang", "n_chars", "doc_id")
+        .orderBy("stratum"))
+
+  /** CUPED variance reduction ([[ops.Stats.cupedAdjust]]): revenue
+    * adjusted by pre-discount price as the covariate, variants =
+    * return flag — the A/B-metrics trick that shrinks confidence
+    * intervals by the covariate's explained variance. Metric and
+    * covariate are scaled to 1e-4-dollar integers — the product
+    * price * (1 - discount) has FOUR decimals, and a cents (*100)
+    * cast leaves a fraction DuckDB's DECIMAL->HUGEINT cast ROUNDS
+    * where Spark's decimal->long truncates (caught by the hash gate;
+    * *10000 makes the cast exact on both). One scan to a
+    * variant-bounded six-sum panel; theta, the floor pseudo-mean,
+    * and every adjusted moment expanded symbolically in BigInt; the
+    * oracle replays the identical HUGEINT panel algebra (milli
+    * theta keeps the squared moments inside HUGEINT at its SF —
+    * the engine's BigInt is unbounded).
+    */
+  private lazy val q292: QueryDef =
+    QueryDef("q292_cuped_adjust",
+      Some("""
+        WITH base AS (SELECT l_returnflag AS variant,
+                CAST(CAST(l_extendedprice * (1 - l_discount)
+                  AS DECIMAL(25,6)) * 10000 AS HUGEINT) AS y,
+                CAST(CAST(l_extendedprice AS DECIMAL(25,6)) * 10000
+                  AS HUGEINT) AS x
+              FROM lineitem),
+        pv AS (SELECT variant, COUNT(*)::HUGEINT AS n, SUM(x) AS sx,
+                      SUM(y) AS sy, SUM(x * y) AS sxy,
+                      SUM(x * x) AS sxx, SUM(y * y) AS syy
+               FROM base GROUP BY variant),
+        gl AS (SELECT SUM(n) AS n, SUM(sx) AS sx, SUM(sy) AS sy,
+                      SUM(sxy) AS sxy, SUM(sxx) AS sxx
+               FROM pv),
+        th AS (SELECT CASE WHEN n * sxx - sx * sx = 0 THEN 0::HUGEINT
+                 ELSE ((n * sxy - sx * sy) * 1000)
+                   // (n * sxx - sx * sx) END AS theta,
+                 sx // n AS xbar
+               FROM gl),
+        o AS (SELECT variant, n, theta,
+                (sy * 1000) // n AS mean_y_milli,
+                (sy * 1000 - theta * (sx - n * xbar)) // n
+                  AS mean_adj_milli,
+                syy * 1000000 - 2000 * theta * (sxy - xbar * sy)
+                  + theta * theta
+                    * (sxx - 2 * xbar * sx + n * xbar * xbar) AS sadj2,
+                sy * 1000 - theta * (sx - n * xbar) AS sadj,
+                (n * syy - sy * sy) * 1000000 AS varrawn
+              FROM pv CROSS JOIN th)
+        SELECT variant, CAST(n AS BIGINT) AS n_rows,
+               CAST(theta AS BIGINT) AS theta_milli,
+               CAST(mean_y_milli AS BIGINT) AS mean_y_milli,
+               CAST(mean_adj_milli AS BIGINT) AS mean_adj_milli,
+               CAST(CASE WHEN varrawn = 0 THEN 0
+                 ELSE ((varrawn - (n * sadj2 - sadj * sadj)) * 1000000)
+                   // varrawn END AS BIGINT) AS var_reduction_ppm
+        FROM o ORDER BY variant"""),
+      (s, d) => graft.ops.Stats.cupedAdjust(
+        lineitem(s, d).select(col("l_returnflag"),
+          (col("l_extendedprice") * (lit(1) - col("l_discount")))
+            .cast("decimal(25,6)").*(lit(10000)).cast("long")
+            .as("revenue_e4"),
+          col("l_extendedprice").cast("decimal(25,6)").*(lit(10000))
+            .cast("long").as("price_e4")),
+        "l_returnflag", "revenue_e4", "price_e4")
+        .orderBy("variant"))
+
+  /** Trimmed + winsorized means ([[ops.Stats.winsorizedMeans]], 5%
+    * each side) of `n_chars` per lang — the robust-location pair
+    * next to q287's median/MAD. One per-stratum scaffold ranking,
+    * rank-keyed boundary filters, one bounded aggregate; the oracle
+    * runs the naive per-stratum windows at its SF.
+    */
+  private lazy val q293: QueryDef =
+    QueryDef("q293_trimmed_means",
+      Some("""
+        WITH base AS (SELECT lang AS stratum, n_chars AS v, doc_id AS id
+                      FROM documents),
+        r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY stratum
+                ORDER BY v, id) AS rk,
+                COUNT(*) OVER (PARTITION BY stratum) AS n
+              FROM base),
+        k AS (SELECT *, (n * 50) // 1000 AS klo, (n * 50) // 1000 AS khi
+              FROM r),
+        lo AS (SELECT stratum, v AS lo_bound FROM k WHERE rk = klo + 1),
+        hi AS (SELECT stratum, v AS hi_bound FROM k WHERE rk = n - khi),
+        j AS (SELECT k.*, lo_bound, hi_bound FROM k
+              JOIN lo USING (stratum) JOIN hi USING (stratum))
+        SELECT stratum, CAST(MAX(n) AS BIGINT) AS n_rows,
+               CAST(MAX(lo_bound) AS BIGINT) AS lo_bound,
+               CAST(MAX(hi_bound) AS BIGINT) AS hi_bound,
+               CAST(SUM(CASE WHEN rk > klo AND rk <= n - khi
+                   THEN v::HUGEINT END) * 1000
+                 // GREATEST(SUM(CASE WHEN rk > klo AND rk <= n - khi
+                   THEN 1 ELSE 0 END), 1) AS BIGINT)
+                 AS trimmed_mean_milli,
+               CAST(SUM(GREATEST(LEAST(v, hi_bound),
+                   lo_bound)::HUGEINT) * 1000
+                 // GREATEST(COUNT(*), 1) AS BIGINT)
+                 AS winsorized_mean_milli
+        FROM j GROUP BY stratum ORDER BY stratum"""),
+      (s, d) => graft.ops.Stats.winsorizedMeans(
+          spread(documents(s, d)), "lang", "n_chars", "doc_id",
+          lowPermille = 50, highPermille = 50)
+        .orderBy("stratum"))
+
+  /** SMD covariate-balance audit ([[ops.Stats.smdBalance]]): per
+    * covariate, the standardized mean difference between return
+    * flags A and R — the pre-analysis balance gate next to q292's
+    * CUPED adjustment (|SMD| > 0.1, i.e. 100 milli, is the
+    * conventional imbalance flag; the uniform-random testdata sits
+    * near 0 as a proper randomization should). Exact-integer unit
+    * choices (cents, milli-discount) avoid the q292 cast trap; the
+    * oracle replays the six sums, both variance floors, and the
+    * corrected floor-sqrt.
+    */
+  private lazy val q296: QueryDef =
+    QueryDef("q296_smd_balance",
+      Some("""
+        WITH base AS (SELECT l_returnflag AS v,
+                CAST(l_quantity AS HUGEINT) AS qty,
+                CAST(CAST(l_extendedprice AS DECIMAL(25,6)) * 100
+                  AS HUGEINT) AS price_cents,
+                CAST(CAST(l_discount AS DECIMAL(25,6)) * 1000
+                  AS HUGEINT) AS disc_milli
+              FROM lineitem WHERE l_returnflag IN ('A', 'R')),
+        m AS (SELECT v = 'A' AS isa, 'qty' AS cov, qty AS val FROM base
+              UNION ALL SELECT v = 'A', 'price_cents', price_cents
+                FROM base
+              UNION ALL SELECT v = 'A', 'disc_milli', disc_milli
+                FROM base),
+        pn AS (SELECT cov,
+                 COUNT(*) FILTER (isa)::HUGEINT AS na,
+                 COUNT(*) FILTER (NOT isa)::HUGEINT AS nb,
+                 COALESCE(SUM(val) FILTER (isa), 0) AS sa,
+                 COALESCE(SUM(val) FILTER (NOT isa), 0) AS sb,
+                 COALESCE(SUM(val * val) FILTER (isa), 0) AS saa,
+                 COALESCE(SUM(val * val) FILTER (NOT isa), 0) AS sbb
+               FROM m GROUP BY cov),
+        vv AS (SELECT cov, na, nb, sa, sb,
+                 (na * saa - sa * sa) * 1000000 // (na * na) AS va6,
+                 (nb * sbb - sb * sb) * 1000000 // (nb * nb) AS vb6
+               FROM pn),
+        sd0 AS (SELECT *, (va6 + vb6) // 2 AS p6,
+                  CAST(floor(sqrt(CAST((va6 + vb6) // 2 AS DOUBLE)))
+                    AS HUGEINT) AS s0
+                FROM vv),
+        sd AS (SELECT *, list_max(list_filter(
+                 [s0 - 2, s0 - 1, s0, s0 + 1, s0 + 2],
+                 t -> t * t <= p6)) AS sdm
+               FROM sd0)
+        SELECT cov AS covariate, CAST(na AS BIGINT) AS n_a,
+               CAST(nb AS BIGINT) AS n_b,
+               CAST(sa * 1000 // na AS BIGINT) AS mean_a_milli,
+               CAST(sb * 1000 // nb AS BIGINT) AS mean_b_milli,
+               CAST(sdm AS BIGINT) AS pooled_sd_milli,
+               CAST(((sa * nb - sb * na) * 1000 // (na * nb)) * 1000
+                 // GREATEST(sdm, 1) AS BIGINT) AS smd_milli
+        FROM sd ORDER BY covariate"""),
+      (s, d) => graft.ops.Stats.smdBalance(
+          lineitem(s, d).select(col("l_returnflag"),
+            col("l_quantity").cast("long").as("qty"),
+            col("l_extendedprice").cast("decimal(25,6)").*(lit(100))
+              .cast("long").as("price_cents"),
+            col("l_discount").cast("decimal(25,6)").*(lit(1000))
+              .cast("long").as("disc_milli")),
+          "l_returnflag", "A", "R",
+          Seq("disc_milli", "price_cents", "qty"))
+        .orderBy("covariate"))
+
+  // Coverage-greedy oracle: k unrolled pick-and-cover rounds — each
+  // s{i} is the (gain desc, doc asc) top-1 over docs with uncovered
+  // bigrams, c{i} the covered set after it (MATERIALIZED: both feed
+  // the next round and the final union).
+  private def coverageRoundCtes(k: Int): String =
+    (1 to k).map { i =>
+      val p = i - 1
+      val excl =
+        if (i == 1) ""
+        else "AND t.doc NOT IN (" + (1 until i)
+          .map(j => s"SELECT doc FROM s$j").mkString(" UNION ALL ") + ")"
+      val anti =
+        if (i == 1) ""
+        else s"LEFT JOIN c$p ON t.tok = c$p.tok WHERE c$p.tok IS NULL "
+      val cover =
+        if (i == 1) s"SELECT DISTINCT t.tok FROM t JOIN s1 ON t.doc = s1.doc"
+        else s"SELECT tok FROM c$p UNION " +
+          s"SELECT t.tok FROM t JOIN s$i ON t.doc = s$i.doc"
+      s"""
+        m$i AS (SELECT t.doc, COUNT(*) AS g FROM t
+                $anti $excl
+                GROUP BY t.doc),
+        s$i AS MATERIALIZED (SELECT doc, g FROM m$i
+                ORDER BY g DESC, doc LIMIT 1),
+        c$i AS MATERIALIZED ($cover)"""
+    }.mkString(",")
+
+  /** Greedy max-coverage seed selection
+    * ([[ops.Sampling.coverageGreedy]], k = 6 over bigrams): the
+    * 1-1/e submodular classic — "pick k docs that together cover the
+    * most distinct bigrams". k anti-join+count+top-1 rounds, ties
+    * (gain desc, doc asc); the oracle unrolls the same six
+    * pick-and-cover rounds.
+    */
+  private lazy val q297: QueryDef = {
+    val k = 6
+    QueryDef("q297_coverage_greedy",
+      Some(s"""
+        WITH ws AS (SELECT doc_id AS doc, string_split(text, ' ') AS w
+                    FROM documents),
+        t AS (SELECT DISTINCT doc, tok FROM (
+                SELECT doc, unnest([w[i] || ' ' || w[i+1]
+                  for i in range(1, len(w))]) AS tok
+                FROM ws WHERE len(w) >= 2)),
+        ${coverageRoundCtes(k)}
+        SELECT * FROM (${(1 to k).map(i =>
+          s"SELECT CAST($i AS BIGINT) AS step, CAST(doc AS BIGINT)" +
+            s" AS doc_id, CAST(g AS BIGINT) AS marginal_gain FROM s$i")
+          .mkString(" UNION ALL ")})
+        ORDER BY step"""),
+      (s, d) => {
+        val w = graft.Pipeline.words(col("text"))
+        val bigrams = spread(documents(s, d)).filter(size(w) >= 2)
+          .select(col("doc_id"),
+            explode(zip_with(
+              slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
+              (a, b) => concat(a, lit(" "), b))).as("tok"))
+        graft.ops.Sampling.coverageGreedy(bigrams, "doc_id", "tok",
+            k = k)
+          .orderBy("step")
+      })
+  }
+
+  /** Leave-one-out source influence ([[ops.Stats.looInfluence]]):
+    * per source, the corpus mean-tokens-per-doc with that source
+    * excluded and the delta — first-order mix attribution from ONE
+    * aggregate (pure panel algebra, no per-group re-scan).
+    */
+  private lazy val q298: QueryDef =
+    QueryDef("q298_loo_influence",
+      Some("""
+        WITH t AS (SELECT source,
+                     CAST(len(string_split(text, ' ')) AS BIGINT) AS v
+                   FROM documents),
+        g AS (SELECT source, COUNT(*)::HUGEINT AS n_rows,
+                     SUM(v::HUGEINT) AS s
+              FROM t GROUP BY source),
+        tt AS (SELECT SUM(n_rows) AS tn, SUM(s) AS ts FROM g)
+        SELECT source AS "group", CAST(n_rows AS BIGINT) AS n_rows,
+               CAST(ts * 1000 // tn AS BIGINT) AS mean_all_milli,
+               CAST(CASE WHEN tn = n_rows THEN ts * 1000 // tn
+                 ELSE (ts - s) * 1000 // (tn - n_rows) END AS BIGINT)
+                 AS loo_mean_milli,
+               CAST(CASE WHEN tn = n_rows THEN ts * 1000 // tn
+                 ELSE (ts - s) * 1000 // (tn - n_rows) END
+                 - ts * 1000 // tn AS BIGINT) AS delta_milli
+        FROM g CROSS JOIN tt ORDER BY "group""""),
+      (s, d) => graft.ops.Stats.looInfluence(
+          spread(documents(s, d)).select(col("source"),
+            size(graft.Pipeline.words(col("text"))).cast("long")
+              .as("v")),
+          "source", "v")
+        .orderBy("group"))
+
+  val all: Seq[QueryDef] = Seq(q260, q261, q269, q273, q275, q280, q281,
+    q282, q283, q285, q287, q292, q293, q296, q297, q298,
 
     // Unigram self-information ([[ops.TextStats.informationScore]]):
     // per-doc sum of floor(log2(N/freq)) bits under the corpus unigram
@@ -780,44 +1536,6 @@ object AnalysisQueries {
           maxFpDf = Int.MaxValue)
         .orderBy("a_id", "b_id")),
 
-    // Integer PageRank ([[ops.Graph.pageRank]]) over the customer-
-    // supplier trade graph (distinct (cust, supp) pairs via orders x
-    // lineitem, doubled into both directions): 5 fixed iterations in
-    // milli-units — per-edge `pr div deg` BEFORE the sum keeps every
-    // term an exact integer, so the aggregate is order-independent and
-    // the oracle unrolls the loop as 5 chained CTEs, bit-identical.
-    QueryDef("q125_pagerank",
-      Some {
-        def iter(prev: String, name: String) = s"""
-        $name AS (SELECT e.dst AS node,
-                    CAST(150 + (850 * SUM(p.pr // d.deg)) // 1000 AS BIGINT) AS pr
-                  FROM e JOIN $prev p ON p.node = e.src
-                  JOIN d ON d.src = e.src GROUP BY e.dst)"""
-        s"""
-        WITH e0 AS (SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-                    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        e AS (SELECT a AS src, b AS dst FROM e0
-              UNION ALL SELECT b AS src, a AS dst FROM e0),
-        d AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
-        p0 AS (SELECT src AS node, CAST(1000 AS BIGINT) AS pr FROM d),
-        ${iter("p0", "p1")},${iter("p1", "p2")},${iter("p2", "p3")},${iter("p3", "p4")},${iter("p4", "p5")}
-        SELECT node, pr FROM p5 ORDER BY node"""
-      },
-      (s0, d) => {
-        // fixed-iter rank loop: build on the AQE-off child session
-        // ([[Sessions.loopSession]] — measured rationale there)
-        val s = graft.Sessions.loopSession(s0)
-        val o = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val l = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val e0 = l.join(o, l("l_orderkey") === o("o_orderkey"))
-          .select((col("o_custkey") * 2).as("a"),
-            (col("l_suppkey") * 2 + 1).as("b"))
-          .distinct()
-        val edges = e0.select(col("a").as("src"), col("b").as("dst"))
-          .union(e0.select(col("b").as("src"), col("a").as("dst")))
-        graft.ops.Graph.pageRank(edges, iters = 5).orderBy("node")
-      }),
-
     // Event-transition matrix ([[ops.Events.transitionMatrix]]):
     // Markov next-event statistics over per-user event sequences
     // (ordered by time with the event id as the deterministic
@@ -1027,11 +1745,9 @@ object AnalysisQueries {
     // text for review instead of trusting the argmax.
     QueryDef("q134_language_margin",
       Some {
-        val scores = PipelineQueries.LangProfiles.map { case (l, bgs) =>
-          val sum = bgs.map(bg =>
-            s"(length(text) - length(replace(text, '$bg', '')))").mkString(" + ")
-          s"CAST($sum AS BIGINT) AS s_$l"
-        }.mkString(", ")
+        val scores = PipelineQueries.langScoreSums
+          .map { case (l, sum) => s"CAST($sum AS BIGINT) AS s_$l" }
+          .mkString(", ")
         val arr = PipelineQueries.LangProfiles
           .map { case (l, _) => s"s_$l" }.mkString("[", ", ", "]")
         s"""
@@ -1044,10 +1760,7 @@ object AnalysisQueries {
       },
       (s, d) => {
         val scored = spread(documents(s, d)).select(
-          col("doc_id") +: PipelineQueries.LangProfiles.map { case (l, bgs) =>
-            bgs.map(Pipeline.occurrences2x(col("text"), _)).reduce(_ + _)
-              .as(s"s_$l")
-          }: _*)
+          col("doc_id") +: PipelineQueries.langScoreCols: _*)
         graft.ops.TextStats.scoreMargin(scored, "doc_id",
             PipelineQueries.LangProfiles.map { case (l, _) => s"s_$l" })
           .orderBy("doc_id")

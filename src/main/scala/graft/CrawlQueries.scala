@@ -1,18 +1,20 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-10 third batch (q169+): crawl-graph and stream-shaping
-  * operators — intra-host duplication, host language composition,
-  * HITS hubs/authorities, the outlink host graph ranked by PageRank,
-  * GPT-style context-window blocking, freshness-decay weighting, and
-  * the Gopher within-doc repetition bundle.
+/** Crawl and stream-shaping queries: intra-host duplication, host
+  * language composition, anchor text and outlink extraction over the
+  * synthetic crawl (`SynthUrlSql`/`LinkHtmlSql`, whose host graph
+  * [[GraphQueries]] ranks), GPT-style context-window blocking,
+  * freshness-decay weighting, the Gopher within-doc repetition bundle,
+  * dialog and prompt dedup, PII screens, and the Bloom/count-min
+  * membership sketches.
   *
-  * Same oracle discipline as the earlier batches: integer arithmetic
-  * wherever a float would be order- or rounding-sensitive, md5-hash
-  * determinism for every sampling decision, and DuckDB mirrors that
-  * replay the identical math (iterative rankings unroll as chained
-  * CTEs — the q125/q148 technique).
+  * Oracle discipline: integer arithmetic wherever a float would be
+  * order- or rounding-sensitive, md5-hash determinism for every
+  * sampling decision, and DuckDB mirrors that replay the identical
+  * math.
   */
 object CrawlQueries {
   import Tables._
@@ -55,6 +57,32 @@ object CrawlQueries {
         (CASE WHEN doc_id % 4 = 1
               THEN ' <a rel="x" href="https://attr.example.com/y">attr</a>'
               ELSE '' END)"""
+
+  /** The synthetic crawl's pages (`url`, `html`) and their outlink
+    * host graph, shared by the host-graph queries (q172, q183, q220 in
+    * [[GraphQueries]], q231 here): `hostGraphCtes` is the oracle's
+    * rendering of [[ops.Web.outlinkHostEdges]] over `crawlPages` —
+    * pages `u`, hrefs `x`, resolved destination hosts `r`, distinct
+    * cross-host edges `e`.
+    */
+  private[graft] def crawlPages(s: SparkSession, d: String): DataFrame =
+    spread(documents(s, d))
+      .withColumn("url", expr(SynthUrlSql))
+      .withColumn("html", expr(LinkHtmlSql))
+  private[graft] val hostGraphCtes = s"""
+        WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
+                          $LinkHtmlSql AS html
+                   FROM documents),
+        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
+                '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
+              FROM u),
+        r AS (SELECT src,
+                CASE WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
+                     THEN lower(regexp_extract(href, '${graft.ops.Web.HostRegex}', 1))
+                     ELSE src END AS dst
+              FROM x),
+        e AS (SELECT DISTINCT src, dst FROM r
+              WHERE src <> '' AND dst <> '' AND src <> dst),"""
 
   // plant-id collision guards ride Tables.guardPlantIds (plan-folded)
 
@@ -142,36 +170,6 @@ object CrawlQueries {
           ELSE '?UTM_Campaign=x&gclid'
          END)"""
 
-  // One HITS iteration as chained CTEs (the integer normalize-by-
-  // micro-total form of ops.Graph.hits): ar/at = raw authority sums +
-  // total, a = normalized over the full node set; hr/ht/h mirror for
-  // hubs. Every SUM casts to BIGINT up front (DuckDB SUM(BIGINT) is
-  // HUGEINT, a representation mismatch the checker flags).
-  private def hitsIter(i: Int): String = s"""
-        ar$i AS (SELECT e.dst AS node, CAST(SUM(h.h) AS BIGINT) AS s
-                 FROM e JOIN h${i - 1} h ON h.node = e.src GROUP BY e.dst),
-        at$i AS (SELECT CAST(COALESCE(SUM(s), 0) AS BIGINT) AS t FROM ar$i),
-        a$i AS (SELECT n.node,
-                  CAST(COALESCE(ar.s, 0) // greatest(t // 1000000, 1) AS BIGINT) AS a
-                FROM n LEFT JOIN ar$i ar ON ar.node = n.node CROSS JOIN at$i),
-        hr$i AS (SELECT e.src AS node, CAST(SUM(a.a) AS BIGINT) AS s
-                 FROM e JOIN a$i a ON a.node = e.dst GROUP BY e.src),
-        ht$i AS (SELECT CAST(COALESCE(SUM(s), 0) AS BIGINT) AS t FROM hr$i),
-        h$i AS (SELECT n.node,
-                  CAST(COALESCE(hr.s, 0) // greatest(t // 1000000, 1) AS BIGINT) AS h
-                FROM n LEFT JOIN hr$i hr ON hr.node = n.node CROSS JOIN ht$i)"""
-
-  // One integer-PageRank iteration over host-string nodes (the q125
-  // milli-unit recipe, node type changed).
-  private def prIter(prev: String, name: String): String = s"""
-        $name AS (SELECT n.node,
-                    CAST(150 + (850 * COALESCE(s.s, 0)) // 1000 AS BIGINT) AS pr
-                  FROM n LEFT JOIN (
-                    SELECT e.dst AS node, CAST(SUM(p.pr // d.deg) AS BIGINT) AS s
-                    FROM e JOIN $prev p ON p.node = e.src
-                    JOIN deg d ON d.src = e.src GROUP BY e.dst) s
-                  ON s.node = n.node)"""
-
   val all: Seq[QueryDef] = Seq(
 
     // Intra-host exact-duplication report ([[ops.Web.hostDupStats]]):
@@ -234,79 +232,6 @@ object CrawlQueries {
           spread(documents(s, d)).withColumn("url", expr(SynthUrlSql)),
           "url", "lang")
         .orderBy("host", "lang")),
-
-    // HITS hubs and authorities ([[ops.Graph.hits]]) over the DIRECTED
-    // customer -> supplier trade graph (the q148 graph): customers are
-    // pure hubs, suppliers pure authorities — the bipartite shape HITS
-    // separates and PageRank conflates. 3 fixed iterations in integer
-    // micro-units; the normalizer divides the TOTAL down to micro-scale
-    // first (`raw div max(1, total div 1e6)`), so no intermediate ever
-    // multiplies an unbounded sum — overflow-safe to ~9e12 nodes. The
-    // oracle unrolls all 3 iterations as chained CTEs, bit-exact.
-    QueryDef("q171_hits",
-      Some(s"""
-        WITH e AS (SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                   FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM n),
-        ${hitsIter(1)},${hitsIter(2)},${hitsIter(3)}
-        SELECT n.node, h3.h AS hub, a3.a AS auth
-        FROM n JOIN h3 ON h3.node = n.node JOIN a3 ON a3.node = n.node
-        ORDER BY n.node"""),
-      (s0, d) => {
-        // fixed-iter rank loop: build on the AQE-off child session
-        // ([[Sessions.loopSession]] — measured rationale there)
-        val s = graft.Sessions.loopSession(s0)
-        val o = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val l = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val edges = l.join(o, l("l_orderkey") === o("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct()
-        graft.ops.Graph.hits(edges, iters = 3).orderBy("node")
-      }),
-
-    // Crawl-derived host authority ([[ops.Web.outlinkHostEdges]] +
-    // [[ops.Graph.pageRank]]): hrefs lifted from raw page HTML,
-    // absolute links resolving to their own host and relative links to
-    // the page's host (dropping as self-edges), distinct cross-host
-    // edges ranked by 3-iteration integer PageRank — the Common-Crawl-
-    // style domain ranking that seeds crawl frontiers and source
-    // weights. The synthetic pages link each host to the source's next
-    // host (a ring) and every third page to a shared hub, which must
-    // surface as the top-ranked authority. The oracle replays the
-    // extraction, the resolution rule, and the unrolled iterations.
-    QueryDef("q172_host_graph_rank",
-      Some(s"""
-        WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
-                          $LinkHtmlSql AS html
-                   FROM documents),
-        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
-                '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
-              FROM u),
-        r AS (SELECT src,
-                CASE WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
-                     THEN lower(regexp_extract(href, '${graft.ops.Web.HostRegex}', 1))
-                     ELSE src END AS dst
-              FROM x),
-        e AS (SELECT DISTINCT src, dst FROM r
-              WHERE src <> '' AND dst <> '' AND src <> dst),
-        n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
-        p0 AS (SELECT node, CAST(1000 AS BIGINT) AS pr FROM n),
-        ${prIter("p0", "p1")},${prIter("p1", "p2")},${prIter("p2", "p3")}
-        SELECT node AS host, pr FROM p3 ORDER BY host"""),
-      (s0, d) => {
-        // fixed-iter rank loop: AQE-off child session (Sessions.loopSession)
-        val s = graft.Sessions.loopSession(s0)
-        val pages = spread(documents(s, d))
-          .withColumn("url", expr(SynthUrlSql))
-          .withColumn("html", expr(LinkHtmlSql))
-        graft.ops.Graph.pageRank(
-            graft.ops.Web.outlinkHostEdges(pages, "url", "html"), iters = 3)
-          .select(col("node").as("host"), col("pr"))
-          .orderBy("host")
-      }),
 
     // GPT-style context-window blocking ([[ops.Sampling
     // .contextBlocks]]): the corpus as ONE token stream in doc_id
@@ -707,54 +632,6 @@ object CrawlQueries {
           .orderBy("doc_id")
       }),
 
-    // Authority-weighted sampling ([[ops.Web.authorityWeightedSample]]):
-    // the full crawl-composition — outlink host graph (q172's pages)
-    // -> integer PageRank -> per-host keep_ppm = (pr * 1e6) div
-    // max_pr -> md5-slot draw per doc. The oracle replays the whole
-    // chain: extraction, resolution, three unrolled iterations, the
-    // normalization, and the slot filter.
-    QueryDef("q183_authority_sample",
-      Some(s"""
-        WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
-                          $LinkHtmlSql AS html
-                   FROM documents),
-        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
-                '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
-              FROM u),
-        r AS (SELECT src,
-                CASE WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
-                     THEN lower(regexp_extract(href, '${graft.ops.Web.HostRegex}', 1))
-                     ELSE src END AS dst
-              FROM x),
-        e AS (SELECT DISTINCT src, dst FROM r
-              WHERE src <> '' AND dst <> '' AND src <> dst),
-        n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
-        p0 AS (SELECT node, CAST(1000 AS BIGINT) AS pr FROM n),
-        ${prIter("p0", "p1")},${prIter("p1", "p2")},${prIter("p2", "p3")},
-        mx AS (SELECT MAX(pr) AS mx FROM p3),
-        kp AS (SELECT node AS host, CAST((pr * 1000000) // greatest(mx, 1) AS BIGINT) AS keep_ppm
-               FROM p3 CROSS JOIN mx),
-        dh AS (SELECT doc_id, ${host("url")} AS host FROM u)
-        SELECT dh.doc_id, dh.host, kp.keep_ppm
-        FROM dh JOIN kp USING (host)
-        WHERE ${hash32("CAST(dh.doc_id AS VARCHAR)")} % 1000000 < kp.keep_ppm
-        ORDER BY dh.doc_id"""),
-      (s0, d) => {
-        // fixed-iter rank loop: AQE-off child session (Sessions.loopSession)
-        val s = graft.Sessions.loopSession(s0)
-        val pages = spread(documents(s, d))
-          .withColumn("url", expr(SynthUrlSql))
-          .withColumn("html", expr(LinkHtmlSql))
-        val ranks = graft.ops.Graph.pageRank(
-            graft.ops.Web.outlinkHostEdges(pages, "url", "html"), iters = 3)
-          .select(col("node").as("host"), col("pr"))
-        graft.ops.Web.authorityWeightedSample(
-            pages.select("doc_id", "url"), "doc_id", "url", ranks)
-          .select("doc_id", "host", "keep_ppm")
-          .orderBy("doc_id")
-      }),
-
     // Degree-distribution audit ([[ops.Graph.degreeHistogram]]): node
     // counts per power-of-two degree band, out and in separately,
     // over the directed trade graph — the power-law / hub-skew report
@@ -779,16 +656,8 @@ object CrawlQueries {
         SELECT direction, band_lo, CAST(COUNT(*) AS BIGINT) AS n_nodes
         FROM b GROUP BY direction, band_lo
         ORDER BY direction, band_lo"""),
-      (s, d) => {
-        val o = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val l = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val edges = l.join(o, l("l_orderkey") === o("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct()
-        graft.ops.Graph.degreeHistogram(edges)
-          .orderBy("direction", "band_lo")
-      }),
+      (s, d) => graft.ops.Graph.degreeHistogram(GraphQueries.tradeEdges(s, d))
+        .orderBy("direction", "band_lo")),
 
     // Bloom membership sketch ([[ops.Sketches.bloomSketch]] /
     // [[ops.Sketches.bloomMightContain]]): per-source 1024-bit bitmap
@@ -1015,67 +884,6 @@ object CrawlQueries {
         .select("doc_id", "lang", "n_tok", "tok_before")
         .orderBy("doc_id")),
 
-    // Trusted-frontier ranking ([[ops.Graph.personalizedPageRank]]
-    // over [[ops.Web.outlinkHostEdges]]): TrustRank seeded at the
-    // curated sources' hosts (src0-src2 — the same slice q218 trains
-    // its reference LM on), propagated 3 damped hops over the outlink
-    // host graph. Hosts the curated sites link into (the hub) inherit
-    // trust; hosts unreachable from any seed score exactly 0 — the
-    // crawl-frontier priority signal, derived instead of hand-kept.
-    // The oracle replays the graph build and the seed-concentrated
-    // base through the unrolled iterations.
-    QueryDef("q220_trusted_frontier",
-      Some {
-        def iter(prev: String, name: String) = s"""
-        $name AS (SELECT s.node,
-                    CAST(CASE WHEN s.seed THEN (150 * t.n) // t.ns ELSE 0 END
-                         + (850 * COALESCE(c.cs, 0)) // 1000 AS BIGINT) AS pr
-                  FROM s CROSS JOIN t LEFT JOIN (
-                    SELECT e.dst AS node, SUM(p.pr // d.deg) AS cs
-                    FROM e JOIN $prev p ON p.node = e.src
-                    JOIN deg d ON d.src = e.src GROUP BY e.dst) c
-                  ON c.node = s.node)"""
-        s"""
-        WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
-                          $LinkHtmlSql AS html
-                   FROM documents),
-        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
-                '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
-              FROM u),
-        r AS (SELECT src,
-                CASE WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
-                     THEN lower(regexp_extract(href, '${graft.ops.Web.HostRegex}', 1))
-                     ELSE src END AS dst
-              FROM x),
-        e AS (SELECT DISTINCT src, dst FROM r
-              WHERE src <> '' AND dst <> '' AND src <> dst),
-        s AS (SELECT node, regexp_matches(node, '^src[0-2]-') AS seed
-              FROM (SELECT src AS node FROM e UNION SELECT dst FROM e)),
-        t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                     CAST(SUM(CASE WHEN seed THEN 1 ELSE 0 END) AS BIGINT) AS ns
-              FROM s),
-        deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
-        p0 AS (SELECT node, CAST(CASE WHEN seed THEN (1000 * t.n) // t.ns
-                                      ELSE 0 END AS BIGINT) AS pr
-               FROM s CROSS JOIN t),
-        ${iter("p0", "p1")},${iter("p1", "p2")},${iter("p2", "p3")}
-        SELECT node AS host, pr FROM p3 ORDER BY host"""
-      },
-      (s0, d) => {
-        // fixed-iter rank loop: AQE-off child session (Sessions.loopSession)
-        val s = graft.Sessions.loopSession(s0)
-        val pages = spread(documents(s, d))
-          .withColumn("url", expr(SynthUrlSql))
-          .withColumn("html", expr(LinkHtmlSql))
-        val edges = graft.ops.Web.outlinkHostEdges(pages, "url", "html")
-        val seeds = edges.select(col("src").as("node"))
-          .union(edges.select(col("dst").as("node")))
-          .distinct().filter(col("node").rlike("^src[0-2]-"))
-        graft.ops.Graph.personalizedPageRank(edges, seeds, iters = 3)
-          .select(col("node").as("host"), col("pr"))
-          .orderBy("host")
-      }),
-
     // Per-host triangle counts ([[ops.Graph.triangleCounts]]) over the
     // q172 outlink host graph read undirected — the local clustering
     // signal link-farm screens key on (spam rings are triangle-dense).
@@ -1085,20 +893,7 @@ object CrawlQueries {
     // at its lowest-ordered vertex. The oracle replays the edge
     // extraction, the orientation, the wedge join, and the closure.
     QueryDef("q231_host_triangles",
-      Some(s"""
-        WITH u AS (SELECT doc_id, source, $SynthUrlSql AS url,
-                          $LinkHtmlSql AS html
-                   FROM documents),
-        x AS (SELECT ${host("url")} AS src, unnest(regexp_extract_all(html,
-                '${graft.ops.Web.sqlPatternLit(graft.ops.Web.HrefRegex)}', 1)) AS href
-              FROM u),
-        r AS (SELECT src,
-                CASE WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
-                     THEN lower(regexp_extract(href, '${graft.ops.Web.HostRegex}', 1))
-                     ELSE src END AS dst
-              FROM x),
-        e AS (SELECT DISTINCT src, dst FROM r
-              WHERE src <> '' AND dst <> '' AND src <> dst),
+      Some(hostGraphCtes + s"""
         und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
                 FROM e WHERE src <> dst),
         deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg
@@ -1123,9 +918,7 @@ object CrawlQueries {
         SELECT node AS host, CAST(COUNT(*) AS BIGINT) AS n_tri
         FROM nn GROUP BY node ORDER BY host"""),
       (s, d) => {
-        val pages = spread(documents(s, d))
-          .withColumn("url", expr(SynthUrlSql))
-          .withColumn("html", expr(LinkHtmlSql))
+        val pages = crawlPages(s, d)
         graft.ops.Graph.triangleCounts(
             graft.ops.Web.outlinkHostEdges(pages, "url", "html"))
           .select(col("node").as("host"), col("n_tri"))

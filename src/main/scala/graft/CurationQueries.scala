@@ -1,11 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-9 curation queries (q140+): exact n-gram decontamination,
-  * bigram-model information scoring, BPE merge-pair mining,
+/** Curation queries: exact n-gram decontamination, bigram-model
+  * information scoring, BPE merge-pair mining and tokenizer training,
   * target-distribution mixing, embedding-diversity audit, degenerate-
-  * repetition screening, and quantile bucketing.
+  * repetition screening, quantile bucketing, host and URL policy,
+  * ExactSubstr span-level dedup (q264/q266/q267), and the multimodal
+  * near-dup family over one stub-decoded media corpus — image pHash
+  * (q151), cross-modal agreement (q162), video frame vote and banded
+  * near-dup (q163/q303), audio banded near-dup (q305).
   *
   * Same oracle discipline as PipelineQueries/AnalysisQueries: integer
   * arithmetic wherever a float would be order- or rounding-sensitive
@@ -203,8 +208,337 @@ object CurationQueries {
     "the quick brown fox jumps over the lazy dog while seven wizards brew strong potions at dawnxxxxxxxxxx"
   private val PhashPlantB =
     "the quick brown fox jumps over the lazy dog while Qeven wizards brew strong potions at dawnxxxxxxxxxx"
+  private val PhashPlants =
+    Seq(910001L -> PhashPlantA, 910002L -> PhashPlantB, 910003L -> PhashPlantA)
+  private val VideoPlants =
+    Seq(930001L -> VideoPlantA, 930002L -> VideoPlantB, 930003L -> VideoPlantA)
 
-  val all: Seq[QueryDef] = Seq(
+  /** The media corpus the multimodal queries (q151, q162, q163, q238,
+    * q303, q305) decode: every document's text as a binary payload,
+    * plus `plants` — `(id, payload)` witnesses past the corpus id
+    * range, collision-guarded in the plan by [[Tables.guardPlantIds]].
+    * `mediaCorpusSql` is the oracle's `corpus` CTE over the same rows.
+    */
+  private[graft] def mediaCorpus(s: SparkSession, d: String,
+      plants: Seq[(Long, String)] = Nil): Dataset[Multimodal.MediaDoc] = {
+    import s.implicits._
+    val docs = spread(documents(s, d))
+    val corpus =
+      if (plants.isEmpty) docs
+      else guardPlantIds(docs.select("doc_id", "text"), plants.map(_._1))
+        .unionAll(plants.toDF("doc_id", "text"))
+    corpus.select(col("doc_id"), col("text").cast("binary").as("content"))
+      .as[Multimodal.MediaDoc]
+  }
+  private def mediaCorpusSql(plants: Seq[(Long, String)]): String =
+    plants.map { case (id, text) => s"(CAST($id AS BIGINT), '$text')" }
+      .mkString("""
+        WITH corpus AS (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT * FROM (VALUES
+            """, ",\n            ", ") v(doc_id, text)),")
+
+  /** The banded frame near-dup oracle tail (q303, q305) over per-frame
+    * signatures `sig(doc_id, i, lo, hi)`: 4 sixteen-bit chunks, the
+    * df cap, position-free chunk matches verified by popcount
+    * distance <= 3, and the >= 2 close a-side frames vote.
+    */
+  private val frameBandTailSql = """
+        ch AS (SELECT doc_id, i, lo, hi, c,
+                 CASE WHEN c < 2 THEN (lo >> (c * 16)) & 65535
+                      ELSE (hi >> ((c - 2) * 16)) & 65535 END AS chunk
+               FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS c)),
+        okc AS (SELECT ch.* FROM ch
+                JOIN (SELECT c, chunk FROM ch GROUP BY c, chunk
+                      HAVING COUNT(*) <= 1000) k
+                  ON ch.c = k.c AND ch.chunk = k.chunk),
+        mt AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id,
+                      x.i AS fa, y.i AS fb
+               FROM okc x JOIN okc y
+                 ON x.c = y.c AND x.chunk = y.chunk
+                    AND x.doc_id < y.doc_id
+               WHERE bit_count(xor(x.lo, y.lo))
+                     + bit_count(xor(x.hi, y.hi)) <= 3)
+        SELECT a_id, b_id, CAST(COUNT(DISTINCT fa) AS BIGINT) AS n_close
+        FROM mt GROUP BY a_id, b_id HAVING COUNT(DISTINCT fa) >= 2
+        ORDER BY a_id, b_id"""
+
+  // Shared q264/q266/q267 oracle scaffolding: the planted-copy corpus
+  // (source travels for q267's profile; wl/spq ignore it) and the
+  // span pipeline — window hashes, corpus-wide counts, islands.
+  private val CorpusCte = """
+        corpus AS (SELECT doc_id, text, source FROM documents
+                UNION ALL SELECT 9100001, 'a0 a1 d0 d1 d2 d3 d4 d5 d6 d7 d8 d9 da db a2 a3', 'planted'
+                UNION ALL SELECT 9100002, 'b0 b1 b2 d0 d1 d2 d3 d4 d5 d6 d7 d8 d9 da db b3', 'planted')"""
+
+  private def spanCtes: String = s"""
+        wl AS (SELECT doc_id AS id, string_split(text, ' ') AS l FROM corpus),
+        pp AS (SELECT id, l, unnest(range(1, len(l) - 6)) AS pos
+               FROM wl WHERE len(l) >= 8),
+        an AS (SELECT id, pos,
+                 ${hash60("array_to_string(l[pos:pos+7], ' ')")} AS h
+               FROM pp),
+        oc AS (SELECT h, COUNT(*) AS occ FROM an GROUP BY h),
+        du AS (SELECT id, pos FROM an JOIN oc USING (h) WHERE occ >= 2),
+        fl AS (SELECT id, pos,
+                 CASE WHEN pos <= MAX(pos + 8) OVER (PARTITION BY id
+                   ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND 1 PRECEDING) THEN 0 ELSE 1 END AS f
+               FROM du),
+        il AS (SELECT id, pos,
+                 SUM(f) OVER (PARTITION BY id ORDER BY pos) AS island
+               FROM fl),
+        spq AS (SELECT id, CAST(MIN(pos) AS BIGINT) AS span_start,
+                  CAST(MAX(pos) + 8 AS BIGINT) AS span_end
+                FROM il GROUP BY id, island)"""
+
+  private def plantedCorpus(s: org.apache.spark.sql.SparkSession,
+                            d: String): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    spread(documents(s, d)).select("doc_id", "text", "source")
+      .unionAll(Seq(
+        (9100001L, "a0 a1 d0 d1 d2 d3 d4 d5 d6 d7 d8 d9 da db a2 a3",
+          "planted"),
+        (9100002L, "b0 b1 b2 d0 d1 d2 d3 d4 d5 d6 d7 d8 d9 da db b3",
+          "planted"))
+        .toDF("doc_id", "text", "source"))
+  }
+
+  /** ExactSubstr span-level dedup ([[ops.SpanDedup.duplicatedSpans]]):
+    * maximal token spans covered by a corpus-duplicated 8-token
+    * window, merged per document. Two planted docs share a 12-token
+    * run embedded at DIFFERENT offsets in different surroundings —
+    * document-level dedup scores them low (4/16 words differ plus
+    * order), span-level flags exactly the copied run: [3,15) and
+    * [4,16). The oracle replays window hashes, corpus-wide counts,
+    * and the gaps-and-islands merge verbatim.
+    */
+  private lazy val q264: QueryDef =
+    QueryDef("q264_exact_substr_spans",
+      Some(s"""
+        WITH $CorpusCte, $spanCtes
+        SELECT id AS doc_id, span_start, span_end,
+               span_end - span_start AS span_tokens
+        FROM spq
+        ORDER BY doc_id, span_start"""),
+      (s, d) =>
+        graft.ops.SpanDedup.duplicatedSpans(plantedCorpus(s, d),
+            "doc_id", "text", l = 8)
+          .orderBy("doc_id", "span_start"))
+
+  /** ExactSubstr REMOVAL — the composition Lee et al. actually run:
+    * cut every corpus-duplicated span out of the text and re-emit the
+    * cleaned corpus (plus how much was cut). Engine shape: q264's
+    * spans collected per doc (few per doc) joined back on doc_id, one
+    * scan-side token filter against the bounded span list — no second
+    * corpus shuffle. The oracle takes the INDEPENDENT route (position
+    * fan-out, cover anti-join, ordered string_agg), so the two
+    * formulations check each other.
+    */
+  private lazy val q266: QueryDef =
+    QueryDef("q266_exact_substr_removal",
+      Some(s"""
+        WITH $CorpusCte, $spanCtes,
+        tp AS (SELECT id, unnest(range(1, len(l) + 1)) AS pos, l FROM wl),
+        tp2 AS (SELECT id, pos, l[pos] AS t FROM tp),
+        cov AS (SELECT DISTINCT t.id, t.pos FROM tp2 t JOIN spq s
+                ON s.id = t.id AND t.pos >= s.span_start
+                   AND t.pos < s.span_end),
+        kept AS (SELECT t.id, t.pos, t.t FROM tp2 t
+                 LEFT JOIN cov c ON c.id = t.id AND c.pos = t.pos
+                 WHERE c.pos IS NULL),
+        agg AS (SELECT id, COUNT(*) AS n_kept,
+                  string_agg(t, ' ' ORDER BY pos) AS clean_text
+                FROM kept GROUP BY id)
+        SELECT w.id AS doc_id, CAST(len(w.l) AS BIGINT) AS n_tokens,
+               CAST(len(w.l) - COALESCE(a.n_kept, 0) AS BIGINT)
+                 AS n_removed_tokens,
+               COALESCE(a.clean_text, '') AS clean_text
+        FROM wl w LEFT JOIN agg a ON a.id = w.id
+        ORDER BY doc_id"""),
+      (s, d) => {
+        val corpus = plantedCorpus(s, d)
+        val spans = graft.ops.SpanDedup.duplicatedSpans(corpus,
+          "doc_id", "text", l = 8)
+        val spanArr = spans.groupBy("doc_id")
+          .agg(collect_list(struct(col("span_start"), col("span_end")))
+            .as("_spans"))
+        corpus.join(spanArr, Seq("doc_id"), "left")
+          .withColumn("_l", split(col("text"), " "))
+          .withColumn("_kept", expr(
+            "filter(transform(_l, (x, i) -> " +
+              "struct(x AS t, CAST(i + 1 AS BIGINT) AS p)), " +
+              "s -> _spans IS NULL OR NOT exists(_spans, " +
+              "sp -> s.p >= sp.span_start AND s.p < sp.span_end))"))
+          .select(col("doc_id"),
+            size(col("_l")).cast("long").as("n_tokens"),
+            (size(col("_l")) - size(col("_kept"))).cast("long")
+              .as("n_removed_tokens"),
+            array_join(expr("transform(_kept, s -> s.t)"), " ")
+              .as("clean_text"))
+          .orderBy("doc_id")
+      })
+
+  /** Span-duplication PROFILE by source — the curation dashboard
+    * number behind the q266 cut: per source, docs, flagged docs,
+    * token totals, duplicated-token ppm. One bounded aggregate over
+    * q264's spans joined to the corpus dimension row.
+    */
+  private lazy val q267: QueryDef =
+    QueryDef("q267_span_dup_profile",
+      Some(s"""
+        WITH $CorpusCte, $spanCtes,
+        ds AS (SELECT id, SUM(span_end - span_start) AS dup_tokens
+               FROM spq GROUP BY id),
+        dt AS (SELECT w.id, len(w.l) AS n_tokens,
+                 COALESCE(ds.dup_tokens, 0) AS dup_tokens
+               FROM wl w LEFT JOIN ds ON ds.id = w.id)
+        SELECT c.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(CASE WHEN dt.dup_tokens > 0 THEN 1 ELSE 0 END)
+                 AS BIGINT) AS n_docs_flagged,
+               CAST(SUM(dt.n_tokens) AS BIGINT) AS n_tokens,
+               CAST(SUM(dt.dup_tokens) AS BIGINT) AS n_dup_tokens,
+               CAST(SUM(dt.dup_tokens) * 1000000 // SUM(dt.n_tokens)
+                 AS BIGINT) AS dup_ppm
+        FROM dt JOIN corpus c ON c.doc_id = dt.id
+        GROUP BY c.source
+        ORDER BY c.source"""),
+      (s, d) => {
+        val corpus = plantedCorpus(s, d)
+        val perDoc = graft.ops.SpanDedup.duplicatedSpans(corpus,
+            "doc_id", "text", l = 8)
+          .groupBy("doc_id")
+          .agg(sum(col("span_end") - col("span_start")).as("_dup"))
+        corpus
+          .withColumn("_nt", size(split(col("text"), " ")).cast("long"))
+          .join(perDoc, Seq("doc_id"), "left")
+          .withColumn("_dup", coalesce(col("_dup"), lit(0L)))
+          .groupBy("source")
+          .agg(count(lit(1)).cast("long").as("n_docs"),
+            sum(when(col("_dup") > 0, 1).otherwise(0)).cast("long")
+              .as("n_docs_flagged"),
+            sum(col("_nt")).cast("long").as("n_tokens"),
+            sum(col("_dup")).cast("long").as("n_dup_tokens"))
+          .withColumn("dup_ppm",
+            expr("n_dup_tokens * 1000000L div n_tokens"))
+          .orderBy("source")
+      })
+
+  // q303 planted "videos" (97-byte payloads; the stub decoder reads
+  // nf = 1 + 97 % 7 = 7 frames of slice 13, sampling frames 0/2/4/6):
+  // B = A with one byte edited inside frame 2 (frames 0/4/6 survive at
+  // distance 0; frame 2's signature moves > 3 bits), D = A rotated
+  // left by TWO slices — the cross-container plant: D's sampled frame
+  // i carries A's frame i+2, so D0~A2, D2~A4, D4~A6 match at distance
+  // 0 but at DIFFERENT positions, which the exact q163 vote cannot
+  // see. Ids sit beyond the corpus range and beyond q163's plants.
+  private val BandPlants = Seq(940001L -> VideoPlantA, 940002L -> VideoPlantB,
+    940003L ->
+      "over the lazy dog while seven wizards brew strong potions at dawnxxxxxxthe quick brown fox jumps")
+
+  /** Banded cross-container video near-dup
+    * ([[Multimodal.frameSignatures]] ->
+    * [[Multimodal.frameBandNearDup]]): per-frame dHash signatures band
+    * into 4 sixteen-bit chunks (the simhash64 pigeonhole — distance
+    * <= 3 forces a shared chunk), frame pairs meet POSITION-FREE on
+    * (chunk_idx, chunk) under a df cap, verify by exact popcount
+    * distance, and videos pair on >= 2 distinct close a-side frames.
+    * Plants: (A,B) re-encode (3 same-position frames), (A,D) remux
+    * (3 SHIFTED frames — invisible to q163), (B,D) both (2 frames).
+    * The oracle replays slicing, signatures, banding, the cap, the
+    * popcount verify, and the vote.
+    */
+  private lazy val q303: QueryDef =
+    QueryDef("q303_video_band_neardup",
+      Some(mediaCorpusSql(BandPlants) + s"""
+        m AS (SELECT doc_id, text,
+                     1 + (octet_length(CAST(text AS BLOB)) % 7) AS nf,
+                     octet_length(CAST(text AS BLOB))
+                       // (1 + (octet_length(CAST(text AS BLOB)) % 7)) AS sl
+              FROM corpus),
+        f AS (SELECT doc_id, text, sl, unnest(range(0, nf, 2)) AS i FROM m),
+        px AS (SELECT doc_id, CAST(i AS INTEGER) AS i,
+                 [CASE WHEN sl = 0 THEN 0
+                       ELSE ascii(substr(text, i*sl + ((k*37) % sl) + 1, 1)) END
+                  for k in range(0, 72)] AS p
+               FROM f),
+        sig AS (SELECT doc_id, i,
+                  CAST(list_sum([CASE WHEN p[(b//8)*9 + (b%8) + 1] > p[(b//8)*9 + (b%8) + 2]
+                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
+                        for b in range(0, 32)]) AS BIGINT) AS lo,
+                  CAST(list_sum([CASE WHEN p[((b+32)//8)*9 + ((b+32)%8) + 1] > p[((b+32)//8)*9 + ((b+32)%8) + 2]
+                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
+                        for b in range(0, 32)]) AS BIGINT) AS hi
+                FROM px),""" + frameBandTailSql),
+      (s, d) => {
+        val media = mediaCorpus(s, d, BandPlants)
+        Multimodal.frameBandNearDup(
+            Multimodal.frameSignatures(media), "doc_id",
+            maxDist = 3, minShared = 2)
+          .orderBy("a_id", "b_id")
+      })
+
+  // q305 planted "audio clips" (97-byte payloads; the stub decoder
+  // reads frame i's energy as byte (i*37) mod 97, 128 frames): B = A
+  // with ONE byte edited (a re-encode-shaped localized change — each
+  // contour window crossing the two affected frames moves <= 2 bits),
+  // D = A rotated left by 5 bytes, which under the stub's (i*37) mod
+  // 97 walk is EXACTLY an 8-frame shift of A's energy sequence
+  // (37*8 = 296 = 5 mod 97) — the trim/remux plant: D's windows equal
+  // A's at positions offset by one stride, invisible to any
+  // same-position vote, caught position-free. Verified by simulation:
+  // (A,B) pairs at 8 a-side windows, (A,D) at 7, (B,D) at 7.
+  private val AudPlantA =
+    "silver drums echo across the midnight harbor while nine quiet sailors hum a slow farewell tunexx" + "x"
+  require(AudPlantA.length == 97 && AudPlantA(40) != 'Q',
+    "q305 plant must be 97 bytes with a real byte-40 edit")
+  private val AudPlants = Seq(950001L -> AudPlantA,
+    950002L -> AudPlantA.updated(40, 'Q'),
+    950003L -> (AudPlantA.substring(5) + AudPlantA.substring(0, 5)))
+
+  /** Banded audio near-dup ([[Multimodal.audioFrameEnergies]] ->
+    * [[Multimodal.audioContourSignatures]] ->
+    * [[Multimodal.frameBandNearDup]]) — the modality that completes
+    * the near-dup set (image q151 pHash, video q163 exact vote + q303
+    * banded): 65-frame energy-CONTOUR windows (bit = energy rises,
+    * gain-invariant) at stride 8 band into 4 sixteen-bit chunks, meet
+    * position-free under the df cap, verify by exact popcount, and
+    * clips pair on >= 2 distinct close a-side windows. The oracle
+    * replays the stub byte walk, the contour fold, the banding, the
+    * cap, and the vote over the documents corpus plus the three
+    * plants.
+    */
+  private lazy val q305: QueryDef =
+    QueryDef("q305_audio_band_neardup",
+      Some(mediaCorpusSql(AudPlants) + s"""
+        m AS (SELECT doc_id, text,
+                     octet_length(CAST(text AS BLOB)) AS len FROM corpus),
+        e AS (SELECT doc_id,
+                [CASE WHEN len = 0 THEN 0
+                      ELSE ascii(substr(text, ((k*37) % len) + 1, 1)) END
+                 for k in range(0, 128)] AS es
+              FROM m),
+        w AS (SELECT doc_id, es, unnest(range(0, 64, 8)) AS s FROM e),
+        sig AS (SELECT doc_id, CAST(s AS INTEGER) AS i,
+                  CAST(list_sum([CASE WHEN es[s + k + 2] > es[s + k + 1]
+                        THEN (CAST(1 AS BIGINT) << k) ELSE 0 END
+                        for k in range(0, 32)]) AS BIGINT) AS lo,
+                  CAST(list_sum([CASE WHEN es[s + k + 2] > es[s + k + 1]
+                        THEN (CAST(1 AS BIGINT) << (k - 32)) ELSE 0 END
+                        for k in range(32, 64)]) AS BIGINT) AS hi
+                FROM w),""" + frameBandTailSql),
+      (s, d) => {
+        val media = mediaCorpus(s, d, AudPlants)
+        Multimodal.frameBandNearDup(
+            Multimodal.audioContourSignatures(
+              Multimodal.audioFrameEnergies(media, nFrames = 128).toDF(),
+              stride = 8),
+            "doc_id", maxDist = 3, minShared = 2)
+          .orderBy("a_id", "b_id")
+      })
+
+  val all: Seq[QueryDef] = Seq(q264, q266, q267, q303, q305,
 
     // EXACT n-gram decontamination ([[Dedup.exactNgramOverlap]]): per
     // train doc, the count of its distinct 4-grams appearing anywhere
@@ -425,54 +759,6 @@ object CurationQueries {
           .orderBy("doc_id")
       }),
 
-    // Dangling-mass PageRank ([[ops.Graph.pageRank]] with
-    // `redistributeDangling = true`) over the DIRECTED customer ->
-    // supplier trade graph — every supplier is a sink, the worst case
-    // for the default leak simplification (q125 sidesteps it by
-    // symmetrizing). Each iteration adds the exact integer share
-    // `dm div N` (dm = summed sink rank) to every node before damping,
-    // conserving mass up to the floors; the oracle unrolls 3
-    // iterations with the same all-integer arithmetic, bit-identical.
-    QueryDef("q148_pagerank_dangling",
-      Some {
-        def iter(prev: String, name: String) = s"""
-        $name AS (SELECT n.node,
-                    CAST(150 + (850 * (COALESCE(c.s, 0) + dm.share)) // 1000
-                      AS BIGINT) AS pr
-                  FROM n
-                  LEFT JOIN (SELECT e.dst AS node, SUM(p.pr // d.deg) AS s
-                             FROM e JOIN $prev p ON p.node = e.src
-                             JOIN d ON d.src = e.src
-                             GROUP BY e.dst) c ON c.node = n.node
-                  CROSS JOIN (SELECT COALESCE(SUM(p.pr), 0)
-                                       // (SELECT nv FROM nn) AS share
-                              FROM $prev p JOIN sk ON sk.node = p.node) dm)"""
-        s"""
-        WITH e AS (SELECT DISTINCT o_custkey * 2 AS src,
-                          l_suppkey * 2 + 1 AS dst
-                   FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        d AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
-        n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS nv FROM n),
-        sk AS (SELECT node FROM n WHERE node NOT IN (SELECT src FROM d)),
-        p0 AS (SELECT node, CAST(1000 AS BIGINT) AS pr FROM n),
-        ${iter("p0", "p1")},${iter("p1", "p2")},${iter("p2", "p3")}
-        SELECT node, pr FROM p3 ORDER BY node"""
-      },
-      (s0, d) => {
-        // fixed-iter rank loop: AQE-off child session (Sessions.loopSession)
-        val s = graft.Sessions.loopSession(s0)
-        val o = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val l = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val edges = l.join(o, l("l_orderkey") === o("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct()
-        graft.ops.Graph.pageRank(edges, iters = 3,
-            redistributeDangling = true)
-          .orderBy("node")
-      }),
-
     // Iterated BPE tokenizer training ([[ops.TextStats.bpeTrain]]):
     // the first 8 merge rules in training order — per step, the
     // (count desc, l, r) argmax adjacent-symbol pair under all prior
@@ -524,14 +810,7 @@ object CurationQueries {
     // (dist 0). The oracle replays pixel sampling, both 32-bit halves,
     // chunking, and the verify.
     QueryDef("q151_phash_neardup",
-      Some(s"""
-        WITH corpus AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT * FROM (VALUES
-            (CAST(910001 AS BIGINT), '$PhashPlantA'),
-            (CAST(910002 AS BIGINT), '$PhashPlantB'),
-            (CAST(910003 AS BIGINT), '$PhashPlantA')) v(doc_id, text)),
+      Some(mediaCorpusSql(PhashPlants) + s"""
         px AS (SELECT doc_id,
                  [ascii(substr(text, ((k*37) % greatest(octet_length(CAST(text AS BLOB)), 1)) + 1, 1))
                   for k in range(0, 72)] AS p
@@ -557,19 +836,9 @@ object CurationQueries {
                  CAST(bit_count(xor(xlo, ylo)) + bit_count(xor(xhi, yhi)) AS INTEGER) AS dist
           FROM cand) WHERE dist <= 3 ORDER BY a_id, b_id"""),
       (s, d) => {
-        import s.implicits._
-        val planted = Seq((910001L, PhashPlantA), (910002L, PhashPlantB),
-          (910003L, PhashPlantA)).toDF("doc_id", "text")
-        // plan-folded collision guard (the q101 discipline, zero jobs)
-        val corpus = guardPlantIds(
-            spread(documents(s, d)).select("doc_id", "text"),
-            Seq(910001L, 910002L, 910003L))
-          .unionAll(planted)
-        val media = corpus
-          .select(col("doc_id"), col("text").cast("binary").as("content"))
-          .as[Multimodal.MediaDoc]
         Pipeline.simhash64Pairs(
-            Multimodal.perceptualHash(media), "doc_id", maxDist = 3)
+            Multimodal.perceptualHash(mediaCorpus(s, d, PhashPlants)),
+            "doc_id", maxDist = 3)
           .orderBy("a_id", "b_id")
       }),
 
@@ -950,11 +1219,7 @@ object CurationQueries {
               FROM iv JOIN tv ON iv.doc_id = tv.vec_id)
         SELECT doc_id, cosine FROM j WHERE cosine >= 0.05 ORDER BY doc_id"""),
       (s, d) => {
-        import s.implicits._
-        val media = spread(documents(s, d))
-          .select(col("doc_id"), col("text").cast("binary").as("content"))
-          .as[Multimodal.MediaDoc]
-        Multimodal.crossModalAgreement(media, embeddings(s, d),
+        Multimodal.crossModalAgreement(mediaCorpus(s, d), embeddings(s, d),
             "vec_id", "embedding", minCos = 0.05)
           .orderBy("doc_id")
       }),
@@ -969,14 +1234,7 @@ object CurationQueries {
     // oracle replays slicing, per-frame sampling, both signature
     // halves, the df cap, and the vote.
     QueryDef("q163_video_frame_neardup",
-      Some(s"""
-        WITH corpus AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT * FROM (VALUES
-            (CAST(930001 AS BIGINT), '$VideoPlantA'),
-            (CAST(930002 AS BIGINT), '$VideoPlantB'),
-            (CAST(930003 AS BIGINT), '$VideoPlantA')) v(doc_id, text)),
+      Some(mediaCorpusSql(VideoPlants) + s"""
         m AS (SELECT doc_id, text,
                      1 + (octet_length(CAST(text AS BLOB)) % 7) AS nf,
                      octet_length(CAST(text AS BLOB))
@@ -1008,15 +1266,7 @@ object CurationQueries {
         GROUP BY x.doc_id, y.doc_id HAVING COUNT(DISTINCT x.i) >= 2
         ORDER BY a_id, b_id"""),
       (s, d) => {
-        import s.implicits._
-        val planted = Seq((930001L, VideoPlantA), (930002L, VideoPlantB),
-          (930003L, VideoPlantA)).toDF("doc_id", "text")
-        val media = guardPlantIds(
-            spread(documents(s, d)).select("doc_id", "text"),
-            Seq(930001L, 930002L, 930003L))
-          .unionAll(planted)
-          .select(col("doc_id"), col("text").cast("binary").as("content"))
-          .as[Multimodal.MediaDoc]
+        val media = mediaCorpus(s, d, VideoPlants)
         Multimodal.frameVoteNearDup(
             Multimodal.frameSignatures(media), "doc_id", minShared = 2)
           .orderBy("a_id", "b_id")

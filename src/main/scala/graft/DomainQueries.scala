@@ -2,12 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-11 batch (q189+): PSL-backed registrable-domain (eTLD+1)
-  * curation — the ownership-boundary upgrade of the q152/q153/q161
-  * host family (a naive 2-label tail treats `a.co.uk` and `b.co.uk`
-  * as one registrant and makes a `co.uk` blocklist entry
-  * expressible) — and script-aware tokenization for no-space scripts
-  * (CJK/Thai), where the space tokenizer has zero near-dup recall.
+/** Domain, sketch and layout queries: PSL-backed registrable-domain
+  * (eTLD+1) curation — the ownership-boundary upgrade of the
+  * q152/q153/q161 host family (a naive 2-label tail treats `a.co.uk`
+  * and `b.co.uk` as one registrant and makes a `co.uk` blocklist
+  * entry expressible) — script-aware tokenization for no-space
+  * scripts (CJK/Thai), where the space tokenizer has zero near-dup
+  * recall; the mergeable sketches (KMV, b-bit minhash, Misra–Gries,
+  * histograms, HLL, AMS F2); and the layout operators (z-order,
+  * compaction, rendezvous and consistent-hash rebalancing).
   *
   * Oracle discipline: the PSL rule sets interpolate into the DuckDB
   * SQL from the SAME frozen Scala Seqs the engine evaluates
@@ -282,7 +285,163 @@ object DomainQueries {
   private val RobotsPathSql =
     """regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]*([^?#]*)', 1)"""
 
-  val all: Seq[QueryDef] = Seq(
+  /** AMS tug-of-war F2 sketch ([[ops.Sketches.amsF2Sketch]] -> merge
+    * -> estimate): per-source second moment of the token frequency
+    * vector — the self-join-size / groupBy-skew screen — via 60
+    * counters whose signs are the BITS of one 60-bit md5 per token
+    * (one md5 per row, the round-2 kernel lesson), built PER PARITY
+    * SHARD and merged by counter ADDITION (the q221 merge-exactness
+    * argument in the additive sketch), against the exact F2 with
+    * `err_ppm`. All integer; the oracle builds the one-shot counters
+    * directly, so hash equality proves the merge.
+    */
+  private lazy val q290: QueryDef =
+    QueryDef("q290_ams_f2",
+      Some(s"""
+        WITH t AS (SELECT doc_id, source,
+                     unnest(string_split(text, ' ')) AS w
+                   FROM documents),
+        hh AS (SELECT source, ${hash60("'ams_' || w")} AS h FROM t),
+        e AS (SELECT source, h, unnest(range(0, 60)) AS c FROM hh),
+        sg AS (SELECT source, c,
+                 SUM(((h // (1::BIGINT << CAST(c AS INT))) % 2)
+                   * 2 - 1) AS s
+               FROM e GROUP BY source, c),
+        est AS (SELECT source,
+                  CAST(SUM(s::HUGEINT * s) // 60 AS BIGINT) AS f2_est
+                FROM sg GROUP BY source),
+        ex AS (SELECT source,
+                 CAST(SUM(f::HUGEINT * f) AS BIGINT) AS f2_exact
+               FROM (SELECT source, w, COUNT(*) AS f
+                     FROM t GROUP BY source, w)
+               GROUP BY source)
+        SELECT est.source, f2_est, f2_exact,
+               (abs(f2_est - f2_exact) * 1000000) // f2_exact AS err_ppm
+        FROM est JOIN ex USING (source) ORDER BY est.source"""),
+      (s, d) => {
+        val toks = spread(documents(s, d)).select(col("doc_id"),
+          col("source"),
+          explode(graft.Pipeline.words(col("text"))).as("w"))
+        val shards = toks.withColumn("_p", pmod(col("doc_id"), lit(2)))
+        val merged = graft.ops.Sketches.amsF2Merge(
+          graft.ops.Sketches.amsF2Sketch(shards, Seq("source", "_p"),
+            "w", counters = 60),
+          Seq("source"))
+        val est = graft.ops.Sketches.amsF2Estimate(merged,
+          Seq("source"))
+        val exact = toks.groupBy("source", "w")
+          .agg(count(lit(1)).cast("long").as("f"))
+          .groupBy("source")
+          .agg(sum(col("f").cast("decimal(38,0)") * col("f"))
+            .cast("long").as("f2_exact"))
+        est.join(exact, "source")
+          .withColumn("err_ppm", expr(
+            "(abs(f2_est - f2_exact) * 1000000) div f2_exact"))
+          .select("source", "f2_est", "f2_exact", "err_ppm")
+          .orderBy("source")
+      })
+
+  /** Rendezvous-hash rebalance audit ([[ops.Layout.rendezvousMoves]],
+    * 16 -> 17 shards): measures HRW's minimal-movement promise on
+    * real keys — a key moves ONLY to the new shard (old weights
+    * never change), expected movement 1/17 vs the ~16/17 a `mod k`
+    * rehash would cost. One shared md5 family, scan-side argmax,
+    * two bounded aggregates; the oracle replays the array argmax
+    * with the same tiebreak.
+    */
+  private lazy val q299: QueryDef =
+    QueryDef("q299_rendezvous_moves",
+      Some(s"""
+        WITH ks AS (SELECT CAST(doc_id AS VARCHAR) AS k FROM documents),
+        a AS (SELECT k, [${hash32("'rv_' || s || '_' || k")}
+                for s in range(0, 17)] AS arr
+              FROM ks),
+        o AS (SELECT k,
+                list_min([s for s in range(0, 16)
+                  if arr[s+1] = list_max(arr[1:16])]) AS o_from,
+                list_min([s for s in range(0, 17)
+                  if arr[s+1] = list_max(arr[1:17])]) AS o_to
+              FROM a),
+        sm AS (SELECT COUNT(*) AS n_keys,
+                      COUNT(*) FILTER (o_from <> o_to) AS moved
+               FROM o),
+        sm2 AS (SELECT n_keys, moved,
+                  moved * 1000000 // GREATEST(n_keys, 1) AS moved_ppm,
+                  ${1000000L / 17} AS expected_ppm
+                FROM sm),
+        ps AS (SELECT shard, SUM(f) AS n_from, SUM(t) AS n_to FROM (
+                 SELECT o_from AS shard, 1 AS f, 0 AS t FROM o
+                 UNION ALL SELECT o_to, 0, 1 FROM o)
+               GROUP BY shard)
+        SELECT CAST(shard AS BIGINT) AS shard,
+               CAST(n_from AS BIGINT) AS n_from,
+               CAST(n_to AS BIGINT) AS n_to,
+               CAST(n_keys AS BIGINT) AS n_keys,
+               CAST(moved AS BIGINT) AS moved,
+               CAST(moved_ppm AS BIGINT) AS moved_ppm,
+               CAST(expected_ppm AS BIGINT) AS expected_ppm
+        FROM ps CROSS JOIN sm2 ORDER BY shard"""),
+      (s, d) => graft.ops.Layout.rendezvousMoves(
+          spread(documents(s, d)), "doc_id", fromShards = 16,
+          toShards = 17)
+        .orderBy("shard"))
+
+  /** Consistent-hash ring rebalance audit ([[ops.Layout.ringMoves]],
+    * 16 -> 17 shards, 8 vnodes each): the OTHER classic placement
+    * scheme, with the expected movement computed EXACTLY as the new
+    * shard's ring-arc share (geometry, not approximation). Both
+    * engines consume identical literal vnode arrays built from the
+    * shared wordHash60 recipe; the oracle replays the successor fold
+    * and the per-shard panel.
+    */
+  private lazy val q300: QueryDef = {
+    val (fromK, toK, v) = (16, 17, 8)
+    val (posF, ownF) = graft.ops.Layout.ringOf(fromK, v, "ring")
+    val (posT, ownT) = graft.ops.Layout.ringOf(toK, v, "ring")
+    def ownerSql(pos: Seq[Long], own: Seq[Long]): String =
+      s"([${own.mkString(", ")}])[" +
+        s"(len(list_filter([${pos.mkString(", ")}]," +
+        s" p -> p <= kp)) % ${pos.size}) + 1]"
+    val ring = BigInt(1) << 60
+    val arcs = posT.zip(ownT)
+    val newMass = arcs.indices.map { i =>
+      val start = if (i == 0) posT.last - ring else BigInt(posT(i - 1))
+      (BigInt(posT(i)) - start, ownT(i))
+    }.collect { case (len, owner) if owner >= fromK => len }.sum
+    val expectedPpm = (newMass * 1000000 / ring).toLong
+    QueryDef("q300_ring_moves",
+      Some(s"""
+        WITH ks AS (SELECT CAST(doc_id AS VARCHAR) AS k FROM documents),
+        kp AS (SELECT k, ${hash60("'ringk_' || k")} AS kp FROM ks),
+        o AS (SELECT k, ${ownerSql(posF, ownF)} AS o_from,
+                     ${ownerSql(posT, ownT)} AS o_to
+              FROM kp),
+        sm AS (SELECT COUNT(*) AS n_keys,
+                      COUNT(*) FILTER (o_from <> o_to) AS moved
+               FROM o),
+        sm2 AS (SELECT n_keys, moved,
+                  moved * 1000000 // GREATEST(n_keys, 1) AS moved_ppm,
+                  $expectedPpm AS expected_ppm
+                FROM sm),
+        ps AS (SELECT shard, SUM(f) AS n_from, SUM(t) AS n_to FROM (
+                 SELECT o_from AS shard, 1 AS f, 0 AS t FROM o
+                 UNION ALL SELECT o_to, 0, 1 FROM o)
+               GROUP BY shard)
+        SELECT CAST(shard AS BIGINT) AS shard,
+               CAST(n_from AS BIGINT) AS n_from,
+               CAST(n_to AS BIGINT) AS n_to,
+               CAST(n_keys AS BIGINT) AS n_keys,
+               CAST(moved AS BIGINT) AS moved,
+               CAST(moved_ppm AS BIGINT) AS moved_ppm,
+               CAST(expected_ppm AS BIGINT) AS expected_ppm
+        FROM ps CROSS JOIN sm2 ORDER BY shard"""),
+      (s, d) => graft.ops.Layout.ringMoves(
+          spread(documents(s, d)), "doc_id", fromShards = fromK,
+          toShards = toK, vnodesPerShard = v)
+        .orderBy("shard"))
+  }
+
+  val all: Seq[QueryDef] = Seq(q290, q299, q300,
 
     // Registrable-domain extraction ([[ops.Web.registrableDomain]]):
     // the PSL walk (frozen ICANN snapshot) as pure scan-side
@@ -1360,7 +1519,7 @@ object DomainQueries {
         .select(col("l_suppkey"), col("n").cast("long").as("n"),
           col("total").cast("long").as("total"))
         .orderBy("l_suppkey"))
-  ) :+ q217 :+ q218 :+ q219 :+ q221 :+ q222 :+ q223 :+ q224 :+ q225
+  ) :+ q217 :+ q218 :+ q221 :+ q222 :+ q223 :+ q224 :+ q225
 
   // q217's boundary derivation as SQL, per dimension: the q209
   // histogram + CDF walk (global, no source grouping), distinct
@@ -1499,61 +1658,6 @@ object DomainQueries {
           .select("text")
         graft.ops.TextStats.referenceSurprisal(docs, ref, "doc_id", "text")
           .orderBy("doc_id")
-      })
-
-  /** Seed-teleport (personalized) PageRank
-    * ([[ops.Graph.personalizedPageRank]]): TrustRank over the q125
-    * trade graph with every seventh supplier as the trusted seed set —
-    * authority flows outward from the seeds, unreachable nodes stay at
-    * exactly 0, and total teleport mass matches plain PageRank's so the
-    * two scores are comparable. The oracle unrolls the five damped
-    * iterations as chained CTEs, bit-identical integer milli-units.
-    */
-  private lazy val q219: QueryDef =
-    QueryDef("q219_trust_rank",
-      Some {
-        def iter(prev: String, name: String) = s"""
-        $name AS (SELECT s.node,
-                    CAST(CASE WHEN s.seed THEN (150 * t.n) // t.ns ELSE 0 END
-                         + (850 * COALESCE(c.cs, 0)) // 1000 AS BIGINT) AS pr
-                  FROM s CROSS JOIN t LEFT JOIN
-                    (SELECT e.dst AS node, SUM(p.pr // d.deg) AS cs
-                     FROM e JOIN $prev p ON p.node = e.src
-                            JOIN d ON d.src = e.src
-                     GROUP BY e.dst) c ON c.node = s.node)"""
-        s"""
-        WITH e0 AS (SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-                    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        e AS (SELECT a AS src, b AS dst FROM e0
-              UNION ALL SELECT b AS src, a AS dst FROM e0),
-        d AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
-        s AS (SELECT node, (node % 2 = 1 AND ((node - 1) // 2) % 7 = 1) AS seed
-              FROM (SELECT DISTINCT src AS node FROM e)),
-        t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                     CAST(SUM(CASE WHEN seed THEN 1 ELSE 0 END) AS BIGINT) AS ns
-              FROM s),
-        p0 AS (SELECT node, CAST(CASE WHEN seed THEN (1000 * t.n) // t.ns
-                                      ELSE 0 END AS BIGINT) AS pr
-               FROM s CROSS JOIN t),
-        ${iter("p0", "p1")},${iter("p1", "p2")},${iter("p2", "p3")},${iter("p3", "p4")},${iter("p4", "p5")}
-        SELECT node, pr FROM p5 ORDER BY node"""
-      },
-      (s0, d) => {
-        // fixed-iter rank loop: AQE-off child session (Sessions.loopSession)
-        val s = graft.Sessions.loopSession(s0)
-        val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val l = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val e0 = l.join(o, l("l_orderkey") === o("o_orderkey"))
-          .select((col("o_custkey") * 2).as("a"),
-            (col("l_suppkey") * 2 + 1).as("b"))
-          .distinct()
-        val edges = e0.select(col("a").as("src"), col("b").as("dst"))
-          .union(e0.select(col("b").as("src"), col("a").as("dst")))
-        val seeds = Tables.lineitem(s, d)
-          .filter(col("l_suppkey") % 7 === 1)
-          .select((col("l_suppkey") * 2 + 1).as("node")).distinct()
-        graft.ops.Graph.personalizedPageRank(edges, seeds, iters = 5)
-          .orderBy("node")
       })
 
   /** Deterministic HyperLogLog ([[ops.Sketches.hllSketch]]/

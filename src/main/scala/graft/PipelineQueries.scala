@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Training-data pipeline queries: deduplication (exact, fingerprint,
-  * MinHash+LSH, n-gram Jaccard, SimHash, embedding-cosine), similarity
-  * search (brute-force + LSH-bucketed ANN), text analysis (language-ID,
-  * quality, token stats), and multimodal feature plumbing.
+  * MinHash+LSH, n-gram Jaccard, SimHash, embedding-cosine), exact and
+  * weighted set-similarity joins, similarity search (brute-force,
+  * LSH-bucketed, IVF and product-quantized ANN, principal direction),
+  * text analysis (language-ID, quality, token stats), and multimodal
+  * feature plumbing.
   *
   * Every query here has a DuckDB oracle that replays the identical
   * deterministic pipeline (md5-derived hashes, index-ordered IEEE
@@ -18,7 +20,7 @@ import org.apache.spark.sql.types._
 object PipelineQueries {
   import Tables._
   import Pipeline._
-  import OracleSql.{cos, hash32, hash60, md5Digits}
+  import OracleSql.{cos, hash32, hash60, md5Digits, sqDist}
 
   /** doc_id + distinct word-trigram shingles, for docs with >= 3 words.
     * (DuckDB mirror: `[array_to_string(w[i:i+2],' ') for i in range(1,len(w)-1)]`.)
@@ -99,7 +101,369 @@ object PipelineQueries {
     "fr" -> Seq("er", "an", "or"),
     "zh" -> Seq("st", "ow", "ta"))
 
-  val all: Seq[QueryDef] = Seq(
+  /** The q32 language-ID scorer — one rendering per engine, shared by
+    * every query that scores `text` with it (q32, q134, q248, q269).
+    * Oracle side: per-language bigram occurrence sums `(lang, sum)`
+    * over `text`, and the first-wins `CASE` argmax over their `s_<lang>`
+    * aliases. Engine side: the same sums as `s_<lang>` columns and the
+    * [[Pipeline.argmaxLabel]] form of the argmax (same label, each
+    * score evaluated once).
+    */
+  private[graft] val langScoreSums: Seq[(String, String)] =
+    LangProfiles.map { case (l, bgs) =>
+      l -> bgs.map(bg =>
+        s"(length(text) - length(replace(text, '$bg', '')))").mkString(" + ")
+    }
+  private[graft] val langScoresSql: String =
+    langScoreSums.map { case (l, sum) => s"($sum) AS s_$l" }.mkString(", ")
+  private[graft] val langArgmaxSql: String = {
+    val langs = LangProfiles.map(_._1)
+    val cases = langs.init.map { l =>
+      val geAll = langs.filter(_ != l).map(o => s"s_$l >= s_$o").mkString(" AND ")
+      s"WHEN $geAll THEN '$l'"
+    }.mkString(" ")
+    s"CASE $cases ELSE '${langs.last}' END"
+  }
+  private[graft] def langScoreCols: Seq[Column] =
+    LangProfiles.map { case (l, bgs) =>
+      bgs.map(occurrences2x(col("text"), _)).reduce(_ + _).as(s"s_$l")
+    }
+  private[graft] def langArgmax: Column =
+    argmaxLabel(LangProfiles.map { case (l, _) => l -> col(s"s_$l") })
+
+  /** Exact prefix-filtered set-similarity join ([[ops.SetSim
+    * .prefixFilterJoin]] — full PPJoin: prefix + length + positional
+    * filters, all lossless): BIGRAM-shingle Jaccard >= 0.9 pairs.
+    * Tokens are word 2-shingles, not words: the synthetic corpus
+    * shares one tiny vocabulary, so word SETS are ambient-similar
+    * (~965k word-set pairs >= 0.9 at sf0.1 — the output itself is
+    * quadratic) while shingle sets encode ORDER and stay
+    * discriminative (254 pairs at sf0.1, measured). Shingles ride as 60-bit
+    * md5 keys (the round-8 join-key-narrowing recipe: long joins and
+    * long-array intersects, ~2x the string form; collision odds at
+    * 25M distinct shingles are ~3e-4 — the q140 argument). Two planted
+    * near-identical docs prove the detector; threshold arithmetic is
+    * the 9/10 integer fraction on both engines.
+    */
+  private lazy val q251: QueryDef =
+    QueryDef("q251_prefix_filter_join",
+      Some(s"""
+        WITH corpus AS (SELECT doc_id, text FROM documents
+                UNION ALL SELECT 9000001, 'p0 p1 p2 p3 p4 p5 p6 p7 p8 p9 pa pb pc pd pe pf pg ph pi z0'
+                UNION ALL SELECT 9000002, 'p0 p1 p2 p3 p4 p5 p6 p7 p8 p9 pa pb pc pd pe pf pg ph pi z1'),
+        wl AS (SELECT doc_id AS id, string_split(text, ' ') AS l FROM corpus),
+        tk AS (SELECT id,
+                 unnest([l[i] || ' ' || l[i+1] for i in range(1, len(l))]) AS sh
+               FROM wl WHERE len(l) >= 2),
+        tok AS (SELECT DISTINCT id, ${hash60("sh")} AS tok FROM tk),
+        sz AS (SELECT id, COUNT(*) AS sz FROM tok GROUP BY id),
+        dfx AS (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
+        rk AS (SELECT t.id, t.tok,
+                 ROW_NUMBER() OVER (PARTITION BY t.id ORDER BY d.df, t.tok) AS rn,
+                 s.sz
+               FROM tok t JOIN dfx d USING (tok) JOIN sz s USING (id)),
+        pfh AS (SELECT id, tok, rn, sz FROM rk
+                WHERE rn <= sz - ((9 * sz + 9) // 10) + 1),
+        pfl AS (SELECT id, tok, rn, sz FROM rk
+                WHERE rn <= sz - ((18 * sz + 18) // 19) + 1),
+        cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id
+                 FROM pfl a JOIN pfh b ON a.tok = b.tok
+                   AND (a.sz < b.sz OR (a.sz = b.sz AND a.id < b.id))
+                   AND a.sz * 10 >= b.sz * 9
+                   AND least(a.sz - a.rn, b.sz - b.rn) + 1
+                       >= (9 * (a.sz + b.sz) + 18) // 19),
+        da AS (SELECT id, list(tok) AS arr FROM tok GROUP BY id),
+        inter AS (SELECT c.a_id, c.b_id,
+                    len(list_intersect(a.arr, b.arr)) AS n_inter,
+                    len(a.arr) + len(b.arr) AS stot
+                  FROM cand c JOIN da a ON a.id = c.a_id
+                              JOIN da b ON b.id = c.b_id)
+        SELECT LEAST(a_id, b_id) AS a_id, GREATEST(a_id, b_id) AS b_id,
+               CAST(n_inter AS BIGINT) AS n_inter,
+               CAST(stot - n_inter AS BIGINT) AS n_union,
+               CAST(n_inter * 1000000 // (stot - n_inter) AS BIGINT)
+                 AS jaccard_ppm
+        FROM inter
+        WHERE n_inter * 10 >= (stot - n_inter) * 9
+        ORDER BY a_id, b_id"""),
+      (s, d) => {
+        import s.implicits._
+        val corpus = spread(documents(s, d)).select("doc_id", "text")
+          .unionAll(Seq(
+            (9000001L, "p0 p1 p2 p3 p4 p5 p6 p7 p8 p9 pa pb pc pd pe pf pg ph pi z0"),
+            (9000002L, "p0 p1 p2 p3 p4 p5 p6 p7 p8 p9 pa pb pc pd pe pf pg ph pi z1"))
+            .toDF("doc_id", "text"))
+        graft.ops.SetSim.prefixFilterJoin(
+            corpus
+              .select(col("doc_id"),
+                explode(graft.Pipeline.wordShingles(
+                  split(col("text"), " "), 2)).as("_sh"))
+              .select(col("doc_id"),
+                graft.Pipeline.wordHash60(col("_sh")).as("tok")),
+            "doc_id", "tok", tNum = 9, tDen = 10)
+          .orderBy("a_id", "b_id")
+      })
+
+  /** Product-quantization code assignment ([[Similarity.pqAssign]]):
+    * 64-dim vectors split into 4 subspaces, each assigned its
+    * argmin-L2 code from the PINNED <=100-centroid panel's slices —
+    * storage drops 64 floats -> 4 codes, the IVF+PQ memory step. One
+    * explode + one broadcast join + one grouped argmin; L2 is the
+    * index-ordered fold both engines compute identically.
+    */
+  private lazy val q257: QueryDef =
+    QueryDef("q257_pq_assign",
+      Some(s"""
+        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        c AS (SELECT vec_id AS code, v AS cv FROM t
+              WHERE vec_id % 101 = 0 AND vec_id < 10100),
+        subs AS (SELECT unnest([0, 1, 2, 3]) AS sub_idx),
+        sv AS (SELECT vec_id, sub_idx,
+                 list_slice(v, sub_idx * 16 + 1, sub_idx * 16 + 16) AS s
+               FROM t CROSS JOIN subs),
+        cb AS (SELECT code, sub_idx,
+                 list_slice(cv, sub_idx * 16 + 1, sub_idx * 16 + 16) AS cs
+               FROM c CROSS JOIN subs),
+        dist AS (SELECT sv.vec_id, sv.sub_idx, cb.code,
+                   ${sqDist("sv.s", "cb.cs", 16)} AS d2
+                 FROM sv JOIN cb USING (sub_idx)),
+        r AS (SELECT vec_id, sub_idx, code, ROW_NUMBER() OVER (
+                PARTITION BY vec_id, sub_idx ORDER BY d2, code) AS rn
+              FROM dist)
+        SELECT vec_id, CAST(sub_idx AS BIGINT) AS sub_idx, code
+        FROM r WHERE rn = 1 ORDER BY vec_id, sub_idx"""),
+      (s, d) => {
+        val cb = embeddings(s, d)
+          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
+          .select(col("vec_id").as("code"),
+            explode(expr(
+              "transform(sequence(0, 3)," +
+                " x -> struct(x AS sub_idx," +
+                " slice(embedding, x * 16 + 1, 16) AS cs))")).as("_e"))
+          .select(col("code"), col("_e.sub_idx"), col("_e.cs"))
+        graft.Similarity.pqAssign(spread(embeddings(s, d)), "vec_id",
+            "embedding", cb, "code", "sub_idx", "cs", m = 4, dims = 64)
+          .select(col("vec_id"), col("sub_idx").cast("long").as("sub_idx"),
+            col("code"))
+          .orderBy("vec_id", "sub_idx")
+      })
+
+  /** Weighted set-similarity join ([[ops.SetSim
+    * .weightedPrefixFilterJoin]]): idf-weighted Jaccard >= 9/10 over
+    * bigram-shingle tokens, weights `greatest(1e6 div df, 1)` ppm —
+    * rare shared shingles dominate, ambient vocabulary fades, which
+    * is why retrieval dedup weights its tokens. The oracle is the
+    * BRUTE-FORCE posting join (every pair sharing >= 1 token, exact
+    * weighted intersection/union) — a stronger check than replaying
+    * the filters: the engine's prefix + length + positional pruning
+    * must reproduce the unfiltered answer exactly. Threshold 9/10
+    * (q251's bar): idf weighting makes ONE differing word expensive
+    * (a unique bigram carries maximal weight), so the planted 40-word
+    * copy pair differing only in its last word scores 38 shared
+    * df=2 bigrams x 5e5 over (that + 2 unique df=1 bigrams x 1e6) =
+    * 19e6/21e6 = 0.9047 — just over the bar — while q251's 20-word
+    * plants (0.9 UNWEIGHTED) score only 0.818 weighted and fall
+    * under it: the weighted and unweighted joins genuinely rank
+    * pairs differently, which is the point. A 4/5 threshold was
+    * measured first and kept as a PLANS.md negative result: on this
+    * no-Zipf-tail corpus the 0.8-bar prefixes hold ~20% of every
+    * doc's weight and the candidate join degenerates (221 s at
+    * sf10).
+    */
+  private lazy val q265: QueryDef =
+    QueryDef("q265_weighted_setsim_join",
+      Some(s"""
+        WITH corpus AS (SELECT doc_id, text FROM documents
+                UNION ALL SELECT 9000001, 'q0 q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12 q13 q14 q15 q16 q17 q18 q19 q20 q21 q22 q23 q24 q25 q26 q27 q28 q29 q30 q31 q32 q33 q34 q35 q36 q37 q38 y0'
+                UNION ALL SELECT 9000002, 'q0 q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12 q13 q14 q15 q16 q17 q18 q19 q20 q21 q22 q23 q24 q25 q26 q27 q28 q29 q30 q31 q32 q33 q34 q35 q36 q37 q38 y1'),
+        wl AS (SELECT doc_id AS id, string_split(text, ' ') AS l FROM corpus),
+        tk AS (SELECT id,
+                 unnest([l[i] || ' ' || l[i+1] for i in range(1, len(l))]) AS sh
+               FROM wl WHERE len(l) >= 2),
+        tok AS (SELECT DISTINCT id, ${hash60("sh")} AS tok FROM tk),
+        dfx AS (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
+        w AS (SELECT tok, GREATEST(1000000 // df, 1) AS wt FROM dfx),
+        tw AS (SELECT id, SUM(wt) AS tw FROM tok JOIN w USING (tok)
+               GROUP BY id),
+        pi AS (SELECT a.id AS a_id, b.id AS b_id, SUM(w.wt) AS w_inter
+               FROM tok a JOIN tok b ON a.tok = b.tok AND a.id < b.id
+               JOIN w ON w.tok = a.tok
+               GROUP BY 1, 2),
+        j AS (SELECT a_id, b_id, w_inter,
+                ta.tw + tb.tw - w_inter AS w_union
+              FROM pi JOIN tw ta ON ta.id = a_id
+                      JOIN tw tb ON tb.id = b_id)
+        SELECT a_id, b_id, CAST(w_inter AS BIGINT) AS w_inter,
+               CAST(w_union AS BIGINT) AS w_union,
+               CAST(w_inter * 1000000 // w_union AS BIGINT) AS wjaccard_ppm
+        FROM j WHERE w_inter * 10 >= w_union * 9
+        ORDER BY a_id, b_id"""),
+      (s, d) => {
+        import s.implicits._
+        val corpus = spread(documents(s, d)).select("doc_id", "text")
+          .unionAll(Seq(
+            (9000001L, "q0 q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12 q13 q14 q15 q16 q17 q18 q19 q20 q21 q22 q23 q24 q25 q26 q27 q28 q29 q30 q31 q32 q33 q34 q35 q36 q37 q38 y0"),
+            (9000002L, "q0 q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12 q13 q14 q15 q16 q17 q18 q19 q20 q21 q22 q23 q24 q25 q26 q27 q28 q29 q30 q31 q32 q33 q34 q35 q36 q37 q38 y1"))
+            .toDF("doc_id", "text"))
+        // distinct bigram shingles as 60-bit keys (wordShingles
+        // already distincts per doc, so df below is doc frequency)
+        val toks = corpus
+          .select(col("doc_id"),
+            explode(graft.Pipeline.wordShingles(
+              split(col("text"), " "), 2)).as("_sh"))
+          .select(col("doc_id"),
+            graft.Pipeline.wordHash60(col("_sh")).as("tok"))
+        val w = toks.groupBy("tok").agg(count(lit(1)).as("df"))
+          .select(col("tok"),
+            greatest(expr("1000000L div df"), lit(1L)).as("wt"))
+        graft.ops.SetSim.weightedPrefixFilterJoin(
+            toks.join(w, "tok"), "doc_id", "tok", "wt", tNum = 9, tDen = 10)
+          .orderBy("a_id", "b_id")
+      })
+
+  /** IVF+PQ (IVFADC) search ([[Similarity.ivfPqTopK]]): q52's coarse
+    * probe COMPOSED with q257's product quantization — candidates in
+    * the 2 probed cells are ranked through their 4 PQ codes against a
+    * broadcast asymmetric-distance table, never a full-vector scan.
+    * Cells, query, and nProbe are exactly q52's, so its measured
+    * ~0.013 centroid-ranking margin at the probe boundary carries
+    * over (centroid means only pick WHICH cells are probed); the ADC
+    * distances themselves are micro-long floors of index-ordered
+    * folds — exact in both engines. Codebook = the pinned <=100-row
+    * panel (q257's, absolute id bounds).
+    */
+  private lazy val q268: QueryDef =
+    QueryDef("q268_ivfpq_search",
+      Some(s"""
+        WITH t AS (SELECT vec_id, vec_id % 8 AS cell,
+                          CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        cent AS (SELECT cell, list(m ORDER BY d) AS cv FROM (
+                   SELECT cell, d, avg(x) AS m FROM (
+                     SELECT cell, unnest(v) AS x, unnest(range(1, 65)) AS d FROM t) u
+                   GROUP BY cell, d) g
+                 GROUP BY cell),
+        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
+        pc AS (SELECT cent.cell FROM cent CROSS JOIN q
+               ORDER BY ${cos("qv", "cv")} DESC, cent.cell LIMIT 2),
+        cb AS (SELECT vec_id AS code, v AS cvec FROM t
+               WHERE vec_id % 101 = 0 AND vec_id < 10100),
+        subs AS (SELECT unnest([0, 1, 2, 3]) AS sub_idx),
+        dt AS (SELECT sub_idx, code,
+                 CAST(floor(${sqDist("qs", "cs", 16)} * 1000000.0) AS BIGINT) AS d2_micro
+               FROM (SELECT sub_idx, code,
+                       list_slice(qv, sub_idx * 16 + 1, sub_idx * 16 + 16) AS qs,
+                       list_slice(cvec, sub_idx * 16 + 1, sub_idx * 16 + 16) AS cs
+                     FROM cb CROSS JOIN subs CROSS JOIN q)),
+        cand AS (SELECT t.vec_id, t.v FROM t JOIN pc ON t.cell = pc.cell
+                 WHERE t.vec_id <> 0),
+        sv AS (SELECT vec_id, sub_idx,
+                 list_slice(v, sub_idx * 16 + 1, sub_idx * 16 + 16) AS s
+               FROM cand CROSS JOIN subs),
+        cbs AS (SELECT code, sub_idx,
+                  list_slice(cvec, sub_idx * 16 + 1, sub_idx * 16 + 16) AS cs
+                FROM cb CROSS JOIN subs),
+        dist AS (SELECT sv.vec_id, sv.sub_idx, cbs.code,
+                   ${sqDist("sv.s", "cbs.cs", 16)} AS d2
+                 FROM sv JOIN cbs USING (sub_idx)),
+        r AS (SELECT vec_id, sub_idx, code, ROW_NUMBER() OVER (
+                PARTITION BY vec_id, sub_idx ORDER BY d2, code) AS rn
+              FROM dist)
+        SELECT r.vec_id, CAST(SUM(dt.d2_micro) AS BIGINT) AS adc_d2_micro
+        FROM r JOIN dt ON r.sub_idx = dt.sub_idx AND r.code = dt.code
+        WHERE rn = 1
+        GROUP BY r.vec_id
+        ORDER BY adc_d2_micro, vec_id LIMIT 10"""),
+      (s, d) => {
+        val e = spread(embeddings(s, d)).withColumn("cell", col("vec_id") % 8)
+        val cb = embeddings(s, d)
+          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
+          .select(col("vec_id").as("code"),
+            explode(expr(
+              "transform(sequence(0, 3)," +
+                " x -> struct(x AS sub_idx," +
+                " slice(embedding, x * 16 + 1, 16) AS cs))")).as("_e"))
+          .select(col("code"), col("_e.sub_idx"), col("_e.cs"))
+        graft.Similarity.ivfPqTopK(e, "vec_id", "embedding", "cell",
+            graft.Similarity.ivfIndex(e, "embedding", "cell"),
+            cb, "code", "sub_idx", "cs", m = 4, dims = 64,
+            queryId = 0L, k = 10, nProbe = 2)
+          .orderBy("adc_d2_micro", "vec_id")
+      })
+
+  // q276's fixed-iteration integer power-iteration trajectory,
+  // unrolled for the oracle (each block = one G'v multiply, one
+  // corrected integer sqrt, one renormalize — HUGEINT throughout,
+  // truncating division like the engine's BigInt).
+  private def pcaIterCtes(iters: Int): String =
+    (1 to iters).map { t =>
+      val prev = if (t == 1) "v0" else s"v${t - 1}"
+      s"""
+        u$t AS MATERIALIZED (SELECT g.i, SUM(g.gp * $prev.v) AS u
+                FROM gp g JOIN $prev ON g.j = $prev.i GROUP BY g.i),
+        n$t AS (SELECT SUM(u * u) AS n2,
+                  CAST(floor(sqrt(CAST(SUM(u * u) AS DOUBLE))) AS HUGEINT)
+                    AS s0
+                FROM u$t),
+        s$t AS (SELECT GREATEST(list_max(list_filter(
+                  [s0 - 2, s0 - 1, s0, s0 + 1, s0 + 2],
+                  t -> t * t <= n2)), 1) AS nrm FROM n$t),
+        v$t AS (SELECT i, u * 1000000 // nrm AS v
+                FROM u$t CROSS JOIN s$t)"""
+    }.mkString(",")
+
+  /** Top principal direction of the embedding second-moment matrix
+    * ([[Similarity.topPrincipalComponent]]): milli-quantized
+    * components, one distributed DECIMAL gram pass, then 12
+    * all-integer power iterations on the bounded 64x64 panel —
+    * anisotropy audit (`ev_ppm` = top-eigenvalue share of trace) and
+    * the first step of whitening. The oracle replays the exact
+    * integer trajectory, including the corrected floor-sqrt
+    * normalizer, so convergence is irrelevant to correctness.
+    */
+  private lazy val q276: QueryDef = {
+    val dims = 64
+    val iters = 12
+    val v0 = (BigInt(1000000) / Similarity.isqrtPortable(BigInt(dims)))
+      .toString
+    QueryDef("q276_top_principal_component",
+      Some(s"""
+        WITH x AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
+                     e -> CAST(floor(e * 1000) AS HUGEINT)) AS xq
+                   FROM embeddings),
+        flat AS (SELECT xq, unnest(range(0, $dims)) AS i FROM x),
+        idx AS (SELECT unnest(range(0, $dims)) AS i),
+        cells AS MATERIALIZED (SELECT f.i AS i, j.i AS j,
+                    COALESCE(SUM(f.xq[f.i + 1] * f.xq[j.i + 1]), 0) AS g
+                  FROM flat f CROSS JOIN idx j
+                  GROUP BY 1, 2),
+        gs AS (SELECT GREATEST(MAX(abs(g)) // 1000000, 1) AS gsc
+               FROM cells),
+        gp AS MATERIALIZED (SELECT i, j, g // gsc AS gp
+               FROM cells CROSS JOIN gs),
+        v0 AS (SELECT i, $v0::HUGEINT AS v FROM idx),
+        ${pcaIterCtes(iters)},
+        sg AS (SELECT CASE WHEN (SELECT v FROM v$iters WHERE v <> 0
+                                 ORDER BY i LIMIT 1) < 0
+                           THEN -1 ELSE 1 END AS s),
+        vf AS (SELECT i, v * s AS v FROM v$iters CROSS JOIN sg),
+        nm AS (SELECT SUM(vi.v * c.g * vj.v) AS num
+               FROM cells c JOIN vf vi ON vi.i = c.i
+                            JOIN vf vj ON vj.i = c.j),
+        dn AS (SELECT GREATEST(SUM(v * v), 1) AS den FROM vf),
+        tr AS (SELECT GREATEST(SUM(g), 1) AS trace FROM cells
+               WHERE i = j)
+        SELECT CAST(i AS BIGINT) AS dim_idx, CAST(v AS BIGINT) AS v_micro,
+               CAST(num // den AS BIGINT) AS lambda_micro,
+               CAST(num * 1000000 // (den * trace) AS BIGINT) AS ev_ppm
+        FROM vf CROSS JOIN nm CROSS JOIN dn CROSS JOIN tr
+        ORDER BY dim_idx"""),
+      (s, d) => graft.Similarity.topPrincipalComponent(
+          spread(embeddings(s, d)), "embedding", dims = dims,
+          iters = iters)
+        .orderBy("dim_idx"))
+  }
+
+  val all: Seq[QueryDef] = Seq(q251, q257, q265, q268, q276,
 
     // ===== Deduplication =====
 
@@ -338,40 +702,19 @@ object PipelineQueries {
     // A deterministic n-gram heuristic (the corpus vocabulary carries no
     // real language signal, so accuracy is reported, not asserted).
     QueryDef("q32_langid",
-      Some {
-        val scores = LangProfiles.map { case (l, bgs) =>
-          val sum = bgs.map(bg =>
-            s"(length(text) - length(replace(text, '$bg', '')))").mkString(" + ")
-          s"($sum) AS s_$l"
-        }.mkString(", ")
-        val langs = LangProfiles.map(_._1)
-        val cases = langs.init.map { l =>
-          val geAll = langs.filter(_ != l).map(o => s"s_$l >= s_$o").mkString(" AND ")
-          s"WHEN $geAll THEN '$l'"
-        }.mkString(" ")
-        s"""
-        WITH scored AS (SELECT lang, $scores FROM documents)
-        SELECT CASE $cases ELSE '${langs.last}' END AS predicted,
+      Some(s"""
+        WITH scored AS (SELECT lang, $langScoresSql FROM documents)
+        SELECT $langArgmaxSql AS predicted,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CASE WHEN (CASE $cases ELSE '${langs.last}' END) = lang
+               CAST(SUM(CASE WHEN ($langArgmaxSql) = lang
                         THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-        FROM scored GROUP BY 1 ORDER BY predicted"""
-      },
-      (s, d) => {
-        val langs = LangProfiles.map(_._1)
-        val scored = documents(s, d).select(
-          col("lang") +: LangProfiles.map { case (l, bgs) =>
-            bgs.map(occurrences2x(col("text"), _)).reduce(_ + _).as(s"s_$l")
-          }: _*)
-        // argmax-struct form — same label, single score evaluation
-        // (see [[Pipeline.argmaxLabel]])
-        val predicted = Pipeline.argmaxLabel(langs.map(l => l -> col(s"s_$l")))
-        scored.withColumn("predicted", predicted)
-          .groupBy("predicted")
-          .agg(count(lit(1)).as("n"),
-               sum(when(col("predicted") === col("lang"), 1).otherwise(0)).as("n_correct"))
-          .orderBy("predicted")
-      }),
+        FROM scored GROUP BY 1 ORDER BY predicted"""),
+      (s, d) => documents(s, d).select(col("lang") +: langScoreCols: _*)
+        .withColumn("predicted", langArgmax)
+        .groupBy("predicted")
+        .agg(count(lit(1)).as("n"),
+             sum(when(col("predicted") === col("lang"), 1).otherwise(0)).as("n_correct"))
+        .orderBy("predicted")),
 
     // Quality scoring: token counts, type-token ratio, stopword ratio,
     // and a threshold classification — pure scan-side column math.

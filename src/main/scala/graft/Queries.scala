@@ -17,7 +17,13 @@ case class QueryDef(
     oracle: Option[String],
     build: (SparkSession, String) => DataFrame)
 
-/** The relational query inventory over the testdata tables.
+/** The relational query inventory over the testdata tables, and the
+  * whole inventory (`all`): this file holds the relational operators
+  * (aggregations, joins, set ops, windows, as-of and range joins) and
+  * the reference's geometry steps (force2D, Multi promotion,
+  * asGeoJSON); the other families live in PipelineQueries,
+  * AnalysisQueries, CurationQueries, CrawlQueries, DomainQueries,
+  * WarehouseQueries and GraphQueries.
   *
   * Each query re-expresses an operator family from SURVEY.md §2
   * (reference: nafaarts/wilayah-aceh-etl) in idiomatic Spark, at
@@ -33,11 +39,10 @@ object Queries {
   import Tables._
   import OracleSql.{dsum, dsumSql}
 
-  val all: Seq[QueryDef] = core ++ extra ++ advanced ++ PipelineQueries.all ++
+  val all: Seq[QueryDef] = core ++ extra ++ advanced ++
+    Seq(q263, q306, q307, q308) ++ PipelineQueries.all ++
     AnalysisQueries.all ++ CurationQueries.all ++ CrawlQueries.all ++
-    DomainQueries.all ++ WarehouseQueries.all ++ Round14Queries.all ++
-    Round15Queries.all ++ Round16Queries.all ++ Round17Queries.all ++
-    Round18Queries.all
+    DomainQueries.all ++ WarehouseQueries.all ++ GraphQueries.all
 
   private lazy val core: Seq[QueryDef] = Seq(
 
@@ -522,6 +527,27 @@ object Queries {
         .orderBy("o_orderkey"))
   )
 
+  /** The click/purchase funnel base the as-of and range joins (q41,
+    * q42, q263) start from: purchases `p` and clicks `c` as oracle
+    * CTEs, and for the engine's as-of rewrite one user-keyed stream —
+    * clicks carry their own timestamp as `click_ts`, purchases their
+    * `event_id`, and `is_p` tags purchases.
+    */
+  private lazy val funnelBaseSql = """
+        WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+        c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')"""
+  private def clickPurchaseStream(s: SparkSession, d: String): DataFrame = {
+    val ev = events(s, d)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts"), col("ts").as("click_ts"),
+              lit(0).as("is_p"), lit(null).cast(LongType).as("event_id"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"),
+              lit(null).cast(TimestampType).as("click_ts"),
+              lit(1).as("is_p"), col("event_id"))
+    clicks.unionByName(purchases)
+  }
+
   /** Advanced join + approximate-aggregate surface. */
   private lazy val advanced: Seq[QueryDef] = Seq(
 
@@ -534,25 +560,15 @@ object Queries {
     // The carried value is the click's own timestamp, so equal-ts ties
     // produce identical output regardless of tiebreak.
     QueryDef("q41_asof_join",
-      Some("""
-        WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
+      Some(funnelBaseSql + """
         SELECT p.event_id, p.user_id, c.ts AS last_click_ts
         FROM p ASOF JOIN c ON p.user_id = c.user_id AND c.ts <= p.ts
         ORDER BY p.event_id"""),
       (s, d) => {
-        val ev = events(s, d)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts"), col("ts").as("click_ts"),
-                  lit(0).as("is_p"), lit(null).cast(LongType).as("event_id"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"),
-                  lit(null).cast(TimestampType).as("click_ts"),
-                  lit(1).as("is_p"), col("event_id"))
         // clicks sort before purchases at equal ts, so `<=` is honored
         val w = Window.partitionBy("user_id").orderBy(col("ts"), col("is_p"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        clicks.unionByName(purchases)
+        clickPurchaseStream(s, d)
           .withColumn("last_click_ts", last("click_ts", ignoreNulls = true).over(w))
           // inner as-of: purchases with no prior click drop out (also
           // keeps nullable timestamps out of the compared output)
@@ -566,9 +582,7 @@ object Queries {
     // is a residual predicate on the sort-merge join, never a
     // cartesian/nested-loop.
     QueryDef("q42_range_join",
-      Some("""
-        WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
+      Some(funnelBaseSql + """
         SELECT p.event_id, CAST(COUNT(c.ts) AS BIGINT) AS n_recent_clicks
         FROM p LEFT JOIN c ON p.user_id = c.user_id
           AND c.ts >= p.ts - INTERVAL 5 MINUTE AND c.ts < p.ts
@@ -755,21 +769,13 @@ object Queries {
                CAST(COUNT(*) AS BIGINT) AS n_events,
                MIN(tus) AS start_us, MAX(tus) AS end_us
         FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id"""),
-      (s, d) => {
-        val w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-        val cum = Window.partitionBy("user_id").orderBy("tus", "event_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val gap = col("tus") - lag("tus", 1).over(w)
-        events(s, d)
-          .select(col("user_id"), col("event_id"), expr("ts_ns div 1000").as("tus"))
-          .withColumn("new_session",
-            when(gap.isNull || gap > 300000000L, 1).otherwise(0))
-          .withColumn("session_id", sum("new_session").over(cum).cast(LongType))
-          .groupBy("user_id", "session_id")
-          .agg(count(lit(1)).as("n_events"),
-               min("tus").as("start_us"), max("tus").as("end_us"))
-          .orderBy("user_id", "session_id")
-      }),
+      (s, d) => WarehouseQueries.sessionize(events(s, d)
+          .select(col("user_id"), col("event_id"), expr("ts_ns div 1000").as("tus")),
+          "new_session", "session_id")
+        .groupBy("user_id", "session_id")
+        .agg(count(lit(1)).as("n_events"),
+             min("tus").as("start_us"), max("tus").as("end_us"))
+        .orderBy("user_id", "session_id")),
 
     // True pivot operator (df.groupBy().pivot() with explicit values —
     // no collect-distinct planning pass): per-user event-type count
@@ -912,6 +918,194 @@ object Queries {
         .cube("o_orderpriority", "o_orderstatus")
         .agg(count(lit(1)).as("n")))
   )
+
+  /** FORWARD as-of join — q41's mirror: each purchase picks the NEXT
+    * click at-or-after it (the follow-up-action probe: time-to-next-
+    * touch, abandonment windows). Same one-pass shape: tag both
+    * streams, one user-keyed shuffle, `last(_, ignoreNulls)` over the
+    * DESCENDING time order — no range explosion, no per-row probe; at
+    * an equal instant the click sorts first in the scan so `>=` is
+    * honored. Oracle = DuckDB's native forward ASOF. The carried value
+    * is the click's own timestamp, so ties produce identical output.
+    */
+  private lazy val q263: QueryDef =
+    QueryDef("q263_asof_forward",
+      Some(funnelBaseSql + """
+        SELECT p.event_id, p.user_id, c.ts AS next_click_ts
+        FROM p ASOF JOIN c ON p.user_id = c.user_id AND c.ts >= p.ts
+        ORDER BY p.event_id"""),
+      (s, d) => {
+        val w = Window.partitionBy("user_id")
+          .orderBy(col("ts").desc, col("is_p"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        clickPurchaseStream(s, d)
+          .withColumn("next_click_ts",
+            last("click_ts", ignoreNulls = true).over(w))
+          .filter(col("is_p") === 1 && col("next_click_ts").isNotNull)
+          .select(col("event_id"), col("user_id"), col("next_click_ts"))
+          .orderBy("event_id")
+      })
+
+  // ---- q306-q308: DuckDB-replayable rows for the pure-array geo
+  // functions (G2 force2D, G4 ST_Multi promotion, G5 ST_AsGeoJSON) —
+  // previously spec-only, the last §2 operators outside the hash gate.
+  // Fixtures are synthesized from nation.n_nationkey as GeoJSON text
+  // with integer-derived coordinates suffixed ".0"/".5", so BOTH
+  // engines can assemble bit-identical strings (Spark's to_json /
+  // Jackson prints 10.0 as "10.0" and 10.5 as "10.5"; DuckDB
+  // concatenates CAST(k AS VARCHAR) with the same suffixes — no
+  // engine-varying float formatting anywhere). The JTS simplifier (G3)
+  // stays spec-verified: topology-preserving simplification is not
+  // SQL-expressible, documented in SURVEY §2.9.
+
+  /** A 4-point closed ring as raw GeoJSON text. `threeD` appends a z
+    * coordinate to every point (what force2D must strip). Base
+    * coordinates derive from the integer column so both engines print
+    * identical literals.
+    */
+  private def ringJson(b: org.apache.spark.sql.Column, threeD: Boolean)
+      : org.apache.spark.sql.Column = {
+    val s = b.cast("string")
+    val z1 = if (threeD) ",1.0" else ""
+    val z2 = if (threeD) ",2.5" else ""
+    concat(lit("[["), s, lit(s".0,0.0$z1],["), s, lit(s".5,0.0$z2],["),
+      s, lit(s".5,0.5$z1],["), s, lit(s".0,0.0$z1]]"))
+  }
+
+  /** The same ring's expected 2-D text, shared by the three oracles'
+    * Spark sides only as documentation — the DuckDB mirrors assemble
+    * it with `||`.
+    */
+  private lazy val ringSqlParts =
+    ("'[[' || k || '.0,0.0],[' || k || '.5,0.0],[' || k ||" +
+      " '.5,0.5],[' || k || '.0,0.0]]'")
+
+  /** G2 / ST_Force2D as an oracle row: MultiPolygon coordinates with a
+    * 3-D shell and a 2-D hole (keys divisible by 3) or all-2-D rings
+    * (the rest) parse into the typed column, [[wilayah.Geo.force2D]]
+    * strips z per point, and [[wilayah.Geo.asGeoJson]] serializes —
+    * the mixed-dimensionality case the reference's data actually has.
+    * The oracle assembles the expected 2-D GeoJSON text directly.
+    */
+  private lazy val q306: QueryDef =
+    QueryDef("q306_geo_force2d",
+      Some(s"""
+        WITH n AS (SELECT n_nationkey AS key,
+                          CAST(n_nationkey AS VARCHAR) AS k FROM nation),
+        r AS (SELECT key, $ringSqlParts AS ring FROM n)
+        SELECT key,
+               '{"type":"MultiPolygon","coordinates":[[' || ring ||
+                 CASE WHEN key % 3 = 0 THEN ',' || ring ELSE '' END ||
+                 ']]}' AS geojson
+        FROM r ORDER BY key"""),
+      (s, d) => {
+        val n = nation(s, d).select(col("n_nationkey").as("key"))
+        val shell3 = ringJson(col("key"), threeD = true)
+        val ring2 = ringJson(col("key"), threeD = false)
+        // key % 3 = 0: 3-D shell + 2-D hole; others: one 2-D ring
+        val rawCoords = when(col("key") % 3 === 0,
+            concat(lit("[["), shell3, lit(","), ring2, lit("]]")))
+          .otherwise(concat(lit("[["), ring2, lit("]]")))
+        val coords = from_json(rawCoords, graft.wilayah.Model.coordinatesType)
+        n.select(col("key"),
+            graft.wilayah.Geo.asGeoJson(
+              graft.wilayah.Geo.force2D(coords)).as("geojson"))
+          .orderBy("key")
+      })
+
+  /** G4 / ST_Multi promotion as an oracle row, all four arms of
+    * [[wilayah.Geo.promoteMultiParts]]: a bare Polygon wraps once
+    * (key % 4 = 0), a MultiPolygon passes through (1), a non-areal
+    * type quarantines to NULL (2), and MALFORMED Polygon coordinates
+    * quarantine to NULL instead of becoming [null] (3 — the
+    * parse-success guard). Output is the promoted GeoJSON text or
+    * NULL; the oracle declares each arm's contract directly.
+    */
+  private lazy val q307: QueryDef =
+    QueryDef("q307_geo_promote_multi",
+      Some(s"""
+        WITH n AS (SELECT n_nationkey AS key,
+                          CAST(n_nationkey AS VARCHAR) AS k,
+                          CAST(n_nationkey + 1 AS VARCHAR) AS k2
+                   FROM nation),
+        r AS (SELECT key, $ringSqlParts AS ring,
+                     '[[' || k2 || '.0,0.0],[' || k2 || '.5,0.0],[' ||
+                       k2 || '.5,0.5],[' || k2 || '.0,0.0]]' AS ring2
+              FROM n)
+        SELECT key,
+               CASE key % 4
+                 WHEN 0 THEN '{"type":"MultiPolygon","coordinates":[['
+                   || ring || ']]}'
+                 WHEN 1 THEN '{"type":"MultiPolygon","coordinates":[['
+                   || ring || '],[' || ring2 || ']]}'
+                 ELSE NULL
+               END AS geojson
+        FROM r ORDER BY key"""),
+      (s, d) => {
+        val n = nation(s, d).select(col("n_nationkey").as("key"))
+        val ring = ringJson(col("key"), threeD = false)
+        val ringNext = ringJson(col("key") + 1, threeD = false)
+        val geomType = element_at(array(lit("Polygon"), lit("MultiPolygon"),
+          lit("LineString"), lit("Polygon")),
+          (pmod(col("key"), lit(4)) + 1).cast("int"))
+        val coordsJson = element_at(array(
+          concat(lit("["), ring, lit("]")),                         // Polygon
+          concat(lit("[["), ring, lit("],["), ringNext, lit("]]")), // Multi
+          ring,                                                     // Line
+          lit("\"oops\"")),                              // malformed Polygon
+          (pmod(col("key"), lit(4)) + 1).cast("int"))
+        val promoted = graft.wilayah.Geo.promoteMultiParts(geomType, coordsJson)
+        n.select(col("key"),
+            when(promoted.isNotNull,
+              graft.wilayah.Geo.asGeoJson(promoted)).as("geojson"))
+          .orderBy("key")
+      })
+
+  /** G5 / ST_AsGeoJSON through the FULL reference write chain minus
+    * the JTS simplifier ([[wilayah.Geo.promoteMultiFromJson]] ->
+    * [[wilayah.Geo.force2D]] -> [[wilayah.Geo.asGeoJson]], the
+    * server.js:92 normalization): whole GeoJSON geometry strings
+    * (type extracted via get_json_object) — 3-D Polygons (even keys)
+    * and 2-D two-part MultiPolygons (odd keys) — normalize to the
+    * exact 2-D MultiPolygon text the oracle assembles.
+    */
+  private lazy val q308: QueryDef =
+    QueryDef("q308_geo_asgeojson_chain",
+      Some(s"""
+        WITH n AS (SELECT n_nationkey AS key,
+                          CAST(n_nationkey AS VARCHAR) AS k FROM nation),
+        r AS (SELECT key, $ringSqlParts AS ring,
+                     '[[' || CAST(key + 1 AS VARCHAR) || '.0,0.0],[' ||
+                       CAST(key + 1 AS VARCHAR) || '.5,0.0],[' ||
+                       CAST(key + 1 AS VARCHAR) || '.5,0.5],[' ||
+                       CAST(key + 1 AS VARCHAR) || '.0,0.0]]' AS ring2
+              FROM n)
+        SELECT key,
+               CASE WHEN key % 2 = 0
+                 THEN '{"type":"MultiPolygon","coordinates":[[' || ring
+                   || ']]}'
+                 ELSE '{"type":"MultiPolygon","coordinates":[[' || ring
+                   || '],[' || ring2 || ']]}'
+               END AS geojson
+        FROM r ORDER BY key"""),
+      (s, d) => {
+        val n = nation(s, d).select(col("n_nationkey").as("key"))
+        val ring3 = ringJson(col("key"), threeD = true)
+        val ring2 = ringJson(col("key"), threeD = false)
+        val ringNext = ringJson(col("key") + 1, threeD = false)
+        val geomJson = when(col("key") % 2 === 0,
+            concat(lit("{\"type\":\"Polygon\",\"coordinates\":["),
+              ring3, lit("]}")))
+          .otherwise(
+            concat(lit("{\"type\":\"MultiPolygon\",\"coordinates\":[["),
+              ring2, lit("],["), ringNext, lit("]]}")))
+        n.select(col("key"),
+            graft.wilayah.Geo.asGeoJson(
+              graft.wilayah.Geo.force2D(
+                graft.wilayah.Geo.promoteMultiFromJson(geomJson)))
+              .as("geojson"))
+          .orderBy("key")
+      })
 
   lazy val byName: Map[String, QueryDef] = all.map(q => q.name -> q).toMap
 }

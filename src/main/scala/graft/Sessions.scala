@@ -24,19 +24,6 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-sql-wh").toString)
       .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2": config A/B instrument
-    // (round-19) — lets a measurement run flip one Spark conf without
-    // a recompile, so config experiments are same-binary same-window.
-    // Measured winners get promoted to explicit code defaults above;
-    // the env applies LAST, so it can also override those for a
-    // deployment. Never required for correctness.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"bad SPARK_GRAFT_EXTRA_CONF entry: $kv")
-        builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
-    }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LshObservability.register(spark)
@@ -60,24 +47,21 @@ object Sessions {
     * aggregates. AQE still cuts the loop's one lazy plan into 15–30+
     * query stages (q125 executes as 32 jobs under AQE —
     * OPTIMIZATION_r19.md; the `jobs` of a solo `graft.Bench` record's
-    * `layers` entry, run with `SPARK_GRAFT_LOOP_AQE=on`) and re-optimizes the deep nested plan at
+    * `layers` entry) and re-optimizes the deep nested plan at
     * every stage boundary: driver time proportional to PLAN size ×
     * stage count, independent of data size, so the replan tax does not
     * amortize at larger SFs. Sandwich A/B at sf0.1 (5-pass solo,
     * probes flat across the three runs): q125 4.43/3.83 → 2.96 s,
     * q171 3.15/2.69 → 1.58 s, q219 5.68/6.87 → 3.39 s.
     *
-    * `SPARK_GRAFT_LOOP_AQE=on` restores AQE for these builds — the
-    * right call if a decade-scale graph develops contribution-exchange
-    * skew that wants AQE's runtime coalescing. The child session
-    * shares the SparkContext, CacheManager and builder-level confs
-    * (UTC, extensions), so caching/clearCache semantics are unchanged.
+    * Whether AQE pays for a given loop is a per-query choice: a query
+    * that wants AQE builds on `s` directly. The child session shares the SparkContext, CacheManager and
+    * builder-level confs (UTC, extensions), so caching/clearCache
+    * semantics are unchanged.
     */
-  def loopSession(s: SparkSession): SparkSession =
-    if (sys.env.get("SPARK_GRAFT_LOOP_AQE").contains("on")) s
-    else {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
-      s2
-    }
+  def loopSession(s: SparkSession): SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2
+  }
 }

@@ -14,19 +14,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session invariant required by `events` (parquet TIMESTAMP(NANOS)):
-    * call once at SparkSession construction. All graft entry points
-    * (Bench, Verify, tests) do. `events` also sets it defensively for
-    * foreign sessions that skip this call; a non-UTC session timezone
-    * is an ERROR (the fix is session-wide, so it must be the caller's
-    * choice) unless `spark.graft.events.allowTzOverride=true` opts in
-    * to a warn-and-override.
-    */
-  def configure(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark
-  }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -82,32 +69,17 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     // defensive: runtime-settable and idempotent, so a driver invoking
     // SparkEntry.queries from its OWN session (never through
-    // Sessions.build/configure) reads both generations correctly
+    // Sessions.build) reads both generations correctly
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val priorTz = s.conf.get("spark.sql.session.timeZone")
-    if (priorTz != "UTC") {
-      // Overriding the session timezone is a SESSION-WIDE side effect:
-      // it would repoint the caller's other timestamp semantics too. So
-      // fail loudly by default (repo-wide UTC invariant, PLANS.md) and
-      // make the override an explicit opt-in rather than a warning that
-      // can scroll past unnoticed.
-      if (s.conf.getOption("spark.graft.events.allowTzOverride")
-            .contains("true")) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"graft.Tables.events: overriding session timezone '$priorTz' " +
-            "with 'UTC' (required for oracle-exact events semantics); " +
-            "this affects the whole session (opted in via " +
-            "spark.graft.events.allowTzOverride)")
-        s.conf.set("spark.sql.session.timeZone", "UTC")
-      } else {
-        throw new IllegalStateException(
-          s"graft.Tables.events requires a UTC session timezone (found " +
-            s"'$priorTz'): epoch conversion of TIMESTAMP_NTZ data is " +
-            "timezone-sensitive. Set spark.sql.session.timeZone=UTC, or " +
-            "set spark.graft.events.allowTzOverride=true to let graft " +
-            "override it session-wide.")
-      }
-    }
+    // Overriding the session timezone would be a SESSION-WIDE side
+    // effect that repoints the caller's other timestamp semantics, so a
+    // non-UTC session fails loudly (repo-wide UTC invariant, PLANS.md).
+    if (priorTz != "UTC")
+      throw new IllegalStateException(
+        s"graft.Tables.events requires a UTC session timezone (found " +
+          s"'$priorTz'): epoch conversion of TIMESTAMP_NTZ data is " +
+          "timezone-sensitive. Set spark.sql.session.timeZone=UTC.")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) gen

@@ -1,14 +1,19 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-/** Round-13 batch (q226+): warehouse-temporal surface (SCD2 validity
-  * intervals, point-in-time fact joins, incremental rollup
-  * maintenance) plus the platform operators a 100 TB corpus store
-  * needs around them — privacy audits, graph structure metrics,
-  * blocked record linkage, prefix-dimension retrieval audits.
+/** Warehouse-temporal and evaluation queries: SCD2 validity
+  * intervals with their back-fill and repair loops, point-in-time
+  * fact joins, incremental and retraction-aware rollup maintenance,
+  * sessions, lateness and interval joins, purged time folds and
+  * changepoints over the event log; plus the platform operators a
+  * 100 TB corpus store needs around them — privacy audits, blocked
+  * record linkage, prefix-dimension retrieval audits — and the
+  * evaluation family (NDCG, MAP/MRR, ROC AUC, calibration, rank-biased
+  * overlap, confusion matrices).
   *
   * The reference keeps only the LATEST version of each row
   * (init_db.sql:21-36 upsert, re-expressed as q18's LWW window); this
@@ -23,13 +28,52 @@ import org.apache.spark.sql.types.DoubleType
   */
 object WarehouseQueries {
   import Tables._
-  import OracleSql.{cos, dsum, dsumSql, hash60, scd2Ctes}
+  import OracleSql.{cos, dsum, dsumSql, hash32, hash60, scd2Ctes}
 
   // NOTE: `all` is declared at the BOTTOM of this object. Every query
   // here is a lazy val interpolating helper vals; a top-of-file
   // `val all = Seq(q226, ...)` would force those lazy vals BEFORE the
   // (textually later) helper vals initialize, interpolating literal
   // "null" into the oracle SQL.
+
+  /** The events stream as a per-user change log (state = event_type,
+    * epoch-micros `ts_us`, `event_id` tiebreak) plus `extra` columns —
+    * the input of every SCD2 query (q226, q240, q258). Their shared
+    * oracle is `scd2RebuildSql`, the from-scratch rebuild over the
+    * full log, and `scd2Out` is their shared output projection.
+    */
+  private def changeLog(s: SparkSession, d: String, extra: Column*): DataFrame =
+    events(s, d).select(Seq(col("user_id"), col("event_type").as("state"),
+      expr("ts_ns div 1000").as("ts_us"), col("event_id")) ++ extra: _*)
+  private val scd2RebuildSql = s"""
+        WITH el AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us,
+                           event_id
+                    FROM events),
+        $scd2Ctes
+        SELECT user_id, version, state, valid_from_us, valid_to_us,
+               valid_to_us IS NULL AS is_current
+        FROM vs ORDER BY user_id, version"""
+  private def scd2Out(dim: DataFrame): DataFrame =
+    dim.select(col("user_id"), col("version"), col("state"),
+        col("valid_from").as("valid_from_us"),
+        col("valid_to").as("valid_to_us"), col("is_current"))
+      .orderBy("user_id", "version")
+
+  /** Cuts each user's events, ordered by (`tus`, `event_id`), into
+    * sessions at gaps over 5 minutes of epoch micros: `flag` is 1 on a
+    * session's first event and `sid` the running sum of flags — the
+    * batch form of the streaming sessionizer (q54, q230, q259).
+    */
+  private[graft] def sessionize(events: DataFrame, flag: String,
+                                sid: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("tus", "event_id")
+    val gap = col("tus") - lag("tus", 1).over(w)
+    events
+      .withColumn(flag, when(gap.isNull || gap > 300000000L, 1).otherwise(0))
+      .withColumn(sid, sum(flag).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("long"))
+  }
 
   /** SCD2 dimension build ([[ops.Temporal.scd2]]): the events stream
     * as a per-user change log (state = event_type), compressed into
@@ -42,25 +86,9 @@ object WarehouseQueries {
     */
   private lazy val q226: QueryDef =
     QueryDef("q226_scd2_intervals",
-      Some(s"""
-        WITH el AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us,
-                           event_id
-                    FROM events),
-        $scd2Ctes
-        SELECT user_id, version, state, valid_from_us, valid_to_us,
-               valid_to_us IS NULL AS is_current
-        FROM vs ORDER BY user_id, version"""),
-      (s, d) => {
-        val log = events(s, d).select(col("user_id"),
-          col("event_type").as("state"),
-          expr("ts_ns div 1000").as("ts_us"), col("event_id"))
-        graft.ops.Temporal.scd2(log, Seq("user_id"), "state", "ts_us",
-            "event_id")
-          .select(col("user_id"), col("version"), col("state"),
-            col("valid_from").as("valid_from_us"),
-            col("valid_to").as("valid_to_us"), col("is_current"))
-          .orderBy("user_id", "version")
-      })
+      Some(scd2RebuildSql),
+      (s, d) => scd2Out(graft.ops.Temporal.scd2(changeLog(s, d),
+          Seq("user_id"), "state", "ts_us", "event_id")))
 
   /** Point-in-time fact join ([[ops.Temporal.pointInTime]]): tier
     * changes (signup/purchase events) build the SCD2 dimension;
@@ -208,17 +236,9 @@ object WarehouseQueries {
                CAST(MAX(conc) AS BIGINT) AS max_concurrency
         FROM c GROUP BY 1 ORDER BY 1"""),
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-        val cum = Window.partitionBy("user_id").orderBy("tus", "event_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val gap = col("tus") - lag("tus", 1).over(w)
-        val sess = events(s, d)
-          .select(col("user_id"), col("event_id"),
-            expr("ts_ns div 1000").as("tus"))
-          .withColumn("new_session",
-            when(gap.isNull || gap > 300000000L, 1).otherwise(0))
-          .withColumn("sid", sum("new_session").over(cum).cast("long"))
+        val sess = sessionize(events(s, d)
+            .select(col("user_id"), col("event_id"),
+              expr("ts_ns div 1000").as("tus")), "new_session", "sid")
           .groupBy("user_id", "sid")
           .agg(min("tus").as("start_us"), (max("tus") + 1).as("end_x"))
         graft.ops.Events.concurrency(sess, "start_us", "end_x",
@@ -569,16 +589,11 @@ object WarehouseQueries {
                  // COUNT(*) AS BIGINT) AS voiced_ppm,
                CAST(SUM(seg_start) AS BIGINT) AS n_segments
         FROM s GROUP BY doc_id ORDER BY doc_id"""),
-      (s, d) => {
-        import s.implicits._
-        val media = spread(documents(s, d))
-          .select(col("doc_id"), col("text").cast("binary").as("content"))
-          .as[Multimodal.MediaDoc]
-        Multimodal.vadSegments(
-            Multimodal.audioFrameEnergies(media, nFrames = 48).toDF(),
-            threshold = 64)
-          .orderBy("doc_id")
-      })
+      (s, d) => Multimodal.vadSegments(
+          Multimodal.audioFrameEnergies(CurationQueries.mediaCorpus(s, d),
+            nFrames = 48).toDF(),
+          threshold = 64)
+        .orderBy("doc_id"))
 
   /** MRR + MAP@10 ([[ops.Search.mapMrrAtK]]) over the q237 retrieval
     * with binary relevance (any panel term present): the other two
@@ -654,28 +669,15 @@ object WarehouseQueries {
     */
   private lazy val q240: QueryDef =
     QueryDef("q240_scd2_backfill",
-      Some(s"""
-        WITH el AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us,
-                           event_id
-                    FROM events),
-        $scd2Ctes
-        SELECT user_id, version, state, valid_from_us, valid_to_us,
-               valid_to_us IS NULL AS is_current
-        FROM vs ORDER BY user_id, version"""),
+      Some(scd2RebuildSql),
       (s, d) => {
-        val logAll = events(s, d).select(col("user_id"),
-          col("event_type").as("state"),
-          expr("ts_ns div 1000").as("ts_us"), col("event_id"))
+        val logAll = changeLog(s, d)
         val stragglers = logAll.filter(col("event_id") % 97 === 0)
         val log = logAll.filter(col("event_id") % 97 =!= 0)
         val stored = graft.ops.Temporal.scd2(log, Seq("user_id"), "state",
           "ts_us", "event_id")
-        graft.ops.Temporal.scd2Backfill(stored, log, stragglers,
-            Seq("user_id"), "state", "ts_us", "event_id")
-          .select(col("user_id"), col("version"), col("state"),
-            col("valid_from").as("valid_from_us"),
-            col("valid_to").as("valid_to_us"), col("is_current"))
-          .orderBy("user_id", "version")
+        scd2Out(graft.ops.Temporal.scd2Backfill(stored, log, stragglers,
+          Seq("user_id"), "state", "ts_us", "event_id"))
       })
 
   /** Optimizer join-cardinality estimate ([[ops.Stats
@@ -1012,23 +1014,11 @@ object WarehouseQueries {
   private lazy val q248: QueryDef =
     QueryDef("q248_langid_confusion",
       Some {
-        val profiles = PipelineQueries.LangProfiles
-        val scores = profiles.map { case (l, bgs) =>
-          val sum = bgs.map(bg =>
-            s"(length(text) - length(replace(text, '$bg', '')))")
-            .mkString(" + ")
-          s"($sum) AS s_$l"
-        }.mkString(", ")
-        val langs = profiles.map(_._1)
-        val cases = langs.init.map { l =>
-          val geAll = langs.filter(_ != l).map(o => s"s_$l >= s_$o")
-            .mkString(" AND ")
-          s"WHEN $geAll THEN '$l'"
-        }.mkString(" ")
+        import PipelineQueries.{langArgmaxSql, langScoresSql}
         s"""
-        WITH scored AS (SELECT lang, $scores FROM documents),
+        WITH scored AS (SELECT lang, $langScoresSql FROM documents),
         cls AS (SELECT lang AS true_class,
-                  CASE $cases ELSE '${langs.last}' END AS predicted
+                  $langArgmaxSql AS predicted
                 FROM scored),
         cells AS (SELECT true_class, predicted,
                     CAST(COUNT(*) AS BIGINT) AS n
@@ -1038,22 +1028,12 @@ object WarehouseQueries {
                  AS BIGINT) AS row_ppm
         FROM cells ORDER BY true_class, predicted"""
       },
-      (s, d) => {
-        val profiles = PipelineQueries.LangProfiles
-        val langs = profiles.map(_._1)
-        val scored = spread(documents(s, d)).select(
-          col("lang") +: profiles.map { case (l, bgs) =>
-            bgs.map(Pipeline.occurrences2x(col("text"), _)).reduce(_ + _)
-              .as(s"s_$l")
-          }: _*)
-        // argmax-struct form — same label, single score evaluation
-        // (see [[graft.Pipeline.argmaxLabel]])
-        val pred = Pipeline.argmaxLabel(langs.map(l => l -> col(s"s_$l")))
-        graft.ops.Stats.confusionMatrix(
-            scored.select(col("lang"), pred.as("predicted")),
-            "lang", "predicted")
-          .orderBy("true_class", "predicted")
-      })
+      (s, d) => graft.ops.Stats.confusionMatrix(
+          spread(documents(s, d))
+            .select(col("lang") +: PipelineQueries.langScoreCols: _*)
+            .select(col("lang"), PipelineQueries.langArgmax.as("predicted")),
+          "lang", "predicted")
+        .orderBy("true_class", "predicted"))
 
   /** TPC-H Q3 shape (shipping-priority report): segment-filtered
     * customers ⋈ undelivered orders ⋈ post-cutoff lineitems, revenue
@@ -1126,8 +1106,554 @@ object WarehouseQueries {
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20))
 
+  // The deterministic arrival permutation q256/q258 share: a hashed
+  // shuffle of the event log's arrival order, unique at oracle SF
+  // (event_id < 2^20 there; at larger sweeps ties are timing-only).
+  private val arrSql =
+    s"""${hash32("'arr_' || CAST(event_id AS VARCHAR)")} * 1048576 + event_id % 1048576"""
+
+  private def arrCol = graft.Pipeline.wordHash32(
+    concat(lit("arr_"), col("event_id").cast("string"))) * 1048576L +
+    pmod(col("event_id"), lit(1048576L))
+
+  /** ROC AUC by the exact rank-sum identity ([[ops.Stats.aucRoc]]):
+    * score = cosine to the vec-0 anchor, label = label parity — the
+    * completion of the retrieval-eval family (NDCG q237, MAP/MRR q239,
+    * confusion q248). Distinct-score prefix sums ride the scaffold;
+    * ties take midranks in half-units, all integer. One row out.
+    */
+  private lazy val q253: QueryDef =
+    QueryDef("q253_auc_roc",
+      Some(s"""
+        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                          CAST(label AS BIGINT) % 2 AS y
+                   FROM embeddings),
+        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
+        sc AS (SELECT vec_id, y, ${cos("v", "qv")} AS s FROM t CROSS JOIN q),
+        g AS (SELECT s, SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS pos,
+                     SUM(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS neg
+              FROM sc GROUP BY s),
+        c AS (SELECT *, COALESCE(SUM(neg) OVER (ORDER BY s
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                AS neg_below FROM g)
+        SELECT CAST(SUM(pos) AS BIGINT) AS n_pos,
+               CAST(SUM(neg) AS BIGINT) AS n_neg,
+               CAST(SUM(pos * (2 * neg_below + neg)) * 1000000
+                 // (2 * SUM(pos) * SUM(neg)) AS BIGINT) AS auc_ppm
+        FROM c"""),
+      (s, d) => {
+        val t = spread(embeddings(s, d)).select(col("vec_id"),
+          graft.Pipeline.asDouble(col("embedding")).as("v"),
+          (col("label").cast("long") % 2).as("y"))
+        val q = embeddings(s, d).filter(col("vec_id") === 0)
+          .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
+        val scored = t.crossJoin(broadcast(q))
+          .select(col("y"),
+            graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))
+              .as("s"))
+        graft.ops.Stats.aucRoc(scored, "y", "s")
+      })
+
+  /** Calibration (reliability) bins + ECE ([[ops.Stats
+    * .calibrationBins]]): the q253 scores squashed to [0,1] as
+    * pseudo-probabilities, bucketed into deciles — per bin the count,
+    * mean prediction, observed positive rate, |gap|, and the
+    * count-weighted expected-calibration-error. Predictions ride the
+    * exact DECIMAL micro hop; one bounded aggregation + a bins-sized
+    * window.
+    */
+  private lazy val q254: QueryDef =
+    QueryDef("q254_calibration_bins",
+      Some(s"""
+        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                          CAST(label AS BIGINT) % 2 AS y
+                   FROM embeddings),
+        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
+        sc AS (SELECT y, (${cos("v", "qv")} + 1) / 2 AS p
+               FROM t CROSS JOIN q),
+        b AS (SELECT LEAST(9, CAST(FLOOR(p * 10) AS INT)) AS bin, y,
+                     CAST(CAST(p AS DECIMAL(25,6)) * 1000000 AS BIGINT)
+                       AS p_micro
+              FROM sc),
+        g AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
+                     CAST(SUM(y) AS BIGINT) AS n_pos,
+                     CAST(SUM(p_micro) // COUNT(*) AS BIGINT)
+                       AS mean_pred_ppm
+              FROM b GROUP BY bin),
+        r AS (SELECT *, CAST(n_pos * 1000000 // n AS BIGINT) AS obs_ppm
+              FROM g)
+        SELECT bin, n, n_pos, mean_pred_ppm, obs_ppm,
+               CAST(abs(mean_pred_ppm - obs_ppm) AS BIGINT) AS gap_ppm,
+               CAST(SUM(n * abs(mean_pred_ppm - obs_ppm)) OVER ()
+                 // SUM(n) OVER () AS BIGINT) AS ece_ppm
+        FROM r ORDER BY bin"""),
+      (s, d) => {
+        val t = spread(embeddings(s, d)).select(col("vec_id"),
+          graft.Pipeline.asDouble(col("embedding")).as("v"),
+          (col("label").cast("long") % 2).as("y"))
+        val q = embeddings(s, d).filter(col("vec_id") === 0)
+          .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
+        val scored = t.crossJoin(broadcast(q))
+          .select(col("y"),
+            ((graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))
+              + 1) / 2).as("p"))
+        graft.ops.Stats.calibrationBins(scored, "y", "p", bins = 10)
+          .orderBy("bin")
+      })
+
+  /** Retraction-aware rollup maintenance ([[ops.Temporal
+    * .rollupStateSigned]] + the UNCHANGED [[ops.Temporal.mergeRollup]]
+    * + [[ops.Temporal.compactRollup]]): error events retract (+1/-1
+    * multiplicities, the CDC change-stream shape), the log splits into
+    * a stored half and a late delta by event-id parity, and the signed
+    * states merge through the same path appends use — closing
+    * joinRollupDelta's documented append-only limit for the base
+    * rollup. Oracle = the direct net aggregate per day.
+    */
+  private lazy val q255: QueryDef =
+    QueryDef("q255_rollup_retractions",
+      Some("""
+        WITH e AS (SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
+                          CASE WHEN event_type = 'error' THEN -1 ELSE 1 END
+                            AS sgn,
+                          value
+                   FROM events)
+        SELECT day, CAST(SUM(sgn) AS BIGINT) AS n,
+               CAST(SUM(sgn * CAST(value AS DECIMAL(25,6))) AS DOUBLE)
+                 AS sum_value
+        FROM e GROUP BY day HAVING SUM(sgn) <> 0 ORDER BY day"""),
+      (s, d) => {
+        val e = events(s, d).select(
+          expr("(ts_ns div 1000) div 86400000000L").as("day"),
+          when(col("event_type") === "error", -1L).otherwise(1L).as("sgn"),
+          col("value"), col("event_id"))
+        val stored = graft.ops.Temporal.rollupStateSigned(
+          e.filter(col("event_id") % 2 === 0), Seq("day"), "value", "sgn")
+        val delta = graft.ops.Temporal.rollupStateSigned(
+          e.filter(col("event_id") % 2 === 1), Seq("day"), "value", "sgn")
+        graft.ops.Temporal.compactRollup(
+            graft.ops.Temporal.mergeRollup(stored, delta, Seq("day")))
+          .select(col("day"), col("n"),
+            col("sum_value").cast(DoubleType).as("sum_value"))
+          .orderBy("day")
+      })
+
+  /** Out-of-order arrival census ([[ops.Events.latenessCensus]]) under
+    * a hashed arrival permutation — the watermark-sizing gauge: how
+    * many rows arrive behind a later-event-time sibling, and how late
+    * the worst one runs. Per-key windows in-task, one global rollup
+    * row. The oracle packs (ts, tie) into a HUGEINT key; the engine
+    * compares the struct — identical order because tie < 2^20 at
+    * oracle SF.
+    */
+  private lazy val q256: QueryDef =
+    QueryDef("q256_lateness_census",
+      Some(s"""
+        WITH el AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+                           $arrSql AS arr
+                    FROM events),
+        f AS (SELECT user_id, ts_us, event_id,
+                MAX(ts_us::HUGEINT * 1048576 + event_id) OVER (
+                  PARTITION BY user_id ORDER BY arr
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mp
+              FROM el),
+        g AS (SELECT user_id, COUNT(*) AS n_rows,
+                SUM(CASE WHEN mp IS NOT NULL
+                      AND ts_us::HUGEINT * 1048576 + event_id < mp
+                    THEN 1 ELSE 0 END) AS n_late,
+                COALESCE(MAX(CASE WHEN mp IS NOT NULL
+                      AND ts_us::HUGEINT * 1048576 + event_id < mp
+                    THEN CAST(mp // 1048576 AS BIGINT) - ts_us END), 0)
+                  AS max_late
+              FROM f GROUP BY user_id)
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
+               CAST(SUM(n_rows) AS BIGINT) AS n_rows,
+               CAST(SUM(n_late) AS BIGINT) AS n_late,
+               CAST(SUM(n_late) * 1000000 // SUM(n_rows) AS BIGINT)
+                 AS late_ppm,
+               CAST(MAX(max_late) AS BIGINT) AS max_lateness_us,
+               CAST(SUM(CASE WHEN n_late > 0 THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_users_late
+        FROM g"""),
+      (s, d) => {
+        val log = events(s, d).select(col("user_id"),
+          expr("ts_ns div 1000").as("ts_us"), col("event_id"),
+          arrCol.as("arr"))
+        graft.ops.Events.latenessCensus(log, Seq("user_id"), "ts_us",
+            "event_id", "arr")
+          .agg(count(lit(1)).cast("long").as("n_users"),
+            sum("n_rows").cast("long").as("n_rows"),
+            sum("n_late").cast("long").as("n_late"),
+            expr("(sum(n_late) * 1000000L) div sum(n_rows)").as("late_ppm"),
+            max("max_lateness").cast("long").as("max_lateness_us"),
+            sum(when(col("n_late") > 0, 1L).otherwise(0L)).cast("long")
+              .as("n_users_late"))
+      })
+
+  /** The composed streaming-SCD2 repair loop END TO END ([[ops
+    * .Temporal.scd2Repair]]): a hashed arrival permutation makes real
+    * stragglers, the stored dimension is built from exactly the rows
+    * an on-arrival maintainer absorbs, and the facade detects the
+    * drops and back-fills ONLY the affected keys. The oracle is the
+    * from-scratch SCD2 rebuild over the full log — the facade's
+    * contract is equality with it, at straggler-proportional cost.
+    */
+  private lazy val q258: QueryDef =
+    QueryDef("q258_scd2_repair",
+      Some(scd2RebuildSql),
+      (s, d) => {
+        val log = changeLog(s, d, arrCol.as("arr"))
+        // the stored dim = what the on-arrival maintainer kept (the
+        // same batch-agnostic in-order rule scd2Repair re-derives)
+        val prior = Window.partitionBy("user_id").orderBy("arr")
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val absorbed = log
+          .withColumn("_mp",
+            max(struct(col("ts_us"), col("event_id"))).over(prior))
+          .filter(col("_mp").isNull ||
+            !(struct(col("ts_us"), col("event_id")) < col("_mp")))
+          .drop("_mp", "arr")
+        val stored = graft.ops.Temporal.scd2(absorbed, Seq("user_id"),
+          "state", "ts_us", "event_id")
+        scd2Out(graft.ops.Temporal.scd2Repair(stored, log, Seq("user_id"),
+          "state", "ts_us", "event_id", "arr"))
+      })
+
+  /** Session PATH mining: sessions cut at 5-minute gaps (the q230
+    * recipe), each session keyed by its first three event types, the
+    * top-20 paths by volume — the navigation-pattern report product
+    * analytics reads. One user-keyed sessionization exchange, one
+    * bounded path aggregate, a TakeOrdered top-k. Path assembly is an
+    * ORDERED fold on both engines (sorted struct collect / ORDER BY
+    * inside list()).
+    */
+  private lazy val q259: QueryDef =
+    QueryDef("q259_session_paths",
+      Some("""
+        WITH e AS (SELECT user_id, event_type AS et, epoch_us(ts) AS tus,
+                          event_id
+                   FROM events),
+        g AS (SELECT *, CASE WHEN tus - LAG(tus) OVER w IS NULL
+                          OR tus - LAG(tus) OVER w > 300000000
+                        THEN 1 ELSE 0 END AS ns
+              FROM e WINDOW w AS (PARTITION BY user_id
+                                  ORDER BY tus, event_id)),
+        s AS (SELECT *, SUM(ns) OVER (PARTITION BY user_id
+                ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS sid
+              FROM g),
+        p AS (SELECT user_id, sid,
+                array_to_string(list_slice(
+                  list(et ORDER BY tus, event_id), 1, 3), '>') AS path
+              FROM s GROUP BY user_id, sid)
+        SELECT path, CAST(COUNT(*) AS BIGINT) AS n_sessions
+        FROM p GROUP BY path
+        ORDER BY n_sessions DESC, path LIMIT 20"""),
+      (s, d) => sessionize(events(s, d)
+          .select(col("user_id"), col("event_type").as("et"),
+            expr("ts_ns div 1000").as("tus"), col("event_id")), "ns", "sid")
+        .groupBy("user_id", "sid")
+        .agg(array_join(expr(
+          "transform(slice(array_sort(collect_list(" +
+            "struct(tus, event_id, et))), 1, 3), x -> x.et)"), ">")
+          .as("path"))
+        .groupBy("path")
+        .agg(count(lit(1)).cast("long").as("n_sessions"))
+        .orderBy(col("n_sessions").desc, col("path")).limit(20))
+
+  /** One-vs-rest MULTI-CLASS AUC ([[ops.Stats.aucRocByGroup]]): every
+    * class's rank-sum AUC in ONE scaffold pass — the rows fan out to
+    * (class, y = label==class) pairs, the distinct-(class, score)
+    * counts range-partition by score with classes as prefix-sum
+    * strata, so 10 classes cost one exchange, not 10 jobs. The macro
+    * average rides a classes-sized window. Score is the q253 anchor
+    * cosine; a good score for parity classes is a poor one for
+    * others, which is exactly what the per-class panel shows.
+    */
+  private lazy val q262: QueryDef =
+    QueryDef("q262_macro_auc",
+      Some(s"""
+        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                          CAST(label AS BIGINT) AS lab
+                   FROM embeddings),
+        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
+        sc AS (SELECT lab, ${cos("v", "qv")} AS s FROM t CROSS JOIN q),
+        f AS (SELECT cls.cls, CASE WHEN lab = cls.cls THEN 1 ELSE 0 END AS y,
+                     s
+              FROM sc CROSS JOIN (SELECT unnest(range(0, 10)) AS cls) cls),
+        g AS (SELECT cls, s, SUM(y) AS pos,
+                     SUM(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS neg
+              FROM f GROUP BY cls, s),
+        c AS (SELECT *, COALESCE(SUM(neg) OVER (PARTITION BY cls ORDER BY s
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                AS neg_below FROM g),
+        a AS (SELECT CAST(cls AS BIGINT) AS class,
+                CAST(SUM(pos) AS BIGINT) AS n_pos,
+                CAST(SUM(neg) AS BIGINT) AS n_neg,
+                CAST(SUM(pos * (2 * neg_below + neg)) * 1000000
+                  // (2 * SUM(pos) * SUM(neg)) AS BIGINT) AS auc_ppm
+              FROM c GROUP BY cls)
+        SELECT class, n_pos, n_neg, auc_ppm,
+               CAST(SUM(auc_ppm) OVER () // COUNT(*) OVER () AS BIGINT)
+                 AS macro_auc_ppm
+        FROM a ORDER BY class"""),
+      (s, d) => {
+        val t = spread(embeddings(s, d)).select(col("vec_id"),
+          graft.Pipeline.asDouble(col("embedding")).as("v"),
+          col("label").cast("long").as("lab"))
+        val q = embeddings(s, d).filter(col("vec_id") === 0)
+          .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
+        val fanned = t.crossJoin(broadcast(q))
+          .select(col("lab"),
+            graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))
+              .as("s"))
+          .select(explode(expr("sequence(0L, 9L)")).as("class"),
+            col("lab"), col("s"))
+          .select(col("class"),
+            when(col("lab") === col("class"), 1).otherwise(0).as("y"),
+            col("s"))
+        graft.ops.Stats.aucRocByGroup(fanned, Seq("class"), "y", "s")
+          .withColumn("macro_auc_ppm",
+            expr("sum(auc_ppm) OVER () div count(1) OVER ()"))
+          .orderBy("class")
+      })
+
+  /** Keyless point-in-interval join ([[ops.Events
+    * .intervalJoinBucketed]]): every 211th event opens a 7-minute
+    * audit window; count ALL events falling inside each window. With
+    * no equi key Spark plans this as a BroadcastNestedLoopJoin —
+    * points x windows, the quadratic cliff — so the operator
+    * time-buckets both sides (10-minute buckets >= the window length,
+    * so each window covers <= 2 buckets) and the match becomes an
+    * equi-join on bucket id + a residual containment filter. The
+    * oracle runs the naive non-equi join DuckDB is happy to do at
+    * oracle SF. Zero-match windows are kept (left join back).
+    */
+  private lazy val q272: QueryDef =
+    QueryDef("q272_interval_join",
+      Some("""
+        WITH el AS (SELECT event_id, epoch_us(ts) AS ts_us FROM events),
+        iv AS (SELECT event_id AS iv_id, ts_us AS s_us,
+                      ts_us + 420000000 AS e_us
+               FROM el WHERE event_id % 211 = 0)
+        SELECT iv.iv_id, CAST(iv.s_us AS BIGINT) AS s_us,
+               CAST(COUNT(el.ts_us) AS BIGINT) AS n_inside
+        FROM iv LEFT JOIN el
+          ON el.ts_us >= iv.s_us AND el.ts_us < iv.e_us
+        GROUP BY iv.iv_id, iv.s_us ORDER BY iv_id"""),
+      (s, d) => {
+        val el = events(s, d).select(col("event_id"),
+          expr("ts_ns div 1000").as("ts_us"))
+        val iv = el.filter(col("event_id") % 211 === 0)
+          .select(col("event_id").as("iv_id"), col("ts_us").as("s_us"),
+            (col("ts_us") + lit(420000000L)).as("e_us"))
+        val counts = graft.ops.Events.intervalJoinBucketed(
+            el.select(col("ts_us").as("p_us")), "p_us",
+            iv, "s_us", "e_us", bucketWidth = 600000000L)
+          .groupBy("iv_id").agg(count(lit(1)).as("_n"))
+        iv.join(counts, Seq("iv_id"), "left")
+          .select(col("iv_id"), col("s_us"),
+            coalesce(col("_n"), lit(0L)).as("n_inside"))
+          .orderBy("iv_id")
+      })
+
+  /** Isotonic (PAV) score calibration ([[ops.Stats
+    * .isotonicCalibration]]) over q254's scored frame at 50 bins: the
+    * best MONOTONE map from predicted score to observed positive
+    * rate, micro-exact via the minimax representation (floor commutes
+    * with min/max, so `fitted_micro` IS the floored true PAV fit).
+    * Where q254 reports per-bin gaps, this produces the correction a
+    * serving layer actually applies. One corpus pass; everything
+    * after runs on the bounded 50-row bin panel.
+    */
+  private lazy val q278: QueryDef =
+    QueryDef("q278_isotonic_calibration",
+      Some(s"""
+        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                          CAST(label AS BIGINT) % 2 AS y
+                   FROM embeddings),
+        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
+        sc AS (SELECT y, (${cos("v", "qv")} + 1) / 2 AS p
+               FROM t CROSS JOIN q),
+        b AS (SELECT LEAST(49, CAST(FLOOR(p * 50) AS BIGINT)) AS bin, y
+              FROM sc),
+        g AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
+                     CAST(SUM(y) AS BIGINT) AS n_pos
+              FROM b GROUP BY bin),
+        pre AS (SELECT *, SUM(n) OVER (ORDER BY bin) AS cn,
+                       SUM(n_pos) OVER (ORDER BY bin) AS cp FROM g),
+        pairs AS (SELECT j.bin AS jb, k.bin AS kb,
+                    (k.cp - (j.cp - j.n_pos)) * 1000000
+                      // (k.cn - (j.cn - j.n)) AS mm
+                  FROM pre j JOIN pre k ON j.bin <= k.bin),
+        tri AS (SELECT i.bin AS ib, p.jb, p.mm FROM g i
+                JOIN pairs p ON p.jb <= i.bin AND i.bin <= p.kb),
+        mn AS (SELECT ib, jb, MIN(mm) AS mn FROM tri GROUP BY 1, 2),
+        fit AS (SELECT ib AS bin, MAX(mn) AS fitted_micro FROM mn
+                GROUP BY 1)
+        SELECT g.bin, g.n, g.n_pos,
+               CAST(g.n_pos * 1000000 // g.n AS BIGINT) AS raw_micro,
+               CAST(fitted_micro AS BIGINT) AS fitted_micro
+        FROM g JOIN fit USING (bin) ORDER BY bin"""),
+      (s, d) => {
+        val t = spread(embeddings(s, d)).select(col("vec_id"),
+          graft.Pipeline.asDouble(col("embedding")).as("v"),
+          (col("label").cast("long") % 2).as("y"))
+        val q = embeddings(s, d).filter(col("vec_id") === 0)
+          .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
+        val scored = t.crossJoin(broadcast(q))
+          .select(col("y"),
+            ((graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))
+              + 1) / 2).as("p"))
+        graft.ops.Stats.isotonicCalibration(scored, "y", "p", bins = 50)
+          .orderBy("bin")
+      })
+
+  /** Rank-biased overlap ([[ops.Ranking.rankBiasedOverlap]],
+    * p = 9/10, depth 20) between two document rankings — "length
+    * order" (token count) vs "vocabulary order" (distinct tokens):
+    * the top-weighted agreement score a retrieval change gates on.
+    * Integer-exact via precomputed `9^(d-1) * 10^(20-d) * lcm/d`
+    * coefficients inlined as literals in BOTH engines; the engine
+    * computes on the <= 20-row intersection (explode + equi-group,
+    * no range join), the oracle replays the same coefficient sum.
+    */
+  private lazy val q279: QueryDef = {
+    val depth = 20
+    val lcm = (1 to depth).map(BigInt(_)).reduce((x, y) => x * y / x.gcd(y))
+    val coef = (1 to depth).map(d =>
+      BigInt(9).pow(d - 1) * BigInt(10).pow(depth - d) * (lcm / d))
+    val denTimesPden = (BigInt(10).pow(depth - 1) * lcm * 10).toString
+    val coefCases = coef.zipWithIndex
+      .map { case (c, i) => s"WHEN ${i + 1} THEN ${c}::HUGEINT" }
+      .mkString(" ")
+    QueryDef("q279_rank_biased_overlap",
+      Some(s"""
+        WITH t AS (SELECT doc_id,
+                     len(string_split(text, ' ')) AS nt,
+                     len(list_distinct(string_split(text, ' '))) AS nd
+                   FROM documents),
+        ra AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY nt DESC, doc_id)
+                 AS r FROM t QUALIFY r <= $depth),
+        rb AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY nd DESC, doc_id)
+                 AS r FROM t QUALIFY r <= $depth),
+        cm AS (SELECT GREATEST(ra.r, rb.r) AS m FROM ra
+               JOIN rb ON ra.doc_id = rb.doc_id),
+        ds AS (SELECT unnest(range(1, ${depth + 1})) AS d),
+        ov AS (SELECT ds.d, COALESCE(COUNT(cm.m), 0) AS overlap
+               FROM ds LEFT JOIN cm ON cm.m <= ds.d GROUP BY ds.d),
+        nm AS (SELECT COALESCE(SUM((CASE d $coefCases END) * overlap),
+                 0::HUGEINT) AS num FROM ov)
+        SELECT CAST(ov.d AS BIGINT) AS d, CAST(overlap AS BIGINT)
+                 AS overlap,
+               CAST(num * 1000000 // ${denTimesPden}::HUGEINT AS BIGINT)
+                 AS rbo_ppm
+        FROM ov CROSS JOIN nm ORDER BY d"""),
+      (s, d) => {
+        val w = graft.Pipeline.words(col("text"))
+        val t = spread(documents(s, d)).select(col("doc_id"),
+          size(w).as("nt"), size(array_distinct(w)).as("nd"))
+        def ranked(by: String) = t
+          .orderBy(col(by).desc, col("doc_id"))
+          .limit(depth)
+          .withColumn("r", row_number().over(
+            Window.orderBy(col(by).desc, col("doc_id"))))
+        graft.ops.Ranking.rankBiasedOverlap(
+            ranked("nt"), ranked("nd"), "doc_id", "r",
+            depth = depth, pNum = 9, pDen = 10)
+          .orderBy("d")
+      })
+  }
+
+  /** Per-user CUSUM changepoint screen
+    * ([[ops.Events.cusumChangepoint]]): did a user's event value
+    * drift from the global reference mid-history — the corruption
+    * tripwire a per-arrival mean can't see. Exact prefix-sum
+    * identity (`E_t = P_t - min(0, running min of P)`), per-user
+    * ordered windows (the bounded-history events convention), argmax
+    * by one struct-min aggregate; the oracle replays the windows and
+    * picks the same (E desc, ts, id) row.
+    */
+  private lazy val q294: QueryDef = {
+    val (slack, threshold) = (500L, 600000L)
+    QueryDef("q294_cusum_changepoint",
+      Some(s"""
+        WITH el AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+                      CAST(CAST(value AS DECIMAL(25,6)) * 1000
+                        AS BIGINT) AS vm
+                    FROM events),
+        rf AS (SELECT SUM(vm::HUGEINT) // COUNT(*) AS ref FROM el),
+        dd AS (SELECT user_id, ts_us, event_id,
+                 vm - ref - $slack AS d
+               FROM el CROSS JOIN rf),
+        pp AS (SELECT *, SUM(d) OVER (PARTITION BY user_id
+                 ORDER BY ts_us, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
+               FROM dd),
+        ee AS (SELECT *, p - LEAST(0, MIN(p) OVER (PARTITION BY user_id
+                 ORDER BY ts_us, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS e
+               FROM pp),
+        rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
+                 ORDER BY e DESC, ts_us, event_id) AS rn,
+                 COUNT(*) OVER (PARTITION BY user_id) AS n_events
+               FROM ee)
+        SELECT user_id, CAST(n_events AS BIGINT) AS n_events,
+               CAST(e AS BIGINT) AS max_excursion_milli,
+               CAST(event_id AS BIGINT) AS at_event_id,
+               CAST(CASE WHEN e > $threshold THEN 1 ELSE 0 END
+                 AS BIGINT) AS flagged
+        FROM rk WHERE rn = 1 ORDER BY user_id"""),
+      (s, d) => {
+        val el = events(s, d).select(col("event_id"), col("user_id"),
+          expr("ts_ns div 1000").as("ts_us"),
+          col("value").cast("decimal(25,6)").*(lit(1000))
+            .cast("long").as("vm"))
+        val r = el.agg(sum(col("vm").cast("decimal(38,0)")),
+          count(lit(1))).first()
+        val ref = (BigInt(r.getDecimal(0).toBigInteger) /
+          BigInt(r.getLong(1))).toLong
+        graft.ops.Events.cusumChangepoint(el, "user_id", "ts_us",
+            "event_id", "vm", refMilli = ref, slackMilli = slack,
+            thresholdMilli = threshold)
+          .orderBy("user_id")
+      })
+  }
+
+  /** Purged time-series folds ([[ops.Temporal.purgedTimeFolds]],
+    * k = 5, 30-minute embargo): leakage-safe temporal eval
+    * assignment — contiguous time blocks plus an embargo zone around
+    * each boundary so straddling label windows can't leak. Exact
+    * integer block formula (no float edges); the oracle replays the
+    * boundary arithmetic inline.
+    */
+  private lazy val q295: QueryDef = {
+    val embargo = 1800000000L // 30 min in microseconds
+    QueryDef("q295_purged_time_folds",
+      Some(s"""
+        WITH el AS (SELECT event_id, epoch_us(ts) AS t FROM events),
+        mm AS (SELECT MIN(t) AS tmin,
+                      MAX(t) - MIN(t) + 1 AS span FROM el),
+        f AS (SELECT event_id, t, ((t - tmin) * 5) // span AS fold,
+                     tmin, span
+              FROM el CROSS JOIN mm),
+        b AS (SELECT *, tmin + (span * fold) // 5 AS ownb,
+                     tmin + (span * (fold + 1)) // 5 AS nextb
+              FROM f)
+        SELECT event_id, CAST(fold AS BIGINT) AS fold,
+               CAST(CASE WHEN (fold > 0 AND t - ownb < $embargo)
+                 OR (fold < 4 AND nextb - t <= $embargo)
+                 THEN 1 ELSE 0 END AS BIGINT) AS purged
+        FROM b ORDER BY event_id"""),
+      (s, d) => graft.ops.Temporal.purgedTimeFolds(
+          events(s, d).select(col("event_id"),
+            expr("ts_ns div 1000").as("ts_us")),
+          "event_id", "ts_us", k = 5, embargo = embargo)
+        .orderBy("event_id"))
+  }
+
   val all: Seq[QueryDef] =
     Seq(q226, q227, q228, q229, q230, q232, q233, q234, q235, q236, q237,
       q238, q239, q240, q241, q242, q243, q244, q245, q246, q247, q248,
-      q249, q250)
+      q249, q250, q253, q254, q255, q256, q258, q259, q262, q272, q278,
+      q279, q294, q295)
 }

@@ -585,26 +585,12 @@ object Graph {
     * traffic in any real corpus and cannot reach a top-k score, so
     * the gate trades declared semantics (floor in the output
     * contract) for an exchange that carries only repeat pairs.
-    *
-    * Physical knobs (semantics-free): `aggPartitions` widens the
-    * wedge aggregation's hash exchange past the session default —
-    * per-task agg MAP SIZE, not exchange bytes, is the binding
-    * resource (the round-17 spill-to-sort profile); `countGate`
-    * switches gated mode to a two-pass plan that first counts 8-byte
-    * pair HASHES (a ~3x lighter exchange and map) and only aggregates
-    * the wedges of hashes that reach the floor — the scale path for
-    * the decade where the one-pass map no longer fits (collisions are
-    * dropped by the exact post-agg floor, so the result is
-    * bit-identical).
     */
   def adamicAdar(edges: DataFrame, maxDegree: Int = 64,
-                 topK: Int = 100, minCommonNeighbors: Int = 1,
-                 aggPartitions: Int = 0,
-                 countGate: Boolean = false): DataFrame = {
+                 topK: Int = 100,
+                 minCommonNeighbors: Int = 1): DataFrame = {
     require(minCommonNeighbors >= 1,
       s"minCommonNeighbors must be >= 1, got $minCommonNeighbors")
-    require(!countGate || minCommonNeighbors >= 2,
-      "countGate needs a floor >= 2 (at floor 1 it gates nothing)")
     val und = edges
       .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
         greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
@@ -658,50 +644,9 @@ object Graph {
     def wedgesOf(src: DataFrame): DataFrame = src.select(col("_c"),
       explode(graft.plans.PairEnumExpressions.sortedPairs(col("_ns"))).as("_p"))
       .select(col("_p.u").as("u"), col("_p.v").as("v"), col("_c"))
-    // `aggPartitions` widens the wedge aggregation's exchange beyond
-    // the session default: the (u, v) agg builds one hash map per
-    // partition over ~all-unique keys, so per-task map size — not
-    // exchange bytes — is the binding resource at scale (the
-    // spill-to-sort profile). An explicit hash repartition on the
-    // grouping keys satisfies the agg's required distribution, so
-    // EnsureRequirements inserts no second exchange.
-    def withAggParts(w: DataFrame): DataFrame =
-      if (aggPartitions > 0) w.repartition(aggPartitions, col("u"), col("v"))
-      else w
-    val scored =
-      if (!countGate) {
-        withAggParts(wedgesOf(nbrs)).groupBy("u", "v").agg(
-          sum("_c").as("aa_micro"),
-          count(lit(1)).cast(LongType).as("common_neighbors"))
-      } else {
-        // COUNT-GATE two-pass (the 100 TB shape): the exact one-pass
-        // agg must shuffle every (u, v, _c) wedge row and hold
-        // all-unique struct keys in its maps — the superlinear term
-        // at the third decade. Pass 1 shuffles only an 8-byte
-        // xxhash64(u, v) per wedge and counts per hash (long->long
-        // map entries, ~3x lighter); hashes reaching the floor —
-        // 0.07% of pairs on the round-17 profile — form a tiny frame
-        // the pass-2 semi-join broadcasts (AQE sizes it at runtime).
-        // Pass 2 re-enumerates wedges from the PERSISTED neighbor
-        // lists (in-task CPU, no shuffle — the lists are the bounded
-        // per-middle arrays, ~1.5% of wedge volume) and runs the
-        // exact (u, v) aggregate on the surviving sliver. Hash
-        // collisions only ADD candidates; the exact post-agg floor
-        // below drops them, so the gate stays lossless.
-        val nbrsP = nbrs.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val hashed = wedgesOf(nbrsP).select(xxhash64(col("u"), col("v")).as("_h"))
-        val hot = (if (aggPartitions > 0)
-            hashed.repartition(aggPartitions, col("_h")) else hashed)
-          .groupBy("_h").agg(count(lit(1)).as("_n"))
-          .filter(col("_n") >= minCommonNeighbors)
-          .select("_h")
-        wedgesOf(nbrsP)
-          .join(hot, xxhash64(col("u"), col("v")) === hot("_h"), "left_semi")
-          .groupBy("u", "v").agg(
-            sum("_c").as("aa_micro"),
-            count(lit(1)).cast(LongType).as("common_neighbors"))
-      }
+    val scored = wedgesOf(nbrs).groupBy("u", "v").agg(
+      sum("_c").as("aa_micro"),
+      count(lit(1)).cast(LongType).as("common_neighbors"))
     val gated =
       if (minCommonNeighbors <= 1) scored
       else scored.filter(col("common_neighbors") >= minCommonNeighbors)
@@ -751,8 +696,8 @@ object Graph {
     * sample count scaled by `sampleOneIn`, NOT an exact count.
     */
   def adamicAdarSampled(edges: DataFrame, maxDegree: Int = 64,
-                        topK: Int = 100, sampleOneIn: Int = 10,
-                        aggPartitions: Int = 0): DataFrame = {
+                        topK: Int = 100,
+                        sampleOneIn: Int = 10): DataFrame = {
     require(sampleOneIn >= 1, s"sampleOneIn must be >= 1, got $sampleOneIn")
     val und = edges
       .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
@@ -778,13 +723,7 @@ object Graph {
       .filter(pmod(col("_hw") + col("_p.u._hn") + col("_p.v._hn"),
         lit(sampleOneIn.toLong)) === 0)
       .select(col("_p.u.n").as("u"), col("_p.v.n").as("v"), col("_c"))
-    // same spill physics as [[adamicAdar]]'s wedge agg, at 1/sampleOneIn
-    // the volume — widen the exchange once the kept-wedge count per
-    // session-default partition outgrows a few million map entries
-    val keptParts =
-      if (aggPartitions > 0) kept.repartition(aggPartitions, col("u"), col("v"))
-      else kept
-    keptParts.groupBy("u", "v").agg(
+    kept.groupBy("u", "v").agg(
         (sum("_c") * sampleOneIn).as("aa_micro_est"),
         (count(lit(1)) * sampleOneIn).cast(LongType).as("common_neighbors_est"))
       .join(und.select(col("a").as("u"), col("b").as("v")),

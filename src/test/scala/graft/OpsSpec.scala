@@ -3598,21 +3598,6 @@ class OpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.ops.Graph.adamicAdar(edges, minCommonNeighbors = 0)
     }
-    // physical knobs are semantics-free: the widened agg exchange and
-    // the two-pass count gate both reproduce the one-pass gated
-    // output bit-for-bit (the count gate's hash collisions can only
-    // ADD candidates, which the exact post-agg floor drops)
-    val widened = graft.ops.Graph.adamicAdar(edges,
-        minCommonNeighbors = 2, aggPartitions = 7)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(widened == gated)
-    val twoPass = graft.ops.Graph.adamicAdar(edges,
-        minCommonNeighbors = 2, countGate = true)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(twoPass == gated)
-    intercept[IllegalArgumentException] {
-      graft.ops.Graph.adamicAdar(edges, countGate = true) // floor 1
-    }
   }
 
   test("adamicAdarSampled: sampleOneIn=1 is the exact operator; the " +

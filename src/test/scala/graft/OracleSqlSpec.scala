@@ -4,28 +4,58 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The DuckDB renderings of engine kernels live once, in
-  * [[OracleSql]]; a hand-copied md5-hex fold or index-ordered vector
-  * fold anywhere else in `src/main` is a second copy that can drift.
+/** Each repeated recipe lives once: the DuckDB renderings of engine
+  * kernels in [[OracleSql]], and each query recipe several queries
+  * share (session window, language-ID scorer, order–part graph, banded
+  * frame near-dup tail, SCD2 projection) in the family file that owns
+  * it. A second copy of a marker anywhere else in `src/main` is a copy
+  * that can drift.
   */
 class OracleSqlSpec extends AnyFunSuite {
 
-  private val recipeMarkers = Seq(
-    "strpos('0123456789abcdef'",
-    "list_reduce(list_transform(range(1, ")
+  /** Marker → the one `src/main` file allowed to hold it. */
+  private val owners = Seq(
+    "strpos('0123456789abcdef'" -> "OracleSql.scala",
+    "list_reduce(list_transform(range(1, " -> "OracleSql.scala",
+    "gap > 300000000L" -> "WarehouseQueries.scala",
+    "length(replace(text, '$bg', ''))" -> "PipelineQueries.scala",
+    "occurrences2x(col(\"text\"), _)" -> "PipelineQueries.scala",
+    "l_partkey + 1000000000000" -> "GraphQueries.scala",
+    "FROM okc x JOIN okc y" -> "CurationQueries.scala",
+    "col(\"valid_to\").as(\"valid_to_us\")" -> "WarehouseQueries.scala")
 
-  test("only OracleSql renders the md5-hex and vector-fold recipes") {
+  private def mainSources: List[java.nio.file.Path] = {
     val main = Paths.get("src", "main")
     assert(Files.isDirectory(main),
       s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
-    val files = Files.walk(main).iterator().asScala
+    Files.walk(main).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toList
-    def holders(marker: String): Set[String] = files
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(marker))
-      .map(_.getFileName.toString).toSet
-    recipeMarkers.foreach { m =>
-      assert(holders(m) == Set("OracleSql.scala"), s"files rendering `$m`")
+  }
+
+  private def holders(marker: String): Set[String] = mainSources
+    .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(marker))
+    .map(_.getFileName.toString).toSet
+
+  private def checkOwners(keep: String => Boolean): Unit = {
+    val copies = owners.collect {
+      case (m, owner) if keep(owner) && holders(m) != Set(owner) =>
+        s"`$m` in ${holders(m).toSeq.sorted.mkString(", ")} (owner $owner)"
     }
+    assert(copies.isEmpty, copies.mkString("; "))
+  }
+
+  test("only OracleSql renders the md5-hex and vector-fold recipes") {
+    checkOwners(_ == "OracleSql.scala")
+  }
+
+  test("each shared query recipe sits in exactly its owning family file") {
+    checkOwners(_ != "OracleSql.scala")
+  }
+
+  test("queries are grouped by operator family, not by round") {
+    val rounds = mainSources.map(_.getFileName.toString)
+      .filter(_.matches("""Round\d+Queries\.scala"""))
+    assert(rounds.isEmpty, s"round-batch query files: $rounds")
   }
 
   test("recipe loop variables cannot capture a caller's i, d or p") {

@@ -42,6 +42,16 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == names)
   }
 
+  test("Tables.events refuses a non-UTC session and names UTC") {
+    val other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "Asia/Jakarta")
+    val e = intercept[IllegalStateException](Tables.events(other, sf))
+    assert(e.getMessage.contains("UTC"), e.getMessage)
+    assert(e.getMessage.contains("Asia/Jakarta"), e.getMessage)
+    // the check reads the session it is given; it never repoints it
+    assert(other.conf.get("spark.sql.session.timeZone") == "Asia/Jakarta")
+  }
+
   test("q02 grouped count sums to table count") {
     import org.apache.spark.sql.functions._
     val total = Tables.events(spark, sf).count()
