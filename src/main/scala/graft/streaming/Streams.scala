@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.wilayah.{Geo, Ingest, Model, Store}
@@ -161,8 +161,6 @@ object Streams {
     * with prior doc `a_id` in LSH band `band` (a_id < b_id by id).
     */
   case class LshCandidate(a_id: Long, b_id: Long, band: Int, ts: Timestamp)
-  // state classes must be encoder-visible (non-private): the state
-  // serializer is codegen'd and cannot call private accessors
   case class BucketState(ids: List[Long], lastMs: Long)
 
   /** Streaming MinHash-LSH near-dup candidate generation — the
@@ -209,35 +207,24 @@ object Streams {
         explode(graft.Pipeline.lshBands(sig, bandsR, kR / bandsR)).as("bb"))
       .select(col("id"), col("ts"), col("bb.band").as("band"), col("bb.bh").as("bh"))
       .as[(Long, Timestamp, Int, String)]
-    banded
-      .groupByKey { case (_, _, band, bh) => (band, bh) }
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, String), rows: Iterator[(Long, Timestamp, Int, String)],
-         state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = rows.toSeq.sortBy { case (id, ts, _, _) => (ts.getTime, id) }
-            var st = state.getOption.getOrElse(BucketState(Nil, 0L))
-            val out = Seq.newBuilder[LshCandidate]
-            arrivals.foreach { case (id, ts, band, _) =>
-              st.ids.foreach { prior =>
-                if (prior != id) out += LshCandidate(
-                  math.min(prior, id), math.max(prior, id), band, ts)
-              }
-              // hot-bucket cap: a full bucket emits pairs against its
-              // members but stops absorbing new ones — hard bound on
-              // state AND on per-arrival pair fan-out
-              if (st.ids.length < maxBucket && !st.ids.contains(id))
-                st = BucketState(id :: st.ids, math.max(st.lastMs, ts.getTime))
-              else st = st.copy(lastMs = math.max(st.lastMs, ts.getTime))
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(st.lastMs + horizonMs)
-            out.result().iterator
+    KeyedState.evicting(banded.groupByKey { case (_, _, band, bh) => (band, bh) })(
+        Ordering.by { case (id, ts, _, _) => (ts.getTime, id) },
+        (st: BucketState) => st.lastMs + horizonMs) { (_, prior, arrivals) =>
+      val out = Seq.newBuilder[LshCandidate]
+      val next = arrivals.foldLeft(prior.getOrElse(BucketState(Nil, 0L))) {
+        case (st, (id, ts, band, _)) =>
+          st.ids.foreach { p =>
+            if (p != id) out += LshCandidate(math.min(p, id), math.max(p, id), band, ts)
           }
+          // hot-bucket cap: a full bucket emits pairs against its
+          // members but stops absorbing new ones — hard bound on
+          // state AND on per-arrival pair fan-out
+          val lastMs = math.max(st.lastMs, ts.getTime)
+          if (st.ids.length < maxBucket && !st.ids.contains(id)) BucketState(id :: st.ids, lastMs)
+          else st.copy(lastMs = lastMs)
       }
+      (Some(next), out.result().iterator)
+    }
   }
 
   /** Streaming contamination monitor: flag arriving docs that LSH-match
@@ -624,8 +611,6 @@ object Streams {
     */
   case class SpanHit(id: Long, span_start: Long, span_end: Long,
                      span_tokens: Long, ts: Timestamp)
-  // encoder-visible (non-private): the state serializer is codegen'd
-  case class SpanSeen(lastMs: Long)
 
   /** Streaming SPAN-level dedup: for each arriving doc, emit the
     * maximal token spans that occur at least `minOcc` times in a
@@ -667,54 +652,39 @@ object Streams {
       .select("_h")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val horizonMs = horizonMinutes * 60_000L
-    val hits = graft.ops.SpanDedup.windowAnchors(
+    val anchors = graft.ops.SpanDedup.windowAnchors(
         docs.withWatermark("ts", s"$horizonMinutes minutes"),
         idCol, textCol, l, keep = Seq("ts"))
       .join(occ, Seq("_h"), "left_semi")
       .select(col("_id").as("id"), col("pos"), col("ts"))
       .as[(Long, Int, Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (id: Long, rows: Iterator[(Long, Int, Timestamp)],
-         state: GroupState[SpanSeen]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (state.exists) {
-            // this doc already reported within the horizon — a
-            // re-delivery emits nothing (the
-            // dropDuplicatesWithinWatermark discipline, in-state
-            // because the span merge needs the group anyway)
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val ts = rs.map(_._3).maxBy(_.getTime)
-            val positions = rs.map(_._2).distinct.sorted
-            // gaps-and-islands, the batch rule verbatim: sorted
-            // positions, a window extends the running span iff
-            // pos <= previous end (= last pos + l, since pos + l is
-            // monotone over sorted pos)
-            val out = Seq.newBuilder[SpanHit]
-            var start = -1
-            var end = -1
-            positions.foreach { p =>
-              if (start < 0) { start = p; end = p + l }
-              else if (p <= end) end = p + l
-              else {
-                out += SpanHit(id, start.toLong, end.toLong,
-                  (end - start).toLong, ts)
-                start = p; end = p + l
-              }
-            }
-            if (start >= 0)
-              out += SpanHit(id, start.toLong, end.toLong,
-                (end - start).toLong, ts)
-            state.update(SpanSeen(ts.getTime))
-            state.setTimeoutTimestamp(ts.getTime + horizonMs)
-            out.result().iterator
+    // the state is the doc's first report time: a re-delivery within
+    // the horizon emits nothing (the dropDuplicatesWithinWatermark
+    // discipline, in-state because the span merge needs the group
+    // anyway), and the doc is evicted one horizon after its report
+    val hits = KeyedState.evicting(anchors.groupByKey(_._1))(
+        Ordering.by(_._2), (reportedMs: Long) => reportedMs + horizonMs) {
+      case (_, Some(reportedMs), _) => (Some(reportedMs), Iterator.empty)
+      case (id, None, rows) =>
+        val ts = rows.map(_._3).maxBy(_.getTime)
+        // gaps-and-islands, the batch rule verbatim: sorted positions,
+        // a window extends the running span iff pos <= previous end
+        // (= last pos + l, since pos + l is monotone over sorted pos)
+        val out = Seq.newBuilder[SpanHit]
+        var start = -1
+        var end = -1
+        rows.map(_._2).distinct.foreach { p =>
+          if (start < 0) { start = p; end = p + l }
+          else if (p <= end) end = p + l
+          else {
+            out += SpanHit(id, start.toLong, end.toLong, (end - start).toLong, ts)
+            start = p; end = p + l
           }
-      }
+        }
+        if (start >= 0)
+          out += SpanHit(id, start.toLong, end.toLong, (end - start).toLong, ts)
+        (Some(ts.getTime), out.result().iterator)
+    }
     ContaminationMonitor(hits.toDF(), occ)
   }
 
@@ -727,7 +697,6 @@ object Streams {
     */
   case class AudioBandCandidate(a_id: Long, b_id: Long, a_frame_idx: Int,
                                 b_frame_idx: Int, c: Int, ts: Timestamp)
-  // encoder-visible (non-private): the state serializer is codegen'd
   case class AudioBucketMember(id: Long, frame_idx: Int, lo: Long, hi: Long)
   case class AudioBucketState(members: List[AudioBucketMember], lastMs: Long)
 
@@ -785,53 +754,37 @@ object Streams {
       }
       .toDF("doc_id", "ts", "_es")
       .withWatermark("ts", s"$horizonMinutes minutes")
-    graft.Multimodal.sigChunks(
+    val cells = graft.Multimodal.sigChunks(
         graft.Multimodal.contourWindowSignatures(withEs, stride))
       .select(col("doc_id"), col("ts"), col("frame_idx"),
         col("sig_lo"), col("sig_hi"), col("c"), col("chunk"))
       .as[(Long, Timestamp, Int, Long, Long, Int, Long)]
-      .groupByKey { case (_, _, _, _, _, c, chunk) => (c, chunk) }
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, Long),
-         rows: Iterator[(Long, Timestamp, Int, Long, Long, Int, Long)],
-         state: GroupState[AudioBucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = rows.toSeq.sortBy {
-              case (id, ts, fi, _, _, _, _) => (ts.getTime, id, fi)
+    KeyedState.evicting(cells.groupByKey { case (_, _, _, _, _, c, chunk) => (c, chunk) })(
+        Ordering.by { case (id, ts, fi, _, _, _, _) => (ts.getTime, id, fi) },
+        (st: AudioBucketState) => st.lastMs + horizonMs) { (_, prior, arrivals) =>
+      val out = Seq.newBuilder[AudioBandCandidate]
+      val next = arrivals.foldLeft(prior.getOrElse(AudioBucketState(Nil, 0L))) {
+        case (st, (id, ts, fi, lo, hi, c, _)) =>
+          st.members.foreach { m =>
+            // the batch verify, JVM-side: exact 64-bit popcount
+            if (m.id != id &&
+                java.lang.Long.bitCount(m.lo ^ lo) +
+                  java.lang.Long.bitCount(m.hi ^ hi) <= maxDist) {
+              if (id < m.id) out += AudioBandCandidate(id, m.id, fi, m.frame_idx, c, ts)
+              else out += AudioBandCandidate(m.id, id, m.frame_idx, fi, c, ts)
             }
-            var st = state.getOption.getOrElse(AudioBucketState(Nil, 0L))
-            val out = Seq.newBuilder[AudioBandCandidate]
-            arrivals.foreach { case (id, ts, fi, lo, hi, c, _) =>
-              st.members.foreach { m =>
-                // the batch verify, JVM-side: exact 64-bit popcount
-                if (m.id != id &&
-                    java.lang.Long.bitCount(m.lo ^ lo) +
-                      java.lang.Long.bitCount(m.hi ^ hi) <= maxDist) {
-                  if (id < m.id)
-                    out += AudioBandCandidate(id, m.id, fi, m.frame_idx, c, ts)
-                  else
-                    out += AudioBandCandidate(m.id, id, m.frame_idx, fi, c, ts)
-                }
-              }
-              val me = AudioBucketMember(id, fi, lo, hi)
-              if (st.members.length < maxBucket && !st.members.contains(me))
-                st = AudioBucketState(me :: st.members,
-                  math.max(st.lastMs, ts.getTime))
-              else st = st.copy(lastMs = math.max(st.lastMs, ts.getTime))
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(st.lastMs + horizonMs)
-            out.result().iterator
           }
+          val me = AudioBucketMember(id, fi, lo, hi)
+          val lastMs = math.max(st.lastMs, ts.getTime)
+          if (st.members.length < maxBucket && !st.members.contains(me))
+            AudioBucketState(me :: st.members, lastMs)
+          else st.copy(lastMs = lastMs)
       }
+      (Some(next), out.result().iterator)
+    }
   }
 
   case class BloomWord(group: String, word_idx: Long, bits: Long)
-  case class BloomWordState(bits: Long)
 
   /** Streaming Bloom-sketch maintenance: the per-group membership
     * bitmap ([[graft.ops.Sketches.bloomSketch]]) kept up to date ON
@@ -852,29 +805,35 @@ object Streams {
                            valueCol: String, bits: Int = 1024,
                            khash: Int = 3): Dataset[BloomWord] = {
     import values.sparkSession.implicits._
-    values
+    val words = values
       .select(col(groupCol).cast("string").as("g"),
         explode(graft.ops.Sketches.bloomPositions(valueCol, bits, khash))
           .as("_pos"))
       .select(col("g"), expr("_pos div 63").as("w"),
         expr("shiftleft(1L, cast(_pos % 63 as int))").as("m"))
       .as[(String, Long, Long)]
-      .groupByKey { case (g, w, _) => (g, w) }
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), rows: Iterator[(String, Long, Long)],
-         state: GroupState[BloomWordState]) =>
-          val prior = state.getOption.map(_.bits).getOrElse(0L)
-          val next = rows.foldLeft(prior) { case (acc, (_, _, m)) => acc | m }
-          if (next != prior) {
-            state.update(BloomWordState(next))
-            Iterator.single(BloomWord(key._1, key._2, next))
-          } else Iterator.empty
-      }
+    registers(words)({ case (g, w, _) => (g, w) }, _._3, _ | _) {
+      case ((g, w), bits) => BloomWord(g, w, bits) }
+  }
+
+  /** The one-`Long`-per-cell maintainer behind the Bloom, count-min,
+    * histogram, HLL and AMS twins: a cell's register starts at 0,
+    * `combine` folds each of the batch's `value`s into it, and the cell
+    * emits `row` of its new value whenever that changes. Each sketch's
+    * registers only absorb arrivals, so "latest emission per cell" IS
+    * the batch sketch of everything seen.
+    */
+  private def registers[T, K: Encoder, U: Encoder](cells: Dataset[T])(
+      cell: T => K, value: T => Long, combine: (Long, Long) => Long)(
+      row: (K, Long) => U): Dataset[U] = {
+    import cells.sparkSession.implicits._
+    KeyedState.maintain(cells.groupByKey(cell), 0L) { (k, prior, rows) =>
+      val next = rows.foldLeft(prior)((r, t) => combine(r, value(t)))
+      (next, Iterator.single(row(k, next)))
+    }
   }
 
   case class KmvGroupSketch(group: String, kmv: Seq[Long])
-  case class KmvState(hashes: Seq[Long])
 
   /** Streaming KMV maintenance: the per-group k-minimum-values
     * distinct-count sketch ([[graft.ops.Sketches.kmvSketch]]) kept up
@@ -899,27 +858,17 @@ object Streams {
       : Dataset[KmvGroupSketch] = {
     require(k >= 2, s"KMV needs k >= 2, got $k")
     import values.sparkSession.implicits._
-    values
+    val hashes = values
       .select(col(groupCol).cast("string").as("g"),
         graft.Pipeline.wordHash60(col(valueCol).cast("string")).as("h"))
       .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[(String, Long)],
-         state: GroupState[KmvState]) =>
-          val prior = state.getOption.map(_.hashes).getOrElse(Seq.empty)
-          val next =
-            (prior ++ rows.map(_._2)).distinct.sorted.take(k)
-          if (next != prior) {
-            state.update(KmvState(next))
-            Iterator.single(KmvGroupSketch(group, next))
-          } else Iterator.empty
-      }
+    KeyedState.maintain(hashes.groupByKey(_._1), Seq.empty[Long]) { (group, prior, rows) =>
+      val next = (prior ++ rows.map(_._2)).distinct.sorted.take(k)
+      (next, Iterator.single(KmvGroupSketch(group, next)))
+    }
   }
 
   case class CmsCell(group: String, d: Long, pos: Long, n: Long)
-  case class CmsCellState(n: Long)
 
   /** Streaming count-min maintenance: the per-group frequency sketch
     * ([[graft.ops.Sketches.cmsSketch]]) kept up to date ON ARRIVAL —
@@ -941,7 +890,7 @@ object Streams {
                          width: Int = 256): Dataset[CmsCell] = {
     require(depth >= 1 && width >= 2, s"bad cms shape: $depth x $width")
     import values.sparkSession.implicits._
-    values
+    val positions = values
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("string").as("_v"))
       .select(col("g"),
@@ -949,23 +898,12 @@ object Streams {
           .as("_c"))
       .select(col("g"), col("_c.d").as("d"), col("_c.pos").as("pos"))
       .as[(String, Long, Long)]
-      .groupByKey { case (g, d, pos) => (g, d, pos) }
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (String, Long, Long), rows: Iterator[(String, Long, Long)],
-         state: GroupState[CmsCellState]) =>
-          val prior = state.getOption.map(_.n).getOrElse(0L)
-          val next = prior + rows.size
-          if (next != prior) {
-            state.update(CmsCellState(next))
-            Iterator.single(CmsCell(key._1, key._2, key._3, next))
-          } else Iterator.empty
-      }
+    registers(positions)(identity, _ => 1L, _ + _) {
+      case ((g, d, pos), n) => CmsCell(g, d, pos, n) }
   }
 
   case class MgGroupSketch(group: String, values: Seq[String],
                            n_lbs: Seq[Long])
-  case class MgState(values: Seq[String], counts: Seq[Long])
 
   /** Streaming Misra-Gries maintenance: the per-group heavy-hitters
     * summary ([[graft.ops.Sketches.mgSketch]]) kept up to date ON
@@ -995,41 +933,34 @@ object Streams {
       : Dataset[MgGroupSketch] = {
     require(k >= 1, s"Misra-Gries needs k >= 1, got $k")
     import values.sparkSession.implicits._
-    values
+    val keyed = values
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("string").as("v"))
       .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[(String, String)],
-         state: GroupState[MgState]) =>
-          val prior: Seq[(String, Long)] = state.getOption
-            .map(s => s.values.zip(s.counts)).getOrElse(Seq.empty)
-          val merged = scala.collection.mutable.HashMap
-            .empty[String, Long] ++= prior
-          rows.foreach { case (_, v) =>
-            merged.update(v, merged.getOrElse(v, 0L) + 1L)
-          }
-          // the batch compress verbatim: (n, hash60) desc, csub =
-          // (k+1)-th count, keep the top k with n - csub > 0
-          val ordered = merged.toSeq.sortBy { case (v, n) =>
-            (-n, -graft.Pipeline.wordHash60Jvm(v))
-          }
-          val csub = if (ordered.size <= k) 0L else ordered(k)._2
-          val next = ordered.take(k)
-            .map { case (v, n) => (v, n - csub) }
-            .filter(_._2 > 0L)
-          if (next != prior) {
-            state.update(MgState(next.map(_._1), next.map(_._2)))
-            Iterator.single(
-              MgGroupSketch(group, next.map(_._1), next.map(_._2)))
-          } else Iterator.empty
-      }
+    KeyedState.maintain(keyed.groupByKey(_._1), Seq.empty[(String, Long)]) {
+      (group, prior, rows) =>
+        val next = misraGries(prior, rows.map(_._2), k)
+        (next, Iterator.single(MgGroupSketch(group, next.map(_._1), next.map(_._2))))
+    }
+  }
+
+  /** One Misra-Gries step, the batch compress of [[graft.ops.Sketches
+    * .mgSketch]] verbatim: add `values`' counts to the held `(value, n)`
+    * counters, order by `(n, hash60(value))` descending, subtract the
+    * (k+1)-th count and keep the top k whose count stays positive.
+    */
+  private def misraGries(held: Seq[(String, Long)], values: Iterator[String],
+                         k: Int): Seq[(String, Long)] = {
+    val merged = scala.collection.mutable.HashMap.empty[String, Long] ++= held
+    values.foreach(v => merged.update(v, merged.getOrElse(v, 0L) + 1L))
+    val ordered = merged.toSeq.sortBy { case (v, n) =>
+      (-n, -graft.Pipeline.wordHash60Jvm(v))
+    }
+    val csub = if (ordered.size <= k) 0L else ordered(k)._2
+    ordered.take(k).map { case (v, n) => (v, n - csub) }.filter(_._2 > 0L)
   }
 
   case class HistCell(group: String, bucket: Long, n: Long)
-  case class HistCellState(n: Long)
 
   /** Streaming log-bucket histogram maintenance: the per-group
     * quantile summary ([[graft.ops.Sketches.histSketch]]) kept up to
@@ -1047,22 +978,12 @@ object Streams {
   def streamingHistSketch(values: DataFrame, groupCol: String,
                           valueCol: String): Dataset[HistCell] = {
     import values.sparkSession.implicits._
-    values
+    val buckets = values
       .select(col(groupCol).cast("string").as("g"),
         graft.ops.Sketches.histBucket(valueCol).as("b"))
       .as[(String, Long)]
-      .groupByKey { case (g, b) => (g, b) }
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), rows: Iterator[(String, Long)],
-         state: GroupState[HistCellState]) =>
-          val prior = state.getOption.map(_.n).getOrElse(0L)
-          val next = prior + rows.size
-          if (next != prior) {
-            state.update(HistCellState(next))
-            Iterator.single(HistCell(key._1, key._2, next))
-          } else Iterator.empty
-      }
+    registers(buckets)(identity, _ => 1L, _ + _) {
+      case ((g, b), n) => HistCell(g, b, n) }
   }
 
   /** Streaming CCNet-style quality gate: arriving docs scored against
@@ -1109,7 +1030,6 @@ object Streams {
   }
 
   case class HistDrift(group: String, n_seen: Long, tv_ppm: Long)
-  case class HistDriftState(counts: Map[Long, Long])
 
   /** Streaming distribution-drift alarm: per group, the live
     * total-variation distance (integer ppm, [[graft.ops.Sketches
@@ -1143,39 +1063,29 @@ object Streams {
       .groupBy(_.getString(0))
       .map { case (g, rows) =>
         g -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap }
-    values
+    val bucketed = values
       .select(col(groupCol).cast("string").as("g"),
         graft.ops.Sketches.histBucket(valueCol).as("b"))
       .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (g: String, rows: Iterator[(String, Long)],
-         state: GroupState[HistDriftState]) =>
-          val prior = state.getOption.map(_.counts).getOrElse(Map.empty)
-          val cur = rows.foldLeft(prior) { case (acc, (_, b)) =>
-            acc.updated(b, acc.getOrElse(b, 0L) + 1L) }
-          if (cur == prior) Iterator.empty
-          else {
-            state.update(HistDriftState(cur))
-            val nSeen = cur.values.sum
-            val tv = baseByGroup.get(g) match {
-              case None => -1L
-              case Some(bl) =>
-                val tb = bl.values.sum
-                val buckets = (cur.keySet ++ bl.keySet).toSeq
-                buckets.map { b =>
-                  math.abs(cur.getOrElse(b, 0L) * 1000000L / nSeen -
-                    bl.getOrElse(b, 0L) * 1000000L / tb)
-                }.sum / 2
-            }
-            Iterator.single(HistDrift(g, nSeen, tv))
-          }
+    KeyedState.maintain(bucketed.groupByKey(_._1), Map.empty[Long, Long]) { (g, prior, rows) =>
+      val cur = rows.foldLeft(prior) { case (acc, (_, b)) =>
+        acc.updated(b, acc.getOrElse(b, 0L) + 1L) }
+      val nSeen = cur.values.sum
+      val tv = baseByGroup.get(g) match {
+        case None => -1L
+        case Some(bl) =>
+          val tb = bl.values.sum
+          val buckets = (cur.keySet ++ bl.keySet).toSeq
+          buckets.map { b =>
+            math.abs(cur.getOrElse(b, 0L) * 1000000L / nSeen -
+              bl.getOrElse(b, 0L) * 1000000L / tb)
+          }.sum / 2
       }
+      (cur, Iterator.single(HistDrift(g, nSeen, tv)))
+    }
   }
 
   case class PriSample(group: String, ids: Seq[Long], pris: Seq[Long])
-  case class PriSampleState(ids: Seq[Long], pris: Seq[Long])
 
   /** Streaming uniform fixed-count sample: [[graft.ops.Sampling
     * .prioritySample]] (k md5-priority winners per stratum — a uniform
@@ -1197,30 +1107,20 @@ object Streams {
     import docs.sparkSession.implicits._
     val slot = pmod(graft.Pipeline.wordHash32(col(idCol).cast("string")),
       lit(1000000L))
-    docs.select(col(strataCol).cast("string").as("g"),
+    val prioritised = docs.select(col(strataCol).cast("string").as("g"),
         col(idCol).cast("long").as("id"),
         (slot * lit(1099511627776L) + pmod(col(idCol), lit(1099511627776L)))
           .as("pri"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (g: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[PriSampleState]) =>
-          val prior = state.getOption
-            .map(s => s.pris.zip(s.ids)).getOrElse(Seq.empty)
-          val merged = (prior ++ rows.map { case (_, id, pri) =>
-              (pri, id) })
-            .distinct.sorted.take(k)
-          if (merged != prior) {
-            state.update(PriSampleState(merged.map(_._2), merged.map(_._1)))
-            Iterator.single(PriSample(g, merged.map(_._2), merged.map(_._1)))
-          } else Iterator.empty
-      }
+    // state: the k smallest (pri, id) pairs, ascending
+    KeyedState.maintain(prioritised.groupByKey(_._1), Seq.empty[(Long, Long)]) {
+      (g, prior, rows) =>
+        val next = (prior ++ rows.map { case (_, id, pri) => (pri, id) }).distinct.sorted.take(k)
+        (next, Iterator.single(PriSample(g, next.map(_._2), next.map(_._1))))
+    }
   }
 
   case class HllCell(group: String, bucket: Long, r: Long)
-  case class HllCellState(r: Long)
 
   /** Streaming HyperLogLog maintenance: the per-group register table
     * ([[graft.ops.Sketches.hllSketch]]) kept up to date ON ARRIVAL —
@@ -1240,28 +1140,16 @@ object Streams {
   def streamingHllSketch(values: DataFrame, groupCol: String,
                          valueCol: String, p: Int = 6): Dataset[HllCell] = {
     import values.sparkSession.implicits._
-    graft.ops.Sketches
+    val cells = graft.ops.Sketches
       .hllCells(values, Seq(col(groupCol).cast("string").as("g")),
         valueCol, p)
       .select(col("g"), col("bucket"), col("_rho"))
       .as[(String, Long, Long)]
-      .groupByKey { case (g, b, _) => (g, b) }
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), rows: Iterator[(String, Long, Long)],
-         state: GroupState[HllCellState]) =>
-          val prior = state.getOption.map(_.r).getOrElse(0L)
-          val next = rows.foldLeft(prior) { case (acc, (_, _, r)) =>
-            math.max(acc, r) }
-          if (next != prior) {
-            state.update(HllCellState(next))
-            Iterator.single(HllCell(key._1, key._2, next))
-          } else Iterator.empty
-      }
+    registers(cells)({ case (g, b, _) => (g, b) }, _._3, math.max) {
+      case ((g, b), r) => HllCell(g, b, r) }
   }
 
   case class AmsCell(group: String, c: Long, s: Long)
-  case class AmsCellState(s: Long)
 
   /** Streaming AMS F2 maintenance: the per-group tug-of-war counters
     * ([[graft.ops.Sketches.amsF2Sketch]]) kept up to date ON ARRIVAL —
@@ -1283,23 +1171,13 @@ object Streams {
                            valueCol: String, counters: Int = 60)
       : Dataset[AmsCell] = {
     import values.sparkSession.implicits._
-    graft.ops.Sketches
+    val cells = graft.ops.Sketches
       .amsCells(values, Seq(col(groupCol).cast("string").as("g")),
         valueCol, counters)
       .select(col("g"), col("_c").cast("long"), col("_sign"))
       .as[(String, Long, Long)]
-      .groupByKey { case (g, c, _) => (g, c) }
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), rows: Iterator[(String, Long, Long)],
-         state: GroupState[AmsCellState]) =>
-          val add = rows.map(_._3).sum
-          if (add != 0) {
-            val next = state.getOption.map(_.s).getOrElse(0L) + add
-            state.update(AmsCellState(next))
-            Iterator.single(AmsCell(key._1, key._2, next))
-          } else Iterator.empty
-      }
+    registers(cells)({ case (g, c, _) => (g, c) }, _._3, _ + _) {
+      case ((g, c), sum) => AmsCell(g, c, sum) }
   }
 
   case class CusumReport(key: String, n_events: Long,
@@ -1329,34 +1207,25 @@ object Streams {
                      refMilli: Long, slackMilli: Long,
                      thresholdMilli: Long): Dataset[CusumReport] = {
     import events.sparkSession.implicits._
-    events
+    val steps = events
       .select(col(keyCol).cast("string").as("k"),
         col(tsCol).cast("long").as("ts"), col(idCol).cast("long").as("id"),
         (col(valueMilliCol).cast("long") - lit(refMilli) -
           lit(slackMilli)).as("d"))
       .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long, Long, Long)],
-         state: GroupState[CusumState]) =>
-          val prior = state.getOption
-            .getOrElse(CusumState(0L, 0L, -1L, 0L, 0L, 0L))
-          val next = rows.toSeq.sortBy { case (_, ts, id, _) => (ts, id) }
-            .foldLeft(prior) { case (s, (_, ts, id, d)) =>
-              val p = s.p + d
-              val minp = math.min(s.minp, p)
-              val e = p - math.min(0L, minp)
-              if (e > s.maxE) CusumState(p, minp, e, ts, id, s.n + 1)
-              else s.copy(p = p, minp = minp, n = s.n + 1)
-            }
-          if (next != prior) {
-            state.update(next)
-            Iterator.single(CusumReport(key, next.n,
-              math.max(next.maxE, 0L), next.atId,
-              next.maxE > thresholdMilli))
-          } else Iterator.empty
-      }
+    KeyedState.maintain(steps.groupByKey(_._1), CusumState(0L, 0L, -1L, 0L, 0L, 0L)) {
+      (key, prior, rows) =>
+        val next = rows.toSeq.sortBy { case (_, ts, id, _) => (ts, id) }
+          .foldLeft(prior) { case (s, (_, ts, id, d)) =>
+            val p = s.p + d
+            val minp = math.min(s.minp, p)
+            val e = p - math.min(0L, minp)
+            if (e > s.maxE) CusumState(p, minp, e, ts, id, s.n + 1)
+            else s.copy(p = p, minp = minp, n = s.n + 1)
+          }
+        (next, Iterator.single(CusumReport(key, next.n, math.max(next.maxE, 0L),
+          next.atId, next.maxE > thresholdMilli)))
+    }
   }
 
   case class UrlFarmReport(url_pattern: String, n_urls: Long,
@@ -1390,36 +1259,28 @@ object Streams {
                              maxBodies: Int = 64): Dataset[UrlFarmReport] = {
     require(maxBodies >= 1, s"maxBodies must be >= 1, got $maxBodies")
     import docs.sparkSession.implicits._
-    docs
+    val bodies = docs
       .select(graft.ops.Web.urlPatternKey(col(urlCol)).as("p"),
         md5(col(textCol).cast("binary")).as("d"))
       .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (pattern: String, rows: Iterator[(String, String)],
-         state: GroupState[UrlFarmState]) =>
-          val prior = state.getOption.getOrElse(
-            UrlFarmState(0L, Seq.empty, saturated = false))
-          var n = prior.nUrls
-          val digs = scala.collection.mutable.LinkedHashSet.empty[String]
-          digs ++= prior.digs
-          var saturated = prior.saturated
-          rows.foreach { case (_, d) =>
-            n += 1L
-            if (!saturated && !digs.contains(d)) {
-              if (digs.size < maxBodies) digs += d
-              else saturated = true
-            }
+    KeyedState.maintain(bodies.groupByKey(_._1), UrlFarmState(0L, Seq.empty, saturated = false)) {
+      (pattern, prior, rows) =>
+        var n = prior.nUrls
+        val digs = scala.collection.mutable.LinkedHashSet.empty[String]
+        digs ++= prior.digs
+        var saturated = prior.saturated
+        rows.foreach { case (_, d) =>
+          n += 1L
+          if (!saturated && !digs.contains(d)) {
+            if (digs.size < maxBodies) digs += d
+            else saturated = true
           }
-          val next = UrlFarmState(n, digs.toSeq, saturated)
-          if (next != prior) {
-            state.update(next)
-            val bodies = digs.size.toLong
-            Iterator.single(UrlFarmReport(pattern, n, bodies,
-              1000000L * (n - bodies) / n, saturated))
-          } else Iterator.empty
-      }
+        }
+        val nBodies = digs.size.toLong
+        (UrlFarmState(n, digs.toSeq, saturated),
+          Iterator.single(UrlFarmReport(pattern, n, nBodies,
+            1000000L * (n - nBodies) / n, saturated)))
+    }
   }
 
   case class HotKeyAdvice(group: String, value: String, n_lb: Long,
@@ -1452,49 +1313,24 @@ object Streams {
     require(k >= 1 && parallelism >= 1,
       s"k and parallelism must be >= 1, got $k / $parallelism")
     import values.sparkSession.implicits._
-    values
+    val keyed = values
       .select(col(groupCol).cast("string").as("g"),
         col(keyCol).cast("string").as("v"))
       .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[(String, String)],
-         state: GroupState[HotKeyState]) =>
-          val prior = state.getOption.getOrElse(
-            HotKeyState(Seq.empty, Seq.empty, 0L))
-          val merged = scala.collection.mutable.HashMap.empty[String, Long]
-          merged ++= prior.values.zip(prior.counts)
-          var total = prior.total
-          rows.foreach { case (_, v) =>
-            total += 1L
-            merged.update(v, merged.getOrElse(v, 0L) + 1L)
-          }
-          // the MG compress verbatim ([[streamingMgSketch]] /
-          // [[graft.ops.Sketches.mgSketch]]): (n, hash60) desc order,
-          // csub = (k+1)-th count, survivors n - csub > 0
-          val ordered = merged.toSeq.sortBy { case (v, n) =>
-            (-n, -graft.Pipeline.wordHash60Jvm(v))
-          }
-          val csub = if (ordered.size <= k) 0L else ordered(k)._2
-          val kept = ordered.take(k)
-            .map { case (v, n) => (v, n - csub) }
-            .filter(_._2 > 0L)
-          val next = HotKeyState(kept.map(_._1), kept.map(_._2), total)
-          if (next != prior) {
-            state.update(next)
-            kept.iterator.map { case (v, n) =>
-              HotKeyAdvice(group, v, n, 1000000L * n / total,
-                math.max(1L,
-                  (n * parallelism + total - 1L) / total), total)
-            }
-          } else Iterator.empty
-      }
+    KeyedState.maintain(keyed.groupByKey(_._1), HotKeyState(Seq.empty, Seq.empty, 0L)) {
+      (group, prior, rows) =>
+        val vs = rows.map(_._2).toSeq
+        val total = prior.total + vs.size
+        val kept = misraGries(prior.values.zip(prior.counts), vs.iterator, k)
+        (HotKeyState(kept.map(_._1), kept.map(_._2), total),
+          kept.iterator.map { case (v, n) =>
+            HotKeyAdvice(group, v, n, 1000000L * n / total,
+              math.max(1L, (n * parallelism + total - 1L) / total), total)
+          })
+    }
   }
 
   case class HostAdmit(doc_id: Long, host: String, seq: Long, ts: Timestamp)
-  // state classes must be encoder-visible (non-private), like
-  // SessionState below
   case class HostCapState(n: Long, lastMs: Long)
 
   /** Streaming per-host admission cap: the FIRST `cap` docs to arrive
@@ -1526,31 +1362,21 @@ object Streams {
     // registrant cannot multiply its allowance
     val key = if (byRegistrable) graft.ops.Web.registrableDomain(col(urlCol))
               else graft.ops.Web.host(col(urlCol))
-    docs
+    val arrivals = docs
       .withWatermark("ts", s"$horizonMinutes minutes")
       .select(col(idCol).as("id"), col("ts"), key.as("host"))
       .as[(Long, Timestamp, String)]
-      .groupByKey { case (_, _, host) => host }
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (host: String, rows: Iterator[(Long, Timestamp, String)],
-         state: GroupState[HostCapState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = rows.toSeq
-              .sortBy { case (id, ts, _) => (ts.getTime, id) }
-            var st = state.getOption.getOrElse(HostCapState(0L, 0L))
-            val out = Seq.newBuilder[HostAdmit]
-            arrivals.foreach { case (id, ts, _) =>
-              if (st.n < cap) out += HostAdmit(id, host, st.n + 1, ts)
-              st = HostCapState(st.n + 1, math.max(st.lastMs, ts.getTime))
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(st.lastMs + horizonMs)
-            out.result().iterator
-          }
+    KeyedState.evicting(arrivals.groupByKey { case (_, _, host) => host })(
+        Ordering.by { case (id, ts, _) => (ts.getTime, id) },
+        (st: HostCapState) => st.lastMs + horizonMs) { (host, prior, rows) =>
+      val out = Seq.newBuilder[HostAdmit]
+      val next = rows.foldLeft(prior.getOrElse(HostCapState(0L, 0L))) {
+        case (st, (id, ts, _)) =>
+          if (st.n < cap) out += HostAdmit(id, host, st.n + 1, ts)
+          HostCapState(st.n + 1, math.max(st.lastMs, ts.getTime))
       }
+      (Some(next), out.result().iterator)
+    }
   }
 
   // ===== custom keyed state =====
@@ -1559,57 +1385,42 @@ object Streams {
   case class UserState(user_id: Long, n_events: Long, total: Double, last_ts: Timestamp)
 
   case class Session(user_id: Long, start: Timestamp, end: Timestamp, n_events: Long)
-  // state classes must be encoder-visible (non-private): the state
-  // serializer is codegen'd and cannot call private accessors
   case class SessionState(start: Long, end: Long, n: Long)
 
-  /** Sessionization via flatMapGroupsWithState + event-time timeout:
-    * events within `gapMinutes` of each other extend a session; a
-    * larger gap (or the watermark passing the gap horizon) closes and
-    * EMITS the session. The flatMap shape is what emit-on-close
-    * requires — zero or many outputs per key per batch — and the
-    * event-time timeout bounds state exactly like the watermark bounds
-    * a windowed aggregate.
+  /** Sessionization via [[KeyedState.evicting]]: events within
+    * `gapMinutes` of each other extend a session; a larger gap (or the
+    * watermark passing the gap horizon) closes and EMITS the session.
+    * Emit-on-close needs zero or many outputs per key per batch, and
+    * the event-time timeout bounds state exactly like the watermark
+    * bounds a windowed aggregate.
     */
   def userSessions(events: Dataset[KeyedEvent], gapMinutes: Int = 5): Dataset[Session] = {
     import events.sparkSession.implicits._
     val gapMs = gapMinutes * 60_000L
-    events
-      .withWatermark("ts", s"$gapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[KeyedEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(userId, new Timestamp(s.start), new Timestamp(s.end), s.n))
-          } else {
-            val evs = batch.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            evs.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.end <= gapMs =>
-                  // min the start too: a late cross-batch event above
-                  // the watermark can precede the stored session start,
-                  // and the emitted session must cover every counted
-                  // event (the batch sessionizer q54 would)
-                  cur = Some(SessionState(math.min(s.start, t), math.max(s.end, t), s.n + 1))
-                case Some(s) =>
-                  closed ::= Session(userId, new Timestamp(s.start), new Timestamp(s.end), s.n)
-                  cur = Some(SessionState(t, t, 1))
-                case None =>
-                  cur = Some(SessionState(t, t, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.end + gapMs)
-            }
-            closed.reverseIterator
+    def session(userId: Long, s: SessionState) =
+      Session(userId, new Timestamp(s.start), new Timestamp(s.end), s.n)
+    KeyedState.evicting(events.withWatermark("ts", s"$gapMinutes minutes").groupByKey(_.user_id))(
+        Ordering.by(_.ts.getTime), (s: SessionState) => s.end + gapMs)(
+      { (userId, prior, evs) =>
+        val closed = List.newBuilder[Session]
+        val cur = evs.foldLeft(prior) { (cur, e) =>
+          val t = e.ts.getTime
+          cur match {
+            case Some(s) if t - s.end <= gapMs =>
+              // min the start too: a late cross-batch event above
+              // the watermark can precede the stored session start,
+              // and the emitted session must cover every counted
+              // event (the batch sessionizer q54 would)
+              Some(SessionState(math.min(s.start, t), math.max(s.end, t), s.n + 1))
+            case Some(s) =>
+              closed += session(userId, s)
+              Some(SessionState(t, t, 1))
+            case None => Some(SessionState(t, t, 1))
           }
-      }
+        }
+        (cur, closed.result().iterator)
+      },
+      onExpiry = (userId, s) => Iterator.single(session(userId, s)))
   }
 
   case class TypedEvent(user_id: Long, ts: Timestamp, event_type: String)
@@ -1644,44 +1455,26 @@ object Streams {
     // window flooring to a 1-minute horizon drops a 70s-late click the
     // batch funnel counts)
     val horizonMin = (windowMs + 59_999L) / 60_000L
-    events
+    val typed = events
       .filter(col("event_type").isin(steps: _*))
       .withWatermark("ts", s"$horizonMin minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[TypedEvent], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s0 = state.getOption.getOrElse(FunnelState(0, Long.MinValue))
-            var s = s0
-            val out = List.newBuilder[FunnelAdvance]
-            batch.toSeq.sortBy(_.ts.getTime).foreach { e =>
-              if (s.stage < steps.length && e.event_type == steps(s.stage)) {
-                val t = e.ts.getTime
-                val opens = s.stage == 0
-                if (opens || (t > s.lastMs && t <= s.lastMs + windowMs)) {
-                  s = FunnelState(s.stage + 1, t)
-                  out += FunnelAdvance(userId, s.stage, e.event_type, e.ts)
-                }
-              }
-            }
-            if (s.stage >= steps.length) state.remove() // converted: done
-            else if (s.stage > s0.stage) {
-              // re-arm ONLY on advance: the new lastMs comes from an
-              // admitted (above-watermark) event, so lastMs + window is
-              // ahead of the watermark. Re-arming on a NO-advance batch
-              // would replay the stored (possibly watermark-passed)
-              // timestamp and setTimeoutTimestamp throws on that —
-              // crashing the query the first time a stale user sees an
-              // unrelated event. The previously-armed timeout stays in
-              // force untouched; the engine fires it once the
-              // watermark passes it.
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastMs + windowMs)
-            }
-            out.result().iterator
-          }
-      }
+    // a converted user expires at once; any other user one window after
+    // their last advance (a user who never opened keeps no state)
+    KeyedState.evicting(typed.groupByKey(_.user_id))(Ordering.by(_.ts.getTime),
+        (s: FunnelState) => if (s.stage >= steps.length) Long.MinValue else s.lastMs + windowMs) {
+      (userId, prior, evs) =>
+        val out = List.newBuilder[FunnelAdvance]
+        val next = evs.foldLeft(prior) { (cur, e) =>
+          val s = cur.getOrElse(FunnelState(0, Long.MinValue))
+          val t = e.ts.getTime
+          if (s.stage < steps.length && e.event_type == steps(s.stage) &&
+              (s.stage == 0 || (t > s.lastMs && t <= s.lastMs + windowMs))) {
+            out += FunnelAdvance(userId, s.stage + 1, e.event_type, e.ts)
+            Some(FunnelState(s.stage + 1, t))
+          } else cur
+        }
+        (next, out.result().iterator)
+    }
   }
 
   case class TransitionEvent(user_id: Long, from_type: String,
@@ -1707,44 +1500,28 @@ object Streams {
                            horizonMinutes: Int = 30): Dataset[TransitionEvent] = {
     import events.sparkSession.implicits._
     val horizonMs = horizonMinutes * 60_000L
-    events
-      .withWatermark("ts", s"$horizonMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[TypedEvent], state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // deterministic within-batch order: (ts, type). NOTE: on
-            // exactly-equal timestamps this tiebreak (type) differs
-            // from the batch operator's (event id) — TypedEvent
-            // carries no id; distinct-timestamp streams match exactly
-            val evs = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_type))
-            var out = List.empty[TransitionEvent]
-            var cur = state.getOption
-            var advanced = false
-            evs.foreach { e =>
-              // monotonicity guard (the funnel's `t > lastMs` rule):
-              // an event older than the stored state is a cross-batch
-              // straggler — chaining it would emit an INVERTED
-              // transition and regress the state/timeout. Dropped
-              // loudly-by-contract: monitors see forward chains only
-              if (cur.forall(l => e.ts.getTime >= l.ms)) {
-                cur.foreach(l =>
-                  out ::= TransitionEvent(userId, l.ty, e.event_type, e.ts))
-                cur = Some(LastEvent(e.event_type, e.ts.getTime))
-                advanced = true
-              }
-            }
-            cur.foreach { l =>
-              // the stored event came from THIS batch whenever an
-              // advance happened, so l.ms is above the watermark and
-              // the timeout re-arm is safe (the funnel's re-arm rule);
-              // otherwise nothing is touched
-              if (advanced) { state.update(l); state.setTimeoutTimestamp(l.ms + horizonMs) }
-            }
-            out.reverseIterator
-          }
-      }
+    // deterministic within-batch order: (ts, type). NOTE: on
+    // exactly-equal timestamps this tiebreak (type) differs from the
+    // batch operator's (event id) — TypedEvent carries no id;
+    // distinct-timestamp streams match exactly
+    val timed = events.withWatermark("ts", s"$horizonMinutes minutes")
+    KeyedState.evicting(timed.groupByKey(_.user_id))(
+        Ordering.by(e => (e.ts.getTime, e.event_type)), (l: LastEvent) => l.ms + horizonMs) {
+      (userId, prior, evs) =>
+        val out = List.newBuilder[TransitionEvent]
+        val next = evs.foldLeft(prior) { (cur, e) =>
+          // monotonicity guard (the funnel's `t > lastMs` rule): an
+          // event older than the stored state is a cross-batch
+          // straggler — chaining it would emit an INVERTED transition
+          // and regress the state. Dropped loudly-by-contract:
+          // monitors see forward chains only
+          if (cur.forall(l => e.ts.getTime >= l.ms)) {
+            cur.foreach(l => out += TransitionEvent(userId, l.ty, e.event_type, e.ts))
+            Some(LastEvent(e.event_type, e.ts.getTime))
+          } else cur
+        }
+        (next, out.result().iterator)
+    }
   }
 
   /** Running per-user aggregate via mapGroupsWithState — the escape
@@ -2020,36 +1797,27 @@ object Streams {
   def streamingScd2(log: DataFrame, keyCol: String, stateCol: String,
                     tsCol: String, tieCol: String): Dataset[Scd2Emit] = {
     import log.sparkSession.implicits._
-    log
+    val rows = log
       .select(col(keyCol).cast("string").as("k"),
         col(stateCol).cast("string").as("s"),
         col(tsCol).cast("long").as("t"), col(tieCol).cast("long").as("i"))
       .as[(String, Option[String], Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Option[String], Long, Long)],
-         st: GroupState[Scd2Open]) =>
-          var cur = st.getOption
-          val out = scala.collection.mutable.ListBuffer.empty[Scd2Emit]
-          rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, s, t, _) =>
-            cur match {
-              case None =>
-                cur = Some(Scd2Open(s, t, 1L, t))
-                out += Scd2Emit(key, 1L, s, t, None, is_current = true)
-              case Some(c) if t < c.lastTs => // straggler: batch back-fill
-              case Some(c) if c.state == s => // same state: extend
-                cur = Some(c.copy(lastTs = t))
-              case Some(c) =>
-                out += Scd2Emit(key, c.version, c.state, c.validFrom,
-                  Some(t), is_current = false)
-                cur = Some(Scd2Open(s, t, c.version + 1L, t))
-                out += Scd2Emit(key, c.version + 1L, s, t, None,
-                  is_current = true)
+    // version 0 is the no-version-yet zero: its first row opens version 1
+    KeyedState.maintain(rows.groupByKey(_._1), Scd2Open(None, 0L, 0L, Long.MinValue)) {
+      (key, prior, batch) =>
+        val out = scala.collection.mutable.ListBuffer.empty[Scd2Emit]
+        val next = batch.toSeq.sortBy(r => (r._3, r._4)).foldLeft(prior) {
+          case (c, (_, s, t, _)) =>
+            if (t < c.lastTs) c // straggler: batch back-fill
+            else if (c.version > 0L && c.state == s) c.copy(lastTs = t) // same state: extend
+            else {
+              if (c.version > 0L)
+                out += Scd2Emit(key, c.version, c.state, c.validFrom, Some(t), is_current = false)
+              out += Scd2Emit(key, c.version + 1L, s, t, None, is_current = true)
+              Scd2Open(s, t, c.version + 1L, t)
             }
-          }
-          cur.foreach(st.update)
-          out.iterator
-      }
+        }
+        (next, out.iterator)
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -111,27 +109,7 @@ class IterateSpec extends AnyFunSuite {
         "and Iterate.times does not checkpoint its init"))
 
   test("checkpoint calls in src/main live in Iterate or the allowlist") {
-    val main = Paths.get("src", "main", "scala", "graft")
-    assert(Files.isDirectory(main),
-      s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
-    val call = """localCheckpoint\(\)|\.checkpoint\(\)""".r
-    val member = """^  (?:private\[\w+\] |override )?def (\w+)""".r.unanchored
-    val sites = Files.walk(main).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Iterate.scala")
-      .toList.flatMap { p: Path =>
-        val file = main.relativize(p).toString
-        var owner = "<top>"
-        Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (line, i) =>
-          line match { case member(name) => owner = name; case _ => () }
-          val code = line.trim
-          if (code.startsWith("//") || code.startsWith("*") || call.findFirstIn(code).isEmpty) None
-          else Some(s"$file:$owner" -> s"$file:${i + 1}")
-        }
-      }
-    val outside = sites.filterNot(s => allowed.contains(s._1))
-    assert(outside.isEmpty, "checkpoint calls outside Iterate and the allowlist: " +
-      outside.map { case (site, at) => s"$site ($at)" }.mkString(", "))
-    assert(sites.map(_._1).toSet == allowed.keySet,
-      s"allowlist entries with no checkpoint call left: ${allowed.keySet -- sites.map(_._1)}")
+    SourceSites.assertAllowed("checkpoint calls",
+      SourceSites("""localCheckpoint\(\)|\.checkpoint\(\)""".r, owner = "Iterate.scala"), allowed)
   }
 }

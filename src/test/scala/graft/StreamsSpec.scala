@@ -13,6 +13,10 @@ class StreamsSpec extends AnyFunSuite {
 
   private def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
 
+  /** Keys held by the query's one stateful operator after its last batch. */
+  private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.lastProgress.stateOperators(0).numRowsTotal
+
   test("windowed counts with watermark over a memory stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -654,6 +658,26 @@ class StreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming transitions evict a user whose last batch was all stragglers") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Streams.TypedEvent]
+    val q = Streams.streamingTransitions(in.toDS(), horizonMinutes = 30)
+      .writeStream.format("memory").queryName("transitions_evict")
+      .outputMode("append").start()
+    try {
+      in.addData(Streams.TypedEvent(1, ts(0), "A"), Streams.TypedEvent(1, ts(5), "B"))
+      q.processAllAvailable()
+      // a straggler older than u1's stored B leaves its state unchanged
+      in.addData(Streams.TypedEvent(1, ts(3), "C"))
+      q.processAllAvailable()
+      // u2 moves the watermark past u1's horizon (ts(5) + 30 min)
+      in.addData(Streams.TypedEvent(2, ts(100), "A"))
+      q.processAllAvailable()
+      assert(stateRows(q) == 1L, "u1 must be evicted, only u2 held")
+    } finally q.stop()
+  }
+
   test("streaming funnel emits advances in order and enforces the window") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -713,6 +737,27 @@ class StreamsSpec extends AnyFunSuite {
       assert(q.exception.isEmpty, s"query died: ${q.exception}")
       val adv = spark.table("funnel_stale").as[Streams.FunnelAdvance].collect()
       assert(adv.count(_.user_id == 7) == 1) // only the original view
+    } finally q.stop()
+  }
+
+  test("streaming funnel evicts a user whose last batch did not advance it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Streams.TypedEvent]
+    val q = Streams.funnelAdvances(in.toDS(),
+        Seq("view", "click", "purchase"), windowMs = 5 * 60_000L)
+      .writeStream.format("memory").queryName("funnel_evict")
+      .outputMode("append").start()
+    try {
+      in.addData(Streams.TypedEvent(1, ts(0), "view"))
+      q.processAllAvailable()
+      // the wrong step for u1's stage leaves its state unchanged
+      in.addData(Streams.TypedEvent(1, ts(1), "purchase"))
+      q.processAllAvailable()
+      // u2 moves the watermark past u1's window (ts(0) + 5 min)
+      in.addData(Streams.TypedEvent(2, ts(60), "view"))
+      q.processAllAvailable()
+      assert(stateRows(q) == 1L, "u1 must be evicted, only u2 held")
     } finally q.stop()
   }
 
@@ -844,13 +889,16 @@ class StreamsSpec extends AnyFunSuite {
     val in = MemoryStream[(String, String)]
     // latest emission per group (batches arrive in order)
     val latest = new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
+    val emitted = new java.util.concurrent.atomic.AtomicLong()
     def start() = Streams.streamingKmvSketch(
         in.toDF().toDF("g", "v"), "g", "v", k = 4)
       .toDF()
       .writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r => latest.put(r.getString(0), r.getSeq[Long](1)))
+        val rows = b.collect()
+        emitted.addAndGet(rows.length)
+        rows.foreach(r => latest.put(r.getString(0), r.getSeq[Long](1)))
       }
       .outputMode("append").start()
     val q1 = start()
@@ -865,6 +913,15 @@ class StreamsSpec extends AnyFunSuite {
       in.addData(("a", "w1"), ("a", "w4"), ("a", "w5"), ("a", "w6"),
         ("b", "x2"))
       q2.processAllAvailable()
+      // a value hashing above the held k-th minimum changes nothing,
+      // so it emits nothing (and leaves the sketch the batch one)
+      val kth = latest.get("a").max
+      val above = Iterator.from(7).map(i => s"w$i")
+        .find(graft.Pipeline.wordHash60Jvm(_) > kth).get
+      val n = emitted.get
+      in.addData(("a", above))
+      q2.processAllAvailable()
+      assert(emitted.get == n, s"$above hashes above the k-th minimum yet emitted")
     } finally q2.stop()
     val batch = graft.ops.Sketches.kmvSketch(
         Seq(("a", "w1"), ("a", "w2"), ("a", "w3"), ("a", "w4"),
@@ -1081,14 +1138,16 @@ class StreamsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String)]
     val latest =
       new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
+    val emitted = new java.util.concurrent.atomic.AtomicLong()
     def start() = Streams.streamingPrioritySample(
         in.toDF().toDF("doc_id", "source"), "doc_id", "source", k = 4)
       .toDF()
       .writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r =>
-          latest.put(r.getString(0), r.getSeq[Long](1)))
+        val rows = b.collect()
+        emitted.addAndGet(rows.length)
+        rows.foreach(r => latest.put(r.getString(0), r.getSeq[Long](1)))
       }
       .outputMode("append").start()
     val batch1 = (1L to 12L).map(i => (i, if (i % 2 == 0) "a" else "b"))
@@ -1097,7 +1156,15 @@ class StreamsSpec extends AnyFunSuite {
     try { in.addData(batch1: _*); q1.processAllAvailable() } finally q1.stop()
     // restart: a state reset would re-admit evicted high-priority ids
     val q2 = start()
-    try { in.addData(batch2: _*); q2.processAllAvailable() } finally q2.stop()
+    try {
+      in.addData(batch2: _*)
+      q2.processAllAvailable()
+      // re-sent held ids change no sample, so they emit nothing
+      val n = emitted.get
+      in.addData(latest.get("a").map(id => (id, "a")): _*)
+      q2.processAllAvailable()
+      assert(emitted.get == n, "re-sending the held sample emitted")
+    } finally q2.stop()
     val expected = graft.ops.Sampling.prioritySample(
         (batch1 ++ batch2).toDF("doc_id", "source"), "doc_id", "source",
         k = 4)
@@ -1116,14 +1183,16 @@ class StreamsSpec extends AnyFunSuite {
     // registers only grow: latest emission per (group, bucket) = current
     val latest =
       new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
+    val emitted = new java.util.concurrent.atomic.AtomicLong()
     def start() = Streams.streamingHllSketch(
         in.toDF().toDF("g", "v"), "g", "v", p = 6)
       .toDF()
       .writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r =>
-          latest.put((r.getString(0), r.getLong(1)), r.getLong(2)))
+        val rows = b.collect()
+        emitted.addAndGet(rows.length)
+        rows.foreach(r => latest.put((r.getString(0), r.getLong(1)), r.getLong(2)))
       }
       .outputMode("append").start()
     val vals1 = (0 until 40).map(i => ("a", s"tok_$i")) :+ ("b" -> "x")
@@ -1138,6 +1207,11 @@ class StreamsSpec extends AnyFunSuite {
     try {
       in.addData(vals2: _*)
       q2.processAllAvailable()
+      // a repeated value raises no register, so it emits nothing
+      val n = emitted.get
+      in.addData(vals2.head)
+      q2.processAllAvailable()
+      assert(emitted.get == n, s"repeating ${vals2.head} emitted")
     } finally q2.stop()
     val batch = graft.ops.Sketches.hllSketch(
         (vals1 ++ vals2).toDF("g", "v"), Seq("g"), "v", p = 6)
@@ -1644,6 +1718,33 @@ class StreamsSpec extends AnyFunSuite {
       monitor.close()
       assert(!monitor.testBuckets.storageLevel.useMemory)
     } finally q.stop()
+  }
+
+  test("streaming span dedup evicts a re-delivered doc one horizon after its report") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val warehouse = Seq(
+      (1L, "x1 x2 c1 c2 c3 c4 c5 x3"),
+      (2L, "y1 c1 c2 c3 c4 c5 y2 y3")
+    ).toDF("doc_id", "text")
+    val in = MemoryStream[(Long, Timestamp, String)]
+    val monitor = Streams.streamingSpanDedup(
+      in.toDF().toDF("doc_id", "ts", "text"), warehouse,
+      "doc_id", "text", l = 3)
+    val q = monitor.hits
+      .writeStream.format("memory").queryName("span_dedup_evict")
+      .outputMode("append").start()
+    try {
+      in.addData((1L, ts(0), "x1 x2 c1 c2 c3 c4 c5 x3"))
+      q.processAllAvailable()
+      // a re-delivery leaves doc 1's state unchanged
+      in.addData((1L, ts(1), "x1 x2 c1 c2 c3 c4 c5 x3"))
+      q.processAllAvailable()
+      // doc 9 moves the watermark past doc 1's horizon (ts(0) + 10 min)
+      in.addData((9L, ts(60), "n1 c1 c2 c3 c4 c5 n2"))
+      q.processAllAvailable()
+      assert(stateRows(q) == 1L, "doc 1 must be evicted, only doc 9 held")
+    } finally { q.stop(); monitor.close() }
   }
 
   test("streaming audio band candidates reproduce batch frameBandNearDup " +
