@@ -105,7 +105,7 @@ object AnalysisQueries {
       Some {
         import PipelineQueries.{langArgmaxSql, langScoresSql}
         s"""
-        WITH scored AS (SELECT lang, $langScoresSql FROM documents),
+        WITH scored AS (SELECT lang, ${langScoresSql()} FROM documents),
         p AS (SELECT lang AS a, $langArgmaxSql AS b
               FROM scored),
         base AS (SELECT COUNT(*) AS n_items,
@@ -144,27 +144,17 @@ object AnalysisQueries {
   private lazy val q273: QueryDef =
     QueryDef("q273_krippendorff_alpha",
       Some {
-        val profiles = PipelineQueries.LangProfiles
-        def scoresOver(e: String): String = profiles.map { case (l, bgs) =>
-          val sum = bgs.map(bg =>
-            s"(length($e) - length(replace($e, '$bg', '')))").mkString(" + ")
-          s"($sum) AS s_$l"
-        }.mkString(", ")
-        val langs = profiles.map(_._1)
-        val cases = langs.init.map { l =>
-          val geAll = langs.filter(_ != l).map(o => s"s_$l >= s_$o").mkString(" AND ")
-          s"WHEN $geAll THEN '$l'"
-        }.mkString(" ")
+        import PipelineQueries.{langArgmaxSql, langScoresSql}
         s"""
         WITH r1 AS (SELECT doc_id, lang AS label FROM documents),
-        s2 AS (SELECT doc_id, ${scoresOver("text")} FROM documents
+        s2 AS (SELECT doc_id, ${langScoresSql()} FROM documents
                WHERE doc_id % 3 <> 0),
-        r2 AS (SELECT doc_id, CASE $cases ELSE '${langs.last}' END AS label
+        r2 AS (SELECT doc_id, $langArgmaxSql AS label
                FROM s2),
         s3 AS (SELECT doc_id,
-                 ${scoresOver("substr(text, 1, length(text) // 2)")}
+                 ${langScoresSql("substr(text, 1, length(text) // 2)")}
                FROM documents WHERE doc_id % 5 <> 0),
-        r3 AS (SELECT doc_id, CASE $cases ELSE '${langs.last}' END AS label
+        r3 AS (SELECT doc_id, $langArgmaxSql AS label
                FROM s3),
         ratings AS (SELECT * FROM r1 UNION ALL SELECT * FROM r2
                     UNION ALL SELECT * FROM r3),
@@ -191,8 +181,6 @@ object AnalysisQueries {
         FROM doa CROSS JOIN lt"""
       },
       (s, d) => {
-        val profiles = PipelineQueries.LangProfiles
-        val langs = profiles.map(_._1)
         // argmax-struct form of the scorer CASE chain (round-18):
         // provably the same label ([[graft.Pipeline.argmaxLabel]]),
         // each bigram scorer evaluated ONCE per row instead of
@@ -200,10 +188,7 @@ object AnalysisQueries {
         // in the old physical plan)
         def predictedOver(textCol: org.apache.spark.sql.Column)
             : org.apache.spark.sql.Column =
-          graft.Pipeline.argmaxLabel(profiles.map { case (l, bgs) =>
-            l -> bgs.map(graft.Pipeline.occurrences2x(textCol, _))
-              .reduce(_ + _)
-          })
+          graft.Pipeline.argmaxLabel(PipelineQueries.langScores(textCol))
         val docs = documents(s, d)
         val r1 = docs.select(col("doc_id"), lit("gold").as("rater"),
           col("lang").as("label"))
@@ -1745,7 +1730,7 @@ object AnalysisQueries {
     // text for review instead of trusting the argmax.
     QueryDef("q134_language_margin",
       Some {
-        val scores = PipelineQueries.langScoreSums
+        val scores = PipelineQueries.langScoreSums()
           .map { case (l, sum) => s"CAST($sum AS BIGINT) AS s_$l" }
           .mkString(", ")
         val arr = PipelineQueries.LangProfiles

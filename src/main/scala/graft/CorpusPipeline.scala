@@ -51,21 +51,21 @@ object CorpusPipeline {
       (Pipeline.stopwordCount(w).cast("double") / size(w)) <= maxStopRatio
   }
 
-  /** Result of [[clean]]: the cleaned, feature-annotated corpus, the
-    * per-stage report, and `release()` — call it once the corpus is
-    * materialized (written/collected) to drop the one cache entry
-    * clean() leaves behind (the near-dedup boundary rooting `corpus`).
+  /** Result of [[clean]]: the cleaned, feature-annotated corpus and
+    * the per-stage report.
     */
-  final case class Cleaned(corpus: DataFrame, report: Report,
-                           release: () => Unit)
+  final case class Cleaned(corpus: DataFrame, report: Report)
 
   private val Disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** The shared stage chain: persisted exact/sig/near boundaries (each
     * roots downstream stages — unpersisted, the md5 window and the LSH
     * chain would re-derive per action) plus the quality-filtered,
-    * feature-annotated corpus. Callers own the persisted frames'
-    * release.
+    * feature-annotated corpus. The exact boundary (and the MinHash
+    * survivors, when the simhash stage is on) persist through
+    * `countScope`, which the facades release once the report counts ran;
+    * the signature and near boundaries through `sigScope` and
+    * `nearScope`, whose lifetimes differ between the facades.
     *
     * Stage counts ride `observe` metric nodes chained through the plan
     * (input / after-exact / after-near), so ONE action — the quality
@@ -79,13 +79,11 @@ object CorpusPipeline {
     * observability, not exactly-once ledger entries; the corpus
     * itself is unaffected.
     */
-  private final case class Stages(exact: DataFrame, sig: DataFrame,
-                                  near: DataFrame, quality: DataFrame,
+  private final case class Stages(sig: DataFrame, quality: DataFrame,
                                   annotated: DataFrame,
                                   obsInput: org.apache.spark.sql.Observation,
                                   obsExact: org.apache.spark.sql.Observation,
-                                  obsNear: org.apache.spark.sql.Observation,
-                                  interim: Seq[DataFrame] = Nil)
+                                  obsNear: org.apache.spark.sql.Observation)
 
   private def metric(o: org.apache.spark.sql.Observation): Long =
     o.get("n").asInstanceOf[Long]
@@ -102,8 +100,9 @@ object CorpusPipeline {
 
   private def runClean(docs: DataFrame, idCol: String, textCol: String,
                        jaccardThreshold: Double, minTokens: Int,
-                       maxStopRatio: Double,
-                       simhashMaxDist: Int = -1): Stages = {
+                       maxStopRatio: Double, simhashMaxDist: Int,
+                       countScope: CacheScope, sigScope: CacheScope,
+                       nearScope: CacheScope): Stages = {
     val oIn = org.apache.spark.sql.Observation()
     val oExact = org.apache.spark.sql.Observation()
     val oNear = org.apache.spark.sql.Observation()
@@ -111,30 +110,29 @@ object CorpusPipeline {
     // observe BELOW persist: the metrics node lives inside the cached
     // plan, so it fires exactly once — when the cache materializes —
     // and cache hits never re-count
-    val exact = Dedup.exact(src, idCol, textCol)
-      .observe(oExact, count(lit(1)).as("n")).persist(Disk)
-    val sig = Dedup.shingleSignatures(exact, idCol, textCol).persist(Disk)
+    val exact = countScope.persist(Dedup.exact(src, idCol, textCol)
+      .observe(oExact, count(lit(1)).as("n")), Disk)
+    val sig = sigScope.persist(
+      Dedup.shingleSignatures(exact, idCol, textCol), Disk)
     // the MinHash survivors are the most expensive frame in the chain;
     // when the simhash stage is on it references them TWICE (signature/
     // pair side and anti-join left side), so they are persisted for the
-    // duration of `near`'s materialization (released by the facades
-    // right after the report counts run) — unpersisted, the whole LSH
-    // chain would execute twice
+    // duration of `near`'s materialization (`countScope`) — unpersisted,
+    // the whole LSH chain would execute twice
     val minhashed = Dedup.nearSigned(exact, sig, idCol, threshold = jaccardThreshold)
     // optional 64-bit SimHash near-IDENTICAL pass (permutations and
     // one-token edits that shingled Jaccard can miss at threshold) —
     // part of the dedup chain, so it runs BEFORE the quality filter
     // like the MinHash stage (dedup-then-filter keeps the canonical
     // lowest-id survivor even when the filter would later drop it)
-    val (near, interim) = if (simhashMaxDist >= 0) {
-      val m = minhashed.persist(Disk)
-      (Dedup.nearSimhash64(m, idCol, textCol, simhashMaxDist)
-        .observe(oNear, count(lit(1)).as("n")).persist(Disk), Seq(m))
-    } else (minhashed.observe(oNear, count(lit(1)).as("n")).persist(Disk), Nil)
+    val deduped = if (simhashMaxDist < 0) minhashed
+      else Dedup.nearSimhash64(countScope.persist(minhashed, Disk), idCol,
+        textCol, simhashMaxDist)
+    val near = nearScope.persist(
+      deduped.observe(oNear, count(lit(1)).as("n")), Disk)
     val quality = near.filter(qualityFilter(textCol, minTokens, maxStopRatio))
-    Stages(exact, sig, near, quality,
-      Similarity.withTextFeatures(quality, textCol), oIn, oExact, oNear,
-      interim)
+    Stages(sig, quality, Similarity.withTextFeatures(quality, textCol),
+      oIn, oExact, oNear)
   }
 
   /** One-call release audit: the report bundle a dataset release
@@ -311,11 +309,11 @@ object CorpusPipeline {
   def recrawl(pages: DataFrame, oldPages: DataFrame, blocklist: DataFrame,
               idCol: String = "doc_id", urlCol: String = "url",
               htmlCol: String = "html", reuseMoved: Boolean = true,
-              maxLinkDensityPpm: Long = 500000L)
+              maxLinkDensityPpm: Long = 500000L,
+              scope: CacheScope = new CacheScope)
       : (DataFrame, () => RecrawlReport) = {
-    val d = ops.Web.snapshotDelta(oldPages, pages, idCol, urlCol, htmlCol,
-        detectMoves = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d = scope.persist(ops.Web.snapshotDelta(oldPages, pages, idCol,
+      urlCol, htmlCol, detectMoves = true), Disk)
     val owing = if (reuseMoved) Seq("new", "changed")
                 else Seq("new", "changed", "moved")
     val fresh = pages.join(
@@ -327,7 +325,6 @@ object CorpusPipeline {
     val report = () => {
       val counts = d.groupBy("status").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      d.unpersist()
       RecrawlReport(
         counts.getOrElse("new", 0L), counts.getOrElse("changed", 0L),
         counts.getOrElse("moved", 0L), counts.getOrElse("unchanged", 0L),
@@ -338,9 +335,9 @@ object CorpusPipeline {
 
   /** Run the full chain. The upstream caches (sig, exact) are released
     * before returning — the counts materialized `near`'s cache, which
-    * alone roots everything downstream — while `near` stays cached so
-    * the caller's materialization of the returned corpus does NOT
-    * re-pay the dedup chain; drop it via `release()` when done. (A
+    * alone roots everything downstream — while `near` stays cached in
+    * `scope` so the caller's materialization of the returned corpus
+    * does NOT re-pay the dedup chain; release the scope when done. (A
     * blanket clearCache() would drop unrelated caches a caller holds.)
     */
   def clean(
@@ -349,13 +346,14 @@ object CorpusPipeline {
       textCol: String = "text",
       jaccardThreshold: Double = 0.8,
       minTokens: Int = 15,
-      maxStopRatio: Double = 0.5): Cleaned = {
-    val st = runClean(docs, idCol, textCol, jaccardThreshold, minTokens, maxStopRatio)
+      maxStopRatio: Double = 0.5,
+      scope: CacheScope = new CacheScope): Cleaned = {
+    val upstreamScope = new CacheScope
+    val st = runClean(docs, idCol, textCol, jaccardThreshold, minTokens,
+      maxStopRatio, -1, upstreamScope, upstreamScope, scope)
     val report = countReport(st)
-    st.interim.foreach(_.unpersist())
-    st.sig.unpersist()
-    st.exact.unpersist()
-    Cleaned(st.annotated, report, () => { st.near.unpersist(); () })
+    upstreamScope.release()
+    Cleaned(st.annotated, report)
   }
 
   /** Per-stage counts for the FULL preparation chain.
@@ -378,16 +376,15 @@ object CorpusPipeline {
         s""""after_sampling":$afterSampling}"""
   }
 
-  /** Result of [[prepare]]. `release()` ENDS the corpus' validity
-    * window: it drops the mixing cache AND the packer's
-    * boundary-consistency cache, and re-executing `corpus` after that
-    * can re-sample different range boundaries — wrong `bin` values
-    * with no error, not just a slow recompute. Materialize (write /
-    * collect) everything you need from `corpus` BEFORE calling
-    * `release()`; never run another action on it after.
+  /** Result of [[prepare]]. Releasing the `scope` passed to
+    * [[prepare]] ENDS the corpus' validity window: it drops the mixing
+    * cache AND the packer's boundary-consistency cache, and
+    * re-executing `corpus` after that can re-sample different range
+    * boundaries — wrong `bin` values with no error, not just a slow
+    * recompute. Materialize (write / collect) everything you need from
+    * `corpus` BEFORE releasing; never run another action on it after.
     */
-  final case class Prepared(corpus: DataFrame, report: PrepareReport,
-                            release: () => Unit)
+  final case class Prepared(corpus: DataFrame, report: PrepareReport)
 
   /** FULL training-data preparation: the [[clean]] chain (dedup +
     * quality + feature annotation, plus an optional 64-bit SimHash
@@ -454,15 +451,20 @@ object CorpusPipeline {
       minCosine: Double = 0.9,
       splits: Seq[(String, Int)] = Nil,
       splitPairThreshold: Double = 0.5,
-      exactNgramN: Int = 0): Prepared = {
+      exactNgramN: Int = 0,
+      scope: CacheScope = new CacheScope): Prepared = {
     require(embeddings.isDefined == testEmbeddings.isDefined,
       "embedding decontamination needs BOTH embeddings and testEmbeddings")
+    // sig + near outlive the clean counts (decontamination reuses
+    // both): they and every post-clean cache live in `upstreamScope`,
+    // released once the mixing count has materialized the corpus root
+    val (countScope, upstreamScope) = (new CacheScope, new CacheScope)
     val st = runClean(docs, idCol, textCol, jaccardThreshold, minTokens,
-      maxStopRatio, simhashMaxDist)
+      maxStopRatio, simhashMaxDist, countScope, upstreamScope, upstreamScope)
     val cleanReport = countReport(st)
-    st.interim.foreach(_.unpersist())
-    st.exact.unpersist() // sig + near stay: decontamination reuses both
-    val testSig = Dedup.shingleSignatures(testCorpus, idCol, textCol).persist(Disk)
+    countScope.release()
+    val testSig = upstreamScope.persist(
+      Dedup.shingleSignatures(testCorpus, idCol, textCol), Disk)
     // safe is persisted so the decontamination join (the most expensive
     // stage) executes ONCE; its count (and the embedding gate's) rides
     // an observe node inside the cached plan, so the single mixing
@@ -471,9 +473,9 @@ object CorpusPipeline {
     val oSafe = org.apache.spark.sql.Observation()
     val oExact = org.apache.spark.sql.Observation()
     val oGated = org.apache.spark.sql.Observation()
-    val lshSafe = Dedup.decontaminateSigned(st.annotated, st.sig, testSig,
-        idCol, threshold = decontThreshold)
-      .observe(oSafe, count(lit(1)).as("n")).persist(Disk)
+    val lshSafe = upstreamScope.persist(Dedup.decontaminateSigned(st.annotated,
+        st.sig, testSig, idCol, threshold = decontThreshold)
+      .observe(oSafe, count(lit(1)).as("n")), Disk)
     // optional EXACT n-gram gate (q140 semantics): catches the one
     // verbatim quoted answer whose whole-doc Jaccard dilutes below
     // decontThreshold — the complement failure mode of the LSH gate.
@@ -485,22 +487,17 @@ object CorpusPipeline {
         .observe(oExact, count(lit(1)).as("n"))
     // optional EMBEDDING-space gate: bucket frames built once per
     // corpus (AutoPlanes sizes them to the train side), released below
-    val embBuckets = embeddings.map { emb =>
-      val trainB = Dedup.embeddingBuckets(emb, idCol, vecCol).persist(Disk)
-      val testB = Dedup.embeddingBuckets(testEmbeddings.get, idCol, vecCol,
-        planes = Dedup.planesOf(trainB)).persist(Disk)
-      (trainB, testB)
-    }
-    val gated = embBuckets match {
-      case Some((trainB, testB)) =>
-        Dedup.decontaminateByEmbeddingSigned(safe, trainB, testB, idCol,
-            minCosine)
-          .observe(oGated, count(lit(1)).as("n")).persist(Disk)
-      case None => safe
+    val gated = embeddings.fold(safe) { emb =>
+      val trainB = upstreamScope.persist(
+        Dedup.embeddingBuckets(emb, idCol, vecCol), Disk)
+      val testB = upstreamScope.persist(Dedup.embeddingBuckets(testEmbeddings.get,
+        idCol, vecCol, planes = Dedup.planesOf(trainB)), Disk)
+      upstreamScope.persist(Dedup.decontaminateByEmbeddingSigned(safe, trainB,
+          testB, idCol, minCosine)
+        .observe(oGated, count(lit(1)).as("n")), Disk)
     }
     // the corpus' own caches (mixed + packing's boundary cache) live in
-    // one scope, released by the returned handle
-    val scope = new CacheScope
+    // the caller's scope
     val mixed = scope.persist(ops.Sampling.stratified(gated, idCol,
       strataCol, ratesPermille, defaultPermille), Disk)
     // n_subword_est comes from the feature-annotation stage — the same
@@ -524,18 +521,13 @@ object CorpusPipeline {
     val afterSampling = mixed.count()
     val report = PrepareReport(cleanReport, metric(oSafe),
       if (exactNgramN > 0) Some(metric(oExact)) else None,
-      embBuckets.map(_ => metric(oGated)), afterSampling)
+      embeddings.map(_ => metric(oGated)), afterSampling)
     // mixed's cache now roots the returned corpus; everything upstream
     // (sig — the largest frame in the job — near, testSig, safe, the
     // bucket frames) is dead weight and released HERE, mirroring
-    // clean()'s discipline. release() drops the corpus' scope.
-    embBuckets.foreach { case (a, b) => a.unpersist(); b.unpersist() }
-    if (gated ne safe) gated.unpersist()
-    lshSafe.unpersist()
-    st.sig.unpersist()
-    st.near.unpersist()
-    testSig.unpersist()
-    Prepared(corpus, report, () => scope.release())
+    // clean()'s discipline
+    upstreamScope.release()
+    Prepared(corpus, report)
   }
 }
 
@@ -550,7 +542,6 @@ object PipelineDemo {
     val result = CorpusPipeline.clean(Tables.documents(spark, sf))
     val nFeatures = result.corpus.columns.length
     println(s"""{"corpus":"$sf","report":${result.report.json},"feature_columns":$nFeatures}""")
-    result.release()
     spark.stop()
   }
 }

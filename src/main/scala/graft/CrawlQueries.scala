@@ -639,9 +639,8 @@ object CrawlQueries {
     // supplier hubs the scale sweeps keep exercising live in the top
     // in-band here). Two bounded aggregates; <= 64 rows per direction.
     QueryDef("q184_degree_histogram",
-      Some("""
-        WITH e AS (SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                   FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+      Some(s"""
+        WITH e AS (${GraphQueries.tradeEdgesSql()}),
         o AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
         i AS (SELECT dst, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY dst),
         b AS (SELECT 'out' AS direction,

@@ -49,11 +49,10 @@ object Dedup {
     * text near-dup/decontamination operator at corpus scale.
     *
     * The convenience forms ([[near]], [[decontaminate]]) persist this
-    * frame internally so the blocking and verify phases share one
-    * derivation. At 100 TB, compute it once per corpus (or write it to
-    * the warehouse next to the documents), persist it, and feed it to
-    * every consumer via the `*Signed` variants; release with
-    * `sigFrame.unpersist()` when the last consumer is done. A frame
+    * frame through their `scope` so the blocking and verify phases
+    * share one derivation. At 100 TB, compute it once per corpus (or
+    * write it to the warehouse next to the documents), persist it, and
+    * feed it to every consumer via the `*Signed` variants. A frame
     * over a SUPERSET of a corpus is a valid signature frame for it:
     * extra rows only generate candidates the final anti-join ignores.
     */
@@ -248,23 +247,22 @@ object Dedup {
       // Dedup.near, where the cap only trades dedup recall for a
       // bounded join (oversize buckets still surface via the
       // graft_lsh_* hot-bucket metric either way)
-      maxBucketSize: Int = Int.MaxValue): DataFrame = {
+      maxBucketSize: Int = Int.MaxValue,
+      scope: CacheScope = new CacheScope): DataFrame = {
     // persist each corpus's signature frame: the blocking phase and the
     // verify join-back both consume it, and without the cache the
     // shingle+minhash pass — the dominant cost at corpus scale — runs
     // twice per corpus in one DAG (Catalyst does not dedup common
     // subtrees). The cache is keyed by the canonicalized plan, so
-    // repeat calls over the same corpus share one entry; callers who
-    // want deterministic release should precompute [[shingleSignatures]]
-    // themselves, call [[decontaminateSigned]], and unpersist.
+    // repeat calls over the same corpus share one entry.
     // signatures are built at the canonical width (or the caller's
     // explicit k): auto-derived banding always slices within DefaultSigK
     val sigK = if (minhashK == Pipeline.AutoBanding) Pipeline.DefaultSigK
                else minhashK
-    val trainSig = shingleSignatures(train, idCol, textCol, shingleN, sigK)
-      .persist(Disk)
-    val testSig = shingleSignatures(test, idCol, textCol, shingleN, sigK)
-      .persist(Disk)
+    val trainSig = scope.persist(
+      shingleSignatures(train, idCol, textCol, shingleN, sigK), Disk)
+    val testSig = scope.persist(
+      shingleSignatures(test, idCol, textCol, shingleN, sigK), Disk)
     decontaminateSigned(train, trainSig, testSig, idCol, threshold,
       minhashK, bands, maxBucketSize)
   }
@@ -378,16 +376,16 @@ object Dedup {
       vecCol: String,
       minCosine: Double = 0.9,
       dims: Int = 64,
-      planes: Int = Pipeline.AutoPlanes): DataFrame = {
+      planes: Int = Pipeline.AutoPlanes,
+      scope: CacheScope = new CacheScope): DataFrame = {
     // planes sized to the TRAIN corpus (the big side that fills the
     // buckets); both frames must share the plane set, so resolve once
     val p = Pipeline.resolvePlanes(planes, train)
     // same persist rationale as [[decontaminate]]: one bucket+cast pass
     // per corpus, shared across this call and any repeat invocations
-    // (plan-keyed cache); precompute [[embeddingBuckets]] + call
-    // [[decontaminateByEmbeddingSigned]] for deterministic release.
-    val trainB = embeddingBuckets(train, idCol, vecCol, dims, p).persist(Disk)
-    val testB = embeddingBuckets(test, idCol, vecCol, dims, p).persist(Disk)
+    // (plan-keyed cache)
+    val trainB = scope.persist(embeddingBuckets(train, idCol, vecCol, dims, p), Disk)
+    val testB = scope.persist(embeddingBuckets(test, idCol, vecCol, dims, p), Disk)
     decontaminateByEmbeddingSigned(train, trainB, testB, idCol, minCosine, p)
   }
 
@@ -500,9 +498,10 @@ object Dedup {
     */
   def nearByEmbedding(df: DataFrame, idCol: String, vecCol: String,
                       minCosine: Double = 0.9, dims: Int = 64,
-                      planes: Int = Pipeline.AutoPlanes): DataFrame = {
+                      planes: Int = Pipeline.AutoPlanes,
+                      scope: CacheScope = new CacheScope): DataFrame = {
     val p = Pipeline.resolvePlanes(planes, df)
-    val b = embeddingBuckets(df, idCol, vecCol, dims, p).persist(Disk)
+    val b = scope.persist(embeddingBuckets(df, idCol, vecCol, dims, p), Disk)
     nearByEmbeddingSigned(df, b, idCol, minCosine, p)
   }
 
@@ -543,14 +542,15 @@ object Dedup {
       threshold: Double = 0.8,
       shingleN: Int = 3,
       minhashK: Int = Pipeline.AutoBanding,
-      bands: Int = Pipeline.AutoBanding): DataFrame = {
+      bands: Int = Pipeline.AutoBanding,
+      scope: CacheScope = new CacheScope): DataFrame = {
     // persisted for the same reason as [[decontaminate]]: the signature
     // frame roots the candidate self-join AND both verify join-backs —
     // uncached, the shingle+minhash pass would run three times per call
     val sigK = if (minhashK == Pipeline.AutoBanding) Pipeline.DefaultSigK
                else minhashK
-    val sig = shingleSignatures(df, idCol, textCol, shingleN, sigK)
-      .persist(Disk)
+    val sig = scope.persist(
+      shingleSignatures(df, idCol, textCol, shingleN, sigK), Disk)
     nearSigned(df, sig, idCol, threshold, minhashK, bands)
   }
 
@@ -607,14 +607,15 @@ object Dedup {
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
     val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    val sig = shingleSignatures(docs, idCol, textCol, 3, k).persist(Disk)
-    val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
     // clusters() materializes eagerly (checkpointed loop), so the
-    // signature cache is dead weight the moment it returns — release
-    // it here instead of pinning a corpus-scale frame per call (the
-    // prepare() discipline)
+    // signature cache is dead weight the moment it returns — a local
+    // scope releases it here instead of pinning a corpus-scale frame
+    // per call (the prepare() discipline)
+    val sigScope = new CacheScope
+    val sig = sigScope.persist(shingleSignatures(docs, idCol, textCol, 3, k), Disk)
+    val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
     val lab = clusters(pairs, docs.select(col(idCol)), idCol)
-    sig.unpersist()
+    sigScope.release()
     lab
       .groupBy("cluster").agg(count(lit(1)).cast(LongType).as("size"))
       .groupBy("size")
@@ -724,7 +725,8 @@ object Dedup {
       shingleN: Int = 3,
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
-      maxBucketSize: Int = 10000): DataFrame = {
+      maxBucketSize: Int = 10000,
+      scope: CacheScope = new CacheScope): DataFrame = {
     val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
     // FLOOR, not round: the integer gate keeps every pair with
     // jaccard >= tPpm/1e6 <= threshold — for a non-ppm-exact threshold
@@ -733,8 +735,8 @@ object Dedup {
     val tPpm = math.floor(threshold * 1000000).toInt
     // persisted for the same reason as [[near]]: the signature frame
     // roots the candidate self-join AND both verify join-backs
-    val sig = shingleSignatures(docs, idCol, textCol, shingleN, k)
-      .persist(Disk)
+    val sig = scope.persist(
+      shingleSignatures(docs, idCol, textCol, shingleN, k), Disk)
     val inter = size(array_intersect(col("_sa"), col("_sb")))
     val union = size(col("_sa")) + size(col("_sb")) - inter
     val pairs = candidatesWithShingles(sig, idCol, k, b, maxBucketSize)
@@ -868,12 +870,13 @@ object Dedup {
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
     val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    val sig = shingleSignatures(docs, idCol, textCol, 3, k).persist(Disk)
-    val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
     // eager clusters() loop is the last sig consumer — release the
     // corpus-scale cache before returning (the prepare() discipline)
+    val sigScope = new CacheScope
+    val sig = sigScope.persist(shingleSignatures(docs, idCol, textCol, 3, k), Disk)
+    val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
     val lab = clusters(pairs, docs.select(col(idCol)), idCol)
-    sig.unpersist()
+    sigScope.release()
     docs.select(col(idCol),
         size(Pipeline.words(col(textCol))).cast(LongType).as("_n_tok"))
       .join(lab, idCol)
@@ -1070,8 +1073,7 @@ object Dedup {
     * build side is safely broadcastable from its ACTUAL size rather
     * than from the cap value, and the persist keeps the hot-set
     * aggregation single-evaluation across the two anti-joins. The
-    * cache entry is session-scoped (freed by `clearCache`/session
-    * stop, like the query-internal signature persists).
+    * cache entry lives in `scope`.
     *
     * NOTE (round-9 default change): both `maxShingleDf` (uncapped →
     * 10000) and the blocking gate (1-hit → 2-hit) changed defaults
@@ -1087,7 +1089,8 @@ object Dedup {
       threshold: Double = 0.7,
       probeShingles: Int = Pipeline.AutoBanding,
       maxShingleDf: Int = DefaultMaxShingleDf,
-      minProbeHits: Int = 2): DataFrame = {
+      minProbeHits: Int = 2,
+      scope: CacheScope = new CacheScope): DataFrame = {
     val m = if (probeShingles == Pipeline.AutoBanding)
       Pipeline.containmentProbesFor(threshold, minHits = minProbeHits)
     else probeShingles
@@ -1129,10 +1132,9 @@ object Dedup {
     val (probes, index) = if (maxShingleDf == Int.MaxValue)
         (probesAll, indexAll)
       else {
-        val hot = indexAll.groupBy("_h")
+        val hot = scope.persist(indexAll.groupBy("_h")
           .agg(count(lit(1)).as("_df"))
-          .filter(col("_df") > maxShingleDf).select("_h")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .filter(col("_df") > maxShingleDf).select("_h"), Disk)
         val build = if (hot.count() <= MaxBroadcastHotKeys) broadcast(hot)
           else hot
         (probesAll.join(build, Seq("_h"), "left_anti"),
@@ -1199,25 +1201,24 @@ object Dedup {
       shingleN: Int = 3,
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
-      maxBucketSize: Int = 10000): DataFrame = {
+      maxBucketSize: Int = 10000,
+      scope: CacheScope = new CacheScope): DataFrame = {
     val sigK = if (minhashK == Pipeline.AutoBanding) Pipeline.DefaultSigK
                else minhashK
-    val sig = shingleSignatures(df, idCol, textCol, shingleN, sigK)
-      .persist(Disk)
+    val sig = scope.persist(
+      shingleSignatures(df, idCol, textCol, shingleN, sigK), Disk)
     // pairs feed the edge symmetrization and the node set: persist, or
     // the candidate join + verify runs four times (same reuse the
     // components query needs)
-    val pairs = verifiedPairs(sig, idCol, threshold, minhashK, bands,
-        maxBucketSize)
-      .persist(Disk)
+    val pairs = scope.persist(verifiedPairs(sig, idCol, threshold,
+      minhashK, bands, maxBucketSize), Disk)
     val nodes = pairs.select(col("a_id").as(idCol))
       .unionAll(pairs.select(col("b_id").as(idCol))).distinct()
     // persisted: the quality-max aggregate and the winner re-selection
     // both read the labeled frame — uncached, the propagation loop's
     // output join would run twice
-    val labeled = clusters(pairs, nodes, idCol)
-      .join(df.select(col(idCol), col(qualityCol)), Seq(idCol))
-      .persist(Disk)
+    val labeled = scope.persist(clusters(pairs, nodes, idCol)
+      .join(df.select(col(idCol), col(qualityCol)), Seq(idCol)), Disk)
     val best = labeled.groupBy(col("cluster"))
       .agg(max(col(qualityCol)).as("_bq"), count(lit(1)).as("n_docs"))
     // no broadcast hint: best is cluster-cardinality (can be huge at
@@ -1340,13 +1341,13 @@ object Dedup {
     * form). Centroid ids must be NUMERIC (they are cast to long for
     * the argmax tiebreak); vector ids may be any orderable type.
     * Centroids typically come from [[Similarity.kmeansFit]]. The
-    * assignment cache is plan-keyed and session-lifetime (the
-    * documented [[near]]-style trade).
+    * assignment cache lives in `scope`.
     */
   def semantic(vectors: DataFrame, idCol: String, vecCol: String,
                centroids: DataFrame, centIdCol: String, centVecCol: String,
                threshold: Double,
-               maxClusterSize: Int = Pipeline.HotBucketThreshold): DataFrame = {
+               maxClusterSize: Int = Pipeline.HotBucketThreshold,
+               scope: CacheScope = new CacheScope): DataFrame = {
     import graft.plans.VectorExpressions.cosineSim
     require(threshold > -1 && threshold <= 1,
       s"cosine threshold must be in (-1,1], got $threshold")
@@ -1357,13 +1358,12 @@ object Dedup {
     // argmax(cosine, tiebreak min cid) == max of (cos, -cid) lexicographic
     // persisted: the pair join reads it twice and the final anti-join a
     // third time — uncached, the n x k assignment scan would run thrice
-    val assigned = v.crossJoin(cents)
+    val assigned = scope.persist(v.crossJoin(cents)
       .groupBy(col(idCol))
       .agg(max(struct(cosineSim(col("_v"), col("_cv")).as("_cos"),
         (-col("_cid")).as("_neg"))).as("_best"))
       .select(col(idCol), (-col("_best._neg")).as("centroid_id"))
-      .join(v, Seq(idCol))
-      .persist(Disk)
+      .join(v, Seq(idCol)), Disk)
     pruneClusters(assigned, idCol, threshold, maxClusterSize)
   }
 
@@ -1442,16 +1442,15 @@ object Dedup {
     *
     * The prune phase is [[semantic]]'s, verbatim (shared helper), and
     * so is the assignment-cache lifetime: the persisted assignment
-    * frame is plan-keyed and session-lifetime (the documented
-    * [[near]]-style trade — a long-lived session cycling many corpora
-    * should `spark.catalog.clearCache()` between them).
+    * frame lives in `scope`.
     */
   def semanticBlocked(vectors: DataFrame, idCol: String, vecCol: String,
                       centroids: DataFrame, centIdCol: String,
                       centVecCol: String, threshold: Double,
                       planes: Int = Pipeline.AutoPlanes,
                       dims: Int = 64,
-                      maxClusterSize: Int = Pipeline.HotBucketThreshold): DataFrame = {
+                      maxClusterSize: Int = Pipeline.HotBucketThreshold,
+                      scope: CacheScope = new CacheScope): DataFrame = {
     import graft.plans.VectorExpressions.cosineSim
     require(threshold > -1 && threshold <= 1,
       s"cosine threshold must be in (-1,1], got $threshold")
@@ -1474,7 +1473,7 @@ object Dedup {
       .agg(max(struct(cosineSim(col("_v"), col("_cv")).as("_cos"),
         (-col("_cid")).as("_neg"))).as("_best"))
       .select(col(idCol), (-col("_best._neg")).as("centroid_id"))
-    val assigned = v.drop("_b").join(best, Seq(idCol), "left").persist(Disk)
+    val assigned = scope.persist(v.drop("_b").join(best, Seq(idCol), "left"), Disk)
     pruneClusters(assigned, idCol, threshold, maxClusterSize)
   }
 

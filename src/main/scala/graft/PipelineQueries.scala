@@ -102,20 +102,21 @@ object PipelineQueries {
     "zh" -> Seq("st", "ow", "ta"))
 
   /** The q32 language-ID scorer — one rendering per engine, shared by
-    * every query that scores `text` with it (q32, q134, q248, q269).
-    * Oracle side: per-language bigram occurrence sums `(lang, sum)`
-    * over `text`, and the first-wins `CASE` argmax over their `s_<lang>`
-    * aliases. Engine side: the same sums as `s_<lang>` columns and the
-    * [[Pipeline.argmaxLabel]] form of the argmax (same label, each
-    * score evaluated once).
+    * every query that scores a text expression with it (q32, q134,
+    * q248, q269, and q273 over `text` and its first half). Oracle
+    * side: per-language bigram occurrence sums `(lang, sum)` over
+    * `text`, and the first-wins `CASE` argmax over their `s_<lang>`
+    * aliases. Engine side: the same sums (as `s_<lang>` columns over
+    * `text` in [[langScoreCols]]) and the [[Pipeline.argmaxLabel]]
+    * form of the argmax (same label, each score evaluated once).
     */
-  private[graft] val langScoreSums: Seq[(String, String)] =
+  private[graft] def langScoreSums(text: String = "text"): Seq[(String, String)] =
     LangProfiles.map { case (l, bgs) =>
       l -> bgs.map(bg =>
-        s"(length(text) - length(replace(text, '$bg', '')))").mkString(" + ")
+        s"(length($text) - length(replace($text, '$bg', '')))").mkString(" + ")
     }
-  private[graft] val langScoresSql: String =
-    langScoreSums.map { case (l, sum) => s"($sum) AS s_$l" }.mkString(", ")
+  private[graft] def langScoresSql(text: String = "text"): String =
+    langScoreSums(text).map { case (l, sum) => s"($sum) AS s_$l" }.mkString(", ")
   private[graft] val langArgmaxSql: String = {
     val langs = LangProfiles.map(_._1)
     val cases = langs.init.map { l =>
@@ -124,10 +125,12 @@ object PipelineQueries {
     }.mkString(" ")
     s"CASE $cases ELSE '${langs.last}' END"
   }
-  private[graft] def langScoreCols: Seq[Column] =
+  private[graft] def langScores(text: Column): Seq[(String, Column)] =
     LangProfiles.map { case (l, bgs) =>
-      bgs.map(occurrences2x(col("text"), _)).reduce(_ + _).as(s"s_$l")
+      l -> bgs.map(occurrences2x(text, _)).reduce(_ + _)
     }
+  private[graft] def langScoreCols: Seq[Column] =
+    langScores(col("text")).map { case (l, score) => score.as(s"s_$l") }
   private[graft] def langArgmax: Column =
     argmaxLabel(LangProfiles.map { case (l, _) => l -> col(s"s_$l") })
 
@@ -703,7 +706,7 @@ object PipelineQueries {
     // real language signal, so accuracy is reported, not asserted).
     QueryDef("q32_langid",
       Some(s"""
-        WITH scored AS (SELECT lang, $langScoresSql FROM documents)
+        WITH scored AS (SELECT lang, ${langScoresSql()} FROM documents)
         SELECT $langArgmaxSql AS predicted,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(CASE WHEN ($langArgmaxSql) = lang

@@ -34,28 +34,31 @@ object Sessions {
     build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), appName)
 
   /** Child session with AQE disabled, for the FIXED-ITERATION rank
-    * loops (the pageRank / trustRank / HITS query builds — q125, q148,
-    * q171, q172, q183, q219, q220).
+    * loops of q148, q171, q172, q183 and q220 (the pageRank / HITS
+    * query builds).
     *
-    * Rationale (round-19, guide §1.2 "the distributed algorithm
-    * first" then measured): these loop bodies join each iteration's
+    * Rationale (round 19): these loop bodies join each iteration's
     * nodes-sized rank frame against edge frames cached PRE-PARTITIONED
     * on the join key, so the per-iteration joins plan with no exchange
-    * on the edge side — exactly the joins AQE cannot improve (its
-    * skew-split / strategy rewrites act on ShuffleQueryStage inputs),
-    * and the loop's remaining exchanges are fixed-shape nodes-sized
-    * aggregates. AQE still cuts the loop's one lazy plan into 15–30+
-    * query stages (q125 executes as 32 jobs under AQE —
-    * OPTIMIZATION_r19.md; the `jobs` of a solo `graft.Bench` record's
-    * `layers` entry) and re-optimizes the deep nested plan at
-    * every stage boundary: driver time proportional to PLAN size ×
-    * stage count, independent of data size, so the replan tax does not
-    * amortize at larger SFs. Sandwich A/B at sf0.1 (5-pass solo,
-    * probes flat across the three runs): q125 4.43/3.83 → 2.96 s,
-    * q171 3.15/2.69 → 1.58 s, q219 5.68/6.87 → 3.39 s.
+    * on the edge side — joins AQE cannot improve (its skew-split /
+    * strategy rewrites act on ShuffleQueryStage inputs). AQE still cuts
+    * the loop's one lazy plan into many query stages and re-optimizes
+    * the deep nested plan at every stage boundary: driver time
+    * proportional to plan size × stage count.
     *
-    * Whether AQE pays for a given loop is a per-query choice: a query
-    * that wants AQE builds on `s` directly. The child session shares the SparkContext, CacheManager and
+    * Whether AQE pays is a per-query choice, backed by same-window
+    * solo records (OPTIMIZATION_r19.md item 3); a query that wants AQE
+    * builds on `s` directly. q148, q171 and q172 won on this session
+    * (`bench_history/scratch_r19_loops_*`: q148 4.82 → 1.21 s and q171
+    * 4.57 → 1.60 s at sf0.1); q183 and q220 were level, no gain
+    * claimed. q125 and q219 lost here and build on `s`: three
+    * alternating pairs at sf0.1 on 4 cores
+    * (`solo_loopsession_aqe_{off,on}_*`) read q125 4.00–4.15 s here
+    * against 2.47–3.08 s on `s`, and q219 3.99–4.37 against 3.36–3.48
+    * s; AQE multiplies their jobs (5 → 16, 7 → 29) and driver gap
+    * (about 4×) but halves execution.
+    *
+    * The child session shares the SparkContext, CacheManager and
     * builder-level confs (UTC, extensions), so caching/clearCache
     * semantics are unchanged.
     */

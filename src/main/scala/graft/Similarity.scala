@@ -433,8 +433,10 @@ object Similarity {
     require(iters > 0, s"kmeansFit needs iters > 0, got $iters")
     val spark = df.sparkSession
     val Disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val base = df.select(col(idCol), asDouble(col(vecCol)).as("_v"))
-      .persist(Disk)
+    // the corpus cache lives for the fit, each E-step's for its round
+    val fitScope = new CacheScope
+    val base = fitScope.persist(
+      df.select(col(idCol), asDouble(col(vecCol)).as("_v")), Disk)
     val seeds = base
       .orderBy(Pipeline.wordHash32(col(idCol).cast("string")), col(idCol))
       .limit(k).collect()
@@ -455,7 +457,8 @@ object Similarity {
       .filter(col("_rn") === 1).drop("_rn")
     val inertia = Seq.newBuilder[Double]
     for (_ <- 1 to iters) {
-      val a = assign(centsDF).persist(Disk)
+      val roundScope = new CacheScope
+      val a = roundScope.persist(assign(centsDF), Disk)
       inertia += a.agg(sum(lit(1.0) - col("_cos"))).head.getDouble(0)
       val means = a
         .select(col("_cid"), posexplode(col("_v")).as(Seq("_d", "_x")))
@@ -464,11 +467,11 @@ object Similarity {
       val next = cents.map(_.clone()) // emptied cluster -> keep centroid
       means.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
       cents = next
-      a.unpersist()
+      roundScope.release()
     }
     val out = assign(centsDF)
       .select(col(idCol), col("_cid").as("cluster_id"), col("_cos").as("cosine"))
-    base.unpersist()
+    fitScope.release()
     KMeans(out, cents, inertia.result())
   }
 

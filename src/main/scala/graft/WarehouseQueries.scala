@@ -1016,7 +1016,7 @@ object WarehouseQueries {
       Some {
         import PipelineQueries.{langArgmaxSql, langScoresSql}
         s"""
-        WITH scored AS (SELECT lang, $langScoresSql FROM documents),
+        WITH scored AS (SELECT lang, ${langScoresSql()} FROM documents),
         cls AS (SELECT lang AS true_class,
                   $langArgmaxSql AS predicted
                 FROM scored),

@@ -38,7 +38,8 @@ object Events {
     * the oracle can see; see Tables.events).
     */
   def funnel(events: DataFrame, userCol: String, typeCol: String,
-             usCol: Column, steps: Seq[String], windowUs: Long): DataFrame = {
+             usCol: Column, steps: Seq[String], windowUs: Long,
+             scope: CacheScope = new CacheScope): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(windowUs > 0, s"conversion window must be positive, got $windowUs")
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -56,10 +57,8 @@ object Events {
     // every stage frame except the last feeds BOTH its own count and
     // the next stage's join — uncached, stage 1 would re-execute once
     // per downstream stage (3x the event scans on a 3-step funnel).
-    // Plan-keyed SQL-cache entries live until session end (same
-    // documented trade as Dedup.near's signature cache); the last
-    // frame is read once and stays uncached.
-    stages.dropRight(1).foreach(_.persist(disk))
+    // The last frame is read once and stays uncached.
+    stages.dropRight(1).foreach(scope.persist(_, disk))
     stages.zip(steps).zipWithIndex.map { case ((df, step), i) =>
       df.agg(count(lit(1)).as("n_users"))
         .select(lit(i + 1).as("step"), lit(step).as("event_type"),

@@ -422,7 +422,8 @@ object Sampling {
     * dependent), so the default is bit-reproducible cross-engine.
     */
   def temperatureMix(df: DataFrame, idCol: String, strataCol: String,
-                     alpha: Double = 0.5, targetFrac: Double = 0.5): DataFrame = {
+                     alpha: Double = 0.5, targetFrac: Double = 0.5,
+                     scope: CacheScope = new CacheScope): DataFrame = {
     require(targetFrac > 0 && targetFrac <= 1,
       s"targetFrac must be in (0,1], got $targetFrac")
     // null-safe join: a NULL stratum (e.g. failed language detection)
@@ -431,7 +432,7 @@ object Sampling {
     // every real stratum's rate below target. (Oracle-replayed callers
     // should still pre-bin NULLs: SQL list(ORDER BY) and Spark
     // sort_array disagree on NULL placement in the totals fold.)
-    weighted(df.join(broadcast(strataRates(df, strataCol, alpha, targetFrac)
+    weighted(df.join(broadcast(strataRates(df, strataCol, alpha, targetFrac, scope)
           .select(col("_rs"), least(lit(1.0), col("_rate")).as("_rate"))),
         col(strataCol) <=> col("_rs")),
         idCol, "_rate")
@@ -451,9 +452,10 @@ object Sampling {
     */
   def temperatureMixWithReplacement(df: DataFrame, idCol: String,
                                     strataCol: String, alpha: Double = 0.5,
-                                    targetFrac: Double = 1.0): DataFrame = {
+                                    targetFrac: Double = 1.0,
+                                    scope: CacheScope = new CacheScope): DataFrame = {
     require(targetFrac > 0, s"targetFrac must be positive, got $targetFrac")
-    val withRate = df.join(broadcast(strataRates(df, strataCol, alpha, targetFrac)),
+    val withRate = df.join(broadcast(strataRates(df, strataCol, alpha, targetFrac, scope)),
       col(strataCol) <=> col("_rs"))
     val frac = col("_rate") - floor(col("_rate"))
     withRate
@@ -475,15 +477,15 @@ object Sampling {
     * correctly-rounded everywhere) rather than `pow` (libm-dependent).
     */
   private def strataRates(df: DataFrame, strataCol: String, alpha: Double,
-                          targetFrac: Double): DataFrame = {
+                          targetFrac: Double, scope: CacheScope): DataFrame = {
     require(alpha >= 0, s"alpha must be non-negative, got $alpha")
     def powN(n: Column): Column =
       if (alpha == 0.5) sqrt(n.cast("double")) else pow(n.cast("double"), alpha)
     // persisted: the totals fold AND the rate frame both read it —
     // uncached, each would trigger its own full corpus scan
-    val counts = df.groupBy(col(strataCol))
-      .agg(count(lit(1)).cast("long").as("_n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = scope.persist(df.groupBy(col(strataCol))
+      .agg(count(lit(1)).cast("long").as("_n")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // index-ordered folds (see Pipeline.scala's portability argument):
     // DuckDB's init-less list_reduce and Spark's 0.0-seeded aggregate
     // produce bit-identical sums over the same sorted sequence

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.CacheScope
 import graft.wilayah.{Geo, Ingest, Model, Store}
 
 /** Structured Streaming surface.
@@ -16,6 +17,8 @@ import graft.wilayah.{Geo, Ingest, Model, Store}
   * aggregation, streaming dedup, and custom keyed state.
   */
 object Streams {
+
+  private val Disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   // ===== incremental GeoJSON ingest (streaming /api/db/sync) =====
 
@@ -240,16 +243,12 @@ object Streams {
     *
     * Input columns: (`idCol`, ts, `textCol`).
     *
-    * Returns a [[ContaminationMonitor]] handle: `hits` is the streaming
-    * output; `close()` releases the cached static test-corpus buckets
-    * once the monitor's query stops (restarting with a refreshed test
-    * corpus would otherwise accumulate stale cache entries for the
-    * session lifetime).
+    * Returns the streaming hits. The static test-corpus buckets are
+    * cached in `scope`: release it once the monitor's query stops
+    * (restarting with a refreshed test corpus would otherwise
+    * accumulate stale cache entries for the session lifetime). The
+    * other static-side monitors below follow the same rule.
     */
-  final case class ContaminationMonitor(hits: DataFrame, testBuckets: DataFrame) {
-    def close(): Unit = { testBuckets.unpersist(); () }
-  }
-
   def streamingContaminationHits(
       docs: DataFrame,
       test: DataFrame,
@@ -258,7 +257,8 @@ object Streams {
       threshold: Double = 0.5,
       k: Int = graft.Pipeline.AutoBanding,
       bands: Int = graft.Pipeline.AutoBanding,
-      horizonMinutes: Int = 10): ContaminationMonitor = {
+      horizonMinutes: Int = 10,
+      scope: CacheScope = new CacheScope): DataFrame = {
     import org.apache.spark.sql.functions.size
     // threshold-derived banding: this is a LEAKAGE gate, so its
     // candidate recall must hold at the threshold the downstream exact
@@ -271,14 +271,13 @@ object Streams {
     // persisted: the static side is re-planned EVERY micro-batch —
     // uncached, a long-running monitor would re-hash the entire test
     // corpus per trigger for an input that never changes
-    val testBuckets = test
+    val testBuckets = scope.persist(test
       .filter(size(graft.Pipeline.words(col(textCol))) >= 3)
       .select(explode(graft.Pipeline.lshBands(sig(col(textCol)), bandsR, kR / bandsR))
         .as("bb"))
       .select(col("bb.band").as("band"), col("bb.bh").as("bh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hits = docs
+      .distinct(), Disk)
+    docs
       .withWatermark("ts", s"$horizonMinutes minutes")
       .filter(size(graft.Pipeline.words(col(textCol))) >= 3)
       .withColumn("bb", explode(graft.Pipeline.lshBands(sig(col(textCol)), bandsR, kR / bandsR)))
@@ -286,7 +285,6 @@ object Streams {
       .join(testBuckets, Seq("band", "bh"), "left_semi")
       .drop("bb", "band", "bh")
       .dropDuplicatesWithinWatermark(idCol)
-    ContaminationMonitor(hits, testBuckets)
   }
 
   /** Streaming EXACT n-gram contamination gate: flag arriving docs
@@ -310,18 +308,18 @@ object Streams {
       idCol: String,
       textCol: String,
       n: Int = 5,
-      horizonMinutes: Int = 10): ContaminationMonitor = {
+      horizonMinutes: Int = 10,
+      scope: CacheScope = new CacheScope): DataFrame = {
     import org.apache.spark.sql.functions.size
     require(n >= 2, s"n-gram order must be >= 2, got $n")
     def grams(c: org.apache.spark.sql.Column) =
       graft.Pipeline.wordShingles(graft.Pipeline.words(c), n)
-    val evalGrams = eval
+    val evalGrams = scope.persist(eval
       .filter(size(graft.Pipeline.words(col(textCol))) >= n)
       .select(explode(grams(col(textCol))).as("_raw"))
       .select(graft.Pipeline.wordHash60(col("_raw")).as("_g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hits = docs
+      .distinct(), Disk)
+    docs
       .withWatermark("ts", s"$horizonMinutes minutes")
       .filter(size(graft.Pipeline.words(col(textCol))) >= n)
       .withColumn("_raw", explode(grams(col(textCol))))
@@ -329,7 +327,6 @@ object Streams {
       .join(evalGrams, Seq("_g"), "left_semi")
       .drop("_raw", "_g")
       .dropDuplicatesWithinWatermark(idCol)
-    ContaminationMonitor(hits, evalGrams)
   }
 
   /** Streaming VERIFIED near-dup pairs: arriving docs vs a STATIC
@@ -363,25 +360,26 @@ object Streams {
       threshold: Double = 0.5,
       k: Int = graft.Pipeline.AutoBanding,
       bands: Int = graft.Pipeline.AutoBanding,
-      horizonMinutes: Int = 10): ContaminationMonitor = {
+      horizonMinutes: Int = 10,
+      scope: CacheScope = new CacheScope): DataFrame = {
     import org.apache.spark.sql.functions.size
     val (kR, bR) = graft.Pipeline.resolveBanding(threshold, k, bands)
     // FLOOR like the batch gate: admits a hair below a non-ppm-exact
     // threshold rather than dropping exactly-at-threshold pairs
     val tPpm = math.floor(threshold * 1000000).toInt
-    val staticBuckets = graft.Dedup.shingleSignatures(corpus, idCol, textCol, 3, kR)
+    val staticBuckets = scope.persist(
+      graft.Dedup.shingleSignatures(corpus, idCol, textCol, 3, kR)
       .select(col(idCol).as("_cid"),
         transform(col("shingles"), graft.Pipeline.wordHash60(_)).as("_hb"),
         explode(graft.Pipeline.lshBands(col("sig"), bR, kR / bR)).as("bb"))
       .select(col("_cid"), col("_hb"),
-        col("bb.band").as("band"), col("bb.bh").as("bh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("bb.band").as("band"), col("bb.bh").as("bh")), Disk)
     val w = graft.Pipeline.words(col(textCol))
     val shingles = graft.Pipeline.wordShingles(w, 3)
     val sig = graft.Pipeline.minhashSignature(shingles, kR)
     val inter = size(array_intersect(col("_ha"), col("_hb")))
     val union = size(col("_ha")) + size(col("_hb")) - inter
-    val hits = docs
+    docs
       .withWatermark("ts", s"$horizonMinutes minutes")
       .filter(size(w) >= 3)
       .select(col(idCol).as("_sid"), col("ts"),
@@ -401,7 +399,6 @@ object Streams {
         expr("(1000000 * _i) div _u").as("jaccard_ppm"),
         col("ts"))
       .dropDuplicatesWithinWatermark("a_id", "b_id")
-    ContaminationMonitor(hits, staticBuckets)
   }
 
   /** EMBEDDING-space streaming contamination monitor: flag arriving
@@ -426,7 +423,8 @@ object Streams {
       minCosine: Double = 0.9,
       dims: Int = 64,
       planes: Int = 4,
-      horizonMinutes: Int = 10): ContaminationMonitor = {
+      horizonMinutes: Int = 10,
+      scope: CacheScope = new CacheScope): DataFrame = {
     import graft.plans.VectorExpressions.cosineSim
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val bucketed = test
@@ -441,19 +439,18 @@ object Streams {
       s"$nullTest test vector(s) have a NULL RHP bucket (shorter than dims=$dims " +
         "or null elements) and are EXCLUDED from the streaming contamination " +
         "gate — repair them or contamination near them goes undetected")
-    val testBuckets = bucketed
+    val testBuckets = scope.persist(bucketed
       .filter(col("_tb").isNotNull)
       .select(col("_tv"),
         explode(graft.Pipeline.rhpProbeBuckets(col("_tb"), planes)).as("_pb"))
       // duplicate test vectors (common after eval-set unions) would
       // re-verify an identical cosine per duplicate per arrival
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct(), Disk)
     // NULL-bucket ARRIVALS never join and pass unflagged: counted per
     // micro-batch via observe — streaming observed metrics surface in
     // StreamingQueryProgress.observedMetrics (StreamingQueryListener),
     // not the batch QueryExecutionListener
-    val hits = docs
+    docs
       .withWatermark("ts", s"$horizonMinutes minutes")
       .withColumn("_v", transform(col(vecCol), _.cast("double")))
       .withColumn("_b", graft.Pipeline.rhpBucket(col("_v"), dims, planes))
@@ -464,7 +461,6 @@ object Streams {
       .filter(cosineSim(col("_v"), col("_tv")) >= minCosine)
       .drop("_v", "_b", "_tv", "_pb")
       .dropDuplicatesWithinWatermark(idCol)
-    ContaminationMonitor(hits, testBuckets)
   }
 
   /** Streaming CANARY tripwire: flag arriving docs containing any
@@ -635,22 +631,22 @@ object Streams {
     * evicted by event-time timeout).
     *
     * Input columns: (`idCol`: long, ts, `textCol`); output
-    * [[SpanHit]] rows. Returns the [[ContaminationMonitor]] handle —
-    * `close()` releases the cached warehouse window index.
+    * [[SpanHit]] rows; the warehouse window index is cached in `scope`.
     */
   def streamingSpanDedup(docs: DataFrame, warehouse: DataFrame,
                          idCol: String, textCol: String, l: Int,
                          minOcc: Long = 2L,
                          maxOcc: Long = Long.MaxValue,
-                         horizonMinutes: Int = 10): ContaminationMonitor = {
+                         horizonMinutes: Int = 10,
+                         scope: CacheScope = new CacheScope): DataFrame = {
     import docs.sparkSession.implicits._
     require(l >= 2, s"window length must be >= 2, got $l")
     require(minOcc >= 2, s"minOcc must be >= 2, got $minOcc")
-    val occ = graft.ops.SpanDedup.windowAnchors(warehouse, idCol, textCol, l)
+    val occ = scope.persist(
+      graft.ops.SpanDedup.windowAnchors(warehouse, idCol, textCol, l)
       .groupBy("_h").agg(count(lit(1)).as("_occ"))
       .filter(col("_occ") >= minOcc && col("_occ") <= maxOcc)
-      .select("_h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("_h"), Disk)
     val horizonMs = horizonMinutes * 60_000L
     val anchors = graft.ops.SpanDedup.windowAnchors(
         docs.withWatermark("ts", s"$horizonMinutes minutes"),
@@ -662,7 +658,7 @@ object Streams {
     // the horizon emits nothing (the dropDuplicatesWithinWatermark
     // discipline, in-state because the span merge needs the group
     // anyway), and the doc is evicted one horizon after its report
-    val hits = KeyedState.evicting(anchors.groupByKey(_._1))(
+    KeyedState.evicting(anchors.groupByKey(_._1))(
         Ordering.by(_._2), (reportedMs: Long) => reportedMs + horizonMs) {
       case (_, Some(reportedMs), _) => (Some(reportedMs), Iterator.empty)
       case (id, None, rows) =>
@@ -684,8 +680,7 @@ object Streams {
         if (start >= 0)
           out += SpanHit(id, start.toLong, end.toLong, (end - start).toLong, ts)
         (Some(ts.getTime), out.result().iterator)
-    }
-    ContaminationMonitor(hits.toDF(), occ)
+    }.toDF()
   }
 
   /** A streaming banded audio near-dup candidate: window `a_frame_idx`

@@ -4717,6 +4717,13 @@ class OpsSpec extends AnyFunSuite {
     val iv = Seq(("a", 0L, 10L), ("b", 5L, 15L)).toDF("id", "lo", "hi")
     val vecs = Seq((1L, Seq(0.8f, 0.6f)), (2L, Seq(0f, 1f)),
       (100L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+    val cents = vecs.select(col("vec_id").as("cid"), col("embedding").as("cv"))
+    val events = Seq((1L, "a", 1L), (1L, "b", 2L), (1L, "c", 3L), (2L, "a", 1L))
+      .toDF("u", "t", "us")
+    val pages = Seq((1L, "https://a.example.com/x",
+      "<html><body><p>alpha beta gamma delta</p></body></html>"))
+      .toDF("doc_id", "url", "html")
+    val sourced = docs.withColumn("source", lit("s"))
     import graft.ops.{Events, Graph, Layout, Ranking, Sampling, SetSim,
       SpanDedup, Stats, TextStats}
     def op(label: String)(run: CacheScope => org.apache.spark.sql.DataFrame) =
@@ -4776,7 +4783,39 @@ class OpsSpec extends AnyFunSuite {
         "embedding", col("vec_id") >= 100L, prefixDims = 1, k = 1,
         scope = s)),
       op("editOnePairs")(s => Dedup.editOnePairs(
-        Seq("cat", "cut", "dog").toDF("w"), "w", s)))
+        Seq("cat", "cut", "dog").toDF("w"), "w", s)),
+      op("decontaminate")(s => Dedup.decontaminate(
+        docs, docs.filter(col("doc_id") === 1L), "doc_id", "text", scope = s)),
+      op("decontaminateByEmbedding")(s => Dedup.decontaminateByEmbedding(
+        vecs, vecs.filter(col("vec_id") === 1L), "vec_id", "embedding",
+        dims = 2, planes = 1, scope = s)),
+      op("nearByEmbedding")(s => Dedup.nearByEmbedding(vecs, "vec_id",
+        "embedding", dims = 2, planes = 1, scope = s)),
+      op("near")(s => Dedup.near(docs, "doc_id", "text", scope = s)),
+      op("containmentPairs")(s => Dedup.containmentPairs(
+        Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", scope = s)),
+      op("duplicationMatrix")(s => Dedup.duplicationMatrix(
+        sourced, "doc_id", "text", "source", scope = s)),
+      op("nearKeepBest")(s => Dedup.nearKeepBest(
+        docs, "doc_id", "text", "doc_id", scope = s)),
+      op("semantic")(s => Dedup.semantic(vecs, "vec_id", "embedding",
+        cents, "cid", "cv", threshold = 0.9, scope = s)),
+      op("semanticBlocked")(s => Dedup.semanticBlocked(vecs, "vec_id",
+        "embedding", cents, "cid", "cv", threshold = 0.9, planes = 1,
+        dims = 2, scope = s)),
+      op("funnel")(s => Events.funnel(events, "u", "t", col("us"),
+        Seq("a", "b", "c"), 10L, s)),
+      op("temperatureMix")(s => Sampling.temperatureMix(
+        mix, "id", "s", scope = s)),
+      op("temperatureMixWithReplacement")(s =>
+        Sampling.temperatureMixWithReplacement(mix, "id", "s", scope = s)),
+      op("recrawl")(s => CorpusPipeline.recrawl(pages, pages.limit(0),
+        Seq("blocked.example.com").toDF("domain"), scope = s)._1),
+      op("clean")(s => CorpusPipeline.clean(docs, minTokens = 1,
+        maxStopRatio = 1.0, scope = s).corpus),
+      op("prepare")(s => CorpusPipeline.prepare(sourced,
+        Seq((9L, "x y z w")).toDF("doc_id", "text"), minTokens = 1,
+        maxStopRatio = 1.0, scope = s).corpus))
     // Key-set discipline: only the RDDs THIS call registered are the
     // assertion's business (earlier tests' localCheckpoint RDDs vanish
     // from getPersistentRDDs whenever the async ContextCleaner runs),
@@ -4809,5 +4848,19 @@ class OpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     assert((spark.sparkContext.getPersistentRDDs.keySet & mine).isEmpty,
       "clearCache drops an unscoped call's caches")
+    // the ops whose caches die inside the call: a local scope releases
+    // them before it returns, so none is registered afterwards
+    val local = Seq[(String, () => Any)](
+      "clusterSizes" -> (() => Dedup.clusterSizes(docs, "doc_id", "text")),
+      "dedupSavings" -> (() => Dedup.dedupSavings(docs, "doc_id", "text")),
+      "kmeansFit" -> (() =>
+        Similarity.kmeansFit(vecs, "vec_id", "embedding", k = 2, iters = 2)))
+    for ((label, run) <- local) {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      run()
+      assert(cacheRdds(before).isEmpty,
+        s"$label must release its caches before it returns")
+    }
   }
 }

@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Each repeated recipe lives once: the DuckDB renderings of engine
   * kernels in [[OracleSql]], and each query recipe several queries
-  * share (session window, language-ID scorer, order–part graph, banded
-  * frame near-dup tail, SCD2 projection) in the family file that owns
-  * it. A second copy of a marker anywhere else in `src/main` is a copy
-  * that can drift.
+  * share (session window, language-ID scorer, trade and order–part
+  * graphs, banded frame near-dup tail, SCD2 projection) in the family
+  * file that owns it. A second copy of a marker anywhere else in
+  * `src/main` is a copy that can drift.
   */
 class OracleSqlSpec extends AnyFunSuite {
 
@@ -18,9 +18,10 @@ class OracleSqlSpec extends AnyFunSuite {
     "strpos('0123456789abcdef'" -> "OracleSql.scala",
     "list_reduce(list_transform(range(1, " -> "OracleSql.scala",
     "gap > 300000000L" -> "WarehouseQueries.scala",
-    "length(replace(text, '$bg', ''))" -> "PipelineQueries.scala",
-    "occurrences2x(col(\"text\"), _)" -> "PipelineQueries.scala",
+    "length(replace($text, '$bg', ''))" -> "PipelineQueries.scala",
+    "occurrences2x(text, _)" -> "PipelineQueries.scala",
     "l_partkey + 1000000000000" -> "GraphQueries.scala",
+    "o_custkey * 2 AS" -> "GraphQueries.scala",
     "FROM okc x JOIN okc y" -> "CurationQueries.scala",
     "col(\"valid_to\").as(\"valid_to_us\")" -> "WarehouseQueries.scala")
 

@@ -342,7 +342,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("composed corpus pipeline: monotone stages, no survivors above threshold") {
     val docs = Tables.documents(spark, sf)
-    val result = CorpusPipeline.clean(docs, jaccardThreshold = 0.8)
+    val scope = new CacheScope
+    val result = CorpusPipeline.clean(docs, jaccardThreshold = 0.8, scope = scope)
     val (cleaned, report) = (result.corpus, result.report)
     try {
 
@@ -374,10 +375,10 @@ class PipelineSpec extends AnyFunSuite {
     // report serializes to the JSON line the demo prints
     assert(report.json.contains(s""""input":${report.input}"""))
     } finally {
-      // release() drops the one cache entry clean() leaves (the near
+      // the scope holds the one cache entry clean() leaves (the near
       // boundary) — materializing the corpus BEFORE release is served
       // from it (the counts above exercised that path)
-      result.release()
+      scope.release()
     }
   }
 
@@ -420,9 +421,10 @@ class PipelineSpec extends AnyFunSuite {
     val profile = graft.obs.Profile.attach(spark)
     try {
       profile("clean") {
-        val result = CorpusPipeline.clean(docs)
+        val scope = new CacheScope
+        val result = CorpusPipeline.clean(docs, scope = scope)
         assert(result.report.input == docs.count()) // sanity (extra action, after clean)
-        result.release()
+        scope.release()
       }
       val actions = profile.take("clean").actions
       assert(actions.size == 2,
@@ -599,7 +601,9 @@ class PipelineSpec extends AnyFunSuite {
       lit("alpha beta gamma delta epsilon").as("text"))
     val hotTest = Seq((999999L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    val out = Dedup.decontaminate(hotTrain, hotTest, "doc_id", "text")
+    val scope = new CacheScope
+    val out = Dedup.decontaminate(hotTrain, hotTest, "doc_id", "text",
+      scope = scope)
     try {
       // collect() (not count()) — count() plans a NEW QueryExecution,
       // and the observed metrics live on the executed one
@@ -613,11 +617,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(train.getAs[Long]("hot_bucket_rows") > 0,
         "hot bucket must surface in the metric even on the uncapped path")
       assert(metric("graft_lsh_test").getAs[Long]("hot_bucket_rows") == 0L)
-    } finally {
-      Dedup.shingleSignatures(hotTrain, "doc_id", "text").unpersist()
-      Dedup.shingleSignatures(hotTest, "doc_id", "text").unpersist()
-      ()
-    }
+    } finally scope.release()
   }
 
   test("nearByEmbedding drops exactly the blocked pairs' higher ids") {
@@ -638,17 +638,13 @@ class PipelineSpec extends AnyFunSuite {
       if a < b && Integer.bitCount(buckets(a) ^ buckets(b)) <= 1 &&
         cosine(vecs(a), vecs(b)) >= 0.35
     } yield b).toSet
+    val scope = new CacheScope
     try {
       val survivors = Dedup.nearByEmbedding(Tables.embeddings(spark, sf),
-          "vec_id", "embedding", minCosine = 0.35, planes = 4)
+          "vec_id", "embedding", minCosine = 0.35, planes = 4, scope = scope)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       assert(survivors == ids.toSet -- expectedLosers)
-    } finally {
-      Dedup.embeddingBuckets(Tables.embeddings(spark, sf), "vec_id", "embedding",
-          planes = 4)
-        .unpersist()
-      ()
-    }
+    } finally scope.release()
   }
 
   test("prepare composes clean -> decontaminate -> mix -> pack end to end") {
@@ -659,8 +655,9 @@ class PipelineSpec extends AnyFunSuite {
     val leakedText = docs.orderBy("doc_id").head().getAs[String]("text")
     val leakedId = docs.orderBy("doc_id").head().getAs[Long]("doc_id")
     val eval = Seq((900000L, leakedText)).toDF("doc_id", "text")
+    val scope = new CacheScope
     val result = CorpusPipeline.prepare(docs, eval,
-      decontThreshold = 0.5, defaultPermille = 1000)
+      decontThreshold = 0.5, defaultPermille = 1000, scope = scope)
     try {
       val out = result.corpus.select("doc_id", "source", "bin").collect()
       assert(out.nonEmpty)
@@ -680,7 +677,7 @@ class PipelineSpec extends AnyFunSuite {
       // feature columns flow through to the packed corpus
       assert(result.corpus.columns.contains("n_subword_est"))
       assert(result.corpus.columns.contains("bin"))
-    } finally result.release()
+    } finally scope.release()
   }
 
   test("prepare's exact n-gram stage catches the verbatim leak LSH misses") {
@@ -700,15 +697,17 @@ class PipelineSpec extends AnyFunSuite {
     val eval = Seq((900L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
     // without the exact stage: doc 1 survives (the LSH gate misses it)
-    val without = CorpusPipeline.prepare(docs, eval)
+    val scope = new CacheScope
+    val without = CorpusPipeline.prepare(docs, eval, scope = scope)
     try {
       assert(without.corpus.select("doc_id").as[Long].collect().toSet
         .contains(1L))
       assert(without.report.afterExactDecontamination.isEmpty)
-    } finally without.release()
+    } finally scope.release()
     // with it: doc 1 is gone, everything else survives, and the
     // report carries the stage count
-    val withExact = CorpusPipeline.prepare(docs, eval, exactNgramN = 5)
+    val withExact = CorpusPipeline.prepare(docs, eval, exactNgramN = 5,
+      scope = scope)
     try {
       val kept = withExact.corpus.select("doc_id").as[Long].collect().toSet
       assert(!kept.contains(1L))
@@ -716,7 +715,7 @@ class PipelineSpec extends AnyFunSuite {
       val r = withExact.report
       assert(r.afterExactDecontamination.contains(r.afterDecontamination - 1))
       assert(r.json.contains("after_exact_decontamination"))
-    } finally withExact.release()
+    } finally scope.release()
   }
 
   test("prepare's split stage keeps near-dup groups on one side of every split") {
@@ -740,8 +739,9 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "source")
     val eval = Seq((900000L, "zz yy xx ww vv uu tt ss rr qq"))
       .toDF("doc_id", "text")
+    val scope = new CacheScope
     val result = CorpusPipeline.prepare(docs, eval,
-      splits = Seq(("train", 500), ("test", 500)))
+      splits = Seq(("train", 500), ("test", 500)), scope = scope)
     try {
       val out = result.corpus.select("doc_id", "split", "split_group").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -765,7 +765,7 @@ class PipelineSpec extends AnyFunSuite {
       // and the split is non-degenerate across groups
       assert(out.map(_._2).distinct.length == 2,
         "8 independent groups should populate both splits")
-    } finally result.release()
+    } finally scope.release()
   }
 
   test("prepare's embedding gate drops a planted paraphrase leak only when on") {
@@ -789,23 +789,26 @@ class PipelineSpec extends AnyFunSuite {
       (i, if (i == 7L) vec(63) else vec(i.toInt))).toDF("doc_id", "embedding")
     val testEmb = Seq((900L, vec(63))).toDF("doc_id", "embedding")
 
-    val without = CorpusPipeline.prepare(docs, eval, decontThreshold = 0.8)
+    val scope = new CacheScope
+    val without = CorpusPipeline.prepare(docs, eval, decontThreshold = 0.8,
+      scope = scope)
     try {
       val ids = without.corpus.select("doc_id").collect().map(_.getLong(0)).toSet
       assert(ids.contains(7L), "text-only gate must MISS the paraphrase")
       assert(without.report.afterEmbeddingDecontamination.isEmpty)
       assert(without.report.json.contains("\"after_embedding_decontamination\":null"))
-    } finally without.release()
+    } finally scope.release()
 
     val withEmb = CorpusPipeline.prepare(docs, eval, decontThreshold = 0.8,
-      embeddings = Some(emb), testEmbeddings = Some(testEmb), minCosine = 0.9)
+      embeddings = Some(emb), testEmbeddings = Some(testEmb), minCosine = 0.9,
+      scope = scope)
     try {
       val ids = withEmb.corpus.select("doc_id").collect().map(_.getLong(0)).toSet
       assert(!ids.contains(7L), "embedding gate must DROP the paraphrase")
       val r = withEmb.report
       assert(r.afterEmbeddingDecontamination.contains(r.afterDecontamination - 1))
       assert(r.afterSampling == r.afterDecontamination - 1)
-    } finally withEmb.release()
+    } finally scope.release()
   }
 
   test("prepare's simhash64 stage drops planted near-identical permutations") {
@@ -820,14 +823,16 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     // a permutation is 64-bit hamming distance 0 but has near-zero
     // 3-shingle Jaccard, so the MinHash stage alone keeps both
-    val off = CorpusPipeline.prepare(docs, eval)
+    val scope = new CacheScope
+    val off = CorpusPipeline.prepare(docs, eval, scope = scope)
     try assert(off.corpus.select("doc_id").collect().map(_.getLong(0)).toSet
       == Set(1L, 2L, 3L))
-    finally off.release()
-    val on = CorpusPipeline.prepare(docs, eval, simhashMaxDist = 3)
+    finally scope.release()
+    val on = CorpusPipeline.prepare(docs, eval, simhashMaxDist = 3,
+      scope = scope)
     try assert(on.corpus.select("doc_id").collect().map(_.getLong(0)).toSet
       == Set(1L, 3L), "higher id of the dist-0 pair must drop")
-    finally on.release()
+    finally scope.release()
   }
 
   test("simhash64 pairs equal brute-force 64-bit hamming at dist <= 3") {
@@ -877,15 +882,12 @@ class PipelineSpec extends AnyFunSuite {
     val b = Seq((10L, "one two three four five six seven eight"),
                 (11L, "one two three four five six seven eight"))
       .toDF("doc_id", "text")
+    val scope = new CacheScope
     try {
-      val combined = Dedup.near(a, "doc_id", "text", threshold = 0.5)
-        .unionAll(Dedup.near(b, "doc_id", "text", threshold = 0.5))
+      val combined = Dedup.near(a, "doc_id", "text", threshold = 0.5, scope = scope)
+        .unionAll(Dedup.near(b, "doc_id", "text", threshold = 0.5, scope = scope))
       assert(combined.count() == 2) // each pair dedups to its lower id
-    } finally {
-      Dedup.shingleSignatures(a, "doc_id", "text").unpersist()
-      Dedup.shingleSignatures(b, "doc_id", "text").unpersist()
-      ()
-    }
+    } finally scope.release()
   }
 
   test("precomputed frames reject mismatched banding/probe parameters") {

@@ -33,7 +33,9 @@ class PlansSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val train = docs.filter(col("source") =!= "src0")
     val test0 = docs.filter(col("source") === "src0")
-    val out = Dedup.decontaminate(train, test0, "doc_id", "text", threshold = 0.5)
+    val scope = new CacheScope
+    val out = Dedup.decontaminate(train, test0, "doc_id", "text", threshold = 0.5,
+      scope = scope)
     try {
       val cached = out.queryExecution.withCachedData
       // each corpus's signature frame feeds the LSH blocking AND the
@@ -55,11 +57,7 @@ class PlansSpec extends AnyFunSuite {
       }
       assert(shingleOutside.isEmpty,
         s"shingle derivation re-appears outside the cache: $shingleOutside")
-    } finally {
-      Dedup.shingleSignatures(train, "doc_id", "text").unpersist()
-      Dedup.shingleSignatures(test0, "doc_id", "text").unpersist()
-      ()
-    }
+    } finally scope.release()
   }
 
   test("rhp_bucket is NULL-loud on degenerate vectors") {

@@ -17,6 +17,13 @@ class StreamsSpec extends AnyFunSuite {
   private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
     q.lastProgress.stateOperators(0).numRowsTotal
 
+  /** Ids of the cache RDDs registered now. A monitor's static side is
+    * the set registered after its build and first batch, and it stays
+    * cached until the monitor's scope is released. */
+  private def persistedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private def isCached(rdds: Set[Int]): Boolean = (persistedRdds & rdds).nonEmpty
+
   test("windowed counts with watermark over a memory stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -320,9 +327,10 @@ class StreamsSpec extends AnyFunSuite {
     val testCorpus = Seq((100L, "the quick brown fox jumps over the lazy dog tonight"))
       .toDF("doc_id", "text")
     val in = MemoryStream[(Long, Timestamp, String)]
-    val monitor = Streams.streamingContaminationHits(
-        in.toDF().toDF("doc_id", "ts", "text"), testCorpus, "doc_id", "text")
-    val q = monitor.hits
+    val (scope, before) = (new CacheScope, persistedRdds)
+    val q = Streams.streamingContaminationHits(
+        in.toDF().toDF("doc_id", "ts", "text"), testCorpus, "doc_id", "text",
+        scope = scope)
       .writeStream.format("memory").queryName("contam").outputMode("append").start()
     try {
       in.addData(
@@ -337,10 +345,11 @@ class StreamsSpec extends AnyFunSuite {
       in.addData((1L, ts(1), "the quick brown fox jumps over the lazy dog tonight"))
       q.processAllAvailable()
       assert(spark.table("contam").count() == 1)
-      // the handle releases the cached static-side buckets on close
-      assert(monitor.testBuckets.storageLevel.useMemory)
-      monitor.close()
-      assert(!monitor.testBuckets.storageLevel.useMemory)
+      // the scope releases the cached static-side buckets
+      val testBuckets = persistedRdds -- before
+      assert(isCached(testBuckets))
+      scope.release()
+      assert(!isCached(testBuckets))
     } finally q.stop()
   }
 
@@ -352,10 +361,10 @@ class StreamsSpec extends AnyFunSuite {
       (101L, "one two three four five"))
       .toDF("doc_id", "text")
     val in = MemoryStream[(Long, Timestamp, String)]
-    val monitor = Streams.streamingExactContaminationHits(
+    val (scope, before) = (new CacheScope, persistedRdds)
+    val q = Streams.streamingExactContaminationHits(
         in.toDF().toDF("doc_id", "ts", "text"), evalCorpus, "doc_id", "text",
-        n = 5)
-    val q = monitor.hits
+        n = 5, scope = scope)
       .writeStream.format("memory").queryName("exact_gate").outputMode("append").start()
     try {
       in.addData(
@@ -373,8 +382,9 @@ class StreamsSpec extends AnyFunSuite {
       in.addData((1L, ts(1), "intro words alpha beta gamma delta epsilon closing remark"))
       q.processAllAvailable()
       assert(spark.table("exact_gate").count() == 2)
-      monitor.close()
-      assert(!monitor.testBuckets.storageLevel.useMemory)
+      val evalGrams = persistedRdds -- before
+      scope.release()
+      assert(!isCached(evalGrams))
     } finally q.stop()
   }
 
@@ -402,9 +412,10 @@ class StreamsSpec extends AnyFunSuite {
     val arrivals = corpus.as[(Long, String)].collect().toSeq
       .map { case (id, text) => (id, ts(0), text) }
     val in = MemoryStream[(Long, Timestamp, String)]
-    val monitor = Streams.streamingVerifiedNearDupPairs(
-      in.toDF().toDF("doc_id", "ts", "text"), corpus, "doc_id", "text", threshold)
-    val q = monitor.hits
+    val (scope, before) = (new CacheScope, persistedRdds)
+    val q = Streams.streamingVerifiedNearDupPairs(
+      in.toDF().toDF("doc_id", "ts", "text"), corpus, "doc_id", "text", threshold,
+      scope = scope)
       .writeStream.format("memory").queryName("vpairs").outputMode("append").start()
     try {
       in.addData(arrivals: _*)
@@ -418,8 +429,9 @@ class StreamsSpec extends AnyFunSuite {
       in.addData(arrivals.take(10).map { case (id, _, t) => (id, ts(1), t) }: _*)
       q.processAllAvailable()
       assert(spark.table("vpairs").count() == batch.size)
-      monitor.close()
-      assert(!monitor.testBuckets.storageLevel.useMemory)
+      val staticBuckets = persistedRdds -- before
+      scope.release()
+      assert(!isCached(staticBuckets))
     } finally q.stop()
   }
 
@@ -454,10 +466,11 @@ class StreamsSpec extends AnyFunSuite {
     val orthogonal = Seq.tabulate(8)(d => if (d % 2 == 0) 1.0f else -1.0f)
     val testCorpus = Seq((100L, base)).toDF("vec_id", "embedding")
     val in = MemoryStream[(Long, Timestamp, Seq[Float])]
-    val monitor = Streams.streamingEmbeddingContaminationHits(
+    val scope = new CacheScope
+    val q = Streams.streamingEmbeddingContaminationHits(
       in.toDF().toDF("vec_id", "ts", "embedding"), testCorpus,
-      "vec_id", "embedding", minCosine = 0.9, dims = 8, planes = 2)
-    val q = monitor.hits
+      "vec_id", "embedding", minCosine = 0.9, dims = 8, planes = 2,
+      scope = scope)
       .writeStream.format("memory").queryName("econtam").outputMode("append").start()
     try {
       in.addData(
@@ -470,7 +483,7 @@ class StreamsSpec extends AnyFunSuite {
       in.addData((1L, ts(1), base))
       q.processAllAvailable()
       assert(spark.table("econtam").count() == 1)
-      monitor.close()
+      scope.release()
     } finally q.stop()
   }
 
@@ -1684,10 +1697,10 @@ class StreamsSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(batch.nonEmpty)
     val in = MemoryStream[(Long, Timestamp, String)]
-    val monitor = Streams.streamingSpanDedup(
+    val (scope, before) = (new CacheScope, persistedRdds)
+    val q = Streams.streamingSpanDedup(
       in.toDF().toDF("doc_id", "ts", "text"), warehouse,
-      "doc_id", "text", l = 3)
-    val q = monitor.hits
+      "doc_id", "text", l = 3, scope = scope)
       .writeStream.format("memory").queryName("span_dedup")
       .outputMode("append").start()
     try {
@@ -1715,8 +1728,9 @@ class StreamsSpec extends AnyFunSuite {
         .filter(col("id") === 9L)
         .select("span_start", "span_end").as[(Long, Long)]
         .collect().toSet == Set((2L, 7L)))
-      monitor.close()
-      assert(!monitor.testBuckets.storageLevel.useMemory)
+      val occ = persistedRdds -- before
+      scope.release()
+      assert(!isCached(occ))
     } finally q.stop()
   }
 
@@ -1728,10 +1742,10 @@ class StreamsSpec extends AnyFunSuite {
       (2L, "y1 c1 c2 c3 c4 c5 y2 y3")
     ).toDF("doc_id", "text")
     val in = MemoryStream[(Long, Timestamp, String)]
-    val monitor = Streams.streamingSpanDedup(
+    val scope = new CacheScope
+    val q = Streams.streamingSpanDedup(
       in.toDF().toDF("doc_id", "ts", "text"), warehouse,
-      "doc_id", "text", l = 3)
-    val q = monitor.hits
+      "doc_id", "text", l = 3, scope = scope)
       .writeStream.format("memory").queryName("span_dedup_evict")
       .outputMode("append").start()
     try {
@@ -1744,7 +1758,7 @@ class StreamsSpec extends AnyFunSuite {
       in.addData((9L, ts(60), "n1 c1 c2 c3 c4 c5 n2"))
       q.processAllAvailable()
       assert(stateRows(q) == 1L, "doc 1 must be evicted, only doc 9 held")
-    } finally { q.stop(); monitor.close() }
+    } finally { q.stop(); scope.release() }
   }
 
   test("streaming audio band candidates reproduce batch frameBandNearDup " +
