@@ -25,8 +25,6 @@ object PipelineQueries {
   /** doc_id + distinct word-trigram shingles, for docs with >= 3 words.
     * (DuckDB mirror: `[array_to_string(w[i:i+2],' ') for i in range(1,len(w)-1)]`.)
     */
-  private def spread(df: DataFrame): DataFrame = Tables.spread(df)
-
   private def docShingles(s: SparkSession, d: String): DataFrame =
     spread(documents(s, d))
       .select(col("doc_id"), words(col("text")).as("w"))

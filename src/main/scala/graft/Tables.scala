@@ -1,7 +1,14 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided testdata tables (TESTDATA.md).
   *
@@ -14,20 +21,108 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Session confs that change the schema Parquet inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (qualified table path, values of [[inferenceConfs]]) ->
+    * (every leaf file as (qualified path, mtime, length), the schema
+    * inferred from those files under those confs). */
+  private val schemas = new ConcurrentHashMap[
+    (String, Seq[Option[String]]), (Seq[(String, Long, Long)], StructType)]
+
+  /** Table `name` under `sfDir`, read with a declared schema so the
+    * scan plans without a footer-reading inference job. The schema is
+    * inferred once per JVM for each table path and setting of the
+    * session's Parquet inference confs (`nanosAsLong`,
+    * `binaryAsString`, `int96AsTimestamp`, `inferTimestampNTZ`,
+    * `mergeSchema`). It is inferred again when the table's files
+    * change: a call lists the path (one file, or every leaf file of a
+    * directory table) and re-reads the footers when any file's path,
+    * modification time or length differs from the inferred one's, or a
+    * file was added or removed. The listing is a metadata call, no
+    * Spark job.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(p)
+    val key = (root.toString, inferenceConfs.map(spark.conf.getOption))
+    // a missing path lists as no files; inference then raises Spark's
+    // own error, and nothing is cached
+    val files = try leafFiles(fs, root) catch { case _: FileNotFoundException => Nil }
+    Option(schemas.get(key)).collect { case (`files`, s) => s }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.put(key, (files, s))
+      s
+    }
+  }
+
+  private def leafFiles(fs: FileSystem, root: Path): Seq[(String, Long, Long)] = {
+    val it = fs.listFiles(root, true) // a file lists as itself
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getModificationTime, f.getLen))
+    }
+    out.result().sorted
+  }
 
   /** Repartition ONLY when the scan is under-parallel (the testdata
     * tables are single-row-group single files -> 1 input split, which
     * would pin downstream CPU work to one core). On real multi-file
     * inputs the partition count exceeds the core count and this is an
-    * identity — no gratuitous full-table shuffle at scale.
+    * identity — no gratuitous full-table shuffle at scale. The split
+    * count comes from the file index ([[splits]]), so deciding plans
+    * nothing and runs no job.
     */
   def spread(df: DataFrame): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, parallelism / 2))
+    if (splits(df) < math.max(2, parallelism / 2))
       df.repartition(parallelism)
     else df
+  }
+
+  /** The number of input partitions the file scan under `df` reads,
+    * counted from the relation's file index the way the scan counts
+    * them (`FilePartition.maxSplitBytes` under the relation's session,
+    * each splittable file cut at that size, largest first, packed
+    * with the open cost), so it equals `df.rdd.getNumPartitions`
+    * without planning `df`. `df` must be a file table read under
+    * `Project`, `Filter` and `SubqueryAlias` nodes only, which keep the
+    * scan's partitions. Partition filters are not applied: a filtered
+    * read of a partitioned table counts every partition's files
+    * ([[load]] reads no partitioned table).
+    */
+  private[graft] def splits(df: DataFrame): Int = {
+    def relation(p: LogicalPlan): HadoopFsRelation = p match {
+      case Project(_, c) => relation(c)
+      case Filter(_, c) => relation(c)
+      case SubqueryAlias(_, c) => relation(c)
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+      case other => throw new IllegalArgumentException(
+        s"spread needs a file table read under Project/Filter/SubqueryAlias, found ${other.nodeName}")
+    }
+    val r = relation(df.queryExecution.analyzed)
+    val session = r.sparkSession
+    val dirs = r.location.listFiles(Nil, Nil)
+    val maxSplitBytes = FilePartition.maxSplitBytes(session, dirs)
+    val files = dirs.flatMap { d =>
+      d.files.flatMap { f =>
+        PartitionedFileUtil.splitFiles(f, f.getPath,
+          r.fileFormat.isSplitable(session, r.options, f.getPath), maxSplitBytes, d.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(session, files, maxSplitBytes).size
   }
 
   /** Plant-id collision guard folded INTO the plan: a corpus doc that

@@ -17,12 +17,17 @@ ratio is still printed).
 Layer attribution: when both records carry a per-query `layers` block
 (build / plan / exec / gap seconds of one pass, written by graft.Bench),
 each flagged query also gets the layer whose seconds moved most, so a
-speed claim names the layer that moved. Records without `layers` diff
-exactly as before.
+speed claim names the layer that moved, and the layer seconds and
+build-time jobs summed over the common queries are printed. Records
+without `layers` diff exactly as before.
 
 Usage:
-  tools/bench_diff.py [detail_file] [--ref HEAD] [--thresh 1.5]
-                      [--spread-max 50] [--min-sec 0.2] [--strict]
+  tools/bench_diff.py [detail_file] [--ref HEAD | --prev FILE]
+                      [--thresh 1.5] [--spread-max 50] [--min-sec 0.2]
+                      [--strict]
+
+`--prev FILE` diffs against another record on disk (a same-window
+before/after pair) instead of the committed version of detail_file.
 
 Exit: 0 unless --strict and at least one probe-adjusted regression
 passed the threshold.
@@ -50,6 +55,8 @@ def main() -> int:
     ap.add_argument("detail", nargs="?",
                     default="bench_history/detail_sf0.1.json")
     ap.add_argument("--ref", default="HEAD")
+    ap.add_argument("--prev", help="previous record file (default: "
+                    "detail_file as committed at --ref)")
     ap.add_argument("--thresh", type=float, default=1.5)
     ap.add_argument("--spread-max", type=float, default=50.0,
                     help="ignore queries whose current spread_pct is "
@@ -65,11 +72,16 @@ def main() -> int:
     except OSError as e:
         print(f"[bench-diff] no current detail file: {e}")
         return 0
-    prev = load_prev(args.ref, args.detail)
+    if args.prev:
+        with open(args.prev) as f:
+            prev = json.load(f)
+    else:
+        prev = load_prev(args.ref, args.detail)
     if prev is None:
         print(f"[bench-diff] no committed {args.detail} at {args.ref}; "
               "nothing to diff")
         return 0
+    against = args.prev or args.ref
 
     cur_q = cur.get("queries", {})
     prev_q = prev.get("queries", {})
@@ -120,7 +132,7 @@ def main() -> int:
 
     shuf_note = (f", shuffle weather x{shuf_weather:.2f}"
                  if cur_shuf and prev_shuf else "")
-    print(f"[bench-diff] {args.detail} vs {args.ref} "
+    print(f"[bench-diff] {args.detail} vs {against} "
           f"({len(set(cur_q) & set(prev_q))} common queries, "
           f"probe weather x{weather:.2f}{shuf_note})")
     if not regress:
@@ -153,6 +165,20 @@ def main() -> int:
             label, d = max(deltas, key=lambda x: abs(x[1]))
             print(f"  {name:36} {label:7} {d:+8.3f}  (" + " ".join(
                 f"{lb} {dv:+.3f}" for lb, dv in deltas) + ")")
+    both = sorted(set(cur_l or {}) & set(prev_l or {}))
+    if both:
+        def total(rec, key):
+            return sum(float(rec[n].get(key, 0)) for n in both)
+
+        def zero_build(rec):
+            return sum(1 for n in both if rec[n].get("build_jobs", 0) == 0)
+        print(f"[bench-diff] layer totals over {len(both)} queries "
+              "(prev -> cur): " + ", ".join(
+                  f"{label} {total(prev_l, k):.2f} -> {total(cur_l, k):.2f} s"
+                  for label, k in LAYERS) +
+              f"; build jobs {total(prev_l, 'build_jobs'):.0f} -> "
+              f"{total(cur_l, 'build_jobs'):.0f}, queries with 0 build "
+              f"jobs {zero_build(prev_l)} -> {zero_build(cur_l)}")
     return 1 if (args.strict and regress) else 0
 
 
