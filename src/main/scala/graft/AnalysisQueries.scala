@@ -18,13 +18,65 @@ import org.apache.spark.sql.functions._
   */
 object AnalysisQueries {
   import Tables._
-  import OracleSql.{cos, dot, hash32, rhpBucket}
+  import OracleSql.{candShingles, cos, dot, hash32, labelCtes, pearsonCtes,
+    rhpBucket, sharedShingles, simhash64PairsSql, simhashCtes, verifiedCte}
 
   // Oracle mirror of ops.Sampling.splitFor at 800/100/100 permille.
   private def splitCase(e: String): String = s"""
     CASE WHEN ${hash32(s"CAST($e AS VARCHAR)")} % 1000 < 800 THEN 'train'
          WHEN ${hash32(s"CAST($e AS VARCHAR)")} % 1000 < 900 THEN 'val'
          ELSE 'test' END"""
+
+  /** Collocation lift ([[ops.TextStats.collocations]], minCount 5,
+    * top 30) over each token and its +1..`window` neighbours: q122
+    * (bigrams) and q133 (skip-grams). The oracle pairs each offset
+    * with a list comprehension and replays the integer ppm lift.
+    */
+  private def collocationsQuery(name: String, window: Int): QueryDef = {
+    val pairs = (1 to window).map(j =>
+      s"SELECT unnest([w[i] || ' ' || w[i+$j] for i in range(1, len(w)-${j - 1})]) AS bigram FROM w")
+    QueryDef(name,
+      Some(s"""
+        WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
+        tot AS (SELECT CAST(SUM(len(w)) AS BIGINT) AS tot FROM w),
+        uc AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS c
+               FROM (SELECT unnest(w) AS t FROM w) GROUP BY t),
+        p AS (${pairs.mkString("\n              UNION ALL\n              ")}),
+        bc AS (SELECT bigram, CAST(COUNT(*) AS BIGINT) AS c_ab
+               FROM p GROUP BY bigram HAVING COUNT(*) >= 5)
+        SELECT bigram, c_ab AS n,
+               CAST((1000000 * c_ab * tot) // (ua.c * ub.c) AS BIGINT) AS lift_ppm
+        FROM bc CROSS JOIN tot
+        JOIN uc ua ON ua.t = string_split(bigram, ' ')[1]
+        JOIN uc ub ON ub.t = string_split(bigram, ' ')[2]
+        ORDER BY lift_ppm DESC, n DESC, bigram LIMIT 30"""),
+      (s, d) => {
+        val docs = spread(documents(s, d))
+        val tot = graft.ops.TextStats.totalTokens(docs, "text")
+        graft.ops.TextStats.collocations(docs, "text", tot, minCount = 5,
+          k = 30, window = window)
+      })
+  }
+
+  /** The BM25 oracle ([[ops.Search.bm25Search]] over 'join', 'hash'
+    * and 'scan', q111 and q158): per (doc, term) the integer idf
+    * surrogate times the k1/b-saturated tf, as `sc(doc_id, s)`.
+    */
+  private[graft] val Bm25Ctes = """
+        w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        base AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS dl FROM w),
+        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+                         CAST(SUM(dl) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS avgdl
+                  FROM base),
+        ft AS (SELECT doc_id, dl, unnest(w) AS t FROM base),
+        m AS (SELECT doc_id, dl, t FROM ft WHERE t IN ('join', 'hash', 'scan')),
+        dfreq AS (SELECT t, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM m GROUP BY t),
+        tf AS (SELECT doc_id, t, dl, CAST(COUNT(*) AS BIGINT) AS tf
+               FROM m GROUP BY doc_id, t, dl),
+        sc AS (SELECT doc_id,
+                 ((n_docs - df) * 1000 + 500) // (2*df + 1)
+                   * (44 * tf * avgdl) // (20*tf*avgdl + 6*avgdl + 18*dl) AS s
+               FROM tf JOIN dfreq USING (t) CROSS JOIN stats)"""
 
   /** Benford first-digit screen ([[ops.Stats.benfordScreen]]) over
     * lineitem prices — the synthetic-data / fraud smell test: observed
@@ -370,7 +422,7 @@ object AnalysisQueries {
     */
   private lazy val q283: QueryDef =
     QueryDef("q283_spearman_corr",
-      Some("""
+      Some(s"""
         WITH base AS (SELECT CAST(l_quantity AS HUGEINT) AS x,
                         CAST(CAST(l_extendedprice AS DECIMAL(25,6)) * 100
                           AS HUGEINT) AS y,
@@ -386,26 +438,7 @@ object AnalysisQueries {
                FROM py GROUP BY y),
         j AS (SELECT rx.r2 AS rxv, ry.r2 AS ryv
               FROM base JOIN rx ON base.x = rx.val
-                        JOIN ry ON base.y = ry.val),
-        ag AS (SELECT COUNT(*)::HUGEINT AS n, SUM(rxv) AS sx,
-                      SUM(ryv) AS sy, SUM(rxv * ryv) AS sxy,
-                      SUM(rxv * rxv) AS sxx, SUM(ryv * ryv) AS syy
-               FROM j),
-        nm AS (SELECT n, n * sxy - sx * sy AS num,
-                      n * sxx - sx * sx AS a, n * syy - sy * sy AS b
-               FROM ag),
-        s0 AS (SELECT *,
-                 CAST(floor(sqrt(CAST(a AS DOUBLE))) AS HUGEINT) AS sa0,
-                 CAST(floor(sqrt(CAST(b AS DOUBLE))) AS HUGEINT) AS sb0
-               FROM nm),
-        sq AS (SELECT n, num,
-                 GREATEST(list_max(list_filter(
-                     [sa0 - 2, sa0 - 1, sa0, sa0 + 1, sa0 + 2],
-                     t -> t * t <= a)) *
-                   list_max(list_filter(
-                     [sb0 - 2, sb0 - 1, sb0, sb0 + 1, sb0 + 2],
-                     t -> t * t <= b)), 1) AS den
-               FROM s0)
+                        JOIN ry ON base.y = ry.val),${pearsonCtes("j", "rxv", "ryv")}
         SELECT CAST(n AS BIGINT) AS n_items,
                CAST(num * 1000000 // den AS BIGINT) AS rho_ppm
         FROM sq"""),
@@ -909,31 +942,8 @@ object AnalysisQueries {
             (CAST(900001 AS BIGINT), 'alpha beta gamma delta epsilon zeta eta theta iota kappa'),
             (CAST(900002 AS BIGINT), 'kappa iota theta eta zeta epsilon delta gamma beta alpha'),
             (CAST(900003 AS BIGINT), 'alpha beta gamma delta epsilon zeta eta theta iota kappa lambda')) v(doc_id, text)),
-        toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus),
-        h AS (SELECT doc_id,
-                ${hash32("w")} AS hlo,
-                ${hash32("'x1_' || w")} AS hhi
-              FROM toks),
-        votes AS (SELECT doc_id, b,
-                    SUM(CASE WHEN (hlo >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS vlo,
-                    SUM(CASE WHEN (hhi >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS vhi
-                  FROM h CROSS JOIN (SELECT unnest(range(0, 32)) AS b) GROUP BY doc_id, b),
-        sig AS (SELECT doc_id,
-                  CAST(SUM(CASE WHEN vlo > 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS lo,
-                  CAST(SUM(CASE WHEN vhi > 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS hi
-                FROM votes GROUP BY doc_id),
-        ch AS (SELECT doc_id, lo, hi, c,
-                 CASE WHEN c < 2 THEN (lo >> (CAST(c AS INTEGER) * 16)) & 65535
-                      ELSE (hi >> ((CAST(c AS INTEGER) - 2) * 16)) & 65535 END AS chunk
-               FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS c)),
-        cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id,
-                        x.lo AS xlo, x.hi AS xhi, y.lo AS ylo, y.hi AS yhi
-                 FROM ch x JOIN ch y
-                   ON x.c = y.c AND x.chunk = y.chunk AND x.doc_id < y.doc_id)
-        SELECT a_id, b_id, dist FROM (
-          SELECT a_id, b_id,
-                 CAST(bit_count(xor(xlo, ylo)) + bit_count(xor(xhi, yhi)) AS INTEGER) AS dist
-          FROM cand) WHERE dist <= 3 ORDER BY a_id, b_id"""),
+        toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus),${
+          simhashCtes("w" -> "lo", "'x1_' || w" -> "hi")},$simhash64PairsSql"""),
       (s, d) => {
         import s.implicits._
         val planted = Seq(
@@ -968,7 +978,7 @@ object AnalysisQueries {
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         tb AS (SELECT vec_id, v, ${rhpBucket("v")} AS b FROM t),
         c AS (SELECT vec_id AS cid, v AS cv, ${rhpBucket("v")} AS cb FROM t
-              WHERE vec_id % 101 = 0 AND vec_id < 10100),
+              WHERE ${PipelineQueries.PinnedCentroidsSql}),
         cp AS (SELECT cid, cv, unnest([xor(cb, 0), xor(cb, 1), xor(cb, 2), xor(cb, 4), xor(cb, 8)]) AS probe FROM c),
         cand AS (SELECT tb.vec_id, cid, ${cos("v", "cv")} AS cosine
                  FROM tb JOIN cp ON tb.b = cp.probe),
@@ -977,16 +987,9 @@ object AnalysisQueries {
                       ORDER BY cosine DESC, cid) AS rn FROM cand)
                  WHERE rn = 1),
         a AS (SELECT tb.vec_id, best.cid AS centroid_id, tb.v
-              FROM tb LEFT JOIN best USING (vec_id)),
-        losers AS (SELECT DISTINCT y.vec_id FROM a x JOIN a y
-                   ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-                   WHERE ${cos("x.v", "y.v")} >= 0.4)
-        SELECT vec_id, centroid_id FROM a
-        WHERE vec_id NOT IN (SELECT vec_id FROM losers)
-        ORDER BY vec_id"""),
+              FROM tb LEFT JOIN best USING (vec_id)),${PipelineQueries.semSurvivorsSql}"""),
       (s, d) => {
-        val cents = embeddings(s, d)
-          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
+        val cents = PipelineQueries.pinnedCentroids(s, d)
           .select(col("vec_id").as("cid"), col("embedding").as("cv"))
         Dedup.semanticBlocked(spread(embeddings(s, d)), "vec_id", "embedding",
             cents, "cid", "cv", threshold = 0.4, planes = 4)
@@ -1018,16 +1021,8 @@ object AnalysisQueries {
     // thresholds to the cluster label.
     QueryDef("q104_leakage_safe_split",
       Some(s"""
-        WITH RECURSIVE ${PipelineQueries.lshCte},
-        sym AS (SELECT a_id AS u, b_id AS v FROM cand
-                UNION SELECT b_id AS u, a_id AS v FROM cand),
-        reach(u, r) AS (
-          SELECT u, u AS r FROM (SELECT DISTINCT u FROM sym)
-          UNION
-          SELECT s.v AS u, reach.r FROM reach JOIN sym s ON s.u = reach.u),
-        comp AS (SELECT u AS doc_id, CAST(MIN(r) AS BIGINT) AS cluster
-                 FROM reach GROUP BY u),
-        lab AS (SELECT d.doc_id, COALESCE(comp.cluster, d.doc_id) AS cluster
+        WITH RECURSIVE ${PipelineQueries.lshCte},${labelCtes("cand", lab = "comp")},
+        lab AS (SELECT d.doc_id, CAST(COALESCE(comp.cluster, d.doc_id) AS BIGINT) AS cluster
                 FROM documents d LEFT JOIN comp USING (doc_id)),
         sl AS (SELECT doc_id, cluster,
                  ${hash32("CAST(cluster AS VARCHAR)")} % 1000 AS slot
@@ -1176,21 +1171,8 @@ object AnalysisQueries {
     // ln is not). Posting-list-probe shape: term filter in the scan,
     // tiny df/stats aggregates broadcast back, TakeOrderedAndProject.
     QueryDef("q111_bm25_search",
-      Some("""
-        WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        base AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS dl FROM w),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                         CAST(SUM(dl) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS avgdl
-                  FROM base),
-        ft AS (SELECT doc_id, dl, unnest(w) AS t FROM base),
-        m AS (SELECT doc_id, dl, t FROM ft WHERE t IN ('join', 'hash', 'scan')),
-        dfreq AS (SELECT t, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM m GROUP BY t),
-        tf AS (SELECT doc_id, t, dl, CAST(COUNT(*) AS BIGINT) AS tf
-               FROM m GROUP BY doc_id, t, dl),
-        sc AS (SELECT doc_id,
-                 ((n_docs - df) * 1000 + 500) // (2*df + 1)
-                   * (44 * tf * avgdl) // (20*tf*avgdl + 6*avgdl + 18*dl) AS s
-               FROM tf JOIN dfreq USING (t) CROSS JOIN stats)
+      Some(s"""
+        WITH $Bm25Ctes
         SELECT doc_id, CAST(SUM(s) AS BIGINT) AS score
         FROM sc GROUP BY doc_id
         ORDER BY score DESC, doc_id LIMIT 10"""),
@@ -1423,12 +1405,9 @@ object AnalysisQueries {
       Some(s"""
         WITH ${PipelineQueries.lshCte},
         v AS (SELECT c.a_id, c.b_id,
-                CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS BIGINT) AS i,
-                CAST(len(a.shingles) + len(b.shingles)
-                     - len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS BIGINT) AS u
-              FROM cand c
-              JOIN sh a ON a.doc_id = c.a_id
-              JOIN sh b ON b.doc_id = c.b_id),
+                CAST($sharedShingles AS BIGINT) AS i,
+                CAST(len(a.shingles) + len(b.shingles) - $sharedShingles AS BIGINT) AS u
+              $candShingles),
         p AS (SELECT least(da.source, db.source) AS source_a,
                      greatest(da.source, db.source) AS source_b,
                      (1000000 * i) // u AS ppm
@@ -1449,26 +1428,7 @@ object AnalysisQueries {
     // integer ppm (its log is PMI; log is monotone, so the ranking IS
     // the PMI ranking with no libm). minCount=5 suppresses the
     // unstable low-count tail — the standard PMI correction.
-    QueryDef("q122_collocations",
-      Some("""
-        WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
-        tot AS (SELECT CAST(SUM(len(w)) AS BIGINT) AS tot FROM w),
-        uc AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS c
-               FROM (SELECT unnest(w) AS t FROM w) GROUP BY t),
-        bc AS (SELECT bigram, CAST(COUNT(*) AS BIGINT) AS c_ab
-               FROM (SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS bigram FROM w)
-               GROUP BY bigram HAVING COUNT(*) >= 5)
-        SELECT bigram, c_ab AS n,
-               CAST((1000000 * c_ab * tot) // (ua.c * ub.c) AS BIGINT) AS lift_ppm
-        FROM bc CROSS JOIN tot
-        JOIN uc ua ON ua.t = string_split(bigram, ' ')[1]
-        JOIN uc ub ON ub.t = string_split(bigram, ' ')[2]
-        ORDER BY lift_ppm DESC, n DESC, bigram LIMIT 30"""),
-      (s, d) => {
-        val docs = spread(documents(s, d))
-        val tot = graft.ops.TextStats.totalTokens(docs, "text")
-        graft.ops.TextStats.collocations(docs, "text", tot, minCount = 5, k = 30)
-      }),
+    collocationsQuery("q122_collocations", window = 1),
 
     // Token-length histogram ([[ops.TextStats.lengthHistogram]]):
     // power-of-two length bands with doc/token mass per band — the
@@ -1624,20 +1584,7 @@ object AnalysisQueries {
     // the oracle replays the closure recursively.
     QueryDef("q130_dedup_savings",
       Some(s"""
-        WITH RECURSIVE ${PipelineQueries.lshCte},
-        ver AS (SELECT c.a_id, c.b_id FROM cand c
-                JOIN sh a ON a.doc_id = c.a_id
-                JOIN sh b ON b.doc_id = c.b_id
-                WHERE CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS DOUBLE)
-                      / (len(a.shingles) + len(b.shingles)
-                         - len(list_filter(a.shingles, x -> list_contains(b.shingles, x)))) >= 0.5),
-        sym AS (SELECT a_id AS u, b_id AS v FROM ver
-                UNION SELECT b_id AS u, a_id AS v FROM ver),
-        reach(u, r) AS (
-          SELECT u, u AS r FROM (SELECT DISTINCT u FROM sym)
-          UNION
-          SELECT s.v AS u, reach.r FROM reach JOIN sym s ON s.u = reach.u),
-        lab AS (SELECT u AS doc_id, MIN(r) AS cluster FROM reach GROUP BY u),
+        WITH RECURSIVE ${PipelineQueries.lshCte},${verifiedCte("ver")},${labelCtes("ver")},
         t AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents),
         j AS (SELECT t.doc_id, t.n_tok, COALESCE(lab.cluster, t.doc_id) AS cluster
               FROM t LEFT JOIN lab ON lab.doc_id = t.doc_id)
@@ -1673,12 +1620,10 @@ object AnalysisQueries {
       Some(s"""
         WITH ${PipelineQueries.lshCte},
         f AS (SELECT c.a_id, c.b_id,
-                CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS BIGINT) AS i,
+                CAST($sharedShingles AS BIGINT) AS i,
                 CAST(len(a.shingles) AS BIGINT) AS na,
                 CAST(len(b.shingles) AS BIGINT) AS nb
-              FROM cand c
-              JOIN sh a ON a.doc_id = c.a_id
-              JOIN sh b ON b.doc_id = c.b_id)
+              $candShingles)
         SELECT a_id, b_id, na AS size_a, nb AS size_b,
                (1000000 * i) // (na + nb - i) AS jaccard_ppm,
                (1000000 * i) // na AS cont_a_ppm,
@@ -1698,31 +1643,7 @@ object AnalysisQueries {
     // window=3): co-occurrence lift over (token, +j-th neighbour)
     // pairs, j=1..3 — the word2vec-style context statistics; each
     // offset is a scan-side shifted zip, never a position join.
-    QueryDef("q133_skipgram_collocations",
-      Some("""
-        WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
-        tot AS (SELECT CAST(SUM(len(w)) AS BIGINT) AS tot FROM w),
-        uc AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS c
-               FROM (SELECT unnest(w) AS t FROM w) GROUP BY t),
-        p AS (SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS bigram FROM w
-              UNION ALL
-              SELECT unnest([w[i] || ' ' || w[i+2] for i in range(1, len(w)-1)]) FROM w
-              UNION ALL
-              SELECT unnest([w[i] || ' ' || w[i+3] for i in range(1, len(w)-2)]) FROM w),
-        bc AS (SELECT bigram, CAST(COUNT(*) AS BIGINT) AS c_ab
-               FROM p GROUP BY bigram HAVING COUNT(*) >= 5)
-        SELECT bigram, c_ab AS n,
-               CAST((1000000 * c_ab * tot) // (ua.c * ub.c) AS BIGINT) AS lift_ppm
-        FROM bc CROSS JOIN tot
-        JOIN uc ua ON ua.t = string_split(bigram, ' ')[1]
-        JOIN uc ub ON ub.t = string_split(bigram, ' ')[2]
-        ORDER BY lift_ppm DESC, n DESC, bigram LIMIT 30"""),
-      (s, d) => {
-        val docs = spread(documents(s, d))
-        val tot = graft.ops.TextStats.totalTokens(docs, "text")
-        graft.ops.TextStats.collocations(docs, "text", tot, minCount = 5,
-          k = 30, window = 3)
-      }),
+    collocationsQuery("q133_skipgram_collocations", window = 3),
 
     // Language-margin scoring ([[ops.TextStats.scoreMargin]] over the
     // q32 language profiles): top score, runner-up, and the relative
@@ -1814,20 +1735,7 @@ object AnalysisQueries {
     // Composition of verifiedPairs -> clusters -> two tiny aggregates.
     QueryDef("q136_cluster_sizes",
       Some(s"""
-        WITH RECURSIVE ${PipelineQueries.lshCte},
-        ver AS (SELECT c.a_id, c.b_id FROM cand c
-                JOIN sh a ON a.doc_id = c.a_id
-                JOIN sh b ON b.doc_id = c.b_id
-                WHERE CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS DOUBLE)
-                      / (len(a.shingles) + len(b.shingles)
-                         - len(list_filter(a.shingles, x -> list_contains(b.shingles, x)))) >= 0.5),
-        sym AS (SELECT a_id AS u, b_id AS v FROM ver
-                UNION SELECT b_id AS u, a_id AS v FROM ver),
-        reach(u, r) AS (
-          SELECT u, u AS r FROM (SELECT DISTINCT u FROM sym)
-          UNION
-          SELECT s.v AS u, reach.r FROM reach JOIN sym s ON s.u = reach.u),
-        lab AS (SELECT u AS doc_id, MIN(r) AS cluster FROM reach GROUP BY u),
+        WITH RECURSIVE ${PipelineQueries.lshCte},${verifiedCte("ver")},${labelCtes("ver")},
         j AS (SELECT d.doc_id, COALESCE(lab.cluster, d.doc_id) AS cluster
               FROM documents d LEFT JOIN lab ON lab.doc_id = d.doc_id),
         cs AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS size FROM j GROUP BY cluster)

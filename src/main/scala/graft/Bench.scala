@@ -79,7 +79,7 @@ object Bench {
     // query's own plan persists (signature frames etc.), so the timed
     // passes measure the documented cached-signature steady state.
     // The per-query clearCache is the cache-ISOLATION discipline
-    // ScaleBench adopted in round 6: without it 149 queries' internal
+    // adopted for scale runs in round 6: without it 149 queries' internal
     // persists pile up across the whole run and the eviction/GC
     // pressure lands on whichever queries run late (alphabetic order
     // put the q9x family there). A query's cost now includes building
@@ -155,13 +155,19 @@ object Bench {
     import org.apache.spark.sql.functions.{col, sum => fsum}
     val probeTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
     val shufProbeTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def probePlan() = Tables.load(spark, sfDir, "lineitem")
+    // Both probes read lineitem through a fixed declared-schema read
+    // (the file's own column types), not Tables.load: they measure the
+    // machine, so a change to the table loader must not move them.
+    def lineitemProbe() = spark.read
+      .schema("l_orderkey BIGINT, l_quantity DOUBLE, l_extendedprice DOUBLE")
+      .parquet(s"$sfDir/lineitem.parquet")
+    def probePlan() = lineitemProbe()
       .select(fsum(col("l_extendedprice") * col("l_quantity")).as("v"))
     // the %4 filter + 16 partitions keep the probe near the scan
     // probe's cost (it samples ~300x per full suite); the repartition
     // still pushes every surviving row through serialization + scratch
     // disk + fetch, which is the path the scan probe cannot see
-    def shufProbePlan() = Tables.load(spark, sfDir, "lineitem")
+    def shufProbePlan() = lineitemProbe()
       .select(col("l_orderkey"), col("l_quantity"))
       .filter(col("l_orderkey") % 4 === 0)
       .repartition(16, col("l_orderkey"))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object CrawlQueries {
   import Tables._
-  import OracleSql.{hash32, hash60, host}
+  import OracleSql.{canonUrlCtes, hash32, hash60, host, targetMixTokensSql}
 
   // Synthetic per-doc URL (the q152 discipline: the corpus has no URL
   // column, so the derivation is deterministic and shared VERBATIM by
@@ -802,21 +802,7 @@ object CrawlQueries {
     // replays the full base chain plus split/filter/sort.
     QueryDef("q187_url_dedup_strong",
       Some(s"""
-        WITH u AS (SELECT doc_id, $TrackUrlSynthSql AS url FROM documents),
-        c AS (SELECT doc_id,
-                lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-                regexp_replace(${host("url")}, '^www\\.', '') AS h,
-                regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#:]+:([0-9]+)', 1) AS port,
-                regexp_replace(regexp_replace(
-                  regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]*(.*)$$', 1),
-                  '#.*$$', ''), '/$$', '') AS rest
-              FROM u),
-        base AS (SELECT doc_id,
-                CASE WHEN scheme = '' THEN '' ELSE scheme || '://' || h ||
-                  (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-                             OR (scheme = 'https' AND port = '443')
-                        THEN '' ELSE ':' || port END) || rest END AS b
-              FROM c),
+        WITH u AS (SELECT doc_id, $TrackUrlSynthSql AS url FROM documents),${canonUrlCtes("base", "b")},
         sp AS (SELECT doc_id, regexp_extract(b, '^([^?]*)', 1) AS path,
                       regexp_extract(b, '^[^?]*\\?(.*)$$', 1) AS qs
                FROM base),
@@ -854,25 +840,7 @@ object CrawlQueries {
                       ('es', 150000), ('de', 100000), ('fr', 100000)) AS v(lang, ppm)),
         tok AS (SELECT doc_id, lang,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-                FROM documents),
-        tt AS (SELECT lang, CAST(SUM(n_tok) AS BIGINT) AS ts
-               FROM tok GROUP BY lang),
-        -- LEFT JOIN + COALESCE mirrors the engine's strict reading: a
-        -- targeted stratum absent from the corpus means T = 0 and an
-        -- empty selection, not a silently-dropped constraint
-        t AS (SELECT MIN((COALESCE(tt.ts, 0) * 1000000) // tg.ppm) AS t
-              FROM tg LEFT JOIN tt USING (lang)),
-        q AS (SELECT tg.lang, (t.t * tg.ppm) // 1000000 AS quota
-              FROM tg CROSS JOIN t),
-        r AS (SELECT doc_id, lang, n_tok,
-                CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY lang
-                  ORDER BY ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS tb
-              FROM tok)
-        SELECT r.doc_id, r.lang, r.n_tok, r.tb AS tok_before
-        FROM r JOIN q ON r.lang = q.lang AND r.tb < q.quota
-        ORDER BY r.doc_id"""),
+                FROM documents),$targetMixTokensSql"""),
       (s, d) => graft.ops.Sampling.targetMixTokens(
           spread(documents(s, d))
             .select(col("doc_id"), col("lang"),

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object CurationQueries {
   import Tables._
-  import OracleSql.{cos, hash32, hash60, host}
+  import OracleSql.{canonUrlCtes, chunk16Cte, cos, dhashSig, hamming64, hash32,
+    hash60, host, simhash64PairsSql}
 
   // Oracle mirror of ops.TextStats.bpeTrain's k-iteration loop,
   // mechanically unrolled (the q148 unrolled-PageRank technique):
@@ -239,16 +240,32 @@ object CurationQueries {
           SELECT * FROM (VALUES
             """, ",\n            ", ") v(doc_id, text)),")
 
+  /** The video frame signatures (q163, q303), mirror of
+    * [[Multimodal.frameSignatures]] over the `corpus` CTE: `nf = 1 +
+    * len % 7` disjoint slices of `sl = len / nf` bytes, every second
+    * frame sampled at 72 stub pixels, as `sig(doc_id, i, lo, hi)`.
+    */
+  private val frameSigCtes = s"""
+        m AS (SELECT doc_id, text,
+                     1 + (octet_length(CAST(text AS BLOB)) % 7) AS nf,
+                     octet_length(CAST(text AS BLOB))
+                       // (1 + (octet_length(CAST(text AS BLOB)) % 7)) AS sl
+              FROM corpus),
+        f AS (SELECT doc_id, text, sl, unnest(range(0, nf, 2)) AS i FROM m),
+        px AS (SELECT doc_id, CAST(i AS INTEGER) AS i,
+                 [CASE WHEN sl = 0 THEN 0
+                       ELSE ascii(substr(text, i*sl + ((k*37) % sl) + 1, 1)) END
+                  for k in range(0, 72)] AS p
+               FROM f),
+        sig AS (SELECT doc_id, i,$dhashSig
+                FROM px)"""
+
   /** The banded frame near-dup oracle tail (q303, q305) over per-frame
     * signatures `sig(doc_id, i, lo, hi)`: 4 sixteen-bit chunks, the
     * df cap, position-free chunk matches verified by popcount
     * distance <= 3, and the >= 2 close a-side frames vote.
     */
-  private val frameBandTailSql = """
-        ch AS (SELECT doc_id, i, lo, hi, c,
-                 CASE WHEN c < 2 THEN (lo >> (c * 16)) & 65535
-                      ELSE (hi >> ((c - 2) * 16)) & 65535 END AS chunk
-               FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS c)),
+  private val frameBandTailSql = chunk16Cte("doc_id, i") + s""",
         okc AS (SELECT ch.* FROM ch
                 JOIN (SELECT c, chunk FROM ch GROUP BY c, chunk
                       HAVING COUNT(*) <= 1000) k
@@ -258,8 +275,7 @@ object CurationQueries {
                FROM okc x JOIN okc y
                  ON x.c = y.c AND x.chunk = y.chunk
                     AND x.doc_id < y.doc_id
-               WHERE bit_count(xor(x.lo, y.lo))
-                     + bit_count(xor(x.hi, y.hi)) <= 3)
+               WHERE $hamming64 <= 3)
         SELECT a_id, b_id, CAST(COUNT(DISTINCT fa) AS BIGINT) AS n_close
         FROM mt GROUP BY a_id, b_id HAVING COUNT(DISTINCT fa) >= 2
         ORDER BY a_id, b_id"""
@@ -451,26 +467,7 @@ object CurationQueries {
     */
   private lazy val q303: QueryDef =
     QueryDef("q303_video_band_neardup",
-      Some(mediaCorpusSql(BandPlants) + s"""
-        m AS (SELECT doc_id, text,
-                     1 + (octet_length(CAST(text AS BLOB)) % 7) AS nf,
-                     octet_length(CAST(text AS BLOB))
-                       // (1 + (octet_length(CAST(text AS BLOB)) % 7)) AS sl
-              FROM corpus),
-        f AS (SELECT doc_id, text, sl, unnest(range(0, nf, 2)) AS i FROM m),
-        px AS (SELECT doc_id, CAST(i AS INTEGER) AS i,
-                 [CASE WHEN sl = 0 THEN 0
-                       ELSE ascii(substr(text, i*sl + ((k*37) % sl) + 1, 1)) END
-                  for k in range(0, 72)] AS p
-               FROM f),
-        sig AS (SELECT doc_id, i,
-                  CAST(list_sum([CASE WHEN p[(b//8)*9 + (b%8) + 1] > p[(b//8)*9 + (b%8) + 2]
-                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
-                        for b in range(0, 32)]) AS BIGINT) AS lo,
-                  CAST(list_sum([CASE WHEN p[((b+32)//8)*9 + ((b+32)%8) + 1] > p[((b+32)//8)*9 + ((b+32)%8) + 2]
-                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
-                        for b in range(0, 32)]) AS BIGINT) AS hi
-                FROM px),""" + frameBandTailSql),
+      Some(mediaCorpusSql(BandPlants) + frameSigCtes + "," + frameBandTailSql),
       (s, d) => {
         val media = mediaCorpus(s, d, BandPlants)
         Multimodal.frameBandNearDup(
@@ -815,26 +812,8 @@ object CurationQueries {
                  [ascii(substr(text, ((k*37) % greatest(octet_length(CAST(text AS BLOB)), 1)) + 1, 1))
                   for k in range(0, 72)] AS p
                FROM corpus),
-        sig AS (SELECT doc_id,
-                  CAST(list_sum([CASE WHEN p[(b//8)*9 + (b%8) + 1] > p[(b//8)*9 + (b%8) + 2]
-                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
-                        for b in range(0, 32)]) AS BIGINT) AS lo,
-                  CAST(list_sum([CASE WHEN p[((b+32)//8)*9 + ((b+32)%8) + 1] > p[((b+32)//8)*9 + ((b+32)%8) + 2]
-                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
-                        for b in range(0, 32)]) AS BIGINT) AS hi
-                FROM px),
-        ch AS (SELECT doc_id, lo, hi, c,
-                 CASE WHEN c < 2 THEN (lo >> (CAST(c AS INTEGER) * 16)) & 65535
-                      ELSE (hi >> ((CAST(c AS INTEGER) - 2) * 16)) & 65535 END AS chunk
-               FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS c)),
-        cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id,
-                        x.lo AS xlo, x.hi AS xhi, y.lo AS ylo, y.hi AS yhi
-                 FROM ch x JOIN ch y
-                   ON x.c = y.c AND x.chunk = y.chunk AND x.doc_id < y.doc_id)
-        SELECT a_id, b_id, dist FROM (
-          SELECT a_id, b_id,
-                 CAST(bit_count(xor(xlo, ylo)) + bit_count(xor(xhi, yhi)) AS INTEGER) AS dist
-          FROM cand) WHERE dist <= 3 ORDER BY a_id, b_id"""),
+        sig AS (SELECT doc_id,$dhashSig
+                FROM px),$simhash64PairsSql"""),
       (s, d) => {
         Pipeline.simhash64Pairs(
             Multimodal.perceptualHash(mediaCorpus(s, d, PhashPlants)),
@@ -1029,20 +1008,7 @@ object CurationQueries {
     // and the fusion.
     QueryDef("q158_hybrid_rrf",
       Some(s"""
-        WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        base AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS dl FROM w),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                         CAST(SUM(dl) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS avgdl
-                  FROM base),
-        ft AS (SELECT doc_id, dl, unnest(w) AS t FROM base),
-        m AS (SELECT doc_id, dl, t FROM ft WHERE t IN ('join', 'hash', 'scan')),
-        dfreq AS (SELECT t, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM m GROUP BY t),
-        tf AS (SELECT doc_id, t, dl, CAST(COUNT(*) AS BIGINT) AS tf
-               FROM m GROUP BY doc_id, t, dl),
-        sc AS (SELECT doc_id,
-                 ((n_docs - df) * 1000 + 500) // (2*df + 1)
-                   * (44 * tf * avgdl) // (20*tf*avgdl + 6*avgdl + 18*dl) AS s
-               FROM tf JOIN dfreq USING (t) CROSS JOIN stats),
+        WITH ${AnalysisQueries.Bm25Ctes},
         bm AS (SELECT doc_id, CAST(SUM(s) AS BIGINT) AS score
                FROM sc GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20),
         bmr AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank_bm25 FROM bm),
@@ -1147,21 +1113,7 @@ object CurationQueries {
     // empty-scheme cases.
     QueryDef("q160_url_dedup",
       Some(s"""
-        WITH u AS (SELECT doc_id, $CanonUrlSynthSql AS url FROM documents),
-        c AS (SELECT doc_id,
-                lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-                regexp_replace(${host("url")}, '^www\\.', '') AS h,
-                regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#:]+:([0-9]+)', 1) AS port,
-                regexp_replace(regexp_replace(
-                  regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]*(.*)$$', 1),
-                  '#.*$$', ''), '/$$', '') AS rest
-              FROM u),
-        canon AS (SELECT doc_id,
-                CASE WHEN scheme = '' THEN '' ELSE scheme || '://' || h ||
-                  (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-                             OR (scheme = 'https' AND port = '443')
-                        THEN '' ELSE ':' || port END) || rest END AS canon_url
-              FROM c)
+        WITH u AS (SELECT doc_id, $CanonUrlSynthSql AS url FROM documents),${canonUrlCtes("canon", "canon_url")}
         SELECT canon_url, MIN(doc_id) AS keep_id,
                CAST(COUNT(*) AS BIGINT) AS n_variants
         FROM canon GROUP BY canon_url ORDER BY canon_url"""),
@@ -1234,26 +1186,7 @@ object CurationQueries {
     // oracle replays slicing, per-frame sampling, both signature
     // halves, the df cap, and the vote.
     QueryDef("q163_video_frame_neardup",
-      Some(mediaCorpusSql(VideoPlants) + s"""
-        m AS (SELECT doc_id, text,
-                     1 + (octet_length(CAST(text AS BLOB)) % 7) AS nf,
-                     octet_length(CAST(text AS BLOB))
-                       // (1 + (octet_length(CAST(text AS BLOB)) % 7)) AS sl
-              FROM corpus),
-        f AS (SELECT doc_id, text, sl, unnest(range(0, nf, 2)) AS i FROM m),
-        px AS (SELECT doc_id, CAST(i AS INTEGER) AS i,
-                 [CASE WHEN sl = 0 THEN 0
-                       ELSE ascii(substr(text, i*sl + ((k*37) % sl) + 1, 1)) END
-                  for k in range(0, 72)] AS p
-               FROM f),
-        sig AS (SELECT doc_id, i,
-                  CAST(list_sum([CASE WHEN p[(b//8)*9 + (b%8) + 1] > p[(b//8)*9 + (b%8) + 2]
-                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
-                        for b in range(0, 32)]) AS BIGINT) AS lo,
-                  CAST(list_sum([CASE WHEN p[((b+32)//8)*9 + ((b+32)%8) + 1] > p[((b+32)//8)*9 + ((b+32)%8) + 2]
-                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
-                        for b in range(0, 32)]) AS BIGINT) AS hi
-                FROM px),
+      Some(mediaCorpusSql(VideoPlants) + frameSigCtes + s""",
         ok AS (SELECT s.* FROM sig s
                JOIN (SELECT i, lo, hi FROM sig GROUP BY i, lo, hi
                      HAVING COUNT(*) <= 1000) k

@@ -287,6 +287,28 @@ object Dedup {
         bands, maxBucketSize),
       Seq(idCol), "left_anti")
 
+  /** `|_sa ∩ _sb|` of a candidate pair's two shingle arrays, and
+    * their exact Jaccard as a double. */
+  private def sharedShingles: Column = size(array_intersect(col("_sa"), col("_sb")))
+  private def shingleJaccard: Column = sharedShingles.cast("double") /
+    (size(col("_sa")) + size(col("_sb")) - sharedShingles)
+
+  /** The cross-corpus LSH candidates of the train and test signature
+    * frames (train `a_id`, test `b_id`) with their exact shingle
+    * Jaccard `_j`.
+    */
+  private def crossJaccard(trainSig: DataFrame, testSig: DataFrame,
+      idCol: String, threshold: Double, minhashK: Int, bands: Int,
+      maxBucketSize: Int): DataFrame = {
+    requireSameMeta(trainSig, testSig, "shingles", ShingleNMetadataKey, "shingleN")
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
+    Pipeline
+      .lshCrossCandidates(trainSig, testSig, idCol, k, b, maxBucketSize)
+      .join(trainSig.select(col(idCol).as("a_id"), col("shingles").as("_sa")), "a_id")
+      .join(testSig.select(col(idCol).as("b_id"), col("shingles").as("_sb")), "b_id")
+      .withColumn("_j", shingleJaccard)
+  }
+
   /** The CONTAMINATED train ids themselves (the inverse view of
     * [[decontaminateSigned]]'s survivors) — the audit/report output a
     * production gate logs and quarantines. Same blocking + exact
@@ -300,15 +322,8 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    requireSameMeta(trainSig, testSig, "shingles", ShingleNMetadataKey, "shingleN")
-    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    val inter = size(array_intersect(col("_sa"), col("_sb")))
-    Pipeline
-      .lshCrossCandidates(trainSig, testSig, idCol, k, b, maxBucketSize)
-      .join(trainSig.select(col(idCol).as("a_id"), col("shingles").as("_sa")), "a_id")
-      .join(testSig.select(col(idCol).as("b_id"), col("shingles").as("_sb")), "b_id")
-      .withColumn("_j",
-        inter.cast("double") / (size(col("_sa")) + size(col("_sb")) - inter))
+    crossJaccard(trainSig, testSig, idCol, threshold, minhashK, bands,
+        maxBucketSize)
       .filter(col("_j") >= threshold)
       .select(col("a_id").as(idCol))
       .distinct()
@@ -334,15 +349,8 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    requireSameMeta(trainSig, testSig, "shingles", ShingleNMetadataKey, "shingleN")
-    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    val inter = size(array_intersect(col("_sa"), col("_sb")))
-    val pairs = Pipeline
-      .lshCrossCandidates(trainSig, testSig, idCol, k, b, maxBucketSize)
-      .join(trainSig.select(col(idCol).as("a_id"), col("shingles").as("_sa")), "a_id")
-      .join(testSig.select(col(idCol).as("b_id"), col("shingles").as("_sb")), "b_id")
-      .withColumn("_j",
-        inter.cast("double") / (size(col("_sa")) + size(col("_sb")) - inter))
+    val pairs = crossJaccard(trainSig, testSig, idCol, threshold, minhashK,
+      bands, maxBucketSize)
     val stats = pairs.groupBy(col("b_id"))
       // candidate pairs are DISTINCT (a_id, b_id) by construction, so
       // plain counts are per-train-doc counts
@@ -583,12 +591,29 @@ object Dedup {
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
     val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    val inter = size(array_intersect(col("_sa"), col("_sb")))
     candidatesWithShingles(sig, idCol, k, b, maxBucketSize)
-      .withColumn("jaccard",
-        inter.cast("double") / (size(col("_sa")) + size(col("_sb")) - inter))
+      .withColumn("jaccard", shingleJaccard)
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("jaccard"))
+  }
+
+  /** Full-corpus near-dup labels `(idCol, cluster)` at `threshold`:
+    * [[shingleSignatures]] → [[verifiedPairs]] → [[clusters]].
+    * clusters() materializes eagerly (checkpointed loop), so the
+    * signature cache is dead weight the moment it returns — a local
+    * scope releases it here instead of pinning a corpus-scale frame
+    * per call (the prepare() discipline).
+    */
+  private def verifiedClusters(docs: DataFrame, idCol: String,
+      textCol: String, threshold: Double, minhashK: Int, bands: Int,
+      maxBucketSize: Int): DataFrame = {
+    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
+    val sigScope = new CacheScope
+    val sig = sigScope.persist(shingleSignatures(docs, idCol, textCol, 3, k), Disk)
+    val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
+    val lab = clusters(pairs, docs.select(col(idCol)), idCol)
+    sigScope.release()
+    lab
   }
 
   /** Near-dup cluster-size distribution: clusters per size band,
@@ -606,17 +631,8 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    // clusters() materializes eagerly (checkpointed loop), so the
-    // signature cache is dead weight the moment it returns — a local
-    // scope releases it here instead of pinning a corpus-scale frame
-    // per call (the prepare() discipline)
-    val sigScope = new CacheScope
-    val sig = sigScope.persist(shingleSignatures(docs, idCol, textCol, 3, k), Disk)
-    val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
-    val lab = clusters(pairs, docs.select(col(idCol)), idCol)
-    sigScope.release()
-    lab
+    verifiedClusters(docs, idCol, textCol, threshold, minhashK, bands,
+        maxBucketSize)
       .groupBy("cluster").agg(count(lit(1)).cast(LongType).as("size"))
       .groupBy("size")
       .agg(count(lit(1)).cast(LongType).as("n_clusters"),
@@ -737,7 +753,7 @@ object Dedup {
     // roots the candidate self-join AND both verify join-backs
     val sig = scope.persist(
       shingleSignatures(docs, idCol, textCol, shingleN, k), Disk)
-    val inter = size(array_intersect(col("_sa"), col("_sb")))
+    val inter = sharedShingles
     val union = size(col("_sa")) + size(col("_sb")) - inter
     val pairs = candidatesWithShingles(sig, idCol, k, b, maxBucketSize)
       .select(col("a_id"), col("b_id"),
@@ -869,14 +885,8 @@ object Dedup {
       minhashK: Int = Pipeline.AutoBanding,
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
-    val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    // eager clusters() loop is the last sig consumer — release the
-    // corpus-scale cache before returning (the prepare() discipline)
-    val sigScope = new CacheScope
-    val sig = sigScope.persist(shingleSignatures(docs, idCol, textCol, 3, k), Disk)
-    val pairs = verifiedPairs(sig, idCol, threshold, k, b, maxBucketSize)
-    val lab = clusters(pairs, docs.select(col(idCol)), idCol)
-    sigScope.release()
+    val lab = verifiedClusters(docs, idCol, textCol, threshold, minhashK,
+      bands, maxBucketSize)
     docs.select(col(idCol),
         size(Pipeline.words(col(textCol))).cast(LongType).as("_n_tok"))
       .join(lab, idCol)
@@ -905,9 +915,8 @@ object Dedup {
       bands: Int = Pipeline.AutoBanding,
       maxBucketSize: Int = 10000): DataFrame = {
     val (k, b) = Pipeline.resolveBanding(threshold, minhashK, bands)
-    val inter = size(array_intersect(col("_sa"), col("_sb")))
     candidatesWithShingles(sig, idCol, k, b, maxBucketSize)
-      .withColumn("_i", inter.cast(LongType))
+      .withColumn("_i", sharedShingles.cast(LongType))
       .withColumn("_na", size(col("_sa")).cast(LongType))
       .withColumn("_nb", size(col("_sb")).cast(LongType))
       .select(col("a_id"), col("b_id"),

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object DomainQueries {
   import Tables._
-  import OracleSql.{hash32, hash60, host}
+  import OracleSql.{hash32, hash60, hllRank, host, labelCtes, morton,
+    movesPanelSql, targetMixTokensSql, verifiedHashedSql}
 
   private def inList(xs: Seq[String]): String =
     xs.map(s => s"'$s'").mkString(", ")
@@ -81,6 +82,14 @@ object DomainQueries {
   // tokens otherwise. regexp_replace carries the 'g' flag (DuckDB
   // replaces first-only by default; Spark replaces all). The
   // comprehension variable is `bx`, not `i` (the q182 scoping trap).
+  // The Z-order oracle (q211, q214): lineitem's (partkey, suppkey)
+  // 256-buckets `v(x, y)` and their 16-bit Morton key `z(x, y, z)`,
+  // the interleave [[ops.Layout.zorderFileStats]] sorts by.
+  private val ZorderCtes = s"""
+        v AS (SELECT l_partkey % 256 AS x, l_suppkey % 256 AS y
+                   FROM lineitem),
+        z AS (SELECT x, y, ${morton("x", "y", 8)} AS z FROM v)"""
+
   private def wordsAutoSql(text: String): String = {
     val stripped = s"regexp_replace($text, ' ', '', 'g')"
     val ns =
@@ -361,26 +370,7 @@ object DomainQueries {
                   if arr[s+1] = list_max(arr[1:16])]) AS o_from,
                 list_min([s for s in range(0, 17)
                   if arr[s+1] = list_max(arr[1:17])]) AS o_to
-              FROM a),
-        sm AS (SELECT COUNT(*) AS n_keys,
-                      COUNT(*) FILTER (o_from <> o_to) AS moved
-               FROM o),
-        sm2 AS (SELECT n_keys, moved,
-                  moved * 1000000 // GREATEST(n_keys, 1) AS moved_ppm,
-                  ${1000000L / 17} AS expected_ppm
-                FROM sm),
-        ps AS (SELECT shard, SUM(f) AS n_from, SUM(t) AS n_to FROM (
-                 SELECT o_from AS shard, 1 AS f, 0 AS t FROM o
-                 UNION ALL SELECT o_to, 0, 1 FROM o)
-               GROUP BY shard)
-        SELECT CAST(shard AS BIGINT) AS shard,
-               CAST(n_from AS BIGINT) AS n_from,
-               CAST(n_to AS BIGINT) AS n_to,
-               CAST(n_keys AS BIGINT) AS n_keys,
-               CAST(moved AS BIGINT) AS moved,
-               CAST(moved_ppm AS BIGINT) AS moved_ppm,
-               CAST(expected_ppm AS BIGINT) AS expected_ppm
-        FROM ps CROSS JOIN sm2 ORDER BY shard"""),
+              FROM a),${movesPanelSql(1000000L / 17)}"""),
       (s, d) => graft.ops.Layout.rendezvousMoves(
           spread(documents(s, d)), "doc_id", fromShards = 16,
           toShards = 17)
@@ -415,26 +405,7 @@ object DomainQueries {
         kp AS (SELECT k, ${hash60("'ringk_' || k")} AS kp FROM ks),
         o AS (SELECT k, ${ownerSql(posF, ownF)} AS o_from,
                      ${ownerSql(posT, ownT)} AS o_to
-              FROM kp),
-        sm AS (SELECT COUNT(*) AS n_keys,
-                      COUNT(*) FILTER (o_from <> o_to) AS moved
-               FROM o),
-        sm2 AS (SELECT n_keys, moved,
-                  moved * 1000000 // GREATEST(n_keys, 1) AS moved_ppm,
-                  $expectedPpm AS expected_ppm
-                FROM sm),
-        ps AS (SELECT shard, SUM(f) AS n_from, SUM(t) AS n_to FROM (
-                 SELECT o_from AS shard, 1 AS f, 0 AS t FROM o
-                 UNION ALL SELECT o_to, 0, 1 FROM o)
-               GROUP BY shard)
-        SELECT CAST(shard AS BIGINT) AS shard,
-               CAST(n_from AS BIGINT) AS n_from,
-               CAST(n_to AS BIGINT) AS n_to,
-               CAST(n_keys AS BIGINT) AS n_keys,
-               CAST(moved AS BIGINT) AS moved,
-               CAST(moved_ppm AS BIGINT) AS moved_ppm,
-               CAST(expected_ppm AS BIGINT) AS expected_ppm
-        FROM ps CROSS JOIN sm2 ORDER BY shard"""),
+              FROM kp),${movesPanelSql(expectedPpm)}"""),
       (s, d) => graft.ops.Layout.ringMoves(
           spread(documents(s, d)), "doc_id", fromShards = fromK,
           toShards = toK, vnodesPerShard = v)
@@ -538,18 +509,7 @@ object DomainQueries {
                FROM t WHERE len(w) >= 3),
         ${PipelineQueries.minhashSigCte("doc_id", PipelineQueries.lshK05)}
         ${PipelineQueries.bandedCandCte(PipelineQueries.lshBands05,
-          PipelineQueries.lshRows05)},
-        h AS (SELECT doc_id, list_transform(shingles, s -> ${hash60("s")}) AS hs FROM sh),
-        v AS (SELECT c.a_id, c.b_id,
-                CAST(len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS i,
-                CAST(len(a.hs) + len(b.hs)
-                     - len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS u
-              FROM cand c
-              JOIN h a ON a.doc_id = c.a_id
-              JOIN h b ON b.doc_id = c.b_id)
-        SELECT a_id, b_id, (1000000 * i) // u AS jaccard_ppm
-        FROM v WHERE i * 1000000 >= u * 500000
-        ORDER BY a_id, b_id"""),
+          PipelineQueries.lshRows05)},$verifiedHashedSql"""),
       (s, d) => {
         val corpus = spread(documents(s, d)).filter(col("doc_id") < 24)
           .select(col("doc_id"), expr(CjkSynthSql).as("text"))
@@ -580,22 +540,7 @@ object DomainQueries {
               FROM documents WHERE lang IN ('en', 'zh')),
         tok AS (SELECT doc_id, lang,
                   CAST(len(${wordsAutoSql("t")}) AS BIGINT) AS n_tok
-                FROM c),
-        tt AS (SELECT lang, CAST(SUM(n_tok) AS BIGINT) AS ts
-               FROM tok GROUP BY lang),
-        t AS (SELECT MIN((COALESCE(tt.ts, 0) * 1000000) // tg.ppm) AS t
-              FROM tg LEFT JOIN tt USING (lang)),
-        q AS (SELECT tg.lang, (t.t * tg.ppm) // 1000000 AS quota
-              FROM tg CROSS JOIN t),
-        r AS (SELECT doc_id, lang, n_tok,
-                CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY lang
-                  ORDER BY ${hash32("CAST(doc_id AS VARCHAR)")} % 1000000, doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS tb
-              FROM tok)
-        SELECT r.doc_id, r.lang, r.n_tok, r.tb AS tok_before
-        FROM r JOIN q ON r.lang = q.lang AND r.tb < q.quota
-        ORDER BY r.doc_id"""),
+                FROM c),$targetMixTokensSql"""),
       (s, d) => {
         val c = spread(documents(s, d))
           .filter(col("lang").isin("en", "zh"))
@@ -658,14 +603,7 @@ object DomainQueries {
     // integer weights; the frame feeds Sampling.weighted unchanged.
     QueryDef("q195_soft_dedup_weights",
       Some(s"""
-        WITH RECURSIVE ${PipelineQueries.lshCte},
-        sym AS (SELECT a_id AS u, b_id AS v FROM cand
-                UNION SELECT b_id AS u, a_id AS v FROM cand),
-        reach(u, r) AS (
-          SELECT u, u AS r FROM (SELECT DISTINCT u FROM sym)
-          UNION
-          SELECT s.v AS u, reach.r FROM reach JOIN sym s ON s.u = reach.u),
-        lab AS (SELECT u, MIN(r) AS cluster FROM reach GROUP BY u),
+        WITH RECURSIVE ${PipelineQueries.lshCte},${labelCtes("cand", node = "u")},
         sz AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS sz
                FROM lab GROUP BY cluster)
         SELECT d.doc_id,
@@ -1254,14 +1192,8 @@ object DomainQueries {
     // 100 TB rewrite. The oracle replays the bit interleave, the
     // (z, x, y) total order, and the fixed-size file cut.
     QueryDef("q211_zorder_layout",
-      Some("""
-        WITH v AS (SELECT l_partkey % 256 AS x, l_suppkey % 256 AS y
-                   FROM lineitem),
-        z AS (SELECT x, y,
-                list_sum([(((x >> bb) & 1) << (2*bb)) +
-                          (((y >> bb) & 1) << (2*bb+1))
-                          for bb in range(0, 8)]) AS z
-              FROM v),
+      Some(s"""
+        WITH $ZorderCtes,
         r AS (SELECT x, y, ROW_NUMBER() OVER (ORDER BY z, x, y) - 1 AS rn
               FROM z)
         SELECT rn // 4096 AS file_id, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1350,14 +1282,8 @@ object DomainQueries {
     // files x domain), under the Z-order BOTH stay tight. Two rows;
     // the oracle replays both rank orders and the rollup.
     QueryDef("q214_layout_skipping_diff",
-      Some("""
-        WITH v AS (SELECT l_partkey % 256 AS x, l_suppkey % 256 AS y
-                   FROM lineitem),
-        z AS (SELECT x, y,
-                list_sum([(((x >> bb) & 1) << (2*bb)) +
-                          (((y >> bb) & 1) << (2*bb+1))
-                          for bb in range(0, 8)]) AS z
-              FROM v),
+      Some(s"""
+        WITH $ZorderCtes,
         rz AS (SELECT x, y, ROW_NUMBER() OVER (ORDER BY z, x, y) - 1 AS rn
                FROM z),
         fz AS (SELECT rn // 4096 AS f, MIN(x) AS xmn, MAX(x) AS xmx,
@@ -1563,11 +1489,7 @@ object DomainQueries {
         e AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM bx WHERE bx.b < v.x) AS xb,
                      (SELECT CAST(COUNT(*) AS BIGINT) FROM byy WHERE byy.b < v.y) AS yb
               FROM v),
-        z AS (SELECT xb, yb,
-                list_sum([(((xb >> bb) & 1) << (2*bb)) +
-                          (((yb >> bb) & 1) << (2*bb+1))
-                          for bb in range(0, 3)]) AS z
-              FROM e),
+        z AS (SELECT xb, yb, ${morton("xb", "yb", 3)} AS z FROM e),
         r AS (SELECT xb, yb,
                 ROW_NUMBER() OVER (ORDER BY z, xb, yb) - 1 AS rn FROM z)
         SELECT rn // 4096 AS file_id, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1683,8 +1605,7 @@ object DomainQueries {
               FROM ws WHERE len(w) >= 2),
         h AS (SELECT DISTINCT source, ${hash60("w")} AS h FROM t),
         b AS (SELECT source, h % 64 AS bucket,
-                     CASE WHEN h // 64 = 0 THEN 55
-                          ELSE 55 - length(bin(h // 64)) END AS rho
+                     ${hllRank("h")} AS rho
               FROM h),
         reg AS (SELECT source, bucket, CAST(MAX(rho) AS BIGINT) AS r
                 FROM b GROUP BY source, bucket),

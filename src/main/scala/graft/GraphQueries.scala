@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
   import Tables._
-  import OracleSql.{hash32, hash60, host}
+  import OracleSql.{hash32, hash60, hllRank, host, labelCtes, pearsonCtes}
   import CrawlQueries.{crawlPages, hostGraphCtes}
 
   // NOTE: `all` is declared at the BOTTOM of this object (the lazy-val
@@ -360,19 +360,15 @@ object GraphQueries {
     */
   private lazy val q252: QueryDef =
     QueryDef("q252_star_components",
-      Some("""
+      Some(s"""
         WITH RECURSIVE
         e AS (SELECT doc_id AS u,
                 LEAD(doc_id) OVER (PARTITION BY source ORDER BY doc_id) AS v
               FROM documents),
-        ed AS (SELECT u, v FROM e WHERE v IS NOT NULL),
-        sym AS (SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed),
-        reach(u, r) AS (
-          SELECT u, u AS r FROM (SELECT DISTINCT u FROM sym)
-          UNION
-          SELECT s.v AS u, reach.r FROM reach JOIN sym s ON s.u = reach.u)
-        SELECT u AS node, CAST(MIN(r) AS BIGINT) AS component
-        FROM reach GROUP BY u ORDER BY node"""),
+        ed AS (SELECT u, v FROM e WHERE v IS NOT NULL),${labelCtes("ed", "u", "v",
+          node = "node", label = "component")}
+        SELECT node, CAST(component AS BIGINT) AS component
+        FROM lab ORDER BY node"""),
       (s, d) => {
         val w = Window.partitionBy("source").orderBy("doc_id")
         val edges = spread(documents(s, d)).select("source", "doc_id")
@@ -750,23 +746,35 @@ object GraphQueries {
           ) GROUP BY node, bucket)"""
     }.mkString(",")
 
-  // q221's integer RAW HLL estimator with the linear-counting
-  // small-range branch (Graph.LcTable's precomputed literals — the
-  // SAME constants the engine inlines), as a per-node CTE `pe{t}`
-  // `(node, radius, est)` — q288 sums it per radius, q291 runs the
-  // harmonic window over it.
-  private def hyperballEstCte(t: Int): String = {
-    val lc = graft.ops.Graph.LcTable.mkString("[", ", ", "]")
+  // HyperBall round-0 registers at m = 2^p: each node's 60-bit hash
+  // in its own register, as `g0(node, bucket, r)` over the `e0` edges.
+  private def hyperballG0Cte(p: Int): String = s"""
+        nodes AS (SELECT DISTINCT x AS node FROM e0),
+        g0 AS MATERIALIZED (SELECT node, h % ${1 << p} AS bucket,
+                CAST(${hllRank("h", p)} AS BIGINT) AS r
+              FROM (SELECT node,
+                      ${hash60("CAST(node AS VARCHAR)")} AS h
+                    FROM nodes))"""
+
+  // q221's integer RAW HLL estimator at m = 2^p registers with alpha
+  // `aNum / aDen` and the linear-counting small-range branch
+  // (Graph.lcTable's precomputed literals — the SAME constants the
+  // engine inlines), as a per-node CTE `pe{t}` `(node, radius, est)` —
+  // q288 sums it per radius, q291 runs the harmonic window over it.
+  private def hyperballEstCte(t: Int, p: Int = 6, aNum: Long = 709L,
+                              aDen: Long = 1000L): String = {
+    val m = 1 << p
+    val lc = graft.ops.Graph.lcTable(p).mkString("[", ", ", "]")
     s"""
         pe$t AS (SELECT node, CAST($t AS BIGINT) AS radius,
-            CAST(CASE WHEN nb < 64 AND est < 160
-              THEN ($lc)[CAST(64 - nb AS INT)]
+            CAST(CASE WHEN nb < $m AND est < ${5 * m / 2}
+              THEN ($lc)[CAST($m - nb AS INT)]
               ELSE est END AS BIGINT) AS est FROM (
           SELECT node, COUNT(*) AS nb,
-            CAST((709::HUGEINT * 64 * 64 * (1::BIGINT << 60))
-                 // (1000::HUGEINT *
+            CAST(($aNum::HUGEINT * $m * $m * (1::BIGINT << 60))
+                 // ($aDen::HUGEINT *
                      (SUM(1::HUGEINT * (1::BIGINT << CAST(60 - r AS INT)))
-                      + (64 - COUNT(*))::HUGEINT * (1::BIGINT << 60)))
+                      + ($m - COUNT(*))::HUGEINT * (1::BIGINT << 60)))
                  AS BIGINT) AS est
           FROM g$t GROUP BY node))"""
   }
@@ -774,6 +782,14 @@ object GraphQueries {
   private def hyperballNfSql(t: Int): String = s"""
         SELECT radius, CAST(SUM(est) AS BIGINT) AS reach_est
         FROM pe$t GROUP BY radius"""
+
+  // The HyperBall oracle over the chain+clique graph at m = 2^p: its
+  // edges, the round-0 registers, `radius` merge rounds and every
+  // round's per-node estimate `pe{t}`.
+  private def hyperballCtes(radius: Int, p: Int = 6, aNum: Long = 709L,
+                            aDen: Long = 1000L): String = s"""$kcoreEdgeCtes,${hyperballG0Cte(p)},
+        ${hyperballRoundCtes(radius)},
+        ${(0 to radius).map(hyperballEstCte(_, p, aNum, aDen)).mkString(",")}"""
 
   /** HyperBall neighborhood function ([[ops.Graph.hyperBall]],
     * radius 6, m = 64 registers) over the chain+clique graph:
@@ -785,20 +801,16 @@ object GraphQueries {
     * replays registers, merges, the integer RAW estimator, and the
     * panel distance math verbatim.
     */
-  private lazy val q288: QueryDef = {
+  private lazy val q288: QueryDef =
+    hyperballReach("q288_hyperball_reach", p = 6, aNum = 709L, aDen = 1000L)
+
+  // q288 and q302: the per-radius reach panel and the mean distance.
+  private def hyperballReach(name: String, p: Int, aNum: Long,
+                             aDen: Long): QueryDef = {
     val radius = 6
-    QueryDef("q288_hyperball_reach",
+    QueryDef(name,
       Some(s"""
-        WITH $kcoreEdgeCtes,
-        nodes AS (SELECT DISTINCT x AS node FROM e0),
-        g0 AS MATERIALIZED (SELECT node, h % 64 AS bucket,
-                CAST(CASE WHEN h // 64 = 0 THEN 55
-                     ELSE 55 - length(bin(h // 64)) END AS BIGINT) AS r
-              FROM (SELECT node,
-                      ${hash60("CAST(node AS VARCHAR)")} AS h
-                    FROM nodes)),
-        ${hyperballRoundCtes(radius)},
-        ${(0 to radius).map(hyperballEstCte).mkString(",")},
+        WITH ${hyperballCtes(radius, p, aNum, aDen)},
         nf AS (${(0 to radius).map(hyperballNfSql)
           .mkString(" UNION ALL ")}),
         pan AS (SELECT radius, reach_est,
@@ -813,7 +825,7 @@ object GraphQueries {
         SELECT nf.radius, nf.reach_est, av.avg_distance_milli
         FROM nf CROSS JOIN av ORDER BY radius"""),
       (s, d) => graft.ops.Graph.hyperBall(
-          chainCliqueEdges(s, d), radius = radius, p = 6)
+          chainCliqueEdges(s, d), radius = radius, p = p)
         .orderBy("radius"))
   }
 
@@ -832,26 +844,7 @@ object GraphQueries {
                 FROM e0 GROUP BY x),
         pr AS (SELECT dx.deg AS x, dy.deg AS y FROM e0
                JOIN deg dx ON dx.node = e0.x
-               JOIN deg dy ON dy.node = e0.y),
-        ag AS (SELECT COUNT(*)::HUGEINT AS n, SUM(x) AS sx, SUM(y) AS sy,
-                      SUM(x * y) AS sxy, SUM(x * x) AS sxx,
-                      SUM(y * y) AS syy
-               FROM pr),
-        nm AS (SELECT n, n * sxy - sx * sy AS num,
-                      n * sxx - sx * sx AS a, n * syy - sy * sy AS b
-               FROM ag),
-        s0 AS (SELECT *,
-                 CAST(floor(sqrt(CAST(a AS DOUBLE))) AS HUGEINT) AS sa0,
-                 CAST(floor(sqrt(CAST(b AS DOUBLE))) AS HUGEINT) AS sb0
-               FROM nm),
-        sq AS (SELECT n, num,
-                 GREATEST(list_max(list_filter(
-                     [sa0 - 2, sa0 - 1, sa0, sa0 + 1, sa0 + 2],
-                     t -> t * t <= a)) *
-                   list_max(list_filter(
-                     [sb0 - 2, sb0 - 1, sb0, sb0 + 1, sb0 + 2],
-                     t -> t * t <= b)), 1) AS den
-               FROM s0)
+               JOIN deg dy ON dy.node = e0.y),${pearsonCtes("pr", "x", "y")}
         SELECT CAST(n AS BIGINT) AS n_pairs,
                CAST(num * 1000000 // den AS BIGINT) AS assortativity_ppm
         FROM sq"""),
@@ -870,16 +863,7 @@ object GraphQueries {
     val radius = 6
     QueryDef("q291_harmonic_centrality",
       Some(s"""
-        WITH $kcoreEdgeCtes,
-        nodes AS (SELECT DISTINCT x AS node FROM e0),
-        g0 AS MATERIALIZED (SELECT node, h % 64 AS bucket,
-                CAST(CASE WHEN h // 64 = 0 THEN 55
-                     ELSE 55 - length(bin(h // 64)) END AS BIGINT) AS r
-              FROM (SELECT node,
-                      ${hash60("CAST(node AS VARCHAR)")} AS h
-                    FROM nodes)),
-        ${hyperballRoundCtes(radius)},
-        ${(0 to radius).map(hyperballEstCte).mkString(",")},
+        WITH ${hyperballCtes(radius)},
         pp AS (${(0 to radius).map(t =>
           s"SELECT node, radius, est FROM pe$t").mkString(" UNION ALL ")}),
         gn AS (SELECT node, radius,
@@ -907,16 +891,7 @@ object GraphQueries {
     val radius = 6
     QueryDef("q301_effective_diameter",
       Some(s"""
-        WITH $kcoreEdgeCtes,
-        nodes AS (SELECT DISTINCT x AS node FROM e0),
-        g0 AS MATERIALIZED (SELECT node, h % 64 AS bucket,
-                CAST(CASE WHEN h // 64 = 0 THEN 55
-                     ELSE 55 - length(bin(h // 64)) END AS BIGINT) AS r
-              FROM (SELECT node,
-                      ${hash60("CAST(node AS VARCHAR)")} AS h
-                    FROM nodes)),
-        ${hyperballRoundCtes(radius)},
-        ${(0 to radius).map(hyperballEstCte).mkString(",")},
+        WITH ${hyperballCtes(radius)},
         nf AS (${(0 to radius).map(hyperballNfSql)
           .mkString(" UNION ALL ")}),
         pan AS (SELECT radius, reach_est,
@@ -951,70 +926,9 @@ object GraphQueries {
     * join rows are the honest 4x cost of the extra precision; the
     * radius panel stays bounded.
     */
-  private lazy val q302: QueryDef = {
-    val radius = 6
-    val p = 8
-    val m = 1 << p
-    val rhoBase = 61 - p // rho = rhoBase - bitlen(rest), rest = h div m
-    val aNum = 7213L * m
-    val aDen = 10000L * m + 10790L
-    val lcThresh = 5 * m / 2
-    val lc = graft.ops.Graph.lcTable(p).mkString("[", ", ", "]")
-    val estCtes = (0 to radius).map { t =>
-      s"""
-        pe$t AS (SELECT node, CAST($t AS BIGINT) AS radius,
-            CAST(CASE WHEN nb < $m AND est < $lcThresh
-              THEN ($lc)[CAST($m - nb AS INT)]
-              ELSE est END AS BIGINT) AS est FROM (
-          SELECT node, COUNT(*) AS nb,
-            CAST(($aNum::HUGEINT * $m * $m * (1::BIGINT << 60))
-                 // ($aDen::HUGEINT *
-                     (SUM(1::HUGEINT * (1::BIGINT << CAST(60 - r AS INT)))
-                      + ($m - COUNT(*))::HUGEINT * (1::BIGINT << 60)))
-                 AS BIGINT) AS est
-          FROM g$t GROUP BY node))"""
-    }.mkString(",")
-    val roundCtes = (1 to radius).map { t =>
-      val prev = t - 1
-      s"""
-        g$t AS MATERIALIZED (SELECT node, bucket, MAX(r) AS r FROM (
-            SELECT node, bucket, r FROM g$prev
-            UNION ALL
-            SELECT e.x AS node, g.bucket, g.r
-            FROM e0 e JOIN g$prev g ON g.node = e.y
-          ) GROUP BY node, bucket)"""
-    }.mkString(",")
-    val nfSqls = (0 to radius).map(t => s"""
-        SELECT radius, CAST(SUM(est) AS BIGINT) AS reach_est
-        FROM pe$t GROUP BY radius""").mkString(" UNION ALL ")
-    QueryDef("q302_hyperball_p8",
-      Some(s"""
-        WITH ${kcoreEdgeCtes},
-        nodes AS (SELECT DISTINCT x AS node FROM e0),
-        g0 AS MATERIALIZED (SELECT node, h % $m AS bucket,
-                CAST(CASE WHEN h // $m = 0 THEN $rhoBase
-                     ELSE $rhoBase - length(bin(h // $m)) END AS BIGINT) AS r
-              FROM (SELECT node,
-                      ${hash60("CAST(node AS VARCHAR)")} AS h
-                    FROM nodes)),
-        $roundCtes,
-        $estCtes,
-        nf AS ($nfSqls),
-        pan AS (SELECT radius, reach_est,
-                  reach_est - LAG(reach_est) OVER (ORDER BY radius)
-                    AS gain
-                FROM nf),
-        av AS (SELECT CAST(SUM(radius * COALESCE(gain, 0)::HUGEINT)
-                 * 1000 // GREATEST(arg_max(reach_est, radius)
-                                      - arg_min(reach_est, radius), 1)
-                 AS BIGINT) AS avg_distance_milli
-               FROM pan)
-        SELECT nf.radius, nf.reach_est, av.avg_distance_milli
-        FROM nf CROSS JOIN av ORDER BY radius"""),
-      (s, d) => graft.ops.Graph.hyperBall(
-          chainCliqueEdges(s, d), radius = radius, p = p)
-        .orderBy("radius"))
-  }
+  private lazy val q302: QueryDef = hyperballReach("q302_hyperball_p8",
+    p = 8, aNum = 7213L * 256, aDen = 10000L * 256 + 10790L)
+
 
   val all: Seq[QueryDef] = Seq(q125, q148, q171, q172, q183, q219, q220,
     q252, q270, q271, q274, q277, q284, q286, q288, q289, q291, q301, q302,

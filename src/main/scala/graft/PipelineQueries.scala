@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
 object PipelineQueries {
   import Tables._
   import Pipeline._
-  import OracleSql.{cos, hash32, hash60, md5Digits, sqDist}
+  import OracleSql.{candShingles, cos, hash32, hash60, labelCtes, md5Digits,
+    shingleJaccard, simhashCtes, sqDist, verifiedCte, verifiedHashedSql}
 
   /** doc_id + distinct word-trigram shingles, for docs with >= 3 words.
     * (DuckDB mirror: `[array_to_string(w[i:i+2],' ') for i in range(1,len(w)-1)]`.)
@@ -66,6 +67,71 @@ object PipelineQueries {
   private[graft] val (lshBands05, lshRows05) = Pipeline.bandingFor(0.5)
   private[graft] val lshK05: Int = lshBands05 * lshRows05
 
+  // The pinned centroid panel of the embedding queries (PQ codebooks,
+  // centroid assignment, SemDeDup): every 101st vector below 10100.
+  // `PinnedCentroidsSql` is the oracle's filter for it.
+  private[graft] def pinnedCentroids(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
+  private[graft] val PinnedCentroidsSql = "vec_id % 101 = 0 AND vec_id < 10100"
+
+  // The product-quantization codebook (q257, q268): each pinned
+  // centroid's 4 sixteen-dim subvectors as `(code, sub_idx, cs)`.
+  private def pqCodebook(s: SparkSession, d: String): DataFrame =
+    pinnedCentroids(s, d)
+      .select(col("vec_id").as("code"),
+        explode(expr(
+          "transform(sequence(0, 3)," +
+            " x -> struct(x AS sub_idx," +
+            " slice(embedding, x * 16 + 1, 16) AS cs))")).as("_e"))
+      .select(col("code"), col("_e.sub_idx"), col("_e.cs"))
+
+  // The IVF oracle over `vec_id % 8` cells (q52, q268): the vectors
+  // `t(vec_id, cell, v)`, the per-cell centroid means `cent(cell, cv)`
+  // ([[Similarity.ivfIndex]]), the query `q(qv)` (vector 0) and its 2
+  // probed cells `pc(cell)`.
+  private val ivfProbeCtes = s"""
+        t AS (SELECT vec_id, vec_id % 8 AS cell, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        cent AS (SELECT cell, list(m ORDER BY d) AS cv FROM (
+                   SELECT cell, d, avg(x) AS m FROM (
+                     SELECT cell, unnest(v) AS x, unnest(range(1, 65)) AS d FROM t) u
+                   GROUP BY cell, d) g
+                 GROUP BY cell),
+        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
+        pc AS (SELECT cent.cell FROM cent CROSS JOIN q
+               ORDER BY ${cos("qv", "cv")} DESC, cent.cell LIMIT 2)"""
+
+  // The centroid-assignment oracle (q77, q90): the vectors
+  // `t(vec_id, v)`, the pinned centroids `c(centroid_id, cv)` and each
+  // vector's cosine to each centroid, `p(vec_id, centroid_id, cosine)`.
+  private val centroidCosineCtes = s"""
+        t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        c AS (SELECT vec_id AS centroid_id, v AS cv FROM t
+              WHERE $PinnedCentroidsSql),
+        p AS (SELECT t.vec_id, centroid_id, ${cos("v", "cv")} AS cosine
+              FROM t CROSS JOIN c)"""
+
+  // The temperature-mix oracle's language totals (q87, q93): docs per
+  // language `c(lang, n)`, and `tot(tot_n, tot_sn)`, the sums of n and
+  // sqrt(n) folded over the lang-sorted list as
+  // [[ops.Sampling.temperatureMix]] folds them.
+  private val langTotalsCtes = """
+        c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY lang),
+        tot AS (SELECT
+                  list_reduce(list(CAST(n AS DOUBLE) ORDER BY lang), (a, b) -> a + b) AS tot_n,
+                  list_reduce(list(sqrt(CAST(n AS DOUBLE)) ORDER BY lang), (a, b) -> a + b) AS tot_sn
+                FROM c)"""
+
+  // SemDeDup's oracle tail (q90, q102) over `a(vec_id, centroid_id, v)`:
+  // within a centroid, the later vector of every pair at cosine >= 0.4
+  // is dropped.
+  private[graft] val semSurvivorsSql = s"""
+        losers AS (SELECT DISTINCT y.vec_id FROM a x JOIN a y
+                   ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
+                   WHERE ${cos("x.v", "y.v")} >= 0.4)
+        SELECT vec_id, centroid_id FROM a
+        WHERE vec_id NOT IN (SELECT vec_id FROM losers)
+        ORDER BY vec_id"""
+
   // Banded-bucket + candidate-pair CTE fragment over a `sig` CTE, at
   // an explicit (bands, rows) banding (bucket hash = 60-bit fold of
   // the md5 of the '|'-joined band slice — mirrors Pipeline.lshBands).
@@ -75,6 +141,21 @@ object PipelineQueries {
     cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
              FROM banded x JOIN banded y
                ON x.b = y.b AND x.bh = y.bh AND x.doc_id < y.doc_id)"""
+
+  // The decontamination oracle's cross-corpus chain (q61, q80): the
+  // shingles and MinHash signatures with their source, and the LSH
+  // candidates pairing a train doc (a_id, source <> 'src0') with a
+  // test doc (b_id, source 'src0') — Pipeline.lshCrossCandidates.
+  private val crossCandCtes = s"""
+        w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
+        sh AS (SELECT doc_id, source,
+                 list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS shingles
+               FROM w WHERE len(w) >= 3),${minhashSigCte("doc_id, source", lshK05)},
+        banded AS (SELECT doc_id, source, b, ${hash60(s"array_to_string(sig[b*$lshRows05+1 : b*$lshRows05+$lshRows05], '|')")} AS bh
+                   FROM sig CROSS JOIN (SELECT unnest(range(0, $lshBands05)) AS b)),
+        cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
+                 FROM banded x JOIN banded y ON x.b = y.b AND x.bh = y.bh
+                 WHERE x.source <> 'src0' AND y.source = 'src0')"""
 
   // Shared oracle CTE chain: shingles -> k-permutation MinHash ->
   // banded buckets -> candidate pairs, at the J>=0.5 threshold-derived
@@ -217,7 +298,7 @@ object PipelineQueries {
       Some(s"""
         WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         c AS (SELECT vec_id AS code, v AS cv FROM t
-              WHERE vec_id % 101 = 0 AND vec_id < 10100),
+              WHERE $PinnedCentroidsSql),
         subs AS (SELECT unnest([0, 1, 2, 3]) AS sub_idx),
         sv AS (SELECT vec_id, sub_idx,
                  list_slice(v, sub_idx * 16 + 1, sub_idx * 16 + 16) AS s
@@ -234,14 +315,7 @@ object PipelineQueries {
         SELECT vec_id, CAST(sub_idx AS BIGINT) AS sub_idx, code
         FROM r WHERE rn = 1 ORDER BY vec_id, sub_idx"""),
       (s, d) => {
-        val cb = embeddings(s, d)
-          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
-          .select(col("vec_id").as("code"),
-            explode(expr(
-              "transform(sequence(0, 3)," +
-                " x -> struct(x AS sub_idx," +
-                " slice(embedding, x * 16 + 1, 16) AS cs))")).as("_e"))
-          .select(col("code"), col("_e.sub_idx"), col("_e.cs"))
+        val cb = pqCodebook(s, d)
         graft.Similarity.pqAssign(spread(embeddings(s, d)), "vec_id",
             "embedding", cb, "code", "sub_idx", "cs", m = 4, dims = 64)
           .select(col("vec_id"), col("sub_idx").cast("long").as("sub_idx"),
@@ -336,18 +410,9 @@ object PipelineQueries {
   private lazy val q268: QueryDef =
     QueryDef("q268_ivfpq_search",
       Some(s"""
-        WITH t AS (SELECT vec_id, vec_id % 8 AS cell,
-                          CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        cent AS (SELECT cell, list(m ORDER BY d) AS cv FROM (
-                   SELECT cell, d, avg(x) AS m FROM (
-                     SELECT cell, unnest(v) AS x, unnest(range(1, 65)) AS d FROM t) u
-                   GROUP BY cell, d) g
-                 GROUP BY cell),
-        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        pc AS (SELECT cent.cell FROM cent CROSS JOIN q
-               ORDER BY ${cos("qv", "cv")} DESC, cent.cell LIMIT 2),
+        WITH $ivfProbeCtes,
         cb AS (SELECT vec_id AS code, v AS cvec FROM t
-               WHERE vec_id % 101 = 0 AND vec_id < 10100),
+               WHERE $PinnedCentroidsSql),
         subs AS (SELECT unnest([0, 1, 2, 3]) AS sub_idx),
         dt AS (SELECT sub_idx, code,
                  CAST(floor(${sqDist("qs", "cs", 16)} * 1000000.0) AS BIGINT) AS d2_micro
@@ -376,14 +441,7 @@ object PipelineQueries {
         ORDER BY adc_d2_micro, vec_id LIMIT 10"""),
       (s, d) => {
         val e = spread(embeddings(s, d)).withColumn("cell", col("vec_id") % 8)
-        val cb = embeddings(s, d)
-          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
-          .select(col("vec_id").as("code"),
-            explode(expr(
-              "transform(sequence(0, 3)," +
-                " x -> struct(x AS sub_idx," +
-                " slice(embedding, x * 16 + 1, 16) AS cs))")).as("_e"))
-          .select(col("code"), col("_e.sub_idx"), col("_e.cs"))
+        val cb = pqCodebook(s, d)
         graft.Similarity.ivfPqTopK(e, "vec_id", "embedding", "cell",
             graft.Similarity.ivfIndex(e, "embedding", "cell"),
             cb, "code", "sub_idx", "cs", m = 4, dims = 64,
@@ -523,18 +581,7 @@ object PipelineQueries {
     // output makes the compare bit-exact.
     QueryDef("q138_verified_pairs_hashed",
       Some(s"""
-        WITH $lshCte,
-        h AS (SELECT doc_id, list_transform(shingles, s -> ${hash60("s")}) AS hs FROM sh),
-        v AS (SELECT c.a_id, c.b_id,
-                CAST(len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS i,
-                CAST(len(a.hs) + len(b.hs)
-                     - len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS u
-              FROM cand c
-              JOIN h a ON a.doc_id = c.a_id
-              JOIN h b ON b.doc_id = c.b_id)
-        SELECT a_id, b_id, (1000000 * i) // u AS jaccard_ppm
-        FROM v WHERE i * 1000000 >= u * 500000
-        ORDER BY a_id, b_id"""),
+        WITH $lshCte,$verifiedHashedSql"""),
       (s, d) => {
         val sh = Dedup.shingleSignatures(spread(documents(s, d)), "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -549,16 +596,9 @@ object PipelineQueries {
     QueryDef("q27_jaccard_neardup",
       Some(s"""
         WITH $lshCte
-        SELECT c.a_id, c.b_id,
-               CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS DOUBLE)
-                 / (len(a.shingles) + len(b.shingles)
-                    - len(list_filter(a.shingles, x -> list_contains(b.shingles, x)))) AS jaccard
-        FROM cand c
-        JOIN sh a ON a.doc_id = c.a_id
-        JOIN sh b ON b.doc_id = c.b_id
-        WHERE CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS DOUBLE)
-                 / (len(a.shingles) + len(b.shingles)
-                    - len(list_filter(a.shingles, x -> list_contains(b.shingles, x)))) >= 0.5
+        SELECT c.a_id, c.b_id, $shingleJaccard AS jaccard
+        $candShingles
+        WHERE $shingleJaccard >= 0.5
         ORDER BY a_id, b_id"""),
       (s, d) => {
         // persisted signature frame (Dedup.shingleSignatures): the
@@ -587,18 +627,9 @@ object PipelineQueries {
     QueryDef("q28_simhash_neardup",
       Some(s"""
         WITH docs AS (SELECT * FROM documents WHERE source IN ('src0','src1','src2','src3')),
-        toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM docs),
-        h AS (SELECT doc_id,
-                ${hash32("w")} AS h
-              FROM toks),
-        votes AS (SELECT doc_id, b,
-                    SUM(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-                  FROM h CROSS JOIN (SELECT unnest(range(0, 32)) AS b) GROUP BY doc_id, b),
-        sim AS (SELECT doc_id,
-                  SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) ELSE 0 END) AS simhash
-                FROM votes GROUP BY doc_id),
+        toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM docs),${simhashCtes("w" -> "simhash")},
         chunked AS (SELECT doc_id, simhash, c, (simhash >> CAST(c*8 AS INTEGER)) & 255 AS chunk
-                    FROM sim CROSS JOIN (SELECT unnest(range(0, 4)) AS c)),
+                    FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS c)),
         pairs AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id,
                          CAST(bit_count(xor(x.simhash, y.simhash)) AS INTEGER) AS dist
                   FROM chunked x JOIN chunked y
@@ -907,15 +938,7 @@ object PipelineQueries {
     // engine-side float-summation noise in the centroid means.
     QueryDef("q52_ivf_ann",
       Some(s"""
-        WITH t AS (SELECT vec_id, vec_id % 8 AS cell, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        cent AS (SELECT cell, list(m ORDER BY d) AS cv FROM (
-                   SELECT cell, d, avg(x) AS m FROM (
-                     SELECT cell, unnest(v) AS x, unnest(range(1, 65)) AS d FROM t) u
-                   GROUP BY cell, d) g
-                 GROUP BY cell),
-        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        pc AS (SELECT cent.cell FROM cent CROSS JOIN q
-               ORDER BY ${cos("qv", "cv")} DESC, cent.cell LIMIT 2)
+        WITH $ivfProbeCtes
         SELECT t.vec_id, ${cos("qv", "v")} AS cosine
         FROM t JOIN pc ON t.cell = pc.cell CROSS JOIN q
         WHERE t.vec_id <> 0
@@ -957,22 +980,10 @@ object PipelineQueries {
     // pipeline runs before training. Output = the removed train ids.
     QueryDef("q61_decontamination",
       Some(s"""
-        WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, source,
-                 list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS shingles
-               FROM w WHERE len(w) >= 3),${minhashSigCte("doc_id, source", lshK05)},
-        banded AS (SELECT doc_id, source, b, ${hash60(s"array_to_string(sig[b*$lshRows05+1 : b*$lshRows05+$lshRows05], '|')")} AS bh
-                   FROM sig CROSS JOIN (SELECT unnest(range(0, $lshBands05)) AS b)),
-        cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-                 FROM banded x JOIN banded y ON x.b = y.b AND x.bh = y.bh
-                 WHERE x.source <> 'src0' AND y.source = 'src0')
+        WITH $crossCandCtes
         SELECT DISTINCT c.a_id AS train_doc_id
-        FROM cand c
-        JOIN sh a ON a.doc_id = c.a_id
-        JOIN sh b ON b.doc_id = c.b_id
-        WHERE CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS DOUBLE)
-                / (len(a.shingles) + len(b.shingles)
-                   - len(list_filter(a.shingles, x -> list_contains(b.shingles, x)))) >= 0.5
+        $candShingles
+        WHERE $shingleJaccard >= 0.5
         ORDER BY train_doc_id"""),
       (s, d) => {
         // signed form: the CPU-heavy shingle pass is spread() across
@@ -1168,19 +1179,9 @@ object PipelineQueries {
     // are spec'd on planted permutation duplicates).
     QueryDef("q71_simhash64_signatures",
       Some(s"""
-        WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        h AS (SELECT doc_id,
-                ${hash32("w")} AS hlo,
-                ${hash32("'x1_' || w")} AS hhi
-              FROM toks),
-        votes AS (SELECT doc_id, b,
-                    SUM(CASE WHEN (hlo >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS vlo,
-                    SUM(CASE WHEN (hhi >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS vhi
-                  FROM h CROSS JOIN (SELECT unnest(range(0, 32)) AS b) GROUP BY doc_id, b)
-        SELECT doc_id,
-               CAST(SUM(CASE WHEN vlo > 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash_lo,
-               CAST(SUM(CASE WHEN vhi > 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash_hi
-        FROM votes GROUP BY doc_id ORDER BY doc_id"""),
+        WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),${
+          simhashCtes("w" -> "simhash_lo", "'x1_' || w" -> "simhash_hi")}
+        SELECT * FROM sig ORDER BY doc_id"""),
       (s, d) => Pipeline.simhash64(spread(documents(s, d)), "doc_id", "text")
         .orderBy("doc_id")),
 
@@ -1369,11 +1370,7 @@ object PipelineQueries {
     // assignment is a map-only pass.
     QueryDef("q77_centroid_assign",
       Some(s"""
-        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        c AS (SELECT vec_id AS centroid_id, v AS cv FROM t
-              WHERE vec_id % 101 = 0 AND vec_id < 10100),
-        p AS (SELECT t.vec_id, centroid_id, ${cos("v", "cv")} AS cosine
-              FROM t CROSS JOIN c),
+        WITH $centroidCosineCtes,
         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                 ORDER BY cosine DESC, centroid_id) AS rn FROM p)
         SELECT vec_id, centroid_id, cosine FROM r WHERE rn = 1
@@ -1381,8 +1378,7 @@ object PipelineQueries {
       (s, d) => {
         val t = spread(embeddings(s, d))
           .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        val cent = embeddings(s, d)
-          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
+        val cent = pinnedCentroids(s, d)
           .select(col("vec_id").as("centroid_id"),
             asDouble(col("embedding")).as("cv"))
         t.crossJoin(broadcast(cent))
@@ -1469,22 +1465,9 @@ object PipelineQueries {
     // the train corpus is.
     QueryDef("q80_contamination_report",
       Some(s"""
-        WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, source,
-                 list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS shingles
-               FROM w WHERE len(w) >= 3),${minhashSigCte("doc_id, source", lshK05)},
-        banded AS (SELECT doc_id, source, b, ${hash60(s"array_to_string(sig[b*$lshRows05+1 : b*$lshRows05+$lshRows05], '|')")} AS bh
-                   FROM sig CROSS JOIN (SELECT unnest(range(0, $lshBands05)) AS b)),
-        cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-                 FROM banded x JOIN banded y ON x.b = y.b AND x.bh = y.bh
-                 WHERE x.source <> 'src0' AND y.source = 'src0'),
-        jp AS (SELECT c.b_id,
-                 CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS DOUBLE)
-                   / (len(a.shingles) + len(b.shingles)
-                      - len(list_filter(a.shingles, x -> list_contains(b.shingles, x)))) AS j
-               FROM cand c
-               JOIN sh a ON a.doc_id = c.a_id
-               JOIN sh b ON b.doc_id = c.b_id),
+        WITH $crossCandCtes,
+        jp AS (SELECT c.b_id, $shingleJaccard AS j
+               $candShingles),
         rep AS (SELECT b_id, CAST(COUNT(*) AS BIGINT) AS n_candidates,
                        CAST(COUNT(*) FILTER (WHERE j >= 0.5) AS BIGINT) AS n_contaminated,
                        MAX(j) AS max_jaccard
@@ -1586,15 +1569,9 @@ object PipelineQueries {
     // converge to the same labeling on any graph.
     QueryDef("q84_dedup_components",
       Some(s"""
-        WITH RECURSIVE $lshCte,
-        sym AS (SELECT a_id AS u, b_id AS v FROM cand
-                UNION SELECT b_id AS u, a_id AS v FROM cand),
-        reach(u, r) AS (
-          SELECT u, u AS r FROM (SELECT DISTINCT u FROM sym)
-          UNION
-          SELECT s.v AS u, reach.r FROM reach JOIN sym s ON s.u = reach.u)
-        SELECT u AS doc_id, CAST(MIN(r) AS BIGINT) AS cluster
-        FROM reach GROUP BY u ORDER BY doc_id"""),
+        WITH RECURSIVE $lshCte,${labelCtes("cand")}
+        SELECT doc_id, CAST(cluster AS BIGINT) AS cluster
+        FROM lab ORDER BY doc_id"""),
       (s, d) => {
         val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val sh = Dedup.shingleSignatures(spread(documents(s, d)), "doc_id", "text")
@@ -1666,11 +1643,7 @@ object PipelineQueries {
     // every choice pinned so the oracle replays bit-for-bit.
     QueryDef("q87_temperature_mix",
       Some(s"""
-        WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY lang),
-        tot AS (SELECT
-                  list_reduce(list(CAST(n AS DOUBLE) ORDER BY lang), (a, b) -> a + b) AS tot_n,
-                  list_reduce(list(sqrt(CAST(n AS DOUBLE)) ORDER BY lang), (a, b) -> a + b) AS tot_sn
-                FROM c),
+        WITH $langTotalsCtes,
         r AS (SELECT lang,
                 least(1.0, ((tot_n * 0.5) * (sqrt(CAST(n AS DOUBLE)) / tot_sn))
                              / CAST(n AS DOUBLE)) AS rate
@@ -1741,25 +1714,14 @@ object PipelineQueries {
     // and both engines compute the identical IEEE fold anyway.
     QueryDef("q90_semantic_dedup",
       Some(s"""
-        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        c AS (SELECT vec_id AS centroid_id, v AS cv FROM t
-              WHERE vec_id % 101 = 0 AND vec_id < 10100),
-        p AS (SELECT t.vec_id, centroid_id, ${cos("v", "cv")} AS cosine
-              FROM t CROSS JOIN c),
+        WITH $centroidCosineCtes,
         r AS (SELECT vec_id, centroid_id FROM
                 (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                    ORDER BY cosine DESC, centroid_id) AS rn FROM p)
               WHERE rn = 1),
-        a AS (SELECT r.vec_id, r.centroid_id, t.v FROM r JOIN t USING (vec_id)),
-        losers AS (SELECT DISTINCT y.vec_id FROM a x JOIN a y
-                   ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-                   WHERE ${cos("x.v", "y.v")} >= 0.4)
-        SELECT vec_id, centroid_id FROM a
-        WHERE vec_id NOT IN (SELECT vec_id FROM losers)
-        ORDER BY vec_id"""),
+        a AS (SELECT r.vec_id, r.centroid_id, t.v FROM r JOIN t USING (vec_id)),$semSurvivorsSql"""),
       (s, d) => {
-        val cents = embeddings(s, d)
-          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
+        val cents = pinnedCentroids(s, d)
           .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
         Dedup.semantic(spread(embeddings(s, d)), "vec_id", "embedding",
             cents, "centroid_id", "cv", threshold = 0.4)
@@ -1773,18 +1735,7 @@ object PipelineQueries {
     // partial-combinable aggregate, never a per-cluster window.
     QueryDef("q91_dedup_keep_best",
       Some(s"""
-        WITH RECURSIVE $lshCte,
-        vp AS (SELECT c.a_id, c.b_id FROM cand c
-               JOIN sh a ON a.doc_id = c.a_id JOIN sh b ON b.doc_id = c.b_id
-               WHERE CAST(len(list_filter(a.shingles, x -> list_contains(b.shingles, x))) AS DOUBLE)
-                       / (len(a.shingles) + len(b.shingles)
-                          - len(list_filter(a.shingles, x -> list_contains(b.shingles, x)))) >= 0.5),
-        sym AS (SELECT a_id AS u, b_id AS v FROM vp UNION SELECT b_id, a_id FROM vp),
-        reach(u, r) AS (
-          SELECT u, u AS r FROM (SELECT DISTINCT u FROM sym)
-          UNION
-          SELECT s.v, reach.r FROM reach JOIN sym s ON s.u = reach.u),
-        comp AS (SELECT u AS doc_id, MIN(r) AS cluster FROM reach GROUP BY u),
+        WITH RECURSIVE $lshCte,${verifiedCte("vp")},${labelCtes("vp", lab = "comp")},
         q AS (SELECT comp.doc_id, cluster, n_chars FROM comp JOIN documents USING (doc_id)),
         rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY cluster
                  ORDER BY n_chars DESC, doc_id) AS rn FROM q),
@@ -1868,11 +1819,7 @@ object PipelineQueries {
     // index rides along so downstream packing sees distinct rows.
     QueryDef("q93_epoch_mix",
       Some(s"""
-        WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY lang),
-        tot AS (SELECT
-                  list_reduce(list(CAST(n AS DOUBLE) ORDER BY lang), (a, b) -> a + b) AS tot_n,
-                  list_reduce(list(sqrt(CAST(n AS DOUBLE)) ORDER BY lang), (a, b) -> a + b) AS tot_sn
-                FROM c),
+        WITH $langTotalsCtes,
         r AS (SELECT lang, ((tot_n * 2.0) * (sqrt(CAST(n AS DOUBLE)) / tot_sn))
                              / CAST(n AS DOUBLE) AS rate
               FROM c CROSS JOIN tot),

@@ -302,6 +302,18 @@ object Similarity {
         .as("_dm"))
       .select(col("cell"), transform(col("_dm"), s => s.getField("_m")).as("centroid"))
 
+  /** The `nProbe` cells of an [[ivfIndex]] whose centroids are nearest
+    * (cosine) the one-row query `q(_qv)`, as `(_cell)`; the cell id
+    * tie-break keeps the probed set deterministic.
+    */
+  private def probed(centroids: DataFrame, q: DataFrame, nProbe: Int): DataFrame =
+    centroids
+      .select(col("cell").as("_cell"), col("centroid").as("_centroid"))
+      .crossJoin(broadcast(q))
+      .select(col("_cell"), cosineSim(col("_qv"), col("_centroid")).as("_cc"))
+      .orderBy(col("_cc").desc, col("_cell")).limit(nProbe)
+      .select("_cell")
+
   /** IVF-style ANN probe over a PREBUILT index: ranks the index's cells
     * by query-to-centroid cosine and scans only the `nProbe` nearest
     * cells. The cell assignment comes from a provided column (e.g. a
@@ -316,13 +328,7 @@ object Similarity {
       asDouble(col(vecCol)).as("_v"))
     val q = base.filter(col(idCol) === queryId)
       .select(col("_v").as("_qv"))
-    val probedCells = centroids
-      .select(col("cell").as("_cell"), col("centroid").as("_centroid"))
-      .crossJoin(broadcast(q))
-      .select(col("_cell"), cosineSim(col("_qv"), col("_centroid")).as("_cc"))
-      // cell id tie-break keeps the probed set deterministic
-      .orderBy(col("_cc").desc, col("_cell")).limit(nProbe)
-      .select("_cell")
+    val probedCells = probed(centroids, q, nProbe)
     base.filter(col(idCol) =!= queryId)
       .join(broadcast(probedCells), "_cell")
       .crossJoin(broadcast(q))
@@ -371,12 +377,7 @@ object Similarity {
     val base = df.select(col(idCol), col(cellCol).as("_cell"),
       asDouble(col(vecCol)).as("_v"))
     val q = base.filter(col(idCol) === queryId).select(col("_v").as("_qv"))
-    val probedCells = centroids
-      .select(col("cell").as("_cell"), col("centroid").as("_centroid"))
-      .crossJoin(broadcast(q))
-      .select(col("_cell"), cosineSim(col("_qv"), col("_centroid")).as("_cc"))
-      .orderBy(col("_cc").desc, col("_cell")).limit(nProbe)
-      .select("_cell")
+    val probedCells = probed(centroids, q, nProbe)
     // asymmetric distance table: query subvector -> every codebook
     // entry, micro-long floors of the index-ordered L2^2 fold
     val dt = broadcast(codebook

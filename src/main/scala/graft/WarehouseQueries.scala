@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.DoubleType
   */
 object WarehouseQueries {
   import Tables._
-  import OracleSql.{cos, dsum, dsumSql, hash32, hash60, scd2Ctes}
+  import OracleSql.{cos, dsum, dsumSql, hash32, hash60, hllRank, scd2Ctes}
 
   // NOTE: `all` is declared at the BOTTOM of this object. Every query
   // here is a lazy val interpolating helper vals; a top-of-file
@@ -372,8 +372,7 @@ object WarehouseQueries {
         h AS (SELECT DISTINCT col_name, ${hash60("value")} AS h FROM m
               WHERE value IS NOT NULL),
         b AS (SELECT col_name, h % 64 AS bucket,
-                     CASE WHEN h // 64 = 0 THEN 55
-                          ELSE 55 - length(bin(h // 64)) END AS rho
+                     ${hllRank("h")} AS rho
               FROM h),
         reg AS (SELECT col_name, bucket, CAST(MAX(rho) AS BIGINT) AS r
                 FROM b GROUP BY col_name, bucket),
@@ -493,6 +492,43 @@ object WarehouseQueries {
   // across engines; a literal table cannot).
   private val NdcgDisc = graft.ops.Search.ndcgDiscountsMicro(10)
 
+  /** The retrieval panel of q237 and q239: three fixed two-term
+    * queries `(query_id, t1, t2)`, every document scored by its count
+    * of `t1`, and each query's top 10 (GroupedTopK on the composite
+    * score*1e12 - doc_id key) ranked as `rnk`, with the per-document
+    * judgement `judge(words)`. `retrievalCtes` is the oracle twin, up
+    * to `r(query_id, name, rnk)` over every document.
+    */
+  private def retrievalPanel(s: SparkSession, d: String,
+                             judge: Column => Column): DataFrame = {
+    import s.implicits._
+    val qs = Seq((1L, "join", "hash"), (2L, "scan", "filter"),
+      (3L, "sort", "merge")).toDF("query_id", "t1", "t2")
+    val words = split(col("text"), " ")
+    val scored = spread(documents(s, d)).crossJoin(broadcast(qs))
+      .select(col("query_id"), col("doc_id"),
+        size(filter(words, w => w === col("t1"))).cast("long")
+          .as("score"),
+        judge(words))
+      .withColumn("_key",
+        col("score") * 1000000000000L - col("doc_id"))
+    graft.plans.GroupedTopK.perKey(scored, Seq("query_id"), "_key", 10)
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("_key").desc)))
+  }
+  private def retrievalCtes(name: String, judge: String): String = s"""
+        qs AS (SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'join', 'hash'),
+                      (CAST(2 AS BIGINT), 'scan', 'filter'),
+                      (CAST(3 AS BIGINT), 'sort', 'merge')) v(query_id, t1, t2)),
+        s AS (SELECT query_id, doc_id,
+                CAST(len(list_filter(string_split(text, ' '), w -> w = t1))
+                  AS BIGINT) AS score,
+                $judge AS $name
+              FROM documents CROSS JOIN qs),
+        r AS (SELECT query_id, $name, ROW_NUMBER() OVER (
+                PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
+              FROM s)"""
+
   /** Retrieval-quality evaluation ([[ops.Search.ndcgAtK]]): three
     * fixed two-term query panels; retrieval ranks by the FIRST term's
     * occurrence count (top-10 via GroupedTopK on the composite
@@ -505,20 +541,9 @@ object WarehouseQueries {
   private lazy val q237: QueryDef =
     QueryDef("q237_ndcg_at_k",
       Some(s"""
-        WITH qs AS (SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'join', 'hash'),
-                      (CAST(2 AS BIGINT), 'scan', 'filter'),
-                      (CAST(3 AS BIGINT), 'sort', 'merge')) v(query_id, t1, t2)),
-        s AS (SELECT query_id, doc_id,
-                CAST(len(list_filter(string_split(text, ' '), w -> w = t1))
-                  AS BIGINT) AS score,
-                CAST((CASE WHEN list_contains(string_split(text, ' '), t1)
-                           THEN 1 ELSE 0 END)
-                   + (CASE WHEN list_contains(string_split(text, ' '), t2)
-                           THEN 1 ELSE 0 END) AS BIGINT) AS gain
-              FROM documents CROSS JOIN qs),
-        r AS (SELECT query_id, gain, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
-              FROM s),
+        WITH ${retrievalCtes("gain",
+          "CAST((CASE WHEN list_contains(string_split(text, ' '), t1) THEN 1 ELSE 0 END)" +
+          " + (CASE WHEN list_contains(string_split(text, ' '), t2) THEN 1 ELSE 0 END) AS BIGINT)")},
         k AS (SELECT query_id, gain, rnk FROM r WHERE rnk <= 10),
         i AS (SELECT query_id, gain, rnk, ROW_NUMBER() OVER (
                 PARTITION BY query_id ORDER BY gain DESC, rnk) AS irank
@@ -534,25 +559,10 @@ object WarehouseQueries {
                     ELSE (dcg_micro * 1000000) // idcg_micro END AS ndcg_ppm
         FROM d ORDER BY query_id"""),
       (s, d) => {
-        import s.implicits._
-        val qs = Seq((1L, "join", "hash"), (2L, "scan", "filter"),
-          (3L, "sort", "merge")).toDF("query_id", "t1", "t2")
-        val words = split(col("text"), " ")
-        val scored = spread(documents(s, d)).crossJoin(broadcast(qs))
-          .select(col("query_id"), col("doc_id"),
-            size(filter(words, w => w === col("t1"))).cast("long")
-              .as("score"),
-            (when(array_contains(words, col("t1")), 1L).otherwise(0L) +
-             when(array_contains(words, col("t2")), 1L).otherwise(0L))
-              .as("gain"))
-          .withColumn("_key",
-            col("score") * 1000000000000L - col("doc_id"))
-        val top = graft.plans.GroupedTopK.perKey(scored, Seq("query_id"),
-          "_key", 10)
-        val ranked = top.withColumn("rnk",
-          org.apache.spark.sql.functions.row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("query_id").orderBy(col("_key").desc)))
+        val ranked = retrievalPanel(s, d, words =>
+          (when(array_contains(words, col("t1")), 1L).otherwise(0L) +
+           when(array_contains(words, col("t2")), 1L).otherwise(0L))
+            .as("gain"))
         graft.ops.Search.ndcgAtK(ranked, Seq("query_id"), "rnk", "gain",
             k = 10)
           .orderBy("query_id")
@@ -605,19 +615,9 @@ object WarehouseQueries {
     */
   private lazy val q239: QueryDef =
     QueryDef("q239_map_mrr",
-      Some("""
-        WITH qs AS (SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'join', 'hash'),
-                      (CAST(2 AS BIGINT), 'scan', 'filter'),
-                      (CAST(3 AS BIGINT), 'sort', 'merge')) v(query_id, t1, t2)),
-        s AS (SELECT query_id, doc_id,
-                CAST(len(list_filter(string_split(text, ' '), w -> w = t1))
-                  AS BIGINT) AS score,
-                (list_contains(string_split(text, ' '), t1)
-                 OR list_contains(string_split(text, ' '), t2)) AS rel
-              FROM documents CROSS JOIN qs),
-        r AS (SELECT query_id, rel, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
-              FROM s),
+      Some(s"""
+        WITH ${retrievalCtes("rel", "(list_contains(string_split(text, ' '), t1)" +
+          " OR list_contains(string_split(text, ' '), t2))")},
         k AS (SELECT query_id, rel, rnk,
                 SUM(CASE WHEN rel THEN 1 ELSE 0 END) OVER (
                   PARTITION BY query_id ORDER BY rnk
@@ -635,23 +635,9 @@ object WarehouseQueries {
                          ELSE psum // n_rel END AS BIGINT) AS ap_ppm
         FROM a ORDER BY query_id"""),
       (s, d) => {
-        import s.implicits._
-        val qs = Seq((1L, "join", "hash"), (2L, "scan", "filter"),
-          (3L, "sort", "merge")).toDF("query_id", "t1", "t2")
-        val words = split(col("text"), " ")
-        val scored = spread(documents(s, d)).crossJoin(broadcast(qs))
-          .select(col("query_id"), col("doc_id"),
-            size(filter(words, w => w === col("t1"))).cast("long")
-              .as("score"),
-            (array_contains(words, col("t1")) ||
-             array_contains(words, col("t2"))).as("rel"))
-          .withColumn("_key",
-            col("score") * 1000000000000L - col("doc_id"))
-        val top = graft.plans.GroupedTopK.perKey(scored, Seq("query_id"),
-          "_key", 10)
-        val ranked = top.withColumn("rnk",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy("query_id").orderBy(col("_key").desc)))
+        val ranked = retrievalPanel(s, d, words =>
+          (array_contains(words, col("t1")) ||
+           array_contains(words, col("t2"))).as("rel"))
         graft.ops.Search.mapMrrAtK(ranked, Seq("query_id"), "rnk", "rel",
             k = 10)
           .select("query_id", "n_rel", "mrr_ppm", "ap_ppm")
@@ -696,12 +682,10 @@ object WarehouseQueries {
         lh AS (SELECT DISTINCT ${hash60("value")} AS h FROM lm),
         rh AS (SELECT DISTINCT ${hash60("value")} AS h FROM rm),
         lreg AS (SELECT h % 64 AS bucket,
-                   MAX(CASE WHEN h // 64 = 0 THEN 55
-                        ELSE 55 - length(bin(h // 64)) END) AS r
+                   MAX(${hllRank("h")}) AS r
                  FROM lh GROUP BY 1),
         rreg AS (SELECT h % 64 AS bucket,
-                   MAX(CASE WHEN h // 64 = 0 THEN 55
-                        ELSE 55 - length(bin(h // 64)) END) AS r
+                   MAX(${hllRank("h")}) AS r
                  FROM rh GROUP BY 1),
         le AS (SELECT CAST(COUNT(*) AS BIGINT) AS nb,
                  SUM(1::HUGEINT * (1::BIGINT << CAST(60 - r AS INT))) AS s
@@ -969,7 +953,7 @@ object WarehouseQueries {
                           CAST(label AS BIGINT) AS lab
                    FROM embeddings),
         c AS (SELECT vec_id AS centroid_id, v AS cv FROM t
-              WHERE vec_id % 101 = 0 AND vec_id < 10100),
+              WHERE ${PipelineQueries.PinnedCentroidsSql}),
         p AS (SELECT t.vec_id, t.lab, centroid_id,
                 ${cos("v", "cv", 64)} AS cos
               FROM t CROSS JOIN c),
@@ -989,8 +973,7 @@ object WarehouseQueries {
         val t = spread(embeddings(s, d)).select(col("vec_id"),
           asDbl(col("embedding")).as("v"), col("label").cast("long")
             .as("lab"))
-        val cent = embeddings(s, d)
-          .filter(col("vec_id") % 101 === 0 && col("vec_id") < 10100)
+        val cent = PipelineQueries.pinnedCentroids(s, d)
           .select(col("vec_id").as("centroid_id"),
             asDbl(col("embedding")).as("cv"))
         val assigned = t.crossJoin(broadcast(cent))
@@ -1116,6 +1099,27 @@ object WarehouseQueries {
     concat(lit("arr_"), col("event_id").cast("string"))) * 1048576L +
     pmod(col("event_id"), lit(1048576L))
 
+  /** The scored panel of q253, q254 and q278: every embedding's label
+    * parity `y` and `score` of its cosine to vector 0.
+    * `vec0ScoreCtes` is the oracle twin, `sc(y, ...)`.
+    */
+  private def vec0Scores(s: SparkSession, d: String,
+                         score: Column => Column): DataFrame = {
+    val t = spread(embeddings(s, d)).select(col("vec_id"),
+      graft.Pipeline.asDouble(col("embedding")).as("v"),
+      (col("label").cast("long") % 2).as("y"))
+    val q = embeddings(s, d).filter(col("vec_id") === 0)
+      .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
+    t.crossJoin(broadcast(q)).select(col("y"),
+      score(graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))))
+  }
+  private def vec0ScoreCtes(score: String => String): String = s"""
+        t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                          CAST(label AS BIGINT) % 2 AS y
+                   FROM embeddings),
+        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
+        sc AS (SELECT y, ${score(cos("v", "qv"))} FROM t CROSS JOIN q)"""
+
   /** ROC AUC by the exact rank-sum identity ([[ops.Stats.aucRoc]]):
     * score = cosine to the vec-0 anchor, label = label parity — the
     * completion of the retrieval-eval family (NDCG q237, MAP/MRR q239,
@@ -1125,11 +1129,7 @@ object WarehouseQueries {
   private lazy val q253: QueryDef =
     QueryDef("q253_auc_roc",
       Some(s"""
-        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                          CAST(label AS BIGINT) % 2 AS y
-                   FROM embeddings),
-        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        sc AS (SELECT vec_id, y, ${cos("v", "qv")} AS s FROM t CROSS JOIN q),
+        WITH ${vec0ScoreCtes(c => s"$c AS s")},
         g AS (SELECT s, SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS pos,
                      SUM(CASE WHEN y = 1 THEN 0 ELSE 1 END) AS neg
               FROM sc GROUP BY s),
@@ -1142,15 +1142,7 @@ object WarehouseQueries {
                  // (2 * SUM(pos) * SUM(neg)) AS BIGINT) AS auc_ppm
         FROM c"""),
       (s, d) => {
-        val t = spread(embeddings(s, d)).select(col("vec_id"),
-          graft.Pipeline.asDouble(col("embedding")).as("v"),
-          (col("label").cast("long") % 2).as("y"))
-        val q = embeddings(s, d).filter(col("vec_id") === 0)
-          .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
-        val scored = t.crossJoin(broadcast(q))
-          .select(col("y"),
-            graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))
-              .as("s"))
+        val scored = vec0Scores(s, d, _.as("s"))
         graft.ops.Stats.aucRoc(scored, "y", "s")
       })
 
@@ -1165,12 +1157,7 @@ object WarehouseQueries {
   private lazy val q254: QueryDef =
     QueryDef("q254_calibration_bins",
       Some(s"""
-        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                          CAST(label AS BIGINT) % 2 AS y
-                   FROM embeddings),
-        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        sc AS (SELECT y, (${cos("v", "qv")} + 1) / 2 AS p
-               FROM t CROSS JOIN q),
+        WITH ${vec0ScoreCtes(c => s"($c + 1) / 2 AS p")},
         b AS (SELECT LEAST(9, CAST(FLOOR(p * 10) AS INT)) AS bin, y,
                      CAST(CAST(p AS DECIMAL(25,6)) * 1000000 AS BIGINT)
                        AS p_micro
@@ -1188,15 +1175,7 @@ object WarehouseQueries {
                  // SUM(n) OVER () AS BIGINT) AS ece_ppm
         FROM r ORDER BY bin"""),
       (s, d) => {
-        val t = spread(embeddings(s, d)).select(col("vec_id"),
-          graft.Pipeline.asDouble(col("embedding")).as("v"),
-          (col("label").cast("long") % 2).as("y"))
-        val q = embeddings(s, d).filter(col("vec_id") === 0)
-          .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
-        val scored = t.crossJoin(broadcast(q))
-          .select(col("y"),
-            ((graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))
-              + 1) / 2).as("p"))
+        val scored = vec0Scores(s, d, c => ((c + 1) / 2).as("p"))
         graft.ops.Stats.calibrationBins(scored, "y", "p", bins = 10)
           .orderBy("bin")
       })
@@ -1468,12 +1447,7 @@ object WarehouseQueries {
   private lazy val q278: QueryDef =
     QueryDef("q278_isotonic_calibration",
       Some(s"""
-        WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                          CAST(label AS BIGINT) % 2 AS y
-                   FROM embeddings),
-        q AS (SELECT v AS qv FROM t WHERE vec_id = 0),
-        sc AS (SELECT y, (${cos("v", "qv")} + 1) / 2 AS p
-               FROM t CROSS JOIN q),
+        WITH ${vec0ScoreCtes(c => s"($c + 1) / 2 AS p")},
         b AS (SELECT LEAST(49, CAST(FLOOR(p * 50) AS BIGINT)) AS bin, y
               FROM sc),
         g AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1495,15 +1469,7 @@ object WarehouseQueries {
                CAST(fitted_micro AS BIGINT) AS fitted_micro
         FROM g JOIN fit USING (bin) ORDER BY bin"""),
       (s, d) => {
-        val t = spread(embeddings(s, d)).select(col("vec_id"),
-          graft.Pipeline.asDouble(col("embedding")).as("v"),
-          (col("label").cast("long") % 2).as("y"))
-        val q = embeddings(s, d).filter(col("vec_id") === 0)
-          .select(graft.Pipeline.asDouble(col("embedding")).as("qv"))
-        val scored = t.crossJoin(broadcast(q))
-          .select(col("y"),
-            ((graft.plans.VectorExpressions.cosineSim(col("v"), col("qv"))
-              + 1) / 2).as("p"))
+        val scored = vec0Scores(s, d, c => ((c + 1) / 2).as("p"))
         graft.ops.Stats.isotonicCalibration(scored, "y", "p", bins = 50)
           .orderBy("bin")
       })

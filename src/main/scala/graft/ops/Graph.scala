@@ -18,6 +18,47 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   */
 object Graph {
 
+  /** The undirected simple edge set of `edges`' first two columns:
+    * each edge once as `(a, b)` with `a < b`, self-loops dropped. */
+  private def undirected(edges: DataFrame): DataFrame =
+    undirected(edges, edges.columns(0), edges.columns(1))
+
+  private def undirected(edges: DataFrame, u: String, v: String): DataFrame =
+    edges.select(least(col(u), col(v)).as("a"), greatest(col(u), col(v)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
+  /** An [[undirected]] edge set in both directions, as `(x, y)`. */
+  private def bothWays(und: DataFrame, x: String, y: String): DataFrame =
+    und.select(col("a").as(x), col("b").as(y))
+      .unionAll(und.select(col("b").as(x), col("a").as(y)))
+
+  /** The rank loops' loop-invariant inputs over the `(src, dst)` edges:
+    * each source's out-degree `(src, deg)`, the edges joined to it and
+    * cached pre-partitioned on `src` (the prepared frame), and the
+    * uncached distinct `node` set. */
+  private def rankInputs(edges: DataFrame, scope: CacheScope)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val e = edges.select(col("src"), col("dst"))
+    val deg = e.groupBy("src").agg(count(lit(1)).cast(LongType).as("deg"))
+    val prepared = scope.persist(e.join(deg, "src").repartition(col("src")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+    (deg, prepared, nodes)
+  }
+
+  /** One rank round's inflow per node `(node, _s)`: each source's rank
+    * `pr` split evenly (`div`) over its prepared out-edges, summed at
+    * the destination. */
+  private def contributions(prepared: DataFrame, pr: DataFrame): DataFrame =
+    prepared
+      .join(pr, prepared("src") === pr("node"))
+      .select(col("dst"), expr("pr div deg").as("_c"))
+      .groupBy(col("dst"))
+      .agg(sum(col("_c")).as("_s"))
+      .withColumnRenamed("dst", "node")
+
   /** PageRank over a directed edge list `(src, dst)`, fixed iteration
     * count, integer milli-units (initial rank 1000 per node; the
     * classic 0.85 damping as `850/1000`):
@@ -74,8 +115,7 @@ object Graph {
                scope: CacheScope = new CacheScope): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).cast(LongType).as("deg"))
+    val (deg, prepared, nodes0) = rankInputs(edges, scope)
     // BOTH caches are REPARTITIONED on their join key before persist:
     // a cached frame's hash partitioning is visible to the planner, so
     // every iteration's src-join reuses the edge side with NO exchange
@@ -84,13 +124,9 @@ object Graph {
     // the "pre-partition the edge list once" discipline this docstring
     // promises, made real. Per-iteration exchanges drop 3 -> 2
     // (rank-into-join + contribution agg; both nodes-sized).
-    val prepared = scope.persist(e.join(deg, "src")
-      .repartition(col("src")), disk)
-    // with redistribution on, the cached node frame also carries the
+    // With redistribution on, the cached node frame also carries the
     // loop-invariant sink flag (no out-edges), so the per-iteration
     // sink-mass sum is a filter over the rank frame — no extra join
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
     val nodes = scope.persist((if (!redistributeDangling) nodes0
       else nodes0
         .join(deg.select(col("src").as("node"), lit(true).as("_has_out")),
@@ -113,12 +149,7 @@ object Graph {
     // and the round-8 A/B measured the uncached chain faster there.
     var pr = nodes.withColumn("pr", lit(1000L))
     for (_ <- 1 to iters) {
-      val contribs = prepared
-        .join(pr, prepared("src") === pr("node"))
-        .select(col("dst"), expr("pr div deg").as("_c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("_c")).as("_s"))
-        .withColumnRenamed("dst", "node")
+      val contribs = contributions(prepared, pr)
       // left join from the FULL node set: a node with no in-edges gets
       // the base 150, instead of silently dropping out of the frame
       // (which would also zero its out-contributions next iteration)
@@ -190,12 +221,8 @@ object Graph {
                            scope: CacheScope = new CacheScope): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).cast(LongType).as("deg"))
-    val prepared = scope.persist(e.join(deg, "src")
-      .repartition(col("src")), disk)
-    val nodes = scope.persist(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val (_, prepared, nodes0) = rankInputs(edges, scope)
+    val nodes = scope.persist(nodes0
       .join(seeds.select(col("node")).distinct()
         .withColumn("_s0", lit(true)), Seq("node"), "left")
       .select(col("node"), coalesce(col("_s0"), lit(false)).as("_seed"))
@@ -209,12 +236,7 @@ object Graph {
         when(col("_seed"), expr("(1000 * _n) div _ns")).otherwise(lit(0L))
           .cast(LongType).as("pr"))
     for (_ <- 1 to iters) {
-      val contribs = prepared
-        .join(pr, prepared("src") === pr("node"))
-        .select(col("dst"), expr("pr div deg").as("_c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("_c")).as("_s"))
-        .withColumnRenamed("dst", "node")
+      val contribs = contributions(prepared, pr)
       pr = nodes.crossJoin(broadcast(totals))
         .join(contribs, Seq("node"), "left")
         .select(col("node"),
@@ -460,11 +482,7 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame,
                      scope: CacheScope = new CacheScope): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges, "src", "dst")
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).cast(LongType).as("deg"))
@@ -525,13 +543,9 @@ object Graph {
             onConverged: (Int, Boolean) => Unit = (_, _) => ())
       : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = undirected(edges)
     val cur = graft.Iterate.untilStable(s"kCore(k=$k)",
-      und.select(col("a").as("x"), col("b").as("y"))
-        .unionAll(und.select(col("b").as("x"), col("a").as("y"))),
+      bothWays(und, "x", "y"),
       maxIters, onConverged, Seq(count(lit(1)).as("_n"))) { (cur, _, _) =>
       val alive = cur.groupBy("x").agg(count(lit(1)).as("_d"))
         .filter(col("_d") >= k).select(col("x").as("node"))
@@ -591,12 +605,8 @@ object Graph {
                  minCommonNeighbors: Int = 1): DataFrame = {
     require(minCommonNeighbors >= 1,
       s"minCommonNeighbors must be >= 1, got $minCommonNeighbors")
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val sym = und.select(col("a").as("w"), col("b").as("n"))
-      .unionAll(und.select(col("b").as("w"), col("a").as("n")))
+    val und = undirected(edges)
+    val sym = bothWays(und, "w", "n")
     val deg = sym.groupBy("w").agg(count(lit(1)).cast(LongType).as("deg"))
     val midsAll = sym.join(
         deg.filter(col("deg") >= 2 && col("deg") <= maxDegree), Seq("w"))
@@ -699,12 +709,8 @@ object Graph {
                         topK: Int = 100,
                         sampleOneIn: Int = 10): DataFrame = {
     require(sampleOneIn >= 1, s"sampleOneIn must be >= 1, got $sampleOneIn")
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val sym = und.select(col("a").as("w"), col("b").as("n"))
-      .unionAll(und.select(col("b").as("w"), col("a").as("n")))
+    val und = undirected(edges)
+    val sym = bothWays(und, "w", "n")
     val deg = sym.groupBy("w").agg(count(lit(1)).cast(LongType).as("deg"))
     val mids = sym.join(
         deg.filter(col("deg") >= 2 && col("deg") <= maxDegree), Seq("w"))
@@ -765,10 +771,7 @@ object Graph {
   def modularity(edges: DataFrame, communities: DataFrame,
                  nodeCol: String, communityCol: String,
                  scope: CacheScope = new CacheScope): DataFrame = {
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = undirected(edges)
     val labels = communities
       .select(col(nodeCol).as("_node"), col(communityCol).as("community"))
     // Label both endpoints; an unlabeled endpoint surfaces as a NULL
@@ -838,12 +841,8 @@ object Graph {
   def deterministicWalks(edges: DataFrame, steps: Int,
                          scope: CacheScope = new CacheScope): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val adj = scope.persist(und.select(col("a").as("_cur"), col("b").as("_nbr"))
-      .unionAll(und.select(col("b").as("_cur"), col("a").as("_nbr"))),
+    val und = undirected(edges)
+    val adj = scope.persist(bothWays(und, "_cur", "_nbr"),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val starts = adj.select(col("_cur").as("walk_id")).distinct()
       .withColumn("step", lit(0L))
@@ -892,11 +891,7 @@ object Graph {
     */
   def maximalIndependentSet(edges: DataFrame, maxIters: Int = 25,
       onConverged: (Int, Boolean) => Unit = (_, _) => ()): DataFrame = {
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges)
     def keyOf(node: org.apache.spark.sql.Column, round: Int)
         : org.apache.spark.sql.Column = {
       val ok = when(node >= 0 && node < lit(1099511627776L), node)
@@ -911,8 +906,7 @@ object Graph {
       .distinct().select(col("x"), lit(null).cast(LongType).as("round"))
     graft.Iterate.untilStable("maximalIndependentSet", init, maxIters, onConverged,
         Seq(count(when(col("round").isNull, 1)).as("_live")),
-        inputs = Seq(und.select(col("a").as("x"), col("b").as("y"))
-          .unionAll(und.select(col("b").as("x"), col("a").as("y"))))) { (state, r, inputs) =>
+        inputs = Seq(bothWays(und, "x", "y"))) { (state, r, inputs) =>
       val live = state.filter(col("round").isNull).select("x")
       val edges = inputs.head
         .join(live, Seq("x"), "left_semi")
@@ -991,13 +985,8 @@ object Graph {
       s"p must be in [4, 12] ([[lcTable]]'s generated range; register " +
         s"cost is nodes * 2^p BYTES per round), got $p")
     val m = 1 << p
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val sym = und.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(und.select(col("b").as("x"), col("a").as("y")))
+    val und = undirected(edges)
+    val sym = bothWays(und, "x", "y")
       .localCheckpoint()
     val nodes = sym.select(col("x").as("node")).distinct()
     val lc = lcTable(p)
@@ -1169,36 +1158,15 @@ object Graph {
     */
   def assortativity(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    val und = edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val sym = und.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(und.select(col("b").as("x"), col("a").as("y")))
+    val und = undirected(edges)
+    val sym = bothWays(und, "x", "y")
     val deg = sym.groupBy(col("x").as("node"))
       .agg(count(lit(1)).cast(LongType).as("deg"))
     val pairs = sym
       .join(deg.select(col("node").as("x"), col("deg").as("_dx")), "x")
       .join(deg.select(col("node").as("y"), col("deg").as("_dy")), "y")
-    val row = pairs.agg(
-      count(lit(1)).cast(LongType).as("n"),
-      coalesce(sum(col("_dx").cast(DecimalType(38, 0))), lit(0)).as("sx"),
-      coalesce(sum(col("_dy").cast(DecimalType(38, 0))), lit(0)).as("sy"),
-      coalesce(sum(col("_dx").cast(DecimalType(38, 0)) * col("_dy")),
-        lit(0)).as("sxy"),
-      coalesce(sum(col("_dx").cast(DecimalType(38, 0)) * col("_dx")),
-        lit(0)).as("sxx"),
-      coalesce(sum(col("_dy").cast(DecimalType(38, 0)) * col("_dy")),
-        lit(0)).as("syy")).first()
-    val n = BigInt(row.getLong(0))
-    def dec(i: Int): BigInt = BigInt(row.getDecimal(i).toBigInteger)
-    val (sx, sy, sxy, sxx, syy) = (dec(1), dec(2), dec(3), dec(4), dec(5))
-    val num = n * sxy - sx * sy
-    val den = (graft.Similarity.isqrtPortable(n * sxx - sx * sx) *
-      graft.Similarity.isqrtPortable(n * syy - sy * sy)).max(BigInt(1))
     import spark.implicits._
-    Seq((row.getLong(0), ((num * 1000000) / den).toLong))
+    Seq(Stats.pearsonPpm(pairs, "_dx", "_dy"))
       .toDF("n_pairs", "assortativity_ppm")
   }
 
@@ -1224,11 +1192,8 @@ object Graph {
     // lazy persist: `und` feeds both the degree aggregate here and
     // [[triangleCounts]]' whole derivation — uncached it re-executes
     // the distinct per reference (see the triangleCounts note)
-    val und = scope.persist(edges
-      .select(least(col(edges.columns(0)), col(edges.columns(1))).as("a"),
-        greatest(col(edges.columns(0)), col(edges.columns(1))).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct(), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = scope.persist(undirected(edges),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).cast(LongType).as("degree"))

@@ -466,22 +466,8 @@ object Layout {
       .withColumn("_arr", expr(arr))
       .withColumn("_of", expr(owner(fromShards)).cast("long"))
       .withColumn("_ot", expr(owner(toShards)).cast("long"))
-    val summary = assigned.agg(
-      count(lit(1)).cast("long").as("n_keys"),
-      count(when(col("_of") =!= col("_ot"), 1)).cast("long").as("moved"))
-      .withColumn("moved_ppm",
-        expr("moved * 1000000L div greatest(n_keys, 1)"))
-      .withColumn("expected_ppm",
-        lit((toShards - fromShards).toLong * 1000000L / toShards))
-    val perShard = assigned
-      .select(explode(array(
-        struct(col("_of").as("shard"), lit(1L).as("f"), lit(0L).as("t")),
-        struct(col("_ot").as("shard"), lit(0L).as("f"), lit(1L).as("t"))))
-        .as("_e"))
-      .groupBy(col("_e.shard").as("shard"))
-      .agg(sum("_e.f").cast("long").as("n_from"),
-        sum("_e.t").cast("long").as("n_to"))
-    perShard.crossJoin(broadcast(summary))
+    movesPanel(assigned,
+      (toShards - fromShards).toLong * 1000000L / toShards)
   }
 
   /** The consistent-hash ring for [[ringMoves]]: vnode positions
@@ -549,6 +535,14 @@ object Layout {
         graft.Pipeline.wordHash60(concat(lit("ringk_"), col("_key"))))
       .withColumn("_of", expr(ownerExpr(posF, ownF)))
       .withColumn("_ot", expr(ownerExpr(posT, ownT)))
+    movesPanel(assigned, expectedPpm)
+  }
+
+  /** The rebalance audits' output over per-key old/new owners
+    * `(_of, _ot)`: per shard `(shard, n_from, n_to)`, with the one-row
+    * `(n_keys, moved, moved_ppm, expected_ppm)` summary replicated.
+    */
+  private def movesPanel(assigned: DataFrame, expectedPpm: Long): DataFrame = {
     val summary = assigned.agg(
       count(lit(1)).cast("long").as("n_keys"),
       count(when(col("_of") =!= col("_ot"), 1)).cast("long").as("moved"))

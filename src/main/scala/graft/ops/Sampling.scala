@@ -133,6 +133,39 @@ object Sampling {
       .filter(col("cum_before") + col(tokensCol) <= budget)
   }
 
+  /** The target-mix quota join: `targets` checked (non-empty,
+    * positive ppm weights summing to 1e6, no stratum twice), each
+    * stratum's quota `_quota = t * ppm / 1e6` for the largest total `t`
+    * that every stratum's collected `mass` (`(stratum, mass)` rows) can
+    * fill, broadcast-joined onto `df` with the md5 `_slot` tiebreak.
+    *
+    * BigInt: mass * 1e6 overflows Long past ~9.2e12 rows or tokens
+    * (~37 TB of text — inside the operators' advertised envelope). t *
+    * ppm / 1e6 <= mass_s for every stratum (t is the min), so each
+    * quota fits a Long.
+    */
+  private def withQuotas(df: DataFrame, idCol: String, strataCol: String,
+                         targets: Seq[(String, Int)],
+                         mass: => DataFrame): DataFrame = {
+    require(targets.nonEmpty, "targets must be non-empty")
+    require(targets.map(_._2).forall(_ > 0),
+      s"target ppm weights must be positive: $targets")
+    require(targets.map(_._2.toLong).sum == 1000000L,
+      s"target ppm weights must sum to 1000000, got ${targets.map(_._2.toLong).sum}")
+    require(targets.map(_._1).distinct.size == targets.size,
+      s"duplicate stratum in targets: $targets")
+    val byStratum = mass.collect().map(r => r.get(0) -> r.getLong(1))
+      .collect { case (s: String, n) => s -> n }.toMap
+    val t = targets.map { case (s, ppm) =>
+      BigInt(byStratum.getOrElse(s, 0L)) * 1000000 / ppm }.min
+    import df.sparkSession.implicits._
+    val quotaDf = targets.map { case (s, ppm) => (s, (t * ppm / 1000000).toLong) }
+      .toDF("_q_stratum", "_quota")
+    df.join(broadcast(quotaDf), col(strataCol) === col("_q_stratum"))
+      .withColumn("_slot", pmod(
+        graft.Pipeline.wordHash32(col(idCol).cast("string")), lit(1000000L)))
+  }
+
   /** TARGET-DISTRIBUTION mix: the LARGEST exact-count selection whose
     * stratum composition matches `targets` (parts-per-million per
     * stratum, summing to 1e6) — "make the corpus 50% en / 15% zh /
@@ -161,30 +194,9 @@ object Sampling {
   def targetMix(df: DataFrame, idCol: String, strataCol: String,
                 targets: Seq[(String, Int)], chunks: Int = 0,
                 scope: CacheScope = new CacheScope): DataFrame = {
-    require(targets.nonEmpty, "targets must be non-empty")
-    require(targets.map(_._2).forall(_ > 0),
-      s"target ppm weights must be positive: $targets")
-    require(targets.map(_._2.toLong).sum == 1000000L,
-      s"target ppm weights must sum to 1000000, got ${targets.map(_._2.toLong).sum}")
-    require(targets.map(_._1).distinct.size == targets.size,
-      s"duplicate stratum in targets: $targets")
-    val spark = df.sparkSession
-    val counts = df.groupBy(col(strataCol)).count()
-      .collect().map(r => r.get(0) -> r.getLong(1))
-      .collect { case (s: String, n) => s -> n }.toMap
-    // BigInt: n * 1e6 overflows Long past ~9.2e12 rows — inside the
-    // operator's advertised envelope. t * ppm / 1e6 <= n_s for every
-    // stratum (t is the min), so the quota always fits a Long.
-    val t = targets.map { case (s, ppm) =>
-      BigInt(counts.getOrElse(s, 0L)) * 1000000 / ppm }.min
-    val quotas = targets.map { case (s, ppm) => (s, (t * ppm / 1000000).toLong) }
-    import spark.implicits._
-    val quotaDf = quotas.toDF("_q_stratum", "_quota")
-    val slot = pmod(graft.Pipeline.wordHash32(col(idCol).cast("string")),
-      lit(1000000L))
     Hierarchical.prefixSum(
-      df.join(broadcast(quotaDf), col(strataCol) === col("_q_stratum"))
-        .withColumn("_slot", slot),
+      withQuotas(df, idCol, strataCol, targets,
+        df.groupBy(col(strataCol)).count()),
       Seq(col("_slot"), col(idCol)), Seq(strataCol), lit(1L), "_before",
       chunks, scope)
       .filter(col("_before") < col("_quota"))
@@ -246,33 +258,11 @@ object Sampling {
                                   targets: Seq[(String, Int)],
                                   sortPrefix: Seq[Column], chunks: Int,
                                   scope: CacheScope): DataFrame = {
-    require(targets.nonEmpty, "targets must be non-empty")
-    require(targets.map(_._2).forall(_ > 0),
-      s"target ppm weights must be positive: $targets")
-    require(targets.map(_._2.toLong).sum == 1000000L,
-      s"target ppm weights must sum to 1000000, got ${targets.map(_._2.toLong).sum}")
-    require(targets.map(_._1).distinct.size == targets.size,
-      s"duplicate stratum in targets: $targets")
-    val spark = df.sparkSession
-    val toks = df.groupBy(col(strataCol))
-      .agg(sum(col(tokensCol)).cast(org.apache.spark.sql.types.LongType)
-        .as("_t"))
-      .collect().map(r => r.get(0) -> r.getLong(1))
-      .collect { case (s: String, n) => s -> n }.toMap
-    // BigInt: tok_s * 1e6 overflows Long past ~9.2e12 tokens (~37 TB
-    // of text — inside the 100 TB envelope) and would silently turn T
-    // negative. t * ppm / 1e6 <= tok_s for every stratum (t is the
-    // min over tok_s * 1e6 / ppm_s), so each quota fits a Long.
-    val t = targets.map { case (s, ppm) =>
-      BigInt(toks.getOrElse(s, 0L)) * 1000000 / ppm }.min
-    val quotas = targets.map { case (s, ppm) => (s, (t * ppm / 1000000).toLong) }
-    import spark.implicits._
-    val quotaDf = quotas.toDF("_q_stratum", "_quota")
-    val slot = pmod(graft.Pipeline.wordHash32(col(idCol).cast("string")),
-      lit(1000000L))
     Hierarchical.prefixSum(
-      df.join(broadcast(quotaDf), col(strataCol) === col("_q_stratum"))
-        .withColumn("_slot", slot),
+      withQuotas(df, idCol, strataCol, targets,
+        df.groupBy(col(strataCol))
+          .agg(sum(col(tokensCol)).cast(org.apache.spark.sql.types.LongType)
+            .as("_t"))),
       sortPrefix ++ Seq(col("_slot"), col(idCol)), Seq(strataCol),
       col(tokensCol), "_tok_before", chunks, scope)
       .filter(col("_tok_before") < col("_quota"))

@@ -625,28 +625,33 @@ object Stats {
         col("_x") === col("_val")).drop("_val")
       .join(doubledRanks("_y").withColumnRenamed("_r2", "_ry"),
         col("_y") === col("_val")).drop("_val")
-    val row = withRanks.agg(
-      count(lit(1)).cast("long").as("n"),
-      coalesce(sum(col("_rx").cast("decimal(38,0)")), lit(0)).as("sx"),
-      coalesce(sum(col("_ry").cast("decimal(38,0)")), lit(0)).as("sy"),
-      coalesce(sum(col("_rx").cast("decimal(38,0)") * col("_ry")),
-        lit(0)).as("sxy"),
-      coalesce(sum(col("_rx").cast("decimal(38,0)") * col("_rx")),
-        lit(0)).as("sxx"),
-      coalesce(sum(col("_ry").cast("decimal(38,0)") * col("_ry")),
-        lit(0)).as("syy")).first()
-    val n = BigInt(row.getLong(0))
-    def dec(i: Int): BigInt = BigInt(row.getDecimal(i).toBigInteger)
-    val (sx, sy, sxy, sxx, syy) = (dec(1), dec(2), dec(3), dec(4), dec(5))
-    val num = n * sxy - sx * sy
-    val a = n * sxx - sx * sx
-    val b = n * syy - sy * sy
-    val den = (graft.Similarity.isqrtPortable(a) *
-      graft.Similarity.isqrtPortable(b)).max(BigInt(1))
-    // BigInt / truncates toward zero — matching the oracle's HUGEINT //
-    val rho = (num * 1000000) / den
     import spark.implicits._
-    Seq((row.getLong(0), rho.toLong)).toDF("n_items", "rho_ppm")
+    Seq(pearsonPpm(withRanks, "_rx", "_ry")).toDF("n_items", "rho_ppm")
+  }
+
+  /** `(n, ppm)`: the row count of `pairs` and the exact integer Pearson
+    * correlation of its integral columns `x` and `y` in ppm, as
+    * [[spearmanCorr]] defines it — the six moment sums as
+    * DECIMAL(38,0) on one collected row, then
+    * `(n*Sxy - Sx*Sy) * 1e6 div max(isqrt(A) * isqrt(B), 1)` in BigInt.
+    */
+  private[graft] def pearsonPpm(pairs: DataFrame, x: String, y: String)
+      : (Long, Long) = {
+    def dec(c: String) = col(c).cast(DecimalType(38, 0))
+    val row = pairs.agg(
+      count(lit(1)).cast(LongType).as("n"),
+      coalesce(sum(dec(x)), lit(0)).as("sx"),
+      coalesce(sum(dec(y)), lit(0)).as("sy"),
+      coalesce(sum(dec(x) * col(y)), lit(0)).as("sxy"),
+      coalesce(sum(dec(x) * col(x)), lit(0)).as("sxx"),
+      coalesce(sum(dec(y) * col(y)), lit(0)).as("syy")).first()
+    val n = BigInt(row.getLong(0))
+    def moment(i: Int): BigInt = BigInt(row.getDecimal(i).toBigInteger)
+    val (sx, sy, sxy, sxx, syy) = (moment(1), moment(2), moment(3), moment(4), moment(5))
+    val den = (graft.Similarity.isqrtPortable(n * sxx - sx * sx) *
+      graft.Similarity.isqrtPortable(n * syy - sy * sy)).max(BigInt(1))
+    // BigInt / truncates toward zero — matching the oracle's HUGEINT //
+    (row.getLong(0), ((n * sxy - sx * sy) * 1000000 / den).toLong)
   }
 
   /** CUPED variance reduction (Deng et al. 2013): adjust an
